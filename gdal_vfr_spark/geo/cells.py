@@ -150,15 +150,27 @@ def cover_bbox(
     lon_min: float, lat_min: float, lon_max: float, lat_max: float, res: int
 ) -> np.ndarray:
     """Cell ids covering a bbox at resolution res (inclusive of edges)."""
-    n = 1 << res
-    ix0, iy0 = lonlat_to_grid(np.asarray([lon_min]), np.asarray([lat_min]), res)
-    ix1, iy1 = lonlat_to_grid(np.asarray([lon_max]), np.asarray([lat_max]), res)
-    xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1, dtype=np.int64)
-    ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys)
-    return ((morton_encode(gx.ravel(), gy.ravel()) << np.int64(_RES_BITS)) | np.int64(res)).astype(
-        np.int64
-    )
+    return cover_bboxes(
+        np.asarray([lon_min]), np.asarray([lat_min]),
+        np.asarray([lon_max]), np.asarray([lat_max]), res,
+    )[1]
+
+
+def cover_bboxes(lon_min, lat_min, lon_max, lat_max, res: int):
+    """Vectorized cover of many bboxes: (row, cell) arrays listing every
+    cell at resolution res that bbox `row` touches (edges inclusive).
+    Each row's cells come out in row-major (iy outer, ix inner) order,
+    the order cover_bbox's meshgrid produced; one repeat/cumsum pass,
+    no per-row Python."""
+    ix0, iy0 = lonlat_to_grid(lon_min, lat_min, res)
+    ix1, iy1 = lonlat_to_grid(lon_max, lat_max, res)
+    nx = ix1 - ix0 + 1
+    cnt = nx * (iy1 - iy0 + 1)
+    row = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    k = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    gx = ix0[row] + k % nx[row]
+    gy = iy0[row] + k // nx[row]
+    return row, (morton_encode(gx, gy) << np.int64(_RES_BITS)) | np.int64(res)
 
 
 # ------------------------------------------------------- Catalyst expression

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from gdal_vfr_spark.geo import cells
+from gdal_vfr_spark.geo import cells, halo, wkb
 
 # Broadcast-path budget: targets beyond this refuse the driver-collect
 # joiners instead of OOMing the driver at scale. ~2M points x 32 B/row
@@ -264,6 +264,70 @@ def _point_seg_dist2(qx, qy, x1, y1, x2, y2):
     return ex * ex + ey * ey
 
 
+def _band_lines(qx, qy, x1, y1, x2, y2, keys, maxd2):
+    """Every (query, key) pair within sqrt(maxd2), min squared distance
+    per key, over ALL given segments: blocked so each (points x
+    segments) temporary stays near 2e7 cells. Returns (query_idx, key,
+    d2)."""
+    chunk = max(1, int(2e7 / max(len(x1), 1)))
+    out_q: list[np.ndarray] = []
+    out_k: list[np.ndarray] = []
+    out_d: list[np.ndarray] = []
+    for s in range(0, len(qx), chunk):
+        e = min(s + chunk, len(qx))
+        d2 = _point_seg_dist2(
+            qx[s:e][:, None], qy[s:e][:, None],
+            x1[None, :], y1[None, :], x2[None, :], y2[None, :],
+        )
+        qi = np.repeat(np.arange(s, e, dtype=np.int64), d2.shape[1])
+        rq, rk, rd = _reduce_min_per_key(qi, np.tile(keys, e - s), d2.ravel())
+        keep = rd <= maxd2
+        out_q.append(rq[keep])
+        out_k.append(rk[keep])
+        out_d.append(rd[keep])
+    return np.concatenate(out_q), np.concatenate(out_k), np.concatenate(out_d)
+
+
+def _band_points(qx, qy, tx, ty, keys, maxd2):
+    """Every (query, target) pair within sqrt(maxd2) with its squared
+    euclidean distance, blocked like _band_lines. Returns (query_idx,
+    key, d2)."""
+    chunk = max(1, int(2e7 / max(len(tx), 1)))
+    out_q: list[np.ndarray] = []
+    out_k: list[np.ndarray] = []
+    out_d: list[np.ndarray] = []
+    for s in range(0, len(qx), chunk):
+        e = min(s + chunk, len(qx))
+        dx = qx[s:e][:, None] - tx[None, :]
+        dy = qy[s:e][:, None] - ty[None, :]
+        d2 = dx * dx + dy * dy
+        qi, ti = np.nonzero(d2 <= maxd2)
+        out_q.append(qi + s)
+        out_k.append(keys[ti])
+        out_d.append(d2[qi, ti])
+    return np.concatenate(out_q), np.concatenate(out_k), np.concatenate(out_d)
+
+
+def _decode_segments(keys_and_wkb):
+    """(x1, y1, x2, y2, key) arrays, one entry per line segment of the
+    given (key, WKB) rows."""
+    x1l, y1l, x2l, y2l, keyl = [], [], [], [], []
+    for key, buf in keys_and_wkb:
+        for line in wkb.decode_lines(bytes(buf)):
+            if len(line) < 2:
+                continue
+            x1l.append(line[:-1, 0])
+            y1l.append(line[:-1, 1])
+            x2l.append(line[1:, 0])
+            y2l.append(line[1:, 1])
+            keyl.append(np.full(len(line) - 1, key, dtype=np.int64))
+    if not keyl:
+        e = np.empty(0)
+        return e, e, e, e, np.empty(0, np.int64)
+    return (np.concatenate(x1l), np.concatenate(y1l), np.concatenate(x2l),
+            np.concatenate(y2l), np.concatenate(keyl))
+
+
 @dataclass
 class PackedSegmentIndex:
     """Cell-bucketed line segments for point-to-LINE kNN (J5 extension:
@@ -286,33 +350,11 @@ class PackedSegmentIndex:
 
     @classmethod
     def build(cls, keys_and_wkb: list[tuple[int, bytes]], res: int) -> "PackedSegmentIndex":
-        from gdal_vfr_spark.geo import wkb as W
-
-        x1l, y1l, x2l, y2l, keyl = [], [], [], [], []
-        for key, buf in keys_and_wkb:
-            for line in W.decode_lines(bytes(buf)):
-                if len(line) < 2:
-                    continue
-                x1l.append(line[:-1, 0])
-                y1l.append(line[:-1, 1])
-                x2l.append(line[1:, 0])
-                y2l.append(line[1:, 1])
-                keyl.append(np.full(len(line) - 1, key, dtype=np.int64))
-        x1 = np.concatenate(x1l) if x1l else np.empty(0)
-        y1 = np.concatenate(y1l) if y1l else np.empty(0)
-        x2 = np.concatenate(x2l) if x2l else np.empty(0)
-        y2 = np.concatenate(y2l) if y2l else np.empty(0)
-        keys = np.concatenate(keyl) if keyl else np.empty(0, np.int64)
-        ent_cells, ent_seg = [], []
-        for s in range(len(keys)):
-            cc = cells.cover_bbox(
-                min(x1[s], x2[s]), min(y1[s], y2[s]),
-                max(x1[s], x2[s]), max(y1[s], y2[s]), res,
-            )
-            ent_cells.append(cc)
-            ent_seg.append(np.full(len(cc), s, dtype=np.int64))
-        cell_ids = np.concatenate(ent_cells) if ent_cells else np.empty(0, np.int64)
-        seg_idx = np.concatenate(ent_seg) if ent_seg else np.empty(0, np.int64)
+        x1, y1, x2, y2, keys = _decode_segments(keys_and_wkb)
+        seg_idx, cell_ids = cells.cover_bboxes(
+            np.minimum(x1, x2), np.minimum(y1, y2),
+            np.maximum(x1, x2), np.maximum(y1, y2), res,
+        )
         order = np.argsort(cell_ids, kind="stable")
         return cls(x1, y1, x2, y2, keys, cell_ids[order], seg_idx[order], res)
 
@@ -383,25 +425,9 @@ def range_lines_batch(
     guard = min(360.0 / n_grid, 180.0 / n_grid)
     rings = min(int(max_dist / guard) + 1, n_grid)
     if rings > _RANGE_MAX_RINGS:
-        nseg = max(len(idx.x1), 1)
-        chunk = max(1, int(2e7 / nseg))
-        bq: list[np.ndarray] = []
-        bv: list[np.ndarray] = []
-        bd: list[np.ndarray] = []
-        for s in range(0, nq, chunk):
-            e = min(s + chunk, nq)
-            d2 = _point_seg_dist2(
-                qx[s:e][:, None], qy[s:e][:, None],
-                idx.x1[None, :], idx.y1[None, :], idx.x2[None, :], idx.y2[None, :],
-            )
-            qi = np.repeat(np.arange(s, e, dtype=np.int64), d2.shape[1])
-            kv = np.tile(idx.keys, e - s)
-            rq, rv, rd = _reduce_min_per_key(qi, kv, d2.ravel())
-            keep = rd <= max_dist * max_dist
-            bq.append(rq[keep])
-            bv.append(rv[keep])
-            bd.append(rd[keep])
-        return np.concatenate(bq), np.concatenate(bv), np.concatenate(bd)
+        return _band_lines(
+            qx, qy, idx.x1, idx.y1, idx.x2, idx.y2, idx.keys, max_dist * max_dist
+        )
     acc_q: list[np.ndarray] = []
     acc_v: list[np.ndarray] = []
     acc_d: list[np.ndarray] = []
@@ -750,125 +776,40 @@ def knn_join(
     return src.mapInPandas(_map, schema=out_schema)
 
 
-class PartitionedLineRangeJoiner:
-    """Distance-band join for HUGE line layers (street-scale: 10^6-10^8
-    segments), where LineKNNJoiner's driver-collect + broadcast index
-    stops scaling — the partitioned counterpart to
-    pip.PartitionedPIPJoiner, same contract as apply_range.
+class _PartitionedRangeJoiner:
+    """Shared skeleton of the partitioned distance-band joiners (lines
+    and points). Target geometry NEVER reaches the driver and is never
+    broadcast:
 
-    Scale shape — segment endpoints NEVER reach the driver and are
-    never broadcast:
-
-    1. group table (__grp, __key, x1, y1, x2, y2): each target row is
-       decoded ONCE in mapInPandas and its segments registered to every
-       coarse gres-cell whose rectangle, inflated by max_dist (the
-       HALO), intersects the segment bbox. A segment within max_dist of
-       any point in group G is therefore guaranteed to be registered in
-       G — candidate completeness holds and each (point, key) pair is
-       found in exactly one group (the point's own). Persisted: this
-       IS the prepared index.
+    1. group table (__grp, __key, <coords>): each target is registered
+       in every coarse gres-cell its bbox, inflated by max_dist (the
+       HALO), touches (cells.cover_bboxes) — a point is a zero-size
+       bbox. A target within max_dist of any point in group G
+       is therefore registered in G: candidate completeness holds at
+       any gres, and each (point, key) pair is found in exactly one
+       group (the point's own). Persisted: this IS the prepared index.
     2. presence set (distinct __grp, one long per group) — the only
        broadcast artifact; points drop map-side when their group holds
-       no segment (most of the planet, for a street layer).
-    3. surviving points shuffle ONCE, keyed by their gres cell, into a
-       cogrouped applyInPandas that computes exact clamped-projection
-       distances (blocked numpy, same float64 op order as
-       _point_seg_dist2 everywhere else) and keeps the min per
-       (point, key) within the band.
+       no target (most of the planet, for a street layer).
+    3. surviving points shuffle ONCE, keyed by the bucket of their gres
+       cell (halo.refine_by_bucket), into one kernel call per bucket
+       that runs the subclass's blocked `_band` on each group's slice.
 
-    gres defaults to the coarsest grid whose cell side stays >=
-    16*max_dist — halo duplication bounded by ~(1 + 1/8)^2 while
-    keeping groups small enough to spread across executors; pass gres
-    to tune. Group-size skew (megacity streets) follows the same salt
-    recipe as PartitionedPIPJoiner if needed."""
+    gres defaults to halo.default_gres(max_dist) (cell side >=
+    16*max_dist); pass gres to tune. A hot group is one slice of one
+    bucket's kernel call."""
 
-    def __init__(
-        self,
-        targets_df: DataFrame,
-        target_key: str,
-        max_dist: float,
-        geom_col: str = "definicni_cara",
-        gres: int | None = None,
-    ):
-        import math
+    _coords: tuple[str, ...] = ()  # group-table coordinate columns
+    _band = None  # (qx, qy, *coords, keys, maxd2) -> (query_idx, key, d2)
 
+    def __init__(self, max_dist: float, gres: int | None):
+        self.max_dist = float(max_dist)
+        self.gres = halo.default_gres(self.max_dist) if gres is None else gres
+
+    def _index(self, groups: DataFrame) -> None:
         from pyspark.storagelevel import StorageLevel
 
-        self.max_dist = float(max_dist)
-        if gres is None:
-            gres = int(
-                np.clip(
-                    math.floor(math.log2(180.0 / (16.0 * self.max_dist))),
-                    0,
-                    cells.MAX_RES,
-                )
-            )
-        self.gres = gres
-        maxd = self.max_dist
-        n = 1 << gres
-
-        segs = targets_df.select(
-            F.col(target_key).cast("long").alias("__key"),
-            F.col(geom_col).alias("__geom"),
-        ).where(F.col(geom_col).isNotNull())
-
-        def _groups(batches):
-            from gdal_vfr_spark.geo import wkb as W
-
-            for pdf in batches:
-                grp_o: list[int] = []
-                key_o: list[int] = []
-                x1_o: list[float] = []
-                y1_o: list[float] = []
-                x2_o: list[float] = []
-                y2_o: list[float] = []
-                for k, buf in zip(pdf["__key"], pdf["__geom"]):
-                    for line in W.decode_lines(bytes(buf)):
-                        if len(line) < 2:
-                            continue
-                        for (ax, ay), (bx, by) in zip(line[:-1], line[1:]):
-                            ix0, iy0 = cells.lonlat_to_grid(
-                                np.asarray([min(ax, bx) - maxd]),
-                                np.asarray([min(ay, by) - maxd]),
-                                gres,
-                            )
-                            ix1, iy1 = cells.lonlat_to_grid(
-                                np.asarray([max(ax, bx) + maxd]),
-                                np.asarray([max(ay, by) + maxd]),
-                                gres,
-                            )
-                            xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1)
-                            ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1)
-                            gx, gy = np.meshgrid(xs, ys)
-                            gc = (
-                                cells.morton_encode(
-                                    gx.ravel().astype(np.int64),
-                                    gy.ravel().astype(np.int64),
-                                )
-                                << np.int64(5)
-                            ) | np.int64(gres)
-                            for g in gc:
-                                grp_o.append(int(g))
-                                key_o.append(int(k))
-                                x1_o.append(float(ax))
-                                y1_o.append(float(ay))
-                                x2_o.append(float(bx))
-                                y2_o.append(float(by))
-                if grp_o:
-                    yield pd.DataFrame(
-                        {
-                            "__grp": np.asarray(grp_o, dtype=np.int64),
-                            "__key": np.asarray(key_o, dtype=np.int64),
-                            "x1": x1_o,
-                            "y1": y1_o,
-                            "x2": x2_o,
-                            "y2": y2_o,
-                        }
-                    )
-
-        self._groups_sdf = segs.mapInPandas(
-            _groups, "__grp long, __key long, x1 double, y1 double, x2 double, y2 double"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        self._groups_sdf = groups.persist(StorageLevel.MEMORY_AND_DISK)
         self._present = self._groups_sdf.select("__grp").distinct()
 
     def apply(
@@ -878,19 +819,12 @@ class PartitionedLineRangeJoiner:
         lat_col: str = "lat",
         id_col: str = "url",
     ) -> DataFrame:
-        import pandas as _pd
-        from pyspark.sql import types as T
-
-        # re-arm the prepared-index cache if clearCache dropped the
-        # persist mark (same guard as PartitionedPIPJoiner.apply)
-        from gdal_vfr_spark.geo.pip import _ensure_persisted
-
-        _ensure_persisted(self._groups_sdf)
+        halo.ensure_persisted(self._groups_sdf)
         maxd2 = self.max_dist * self.max_dist
-        id_field = points_df.schema[id_col]
+        band, coords = self._band, self._coords
         out_schema = T.StructType(
             [
-                id_field,
+                points_df.schema[id_col],
                 T.StructField("neighbor_key", T.LongType()),
                 T.StructField("dist2", T.DoubleType()),
             ]
@@ -902,82 +836,97 @@ class PartitionedLineRangeJoiner:
             .join(F.broadcast(self._present), "__grp", "leftsemi")
         )
 
-        def _refine(pts_pdf: _pd.DataFrame, seg_pdf: _pd.DataFrame) -> _pd.DataFrame:
-            if not len(pts_pdf) or not len(seg_pdf):
-                return _pd.DataFrame(
-                    {
-                        id_col: pts_pdf[id_col].iloc[0:0],
-                        "neighbor_key": _pd.Series([], dtype="int64"),
-                        "dist2": _pd.Series([], dtype="float64"),
-                    }
-                )
-            qx = pts_pdf[lon_col].to_numpy(dtype=np.float64)
-            qy = pts_pdf[lat_col].to_numpy(dtype=np.float64)
-            x1 = seg_pdf["x1"].to_numpy(dtype=np.float64)
-            y1 = seg_pdf["y1"].to_numpy(dtype=np.float64)
-            x2 = seg_pdf["x2"].to_numpy(dtype=np.float64)
-            y2 = seg_pdf["y2"].to_numpy(dtype=np.float64)
-            keys = seg_pdf["__key"].to_numpy(dtype=np.int64)
-            nseg = len(x1)
-            chunk = max(1, int(2e7 / nseg))
-            out_i: list[np.ndarray] = []
-            out_k: list[np.ndarray] = []
-            out_d: list[np.ndarray] = []
-            for s in range(0, len(qx), chunk):
-                e = min(s + chunk, len(qx))
-                d2 = _point_seg_dist2(
-                    qx[s:e][:, None], qy[s:e][:, None],
-                    x1[None, :], y1[None, :], x2[None, :], y2[None, :],
-                )
-                qi = np.repeat(np.arange(s, e, dtype=np.int64), nseg)
-                kv = np.tile(keys, e - s)
-                rq, rv, rd = _reduce_min_per_key(qi, kv, d2.ravel())
-                keep = rd <= maxd2
-                out_i.append(rq[keep])
-                out_k.append(rv[keep])
-                out_d.append(rd[keep])
-            qi = np.concatenate(out_i)
-            return _pd.DataFrame(
+        def _refine(pts: pd.DataFrame, tgt: pd.DataFrame) -> pd.DataFrame:
+            qx = pts[lon_col].to_numpy(dtype=np.float64)
+            qy = pts[lat_col].to_numpy(dtype=np.float64)
+            tc = [tgt[c].to_numpy(dtype=np.float64) for c in coords]
+            keys = tgt["__key"].to_numpy(dtype=np.int64)
+            out_i = [np.empty(0, np.int64)]
+            out_k = [np.empty(0, np.int64)]
+            out_d = [np.empty(0, np.float64)]
+            for qi, ti in halo.group_slices(
+                pts["__grp"].to_numpy(dtype=np.int64), tgt["__grp"].to_numpy(dtype=np.int64)
+            ):
+                rq, rk, rd = band(qx[qi], qy[qi], *(c[ti] for c in tc), keys[ti], maxd2)
+                out_i.append(qi[rq])
+                out_k.append(rk)
+                out_d.append(rd)
+            return pd.DataFrame(
                 {
-                    id_col: pts_pdf[id_col].to_numpy()[qi],
+                    id_col: pts[id_col].to_numpy()[np.concatenate(out_i)],
                     "neighbor_key": np.concatenate(out_k),
                     "dist2": np.concatenate(out_d),
                 }
             )
 
-        return (
-            src.groupby("__grp")
-            .cogroup(self._groups_sdf.groupby("__grp"))
-            .applyInPandas(_refine, out_schema)
-        )
+        return halo.refine_by_bucket(src, self._groups_sdf, ["__grp"], _refine, out_schema)
 
 
-class PartitionedPointRangeJoiner:
+class PartitionedLineRangeJoiner(_PartitionedRangeJoiner):
+    """Distance-band join for HUGE line layers (street-scale: 10^6-10^8
+    segments), where LineKNNJoiner's driver-collect + broadcast index
+    stops scaling — the partitioned counterpart to
+    pip.PartitionedPIPJoiner, same contract as apply_range.
+
+    Each target row is decoded ONCE in mapInPandas and its segments
+    registered (vectorized) with the max_dist halo; the refine computes
+    exact clamped-projection distances (_band_lines: blocked numpy, the
+    same float64 op order as _point_seg_dist2 everywhere else) and keeps
+    the min per (point, key) within the band. See
+    _PartitionedRangeJoiner for the shared skeleton."""
+
+    _coords = ("x1", "y1", "x2", "y2")
+    _band = staticmethod(_band_lines)
+
+    def __init__(
+        self,
+        targets_df: DataFrame,
+        target_key: str,
+        max_dist: float,
+        geom_col: str = "definicni_cara",
+        gres: int | None = None,
+    ):
+        super().__init__(max_dist, gres)
+        maxd, gres = self.max_dist, self.gres
+
+        def _groups(batches):
+            for pdf in batches:
+                x1, y1, x2, y2, keys = _decode_segments(zip(pdf["__key"], pdf["__geom"]))
+                if not len(keys):
+                    continue
+                row, grp = cells.cover_bboxes(
+                    np.minimum(x1, x2) - maxd, np.minimum(y1, y2) - maxd,
+                    np.maximum(x1, x2) + maxd, np.maximum(y1, y2) + maxd, gres,
+                )
+                yield pd.DataFrame(
+                    {"__grp": grp, "__key": keys[row],
+                     "x1": x1[row], "y1": y1[row], "x2": x2[row], "y2": y2[row]}
+                )
+
+        segs = targets_df.select(
+            F.col(target_key).cast("long").alias("__key"),
+            F.col(geom_col).alias("__geom"),
+        ).where(F.col(geom_col).isNotNull())
+        self._index(segs.mapInPandas(
+            _groups, "__grp long, __key long, x1 double, y1 double, x2 double, y2 double"
+        ))
+
+
+class PartitionedPointRangeJoiner(_PartitionedRangeJoiner):
     """Distance-band join for HUGE point target layers (countrywide
     AdresniMista scale: ~3M definition points, gfs/AdresniMista.gfs:
     8-24 x 6,258 OB files in test_suite/db_uksh.txt — past the
     broadcast budget of knn_join), the point twin of
-    PartitionedLineRangeJoiner: target coordinates NEVER reach the
-    driver and are never broadcast.
-
-    1. group table (__grp, __key, x, y): each target row is registered
-       to every coarse gres-cell whose rectangle, inflated by max_dist
-       (the HALO), contains it — at the default gres (cell side >=
-       16*max_dist) that is at most the 4 cells around the target's
-       corner, computed fully vectorized (no per-row Python, unlike
-       the line variant's per-segment decode loop). A target within
-       max_dist of any point in group G is registered in G, so
-       candidate completeness holds and each (point, key) pair is
-       found in exactly one group (the point's own). Persisted: this
-       IS the prepared index.
-    2. presence set (distinct __grp) — the only broadcast artifact;
-       points drop map-side when their group holds no target.
-    3. surviving points shuffle ONCE, keyed by their gres cell, into a
-       cogrouped applyInPandas computing exact squared-euclidean
-       distances (blocked numpy) within the band.
+    PartitionedLineRangeJoiner: a target point is a zero-length segment
+    for registration, and the refine computes exact squared-euclidean
+    distances (_band_points, blocked numpy) within the band. See
+    _PartitionedRangeJoiner for the shared skeleton.
 
     Bounded-radius kNN on top = apply() + a rank window (see
     knn_join_points_large) — the same recipe the street layer uses."""
+
+    _coords = ("x", "y")
+    _band = staticmethod(_band_points)
 
     def __init__(
         self,
@@ -988,28 +937,8 @@ class PartitionedPointRangeJoiner:
         target_lat: str = "lat",
         gres: int | None = None,
     ):
-        import math
-
-        from pyspark.storagelevel import StorageLevel
-
-        self.max_dist = float(max_dist)
-        if gres is None:
-            gres = int(
-                np.clip(
-                    math.floor(math.log2(180.0 / (16.0 * self.max_dist))),
-                    0,
-                    cells.MAX_RES,
-                )
-            )
-        self.gres = gres
-        maxd = self.max_dist
-        n = 1 << gres
-
-        pts = targets_df.select(
-            F.col(target_key).cast("long").alias("__key"),
-            F.col(target_lon).cast("double").alias("x"),
-            F.col(target_lat).cast("double").alias("y"),
-        ).where(F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull())
+        super().__init__(max_dist, gres)
+        maxd, gres = self.max_dist, self.gres
 
         def _groups(batches):
             for pdf in batches:
@@ -1017,130 +946,18 @@ class PartitionedPointRangeJoiner:
                     continue
                 x = pdf["x"].to_numpy(dtype=np.float64)
                 y = pdf["y"].to_numpy(dtype=np.float64)
-                k = pdf["__key"].to_numpy(dtype=np.int64)
-                ix0, iy0 = cells.lonlat_to_grid(x - maxd, y - maxd, gres)
-                ix1, iy1 = cells.lonlat_to_grid(x + maxd, y + maxd, gres)
-                ix1 = np.minimum(ix1, n - 1)
-                iy1 = np.minimum(iy1, n - 1)
-                # halo cells = the <=4 distinct corners of the inflated
-                # bbox (cell side >= 16*max_dist, so the bbox spans at
-                # most 2 cells per axis); masks dedupe collapsed axes
-                out_cx: list[np.ndarray] = []
-                out_cy: list[np.ndarray] = []
-                out_k: list[np.ndarray] = []
-                out_x: list[np.ndarray] = []
-                out_y: list[np.ndarray] = []
-                corners = (
-                    (ix0, iy0, None),
-                    (ix1, iy0, ix1 != ix0),
-                    (ix0, iy1, iy1 != iy0),
-                    (ix1, iy1, (ix1 != ix0) & (iy1 != iy0)),
-                )
-                for cx, cy, mask in corners:
-                    if mask is None:
-                        out_cx.append(cx)
-                        out_cy.append(cy)
-                        out_k.append(k)
-                        out_x.append(x)
-                        out_y.append(y)
-                    elif mask.any():
-                        out_cx.append(cx[mask])
-                        out_cy.append(cy[mask])
-                        out_k.append(k[mask])
-                        out_x.append(x[mask])
-                        out_y.append(y[mask])
-                gc = (
-                    cells.morton_encode(
-                        np.concatenate(out_cx).astype(np.int64),
-                        np.concatenate(out_cy).astype(np.int64),
-                    )
-                    << np.int64(5)
-                ) | np.int64(gres)
+                row, grp = cells.cover_bboxes(x - maxd, y - maxd, x + maxd, y + maxd, gres)
                 yield pd.DataFrame(
-                    {
-                        "__grp": gc,
-                        "__key": np.concatenate(out_k),
-                        "x": np.concatenate(out_x),
-                        "y": np.concatenate(out_y),
-                    }
+                    {"__grp": grp, "__key": pdf["__key"].to_numpy(dtype=np.int64)[row],
+                     "x": x[row], "y": y[row]}
                 )
 
-        self._groups_sdf = pts.mapInPandas(
-            _groups, "__grp long, __key long, x double, y double"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        self._present = self._groups_sdf.select("__grp").distinct()
-
-    def apply(
-        self,
-        points_df: DataFrame,
-        lon_col: str = "lon",
-        lat_col: str = "lat",
-        id_col: str = "url",
-    ) -> DataFrame:
-        import pandas as _pd
-        from pyspark.sql import types as T
-
-        from gdal_vfr_spark.geo.pip import _ensure_persisted
-
-        _ensure_persisted(self._groups_sdf)
-        maxd2 = self.max_dist * self.max_dist
-        id_field = points_df.schema[id_col]
-        out_schema = T.StructType(
-            [
-                id_field,
-                T.StructField("neighbor_key", T.LongType()),
-                T.StructField("dist2", T.DoubleType()),
-            ]
-        )
-        src = (
-            points_df.select(id_col, lon_col, lat_col)
-            .where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
-            .withColumn("__grp", cells.cell_expr(F.col(lon_col), F.col(lat_col), self.gres))
-            .join(F.broadcast(self._present), "__grp", "leftsemi")
-        )
-
-        def _refine(pts_pdf: _pd.DataFrame, tgt_pdf: _pd.DataFrame) -> _pd.DataFrame:
-            if not len(pts_pdf) or not len(tgt_pdf):
-                return _pd.DataFrame(
-                    {
-                        id_col: pts_pdf[id_col].iloc[0:0],
-                        "neighbor_key": _pd.Series([], dtype="int64"),
-                        "dist2": _pd.Series([], dtype="float64"),
-                    }
-                )
-            qx = pts_pdf[lon_col].to_numpy(dtype=np.float64)
-            qy = pts_pdf[lat_col].to_numpy(dtype=np.float64)
-            tx = tgt_pdf["x"].to_numpy(dtype=np.float64)
-            ty = tgt_pdf["y"].to_numpy(dtype=np.float64)
-            keys = tgt_pdf["__key"].to_numpy(dtype=np.int64)
-            ntgt = len(tx)
-            chunk = max(1, int(2e7 / ntgt))
-            out_i: list[np.ndarray] = []
-            out_k: list[np.ndarray] = []
-            out_d: list[np.ndarray] = []
-            for s in range(0, len(qx), chunk):
-                e = min(s + chunk, len(qx))
-                dx = qx[s:e][:, None] - tx[None, :]
-                dy = qy[s:e][:, None] - ty[None, :]
-                d2 = dx * dx + dy * dy
-                qi2, ci2 = np.nonzero(d2 <= maxd2)
-                out_i.append(qi2 + s)
-                out_k.append(keys[ci2])
-                out_d.append(d2[qi2, ci2])
-            qi = np.concatenate(out_i)
-            return _pd.DataFrame(
-                {
-                    id_col: pts_pdf[id_col].to_numpy()[qi],
-                    "neighbor_key": np.concatenate(out_k),
-                    "dist2": np.concatenate(out_d),
-                }
-            )
-
-        return (
-            src.groupby("__grp")
-            .cogroup(self._groups_sdf.groupby("__grp"))
-            .applyInPandas(_refine, out_schema)
-        )
+        pts = targets_df.select(
+            F.col(target_key).cast("long").alias("__key"),
+            F.col(target_lon).cast("double").alias("x"),
+            F.col(target_lat).cast("double").alias("y"),
+        ).where(F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull())
+        self._index(pts.mapInPandas(_groups, "__grp long, __key long, x double, y double"))
 
 
 def knn_join_points_large(

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
-from gdal_vfr_spark.geo import cells, wkb
+from gdal_vfr_spark.geo import cells, halo, wkb
 
 
 @dataclass
@@ -442,17 +442,6 @@ class PIPJoiner:
         raise ValueError(f"unsupported how={how!r}")
 
 
-def _ensure_persisted(df: DataFrame) -> None:
-    """Re-arm a prepared-index cache if something (typically
-    spark.catalog.clearCache between benchmark queries) dropped its
-    persist mark — persist() after an unpersist re-registers the plan
-    with the cache manager; the next action materializes it again."""
-    from pyspark.storagelevel import StorageLevel
-
-    if df.storageLevel == StorageLevel.NONE:
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
 def _span_stats(polys: DataFrame, geom_col: str) -> tuple[int, float]:
     """Distributed bbox statistics for cover-resolution selection: one
     pass over the polygon table, only TWO scalars (row count, median
@@ -497,24 +486,25 @@ class PartitionedPIPJoiner:
        broadcast size, and the knee is early).
     2. packed-geometry group table (__grp, __gsalt, __pkey, __geom) —
        polygons keyed by the coarse gres-cells their bbox intersects
-       (a polygon is duplicated only across the few groups it
-       straddles). Stays a distributed DataFrame; the refine cogroup
-       shuffles it by group key.
+       (cells.cover_bboxes: a polygon is duplicated only across the
+       few groups it straddles). Stays a distributed DataFrame; the
+       refine shuffles it by bucket.
 
     apply(): pages get cells JVM-side, broadcast-join the cover
     (map-only, pages never shuffle for candidate generation),
     interior-certified candidates are hits with zero Python, and ONLY
-    boundary-cell candidates shuffle — keyed by their cell's gres
-    parent — into a cogrouped applyInPandas that packs the group's
-    polygons and runs the same vectorized even-odd test as the
-    broadcast path. Identical results (pip parity pinned in
-    tests/test_pip.py); one extra shuffle of the boundary slice is the
-    price of not broadcasting vertices.
+    boundary-cell candidates shuffle — keyed by the bucket of their
+    cell's gres parent (halo.refine_by_bucket) — into one kernel call
+    per bucket that packs the bucket's polygons once and runs the same
+    vectorized even-odd test as the broadcast path. Identical results
+    (pip parity pinned in tests/test_pip.py); one extra shuffle of the
+    boundary slice is the price of not broadcasting vertices.
 
-    Megacity skew: a hot group's boundary candidates all land on one
-    reducer. salt>1 replicates each polygon row into `salt` copies per
-    group and routes candidates by hash(lon,lat) % salt, splitting a
-    hot group across `salt` reducers at the cost of `salt`x geometry
+    Megacity skew: a hot group's boundary candidates all land in one
+    bucket, i.e. one task. salt>1 replicates each polygon row into
+    `salt` copies per group and routes candidates by hash(lon,lat) %
+    salt; the bucket key hashes (__grp, __gsalt), so a hot group spreads
+    over up to `salt` buckets at the cost of `salt`x geometry
     duplication in the group table (geometry only — the candidate side
     is partitioned, not replicated).
 
@@ -577,42 +567,24 @@ class PartitionedPIPJoiner:
         ).persist()
 
         def _groups(batches):
-            n = 1 << gres
             for pdf in batches:
-                grp_o: list[int] = []
-                salt_o: list[int] = []
-                key_o: list[int] = []
-                geom_o: list[bytes] = []
-                for k, buf in zip(pdf["__pkey"], pdf["__geom"]):
-                    buf = bytes(buf)
-                    allv = np.concatenate(wkb.decode_rings(buf))
-                    ix0, iy0 = cells.lonlat_to_grid(
-                        np.asarray([allv[:, 0].min()]), np.asarray([allv[:, 1].min()]), gres
-                    )
-                    ix1, iy1 = cells.lonlat_to_grid(
-                        np.asarray([allv[:, 0].max()]), np.asarray([allv[:, 1].max()]), gres
-                    )
-                    xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1, dtype=np.int64)
-                    ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1, dtype=np.int64)
-                    gx, gy = np.meshgrid(xs, ys)
-                    gc = (
-                        cells.morton_encode(gx.ravel(), gy.ravel()) << np.int64(5)
-                    ) | np.int64(gres)
-                    for g in gc:
-                        for s in range(nsalt):
-                            grp_o.append(int(g))
-                            salt_o.append(s)
-                            key_o.append(int(k))
-                            geom_o.append(buf)
-                if grp_o:
-                    yield pd.DataFrame(
-                        {
-                            "__grp": np.asarray(grp_o, dtype=np.int64),
-                            "__gsalt": np.asarray(salt_o, dtype=np.int32),
-                            "__pkey": np.asarray(key_o, dtype=np.int64),
-                            "__geom": geom_o,
-                        }
-                    )
+                if not len(pdf):
+                    continue
+                geom = pdf["__geom"].to_numpy()
+                bbox = np.empty((len(pdf), 4))
+                for i, buf in enumerate(geom):
+                    allv = np.concatenate(wkb.decode_rings(bytes(buf)))
+                    bbox[i] = (*allv.min(axis=0), *allv.max(axis=0))
+                row, grp = cells.cover_bboxes(*bbox.T, gres)
+                row, grp = np.repeat(row, nsalt), np.repeat(grp, nsalt)
+                yield pd.DataFrame(
+                    {
+                        "__grp": grp,
+                        "__gsalt": np.tile(np.arange(nsalt, dtype=np.int32), len(row) // nsalt),
+                        "__pkey": pdf["__pkey"].to_numpy(dtype=np.int64)[row],
+                        "__geom": geom[row],
+                    }
+                )
 
         # persisted like the cover: this IS the prepared index (the
         # partitioned analogue of PIPJoiner's one-time broadcast build),
@@ -638,8 +610,8 @@ class PartitionedPIPJoiner:
         # after which every action would rebuild the cover and group
         # tables from the raw dimension — measured 3-4x per-action cost
         # on the parcel fixture. persist() after unpersist re-registers.
-        _ensure_persisted(self._cover_sdf)
-        _ensure_persisted(self._groups_sdf)
+        halo.ensure_persisted(self._cover_sdf)
+        halo.ensure_persisted(self._groups_sdf)
         out_key = self.out_key
         res, gres, nsalt = self.res, self.gres, self.salt
         base = points_df
@@ -674,32 +646,29 @@ class PartitionedPIPJoiner:
         names = [f.name for f in out_fields]
         from pyspark.sql.types import StructType
 
-        out_schema = StructType(out_fields)
-
         def _refine(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
+            # one call per bucket: every group hashed here arrives at
+            # once, so the bucket's polygons are packed ONCE (duplicates
+            # across groups and salts dropped, only keys a candidate
+            # asks for decoded) and each candidate row names its own
+            # polygon through poly_key
             if not len(cand_pdf) or not len(poly_pdf):
                 return cand_pdf.loc[:, names].iloc[0:0]
+            want = cand_pdf["poly_key"].to_numpy(dtype=np.int64)
+            polys = poly_pdf[poly_pdf["__pkey"].isin(want)]
+            polys = polys.drop_duplicates("__pkey").sort_values("__pkey")
             idx = PackedPolygonIndex.build(
-                [
-                    (int(k), bytes(b))
-                    for k, b in zip(poly_pdf["__pkey"], poly_pdf["__geom"])
-                ]
-            )
-            pos = {int(k): i for i, k in enumerate(idx.keys)}
-            pidx = np.asarray(
-                [pos[int(k)] for k in cand_pdf["poly_key"]], dtype=np.int64
+                list(zip(polys["__pkey"].tolist(), polys["__geom"]))
             )
             hit = idx.contains(
-                pidx,
+                np.searchsorted(idx.keys, want),
                 cand_pdf[lon_col].to_numpy(dtype=np.float64),
                 cand_pdf[lat_col].to_numpy(dtype=np.float64),
             )
             return cand_pdf.loc[hit, names]
 
-        refined = (
-            boundary.groupby("__grp", "__gsalt")
-            .cogroup(self._groups_sdf.groupby("__grp", "__gsalt"))
-            .applyInPandas(_refine, out_schema)
+        refined = halo.refine_by_bucket(
+            boundary, self._groups_sdf, ["__grp", "__gsalt"], _refine, StructType(out_fields)
         )
         hits = inner_hits.unionByName(refined).withColumnRenamed("poly_key", out_key)
         if how == "inner":

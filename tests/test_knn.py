@@ -381,6 +381,16 @@ def test_partitioned_point_range_and_knn(spark):
         d2 = (r["lon"] - tx) ** 2 + (r["lat"] - ty) ** 2
         for j in np.flatnonzero(d2 <= maxd * maxd):
             want.add((r["url"], int(tk[j]), round(float(d2[j]), 15)))
+    # a coarser or finer group grid changes the halo fan-out, never the
+    # band: at gres 15/17 a target's inflated bbox spans 2-4 cells per
+    # axis, all of which it must be registered in
+    for gres in (15, 17):
+        fine = PartitionedPointRangeJoiner(
+            targets, target_key="kod", max_dist=maxd, gres=gres
+        )
+        rows = fine.apply(pages, id_col="url").collect()
+        got = {(r["url"], r["neighbor_key"], round(r["dist2"], 15)) for r in rows}
+        assert got == want and len(rows) == len(got), f"gres={gres}"
     pj = PartitionedPointRangeJoiner(targets, target_key="kod", max_dist=maxd)
     got = {
         (r["url"], r["neighbor_key"], round(r["dist2"], 15))
@@ -397,6 +407,35 @@ def test_partitioned_point_range_and_knn(spark):
     for r in out:
         ranked = sorted(by_url[r["url"]])[: 2]
         assert (round(r["dist2"], 15), r["neighbor_key"]) == ranked[r["rank"]]
+
+
+def test_partitioned_line_range_one_bucket(spark, one_bucket):
+    """Every group in one refine bucket: a segment registered in several
+    groups of the bucket is still paired only with points of the group
+    being refined, so each (point, key) pair appears ONCE, with the
+    broadcast path's exact dist2."""
+    from pyspark.sql import functions as F
+
+    from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner, range_join_lines
+
+    pages = datagen.gen_webpages(spark, n=1500, seed=19)
+    ulice = datagen.gen_ulice(spark)
+    pj = PartitionedLineRangeJoiner(ulice, target_key="kod", max_dist=0.02)
+    multi = pj._groups_sdf.groupBy("x1", "y1", "x2", "y2").agg(
+        F.countDistinct("__grp").alias("g")
+    )
+    assert multi.where("g > 1").count() > 0  # segments registered in several groups
+    rows = pj.apply(pages, id_col="url").collect()
+    got = sorted((r["url"], r["neighbor_key"], r["dist2"]) for r in rows)
+    assert len({(u, k) for u, k, _ in got}) == len(got)
+    want = sorted(
+        (r["url"], r["neighbor_key"], r["dist2"])
+        for r in range_join_lines(
+            pages, ulice, max_dist=0.02, target_key="kod", id_col="url"
+        ).collect()
+    )
+    assert got == want
+    test_partitioned_point_range_and_knn(spark)
 
 
 def test_broadcast_budget_guards(spark):

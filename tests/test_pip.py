@@ -251,3 +251,26 @@ def test_partitioned_pip_index_save_load_parity(spark, tmp_path):
             for r in loaded.apply(pages).select("url", "parcel_kod").collect()
         )
         assert got == want, f"broadcast_cover={bc}"
+
+
+def test_partitioned_pip_one_bucket(spark, one_bucket):
+    """Every group in one refine bucket: polygons that straddle several
+    groups (and, with salt=3, several salts) meet their candidates in
+    the same kernel call and are packed once; the parity and truth
+    tests above must still hold exactly."""
+    from pyspark.sql import functions as F
+
+    from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
+
+    obce = datagen.gen_obce(spark, seed=7)
+    for salt in (1, 3):
+        pj = PartitionedPIPJoiner(
+            obce, poly_key="kod", geom_col="originalni_hranice", salt=salt
+        )
+        groups = pj._groups_sdf.groupBy("__pkey").agg(
+            F.countDistinct("__grp").alias("g"), F.countDistinct("__gsalt").alias("s")
+        )
+        assert groups.where("g > 1").count() > 0  # straddling polygons exist
+        assert groups.where(f"s != {salt}").count() == 0
+    test_partitioned_pip_parity_with_broadcast(spark)
+    test_partitioned_pip_parcely_large_truth(spark)

@@ -71,10 +71,12 @@ AUDIT = [
     ("web_cap_per_domain", dict(max_python=0, max_shuffles=2)),
     # partitioned PIP: Python boundaries are the distributed index build
     # (parcel WKB gen + cover + groups mapInPandas, all O(dimension)) +
-    # ONE cogrouped refine; the PAGE side stays map-only into the
-    # broadcast cover join — only the boundary-cell slice shuffles
-    # (cogroup pair) before the final agg + contract orderBy. No
-    # driver-side collect of the dimension anywhere in the plan.
+    # ONE cogrouped refine, called once per shuffle bucket
+    # (geo/halo.py); the PAGE side stays map-only into the broadcast
+    # cover join — only the boundary-cell slice shuffles (cogroup pair,
+    # hashed on the bucket key instead of the group key: same exchange
+    # count) before the final agg + contract orderBy. No driver-side
+    # collect of the dimension anywhere in the plan.
     ("geo_pip_parcely_large", dict(max_python=5, want_broadcast=True, max_shuffles=5)),
     # decontamination: bench shingle set broadcast; python = the two
     # word-shingle Arrow fast-path passes (corpus + bench side — the
@@ -99,9 +101,10 @@ AUDIT = [
     # like dedup_cc); budget covers the final left join + orderBy
     ("graph_pagerank", dict(max_python=0, max_shuffles=4)),
     # partitioned line-range join: python boundaries = street WKB gen +
-    # group-table build (both O(dimension)) + ONE cogrouped refine;
-    # points drop map-side on the broadcast presence set and shuffle
-    # once (cogroup pair) + contract orderBy
+    # group-table build (both O(dimension)) + ONE cogrouped refine,
+    # called once per shuffle bucket; points drop map-side on the
+    # broadcast presence set and shuffle once (cogroup pair on the
+    # bucket key) + contract orderBy; knn_lines adds the rank window
     ("geo_range_join_large", dict(max_python=4, want_broadcast=True, max_shuffles=4)),
     ("geo_knn_lines_large", dict(max_python=4, want_broadcast=True, max_shuffles=5)),
     # temperature sampling: counts agg -> broadcast quotas -> rank
@@ -111,7 +114,8 @@ AUDIT = [
     # quantiles: ONE window pass (rank + count share the partition),
     # exploded (p, target) filter, contract orderBy
     ("text_quantiles", dict(max_python=0, max_shuffles=3)),
-    # parcel hierarchy = parcely_large plan + an integer FK projection
+    # parcel hierarchy = parcely_large plan (per-bucket refine) + an
+    # integer FK projection
     ("geo_pip_hierarchy_parcel", dict(max_python=5, want_broadcast=True, max_shuffles=5)),
     # validity tally: one Arrow pass + one agg (the WKB decode IS the work)
     ("a2_wkb_validity", dict(max_python=1, max_shuffles=1)),
@@ -131,9 +135,10 @@ AUDIT = [
     # M4: partition-pruned scan of the batch_id layout -> agg -> orderBy
     ("m4_schema_per_file", dict(max_python=0, max_shuffles=2)),
     # partitioned point-kNN: python = target-grid gen + group build
-    # (both O(dimension)) + ONE cogrouped refine; points drop map-side
-    # on the broadcast presence set, shuffle once (cogroup pair), then
-    # rank window + contract orderBy
+    # (both O(dimension)) + ONE cogrouped refine, called once per
+    # shuffle bucket; points drop map-side on the broadcast presence
+    # set, shuffle once (cogroup pair on the bucket key), then rank
+    # window + contract orderBy
     ("geo_knn_points_large", dict(max_python=4, want_broadcast=True, max_shuffles=5)),
     # multimodal: synth + decode/stat passes are mapInPandas by design
     # (per-payload parsers); joins are broadcast at this row count
