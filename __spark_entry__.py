@@ -17,6 +17,7 @@ DuckDB twin. Cross-engine exactness rules used throughout:
 
 from __future__ import annotations
 
+import functools
 import sys
 import os
 from collections.abc import Callable
@@ -42,11 +43,10 @@ TABLES = (
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the engine to executor workers of a driver-owned session."""
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass
+    """Ship the engine to executor workers of a driver-owned session.
+    Re-adding the same zip to a live session only logs a warning, so
+    any exception here is a real failure and propagates."""
+    spark.sparkContext.addPyFile(package_zip())
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -62,13 +62,11 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (small) result rows once and lets both the sampler and the exchange
 # re-read them (guide §1.2 "don't compute things twice"; measured e.g.
 # geo_range_join_large 5.9s -> 3.2s, the refine kernel 2x -> 1x).
-# _SORT_BARRIER exists so plan_variants() can expose the un-hidden plan
-# to the audit tooling (localCheckpoint shows as Scan ExistingRDD).
-_SORT_BARRIER = True
-
-
-def _sort_once(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False) if _SORT_BARRIER else df
+# The queries that use it take sort_barrier=True; plan_variants()
+# passes False to expose the un-hidden plan to the audit tooling
+# (localCheckpoint shows as Scan ExistingRDD).
+def _sort_once(df: DataFrame, sort_barrier: bool) -> DataFrame:
+    return df.localCheckpoint(eager=False) if sort_barrier else df
 
 
 # --------------------------------------------------------------------------
@@ -242,6 +240,18 @@ def _duck_tokens(t: str) -> str:
     return f"list_filter(regexp_split_to_array(lower({t}), '[^a-z0-9]+'), x -> x <> '')"
 
 
+def _duck_word_shingles(toks: str, n: int) -> str:
+    """Distinct non-empty word n-grams of the token list `toks` (twin of
+    the shingles dedup.word_shingle_hash_rows hashes): an n-token window
+    joined by single spaces; a list shorter than n gives one shingle of
+    all its tokens, and an empty list none."""
+    return (
+        f"list_filter(list_distinct(list_transform("
+        f"range(1, greatest(len({toks}) - {n - 1}, 1) + 1),"
+        f" i -> array_to_string({toks}[i:i+{n - 1}], ' '))), x -> x <> '')"
+    )
+
+
 def _duck_stoplist(lang: str) -> str:
     return "[" + ", ".join(f"'{w}'" for w in text_ops.STOPWORDS[lang]) + "]"
 
@@ -342,8 +352,8 @@ def _duck_repetition_sql(src: str = "documents") -> str:
 def _duck_sig_bands_cte(num_hashes: int = 16, bands: int = 8, shingle_n: int = 5) -> str:
     """The sig/bands CTE pair shared by every MinHash oracle: exact
     Kirsch-Mitzenmacher signatures + LSH band keys over `documents`
-    (twin of functions.text_expr.minhash_signature_expr /
-    band_keys_expr)."""
+    (twin of operators.dedup.with_minhash /
+    functions.text_expr.band_keys_expr)."""
     rows = num_hashes // bands
     sh = (
         f"list_distinct(list_transform(range(1, greatest(length(text) - {shingle_n - 1}, 1) + 1),"
@@ -484,10 +494,11 @@ def _duck_cosine_topk_sql(k: int = 3, n_queries: int = 5) -> str:
 
 
 def _duck_srp_near_dup_sql(threshold: float = 0.4, n_planes: int = 4, dim: int = 64) -> str:
-    """Twin of similarity.cosine_near_dup_pairs: the same seeded
-    hyperplane constants (full-precision repr round-trips the exact
-    double), the same sequential-fold dot, the same MSB-first sign-bit
-    bucket — so the SRP candidate set is bit-identical cross-engine."""
+    """Twin of similarity.cosine_near_dup_pairs, (id_a, id_b, cosine):
+    the same seeded hyperplane constants (full-precision repr
+    round-trips the exact double), the same sequential-fold dot, the
+    same MSB-first sign-bit bucket — so the SRP candidate set and every
+    cosine are bit-identical cross-engine."""
     from gdal_vfr_spark.operators.similarity import random_hyperplanes
 
     planes = random_hyperplanes(dim, n_planes)
@@ -514,11 +525,45 @@ def _duck_srp_near_dup_sql(threshold: float = 0.4, n_planes: int = 4, dim: int =
     return f"""
     WITH bk AS (
       SELECT vec_id, embedding, {bits} AS bucket FROM embeddings
+    ), scored AS (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        ({pair_dot}) / ({norm.format(v='a.embedding')} * {norm.format(v='b.embedding')}) AS cosine
+      FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b
-    FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-    WHERE ({pair_dot}) / ({norm.format(v='a.embedding')} * {norm.format(v='b.embedding')}) >= {threshold}
-    ORDER BY id_a, id_b
+    SELECT id_a, id_b, cosine FROM scored WHERE cosine >= {threshold}
+    """
+
+
+def _duck_int8_topk_sql(k: int = 3, n_queries: int = 5) -> str:
+    """Twin of similarity.int8_topk with queries vec_id < n_queries:
+    the same float64 fold norm, round-half-away int8 codes, zero vectors
+    dropped, and an exact BIGINT dot."""
+    norm = _DUCK_NORM_SQL.format(v="embedding")
+    return f"""
+    WITH normed AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE) / {norm}) AS ne
+      FROM embeddings
+      WHERE {norm} > 0
+    ),
+    codes AS (
+      SELECT vec_id,
+             list_transform(ne, x -> CAST(round(x * 127.0) AS INT)) AS c
+      FROM normed
+    ),
+    q AS (SELECT vec_id AS query_id, c AS qc FROM codes WHERE vec_id < {n_queries}),
+    scored AS (
+      SELECT q.query_id, codes.vec_id,
+             list_reduce(list_prepend(0::BIGINT,
+               list_transform(list_zip(q.qc, codes.c),
+                 p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT))),
+               (a, b) -> a + b) AS score
+      FROM q, codes
+    )
+    SELECT query_id, vec_id, score, rank FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+      FROM scored
+    ) WHERE rank <= {k} ORDER BY query_id, rank
     """
 
 
@@ -2168,7 +2213,7 @@ def q_text_clean_lines(spark, sf_dir):
     )
 
 
-def q_dedup_strip_boilerplate(spark, sf_dir):
+def q_dedup_strip_boilerplate(spark, sf_dir, sort_barrier: bool = True):
     """Corpus-global boilerplate-line removal (operators/dedup.py:
     strip_boilerplate_lines — the line-granularity sibling of
     exact_substring_spans): every non-blank line occurring in >= 2
@@ -2182,11 +2227,12 @@ def q_dedup_strip_boilerplate(spark, sf_dir):
     ml = _multiline_docs(spark, sf_dir)
     return _sort_once(
         dedup_ops.strip_boilerplate_lines(ml, text_col="text", min_docs=2)
-        .select("doc_id", "n_kept_lines", "clean_text")
+        .select("doc_id", "n_kept_lines", "clean_text"),
+        sort_barrier,
     ).orderBy("doc_id")
 
 
-def q_web_url_canonicalize(spark, sf_dir):
+def q_web_url_canonicalize(spark, sf_dir, sort_barrier: bool = True):
     """URL canonicalization for crawl dedup (engine addition): messy
     synthesized URLs (uppercase scheme/host, default :443 ports,
     utm_*/fbclid tracking params, fragments, bare-root slashes) ->
@@ -2221,7 +2267,8 @@ def q_web_url_canonicalize(spark, sf_dir):
     return _sort_once(
         d.select(
             "doc_id", "url", url_fns.canonicalize_url_expr("url").alias("canonical_url")
-        )
+        ),
+        sort_barrier,
     ).orderBy("doc_id")
 
 
@@ -2262,21 +2309,23 @@ def q_text_quantiles(spark, sf_dir):
     return text_ops.value_quantiles(docs).orderBy("source", "p")
 
 
-def q_text_lang(spark, sf_dir):
+def q_text_lang(spark, sf_dir, sort_barrier: bool = True):
     docs = _read(spark, sf_dir, "documents")
     return _sort_once(
-        text_ops.with_lang_id(docs).select("doc_id", "lang_pred")
+        text_ops.with_lang_id(docs).select("doc_id", "lang_pred"),
+        sort_barrier,
     ).orderBy("doc_id")
 
 
-def q_text_quality(spark, sf_dir):
+def q_text_quality(spark, sf_dir, sort_barrier: bool = True):
     docs = _read(spark, sf_dir, "documents")
     return _sort_once(
-        text_ops.with_quality(docs).select("doc_id", "quality")
+        text_ops.with_quality(docs).select("doc_id", "quality"),
+        sort_barrier,
     ).orderBy("doc_id")
 
 
-def q_text_repetition(spark, sf_dir):
+def q_text_repetition(spark, sf_dir, sort_barrier: bool = True):
     """Gopher-style repetition filter profile (Rae et al. 2021 §A1.1
     semantics class, re-expressed): per-doc INTEGER char budgets for
     the most-covering word 2-gram and for duplicated 5-grams, plus
@@ -2285,7 +2334,7 @@ def q_text_repetition(spark, sf_dir):
     {1,2,5}-grams), two keyed shuffles
     (operators/text.py:repetition_stats)."""
     docs = _read(spark, sf_dir, "documents")
-    return _sort_once(text_ops.repetition_stats(docs)).orderBy("doc_id")
+    return _sort_once(text_ops.repetition_stats(docs), sort_barrier).orderBy("doc_id")
 
 
 def q_text_pii_scrub(spark, sf_dir):
@@ -2775,19 +2824,6 @@ def plan_variants() -> dict:
             "doc_id"
         )
 
-    def _no_barrier(q):
-        # build the plan with the pre-sort localCheckpoint disabled so
-        # the audit sees the full operator tree, not Scan ExistingRDD
-        def f(spark, sf_dir):
-            global _SORT_BARRIER
-            _SORT_BARRIER = False
-            try:
-                return q(spark, sf_dir)
-            finally:
-                _SORT_BARRIER = True
-
-        return f
-
     out = {"dedup_decontaminate_bloom": bloom_plan}
     for name, q in [
         ("geo_range_join_large", q_geo_range_join_large),
@@ -2800,7 +2836,9 @@ def plan_variants() -> dict:
         ("dedup_semantic", q_dedup_semantic),
         ("embedding_near_dup", q_embedding_near_dup),
     ]:
-        out[name] = _no_barrier(q)
+        # the pre-sort localCheckpoint disabled: the audit sees the
+        # full operator tree, not Scan ExistingRDD
+        out[name] = functools.partial(q, sort_barrier=False)
     return out
 
 
@@ -2871,7 +2909,7 @@ def q_ann_ivf_indexed(spark, sf_dir):
     )
 
 
-def q_dedup_semantic(spark, sf_dir):
+def q_dedup_semantic(spark, sf_dir, sort_barrier: bool = True):
     """SemDeDup semantic deduplication (Abbas et al. 2023) over the
     embeddings table: deterministic fixed-point k-means clusters
     (shared with ann_ivf_topk), then within each cluster drop every
@@ -2885,7 +2923,8 @@ def q_dedup_semantic(spark, sf_dir):
     return _sort_once(
         similarity.semantic_dedup(
             emb, threshold=0.4, n_centroids=8, n_iter=2, dim=64
-        )
+        ),
+        sort_barrier,
     ).orderBy("vec_id")
 
 
@@ -2959,7 +2998,7 @@ def q_multimodal_frames(spark, sf_dir):
     ).orderBy("url", "frame_idx")
 
 
-def q_multimodal_decode(spark, sf_dir):
+def q_multimodal_decode(spark, sf_dir, sort_barrier: bool = True):
     """REAL codec-free multimodal decode end-to-end (round-3 verdict
     item 5): synthesize binary PPM rasters + 16-bit PCM WAV clips per
     order key (mapInPandas builders), then drive the REAL parsers —
@@ -3017,7 +3056,8 @@ def q_multimodal_decode(spark, sf_dir):
             "n_px", "sum_r", "sum_g", "sum_b",
             F.col("sample_rate").cast("long").alias("sample_rate"),
             "n_samples", "sum_abs", "max_abs", "rz_sum_r", "rz_n_px",
-        )
+        ),
+        sort_barrier,
     ).orderBy("key")
 
 
@@ -3182,7 +3222,7 @@ def q_sketch_cms_topk(spark, sf_dir):
     return sketches.cms_topk(docs, n=20)
 
 
-def q_embedding_near_dup(spark, sf_dir):
+def q_embedding_near_dup(spark, sf_dir, sort_barrier: bool = True):
     """Embedding near-dup pairs within SRP buckets. The bucketing is a
     deterministic function of the seeded hyperplane constants, so the
     approximate candidate set itself is exactly reproducible — the
@@ -3193,7 +3233,8 @@ def q_embedding_near_dup(spark, sf_dir):
     emb = _read(spark, sf_dir, "embeddings")
     return _sort_once(
         similarity.cosine_near_dup_pairs(emb, threshold=0.4, dim=64, n_planes=4)
-        .select("id_a", "id_b")
+        .select("id_a", "id_b"),
+        sort_barrier,
     ).orderBy("id_a", "id_b")
 
 
@@ -3409,7 +3450,7 @@ def _ulice_large_joiner(spark):
     return j
 
 
-def q_geo_range_join_large(spark, sf_dir):
+def q_geo_range_join_large(spark, sf_dir, sort_barrier: bool = True):
     """Distance-band join at STREET scale — the partitioned-index
     counterpart to geo_range_join: sampled pages against a
     122,500-street grid (datagen.gen_ulice_large, distributed) via
@@ -3422,7 +3463,8 @@ def q_geo_range_join_large(spark, sf_dir):
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
     out = _ulice_large_joiner(spark).apply(g, id_col="event_id")
     return _sort_once(
-        out.select("event_id", F.col("neighbor_key").alias("kod"), "dist2")
+        out.select("event_id", F.col("neighbor_key").alias("kod"), "dist2"),
+        sort_barrier,
     ).orderBy("event_id", "kod")
 
 
@@ -3759,29 +3801,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # Shared by dedup_decontaminate and dedup_decontaminate_bloom — the
 # bloom variant is a different physical strategy with identical
 # output, so both check against this one oracle.
-_DECON_ORACLE = """
+_DECON_ORACLE = f"""
     WITH btoks AS (
-      SELECT list_filter(regexp_split_to_array(lower(substr(text, 10, 200)),
-               '[^a-z0-9]+'), x -> x <> '') AS toks
+      SELECT {_duck_tokens('substr(text, 10, 200)')} AS toks
       FROM documents WHERE doc_id % 50 = 7
     ), bench AS (
       SELECT DISTINCT sh FROM (
-        SELECT unnest(list_filter(list_distinct(list_transform(
-                 range(1, greatest(len(toks) - 12, 1) + 1),
-                 i -> array_to_string(toks[i:i+12], ' '))),
-               x -> x <> '')) AS sh
-        FROM btoks
+        SELECT unnest({_duck_word_shingles('toks', 13)}) AS sh FROM btoks
       )
     ), dtoks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-               '[^a-z0-9]+'), x -> x <> '') AS toks
-      FROM documents
+      SELECT doc_id, {_duck_tokens('text')} AS toks FROM documents
     ), d AS (
-      SELECT doc_id, unnest(list_filter(list_distinct(list_transform(
-               range(1, greatest(len(toks) - 12, 1) + 1),
-               i -> array_to_string(toks[i:i+12], ' '))),
-             x -> x <> '')) AS sh
-      FROM dtoks
+      SELECT doc_id, unnest({_duck_word_shingles('toks', 13)}) AS sh FROM dtoks
     )
     SELECT d.doc_id, count(*) AS n_contaminated
     FROM d JOIN bench ON d.sh = bench.sh
@@ -4416,36 +4447,7 @@ def oracle_sql() -> dict[str, str]:
                    ELSE NULL END AS gen_area_e9
             FROM c ORDER BY kod
         """,
-        "ann_int8_topk": """
-            WITH normed AS (
-              SELECT vec_id,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)
-                       / sqrt(list_reduce(list_prepend(0.0, list_transform(embedding,
-                           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a, b) -> a + b))) AS ne
-              FROM embeddings
-              WHERE sqrt(list_reduce(list_prepend(0.0, list_transform(embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a, b) -> a + b)) > 0
-            ),
-            codes AS (
-              SELECT vec_id,
-                     list_transform(ne, x -> CAST(round(x * 127.0) AS INT)) AS c
-              FROM normed
-            ),
-            q AS (SELECT vec_id AS query_id, c AS qc FROM codes WHERE vec_id < 5),
-            scored AS (
-              SELECT q.query_id, codes.vec_id,
-                     list_reduce(list_prepend(0::BIGINT,
-                       list_transform(list_zip(q.qc, codes.c),
-                         p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT))),
-                       (a, b) -> a + b) AS score
-              FROM q, codes
-            )
-            SELECT query_id, vec_id, score, rank FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-              FROM scored
-            ) WHERE rank <= 3 ORDER BY query_id, rank
-        """,
+        "ann_int8_topk": _duck_int8_topk_sql(),
         "ann_lsh_topk": _duck_srp_topk_sql(),
         "ann_ivf_topk": _duck_ivf_topk_sql(),
         "dedup_semantic": _duck_semantic_dedup_sql(),
@@ -4889,7 +4891,9 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d LEFT JOIN lab l ON d.doc_id = l.node
             ORDER BY d.doc_id
         """,
-        "embedding_near_dup": _duck_srp_near_dup_sql(),
+        "embedding_near_dup": (
+            f"SELECT id_a, id_b FROM ({_duck_srp_near_dup_sql()}) ORDER BY id_a, id_b"
+        ),
         "s4_formats": """
             SELECT format FROM (VALUES ('csv'), ('json'), ('orc'),
                                         ('parquet'), ('text')) t(format)

@@ -10,7 +10,6 @@ the driver's value-hash comparison exact.
 from gdal_vfr_spark.functions.text_expr import (  # noqa: F401
     tokens_expr,
     shingles_expr,
-    minhash_signature_expr,
     band_keys_expr,
 )
 from gdal_vfr_spark.functions.urls import (  # noqa: F401

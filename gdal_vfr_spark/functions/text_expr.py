@@ -3,9 +3,7 @@ DuckDB oracles.
 
 Design constraint: every function must have a DuckDB-SQL twin producing
 byte-identical results, so all hashing derives from md5 (both engines
-agree bit-for-bit). MinHash uses Kirsch-Mitzenmacher double hashing
-over the two md5 halves — one digest per shingle yields the whole
-k-hash family, engine-portable via exact integer arithmetic mod 2^31-1.
+agree bit-for-bit).
 """
 
 from __future__ import annotations
@@ -31,70 +29,12 @@ def shingles_expr(text: str | Column, n: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, n)))
 
 
-def word_shingles_expr(text: str | Column, n: int = 13) -> Column:
-    """Distinct word n-grams (GPT-3-appendix-style 13-gram overlap
-    units): tokenize (tokens_expr), slide an n-token window, join with
-    single spaces. Documents shorter than n tokens contribute their
-    full token sequence as one shingle; the empty shingle is dropped.
-    ~6x fewer probe units per document than character shingles at the
-    same contamination semantics class — the scale difference between
-    O(chars) and O(words) map work at 10^12 documents.
-    DuckDB twin: toks AS list_filter(regexp_split_to_array(lower(t),
-    '[^a-z0-9]+'), x -> x <> ''), then list_distinct(list_transform(
-    range(1, greatest(len(toks)-n+1, 1) + 1),
-    i -> array_to_string(toks[i:i+n-1], ' ')))."""
-    toks = tokens_expr(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    grams = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )
-    return F.filter(grams, lambda s: s != "")
-
-
 def shingle_hash_expr(shingle: Column) -> Column:
     """64-bit join key for a shingle: the first md5 half as 16 hex
     chars — 5x narrower than a 13-word shingle string, identical in
     both engines (DuckDB twin: substr(md5(s), 1, 16)). Collisions are
     2^-64-scale — semantically exact for contamination counting."""
     return F.substring(F.md5(shingle), 1, 16)
-
-
-MINHASH_P = 2147483647  # 2^31 - 1; keeps a + i*b < 2^36 (no overflow anywhere)
-
-
-def _md5_half_expr(s, lo_half: bool) -> Column:
-    """Big-endian uint64 of one md5-digest half, reduced mod MINHASH_P.
-    lo_half=True -> digest bytes [8:16) (hex chars 17..32); False ->
-    bytes [0:8). conv() yields the unsigned decimal string exactly;
-    decimal(20,0) holds all 2^64 values."""
-    start = 17 if lo_half else 1
-    return F.conv(F.substring(F.md5(s), start, 16), 16, 10).cast("decimal(20,0)") % F.lit(
-        MINHASH_P
-    )
-
-
-def minhash_signature_expr(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: array of num_hashes int64 minima.
-
-    Hash family via Kirsch-Mitzenmacher double hashing (public
-    technique): ONE md5 per shingle split into two halves (a, b), then
-    h_i(s) = (a + i*b) mod P. Same LSH/Jaccard guarantees as k
-    independent hashes at 1/k the hashing cost — the property that
-    makes the Arrow fast path (operators/dedup.with_minhash) hold up at
-    10^12 documents.
-    DuckDB twin: ('0x'||substr(md5(s),17,16))::UBIGINT % P etc.
-    (this expression form is the parity/oracle twin, not the hot path).
-    """
-
-    def h(i: int) -> Column:
-        def per_shingle(s):
-            a = _md5_half_expr(s, True)
-            b = _md5_half_expr(s, False)
-            return ((a + F.lit(i) * b) % F.lit(MINHASH_P)).cast("long")
-
-        return F.array_min(F.transform(shingles, per_shingle))
-
-    return F.array(*[h(i) for i in range(num_hashes)])
 
 
 def band_keys_expr(signature: Column, bands: int, rows: int) -> Column:

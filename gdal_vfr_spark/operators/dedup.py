@@ -30,11 +30,9 @@ from pyspark.sql.types import ArrayType, LongType, StringType
 from gdal_vfr_spark.functions.text_expr import (
     TOKEN_SPLIT_RE,
     band_keys_expr,
-    minhash_signature_expr,
     shingle_hash_expr,
     shingles_expr,
     tokens_expr,
-    word_shingles_expr,
 )
 
 
@@ -106,20 +104,20 @@ def word_shingle_hash_rows(
     text_col: str,
     id_col: str | None,
     n: int = 13,
-    use_expr: bool = False,
 ) -> DataFrame:
     """Exploded (id_col?, __sh) rows — one per DISTINCT word n-gram of
     each document, keyed by the 16-hex-char md5-half shingle hash
-    (shingle_hash_expr semantics). Default path is an Arrow mapInPandas
-    pass (regex tokenize + window join + hashlib md5 per distinct
-    window) — the same fast-path-plus-expr-twin split as with_minhash:
-    the Catalyst higher-order-function construction (use_expr=True,
-    bit-identical — pinned in tests/test_dedup_text.py) pays ~18µs of
+    (shingle_hash_expr semantics). An Arrow mapInPandas pass (regex
+    tokenize + window join + hashlib md5 per distinct window): a
+    Catalyst higher-order-function construction pays ~18µs of
     interpreter overhead PER WINDOW (slice + concat_ws are interpreted
     per element), which measured 2x slower than the whole char-shingle
     path despite 6x fewer units. Tokenization is the tokens_expr
     contract: lower, split on [^a-z0-9]+, drop empties; docs shorter
-    than n tokens contribute their full sequence; empty dropped."""
+    than n tokens contribute their full sequence; empty dropped. The
+    DuckDB twin is `_duck_word_shingles` in __spark_entry__.py (the
+    dedup_decontaminate oracle); tests/test_dedup_text.py compares the
+    hashes with it on crafted docs at n = 3 and 13."""
     cols = ([id_col] if id_col else []) + [text_col]
     src = df.select(*cols)
     # a corpus at scale arrives in thousands of parquet splits; a
@@ -134,15 +132,6 @@ def word_shingle_hash_rows(
         para = src.sparkSession.sparkContext.defaultParallelism
         if src.rdd.getNumPartitions() < para:
             src = src.repartition(para)
-    if use_expr:
-        out = src.select(
-            *([id_col] if id_col else []),
-            F.explode(word_shingles_expr(F.col(text_col), n)).alias("__s"),
-        )
-        return out.select(
-            *([id_col] if id_col else []), shingle_hash_expr(F.col("__s")).alias("__sh")
-        )
-
     schema = (
         f"{src.schema[id_col].name} {src.schema[id_col].dataType.simpleString()}, __sh string"
         if id_col
@@ -191,22 +180,17 @@ def with_minhash(
     num_hashes: int = 16,
     shingle_n: int = 5,
     out_col: str = "minhash",
-    use_expr: bool = False,
 ) -> DataFrame:
-    """MinHash signature column (array<long>). Default path is the
-    Arrow pandas UDF: ONE hashlib md5 per distinct shingle, split into
-    two big-endian halves (a, b) mod P=2^31-1, then the whole k-hash
+    """MinHash signature column (array<long>) as an Arrow pandas UDF:
+    ONE hashlib md5 per distinct character shingle, split into two
+    big-endian halves (a, b) mod P=2^31-1, then the whole k-hash
     family h_i = (a + i*b) mod P in one numpy matrix op
     (Kirsch-Mitzenmacher double hashing — k-fold less hashing than a
-    per-(i, shingle) md5, which is what holds at 10^12 docs).
-    use_expr=True selects the pure-Catalyst expression twin —
-    bit-identical output (tests pin both paths equal), used for
-    oracle parity, ~5-10x slower (higher-order fns are interpreted)."""
-    if use_expr:
-        return df.withColumn(
-            out_col, minhash_signature_expr(shingles_expr(text_col, shingle_n), num_hashes)
-        )
-
+    per-(i, shingle) md5, which is what holds at 10^12 docs). The
+    DuckDB twin is the `sig` CTE of `_duck_sig_bands_cte` in
+    __spark_entry__.py; tests/test_dedup_text.py compares the
+    signatures with it on crafted docs, and tests/test_oracle.py every
+    MinHash query."""
     P = 2147483647
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -435,61 +419,18 @@ def ngram_jaccard_pairs(
     )
 
 
-_HEX = "0123456789abcdef"
-
-
-def _simhash_expr(text_col: str, bits: int = 64) -> F.Column:
-    """SimHash over tokens: token hash = first bits/4 hex chars of
-    md5(token); bit j of the fingerprint = majority vote (+1/-1,
-    weighted by token multiplicity) of bit j across token hashes.
-    Pure Catalyst: per-token bit extraction via instr on hex chars,
-    aggregate fold per bit. DuckDB twin mirrors the same structure.
-    """
-    tokens = tokens_expr(text_col)
-    hexes = F.transform(tokens, lambda t: F.substring(F.md5(t), 1, bits // 4))
-
-    def _bit_votes(h):
-        # per-hash ±1 vote vector: bit j (MSB-first) of nibble j//4
-        def vote(j):
-            nibble = F.instr(F.lit(_HEX), F.substring(h, (j / 4 + 1).cast("int"), 1)) - F.lit(1)
-            bitpos = F.lit(3) - (j % 4)
-            bit = F.floor(nibble / F.pow(F.lit(2.0), bitpos.cast("double"))).cast("int") % 2
-            return F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1))
-
-        return F.transform(F.sequence(F.lit(0), F.lit(bits - 1)), vote)
-
-    votes = F.aggregate(
-        hexes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, _bit_votes(h), lambda a, b: a + b),
-    )
-    # pack MSB-first into a bigint (fold with shiftleft keeps it one
-    # expression, not 64 column objects)
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(bits)),
-        F.lit(0).cast("long"),
-        lambda acc, i: F.shiftleft(acc, 1).bitwiseOR(
-            F.when(F.element_at(votes, i.cast("int")) > 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-        ),
-    )
-
-
 def with_simhash(
-    df: DataFrame, text_col: str = "text", bits: int = 64, out_col: str = "simhash",
-    use_expr: bool = False,
+    df: DataFrame, text_col: str = "text", bits: int = 64, out_col: str = "simhash"
 ) -> DataFrame:
     """SimHash fingerprint column (bit j = majority vote of bit j of
     md5(token) across tokens, MSB-first). Near-dup = small Hamming
     distance; query via bit_count(a ^ b) <= d on candidate pairs.
 
-    Default path: Arrow pandas UDF (hashlib + numpy bit unpack) — the
-    pure-expression twin (use_expr=True) is interpreted and ~20x
-    slower; tests pin both equal."""
-    if use_expr:
-        return df.withColumn(out_col, _simhash_expr(text_col, bits))
-
+    An Arrow pandas UDF (hashlib + numpy bit unpack); a Catalyst
+    fold measured ~20x slower. The DuckDB twin is `_duck_simhash_sql`
+    in __spark_entry__.py, a relational token x bit vote;
+    tests/test_dedup_text.py compares it at 32 and 64 bits on crafted
+    docs, and tests/test_oracle.py the dedup_simhash query."""
     nhex = bits // 4
     token_re = re.compile(TOKEN_SPLIT_RE)
 

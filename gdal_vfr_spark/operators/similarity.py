@@ -187,74 +187,15 @@ def lsh_bucketed_topk(
 QUANT_SCALE = 1 << 20  # fixed-point centroid quantum (see kmeans_centroids)
 
 
-def _assign_expr(vec_col, centroids: list[tuple[int, list[float]]]) -> F.Column:
-    """Nearest-centroid id as a pure projection: fold over a literal
-    array of (cid, vector) structs, tracking the min squared-L2
-    distance (strict < keeps the SMALLEST cid on exact ties). No
-    shuffle, no Python — IVF assignment is embarrassingly parallel and
-    must stay map-side at 10^12 vectors."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("c"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-
-    def step(acc, e):
-        d = F.aggregate(
-            F.zip_with(
-                v,
-                e["c"],
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda a, t: a + t,
-        )
-        return F.when(
-            d < acc["d"], F.struct(d.alias("d"), e["cid"].alias("cid"))
-        ).otherwise(acc)
-
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(-1).alias("cid")
-    )
-    return F.aggregate(arr, init, step)["cid"]
-
-
-def _centroid_dists(vec_col, centroids: list[tuple[int, list[float]]]):
-    """(cid, squared-L2 dist) pairs to every centroid, as literal-array
-    explode fodder for the query-side nprobe selection."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(float(x)) for x in vec]),
-                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda a, t: a + t,
-                ).alias("d"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-
-
 def _assign_arrow_udf(centroids: list[tuple[int, list[float]]]):
-    """Arrow twin of _assign_expr — BIT-IDENTICAL by construction: the
-    squared-L2 distance accumulates one dimension at a time across the
-    whole batch (d += t*t in dim order), so every float64 add/multiply
-    happens in exactly the fold order Catalyst uses, and ties keep the
-    first (smallest) cid like the fold's strict <. ~100x faster than
-    the interpreted fold AND avoids the per-call codegen of a
-    512-literal centroid array."""
+    """Nearest-centroid id as an Arrow UDF. The squared-L2 distance
+    accumulates one dimension at a time across the whole batch
+    (d += t*t in dim order), so every float64 add/multiply happens in
+    the sequential-fold order of the DuckDB twin (`_duck_dist_sql`),
+    and ties keep the first (smallest) cid like the twin's
+    ORDER BY dist, cid. ~100x faster than an interpreted Catalyst fold
+    over a 512-literal centroid array, which also re-codegens per
+    call."""
     C = np.asarray([c for _, c in centroids], dtype=np.float64)
     cids = np.asarray([cid for cid, _ in centroids], dtype=np.int64)
 
@@ -317,8 +258,9 @@ def _kmeans_iter_partials(
     order (per-dimension sequential accumulation, strict < keeps the
     smallest cid on ties) and accumulate per-(cid, pos) bigint sums of
     floor(val * 2^20) plus member counts. Emits k*dim partial rows per
-    task; summing partials downstream reproduces the posexplode
-    aggregate bit-for-bit because integer addition is order-free."""
+    task; summing partials downstream reproduces a per-(cid, pos)
+    aggregate over every element (the DuckDB twin's) bit-for-bit
+    because integer addition is order-free."""
     C = np.asarray([c for _, c in centroids], dtype=np.float64)
     cids = np.asarray([cid for cid, _ in centroids], dtype=np.int64)
     scale = float(QUANT_SCALE)
@@ -380,7 +322,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    use_expr: bool = False,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
 
@@ -388,9 +329,10 @@ def kmeans_centroids(
     (deterministic, SQL-replicable via row_number over ORDER BY id, and
     independent of the corpus id scheme — ids need not be dense or
     0-based). Raises if the corpus has fewer than k rows.
-    Each iteration: map-side nearest-centroid assignment (fold over
-    literal centroids, no shuffle), then ONE partial+final aggregation
-    keyed by cid. Centroid means use FIXED-POINT sums —
+    Each iteration is ONE fused Arrow pass (_kmeans_iter_partials:
+    map-side nearest-centroid assignment plus per-task partial sums, no
+    shuffle of vectors), then ONE partial+final aggregation keyed by
+    (cid, pos). Centroid means use FIXED-POINT sums —
     sum(floor(x * 2^20)) as bigint — because float summation order is
     partition-dependent; integer sums are exact and order-free, so the
     result is bit-identical across partitionings AND engines (the
@@ -398,13 +340,11 @@ def kmeans_centroids(
     is irrelevant to a coarse quantizer. Collecting k*(dim+1) numbers
     per round to the driver is the standard distributed-kmeans shape
     (k=4096, dim=1024 is still <50 MB at 100 TB corpus scale).
-    Empty clusters keep their previous centroid.
-
-    Default assignment path is the Arrow twin (_assign_arrow_udf);
-    use_expr=True selects the pure-Catalyst fold — bit-identical by
-    construction AND by test, but interpreted (and its 512-literal
-    centroid array re-codegens per call), so it exists for oracle
-    parity, not for the hot path."""
+    Empty clusters keep their previous centroid. The centroids equal
+    the DuckDB twin's unroll of the same Lloyd iterations
+    (`_duck_lloyd_af_ctes`) bit for bit (tests/test_dedup_text.py); the
+    ann_ivf_topk, ann_ivf_indexed and dedup_semantic oracles
+    (tests/test_oracle.py) build on them."""
     seeds = (
         corpus.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     )
@@ -415,40 +355,21 @@ def kmeans_centroids(
     cents = [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(seeds)]
     scale = float(QUANT_SCALE)
     for _ in range(n_iter):
-        if use_expr:
-            # oracle-parity path: fixed-point per-position sums via
-            # posexplode — one JVM hash aggregate over (cid, pos),
-            # partial map-side combine, order-free bigint sums
-            cid_col = _assign_expr(vec_col, cents)
-            stats = (
-                corpus.select(vec_col)
-                .withColumn("cid", cid_col)
-                .select("cid", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-                .groupBy("cid", "pos")
-                .agg(
-                    F.sum(F.floor(F.col("val").cast("double") * F.lit(scale))).alias("s"),
-                    F.count("*").alias("cnt"),
-                )
-                .collect()
-            )
-        else:
-            # fused Arrow iteration (round-6): assignment AND the
-            # fixed-point partial sums in ONE kernel pass — the
-            # posexplode blew each vector into `dim` rows (1.28M rows
-            # per iteration at 20k x 64) only to feed an integer sum
-            # that numpy can partial-aggregate per task; bigint sums of
-            # per-element floor(val * 2^20) are order-free, so the
-            # collected (cid, pos, s, cnt) totals — and therefore the
-            # centroids — are bit-identical to the posexplode path
-            # (pinned by the use_expr parity test). Shuffle payload
-            # drops from dim rows per vector to k*dim rows per TASK
-            # (guide §2.3 "aggregate before you shuffle").
-            stats = (
-                _kmeans_iter_partials(corpus, cents, vec_col, dim)
-                .groupBy("cid", "pos")
-                .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
-                .collect()
-            )
+        # fused Arrow iteration (round-6): assignment AND the
+        # fixed-point partial sums in ONE kernel pass — a posexplode
+        # would blow each vector into `dim` rows (1.28M rows per
+        # iteration at 20k x 64) only to feed an integer sum that numpy
+        # can partial-aggregate per task; bigint sums of per-element
+        # floor(val * 2^20) are order-free, so the collected
+        # (cid, pos, s, cnt) totals — and therefore the centroids — do
+        # not depend on the partitioning. Shuffle payload is k*dim rows
+        # per TASK (guide §2.3 "aggregate before you shuffle").
+        stats = (
+            _kmeans_iter_partials(corpus, cents, vec_col, dim)
+            .groupBy("cid", "pos")
+            .agg(F.sum("s").alias("s"), F.sum("cnt").alias("cnt"))
+            .collect()
+        )
         got: dict[int, dict[int, tuple[int, int]]] = {}
         for r in stats:
             got.setdefault(int(r["cid"]), {})[int(r["pos"])] = (r["s"], r["cnt"])
@@ -476,7 +397,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    use_expr: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means coarse quantizer,
     corpus partitioned by nearest centroid, queries probe only their
@@ -484,9 +404,9 @@ def ivf_topk(
     nprobe instead of cliffing on bucket boundaries, and the cell
     assignment doubles as the physical partitioning key at scale
     (write corpus partitioned/bucketed by cid -> probe = partition
-    pruning, scanning nprobe/n_centroids of the data). use_expr=True
-    runs assignment/probing through the pure-Catalyst folds (parity
-    twin; interpreted, slow)."""
+    pruning, scanning nprobe/n_centroids of the data). The DuckDB twin
+    is `_duck_ivf_topk_sql` (the ann_ivf_topk oracle in
+    tests/test_oracle.py)."""
     # spread once and cache the narrow (id, vec) relation: k-means scans
     # it n_iter+1 times and the assignment once — the same size-gated
     # spread+persist shape as semantic_dedup (round-6, guide §5/§6)
@@ -495,42 +415,17 @@ def ivf_topk(
     narrow = corpus.select(id_col, vec_col)
     spreadv = spread_small_input(narrow, min_bytes=4 << 20)
     corpus = spreadv.persist() if spreadv is not narrow else narrow
-    cents = kmeans_centroids(
-        corpus, n_centroids, n_iter, id_col, vec_col, dim, use_expr=use_expr
-    )
-    assign_col = (
-        _assign_expr(vec_col, cents)
-        if use_expr
-        else _assign_arrow_udf(cents)(F.col(vec_col))
-    )
+    cents = kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col, dim)
     # coalesce makes the join key provably non-nullable (the UDF never
     # returns null anyway): without it Catalyst inserts IsNotNull(cid)
     # under the probe join and evaluates the Arrow assignment TWICE —
     # once for the filter, once for the output (two full corpus passes)
     assigned = corpus.select(id_col, vec_col).withColumn(
-        "cid", F.coalesce(assign_col, F.lit(-1))
+        "cid", F.coalesce(_assign_arrow_udf(cents)(F.col(vec_col)), F.lit(-1))
     ).withColumn("__cn", norm_expr(F.col(vec_col)))
-    if use_expr:
-        probes = (
-            queries.select(query_id_col, query_vec_col)
-            .withColumn("cd", F.explode(_centroid_dists(query_vec_col, cents)))
-            .select(
-                query_id_col,
-                query_vec_col,
-                F.col("cd.cid").alias("cid"),
-                F.col("cd.d").alias("d"),
-            )
-        )
-        wp = Window.partitionBy(query_id_col).orderBy(F.asc("d"), F.asc("cid"))
-        probes = (
-            probes.withColumn("pr", F.row_number().over(wp))
-            .where(F.col("pr") <= nprobe)
-            .drop("pr", "d")
-        )
-    else:
-        probes = queries.select(query_id_col, query_vec_col).withColumn(
-            "cid", F.explode(_probe_arrow_udf(cents, nprobe)(F.col(query_vec_col)))
-        )
+    probes = queries.select(query_id_col, query_vec_col).withColumn(
+        "cid", F.explode(_probe_arrow_udf(cents, nprobe)(F.col(query_vec_col)))
+    )
     probes = probes.withColumn("__qn", norm_expr(F.col(query_vec_col)))
     scored = assigned.join(F.broadcast(probes), on="cid").select(
         F.col(query_id_col),
@@ -621,29 +516,26 @@ def cosine_near_dup_pairs(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_expr: bool = False,
     block: int = 2048,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (id_a < id_b, cosine >= threshold)
     found within SRP buckets (blocked per-bucket kernel, not O(n^2)
     across the corpus).
 
-    Default path (round-6 optimization): one shuffle groups each SRP
-    bucket into a task; inside the task a chunked numpy kernel
-    accumulates every pairwise dot ONE DIMENSION AT A TIME across the
-    block (acc += outer(x_i, y_i) in dim order) — exactly the Catalyst
-    fold's float64 op sequence, so every cosine and therefore every
-    threshold decision is bit-identical to the expression path
-    (parity-pinned in tests/test_dedup_text.py). The old band
+    One shuffle groups each SRP bucket into a task; inside the task a
+    chunked numpy kernel accumulates every pairwise dot ONE DIMENSION
+    AT A TIME across the block (acc += outer(x_i, y_i) in dim order) —
+    exactly the sequential fold's float64 op sequence, so every cosine
+    and therefore every threshold decision is bit-identical to the
+    DuckDB twin (`_duck_srp_near_dup_sql`: the embedding_near_dup
+    oracle in tests/test_oracle.py, and exact cosines on crafted
+    vectors in tests/test_dedup_text.py). The old band
     self-join materialized B^2/2 pair ROWS per bucket and paid an
     interpreted 64-step higher-order fold per pair (measured 102 s at
     20k vectors / 16 buckets, sf1.0); the kernel pays ~dim vectorized
     ops per block and emits only surviving pairs. Scratch is capped by
     the 2048-row block (2048^2 float64 ~ 32 MB), so an oversized
-    bucket degrades to more block iterations, never OOM.
-
-    use_expr=True keeps the Catalyst self-join twin (the oracle-shape
-    path; bit-identical output, used for parity tests)."""
+    bucket degrades to more block iterations, never OOM."""
     planes = random_hyperplanes(dim, n_planes, seed)
     # per-row norm before the self-join: inside a bucket of size m each
     # vector otherwise recomputes its norm fold m-1 times (bit-identical
@@ -653,22 +545,6 @@ def cosine_near_dup_pairs(
         .withColumn("bucket", srp_bucket_expr(vec_col, planes))
         .withColumn("__n", norm_expr(F.col(vec_col)))
     )
-    if use_expr:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return (
-            a.join(b, on="bucket")
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                (
-                    dot_expr(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                    / (F.col("a.__n") * F.col("b.__n"))
-                ).alias("cosine"),
-            )
-            .where(F.col("cosine") >= threshold)
-            .distinct()
-        )
     id_dt = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_dt}, id_b {id_dt}, cosine double"
     thr = float(threshold)
@@ -711,7 +587,7 @@ def cosine_near_dup_pairs(
                     tmp = np.empty_like(acc)
                 for i in range(d):
                     # in-place outer + add: the same multiply/add per
-                    # element in the same order as the Catalyst fold's
+                    # element in the same order as the sequential fold's
                     # acc + (cast(x) * cast(y)) step
                     np.outer(X[s0:e0, i], X[s1:e1, i], out=tmp)
                     acc += tmp
@@ -770,18 +646,6 @@ def quantize_int8(
     return df.where(n > 0).withColumn(out_col, codes)
 
 
-def int8_dot_expr(a, b) -> F.Column:
-    """Integer dot product of two code arrays. Integer addition is
-    associative-exact, so the fold order cannot matter — unlike the
-    float path, this score is partition/engine-invariant by
-    construction (max |score| <= dim * 127^2, far inside bigint)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def int8_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -790,7 +654,6 @@ def int8_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    use_expr: bool = False,
 ) -> DataFrame:
     """Quantized inner-product top-k: quantize both sides, broadcast
     the (small) query codes, score with the INTEGER dot, rank per
@@ -799,7 +662,7 @@ def int8_topk(
     recall floor vs `brute_force_topk` is pinned in tests) — given the
     codes, the result is exact and deterministic.
 
-    Default scoring path (round-6 optimization): the query codes are
+    Scoring (round-6 optimization): the query codes are
     collected (they are the tiny side by contract — the old path
     broadcast them anyway) and every corpus batch is scored with ONE
     int64 matrix product. Integer addition is associative-exact, so
@@ -807,8 +670,9 @@ def int8_topk(
     case where BLAS-style reduction is legal (the float paths all keep
     the sequential fold). The old crossJoin paid an interpreted
     64-step zip_with/aggregate per (corpus, query) pair — measured
-    7.3 s at sf1.0 vs ~2 s. use_expr=True keeps the Catalyst
-    crossJoin twin (oracle-shape clarity; parity-pinned in tests).
+    7.3 s at sf1.0 vs ~2 s. The DuckDB twin is `_duck_int8_topk_sql`
+    (the ann_int8_topk oracle in tests/test_oracle.py, and crafted
+    vectors in tests/test_dedup_text.py).
 
     Output: (query_id, id, score, rank) with score the raw integer
     dot (cosine ~= score / 127^2)."""
@@ -822,42 +686,35 @@ def int8_topk(
     q = quantize_int8(queries, query_vec_col, "qcodes").select(
         query_id_col, "qcodes"
     )
-    if use_expr:
-        scored = c.crossJoin(F.broadcast(q)).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            int8_dot_expr(F.col("qcodes"), F.col("codes")).alias("score"),
-        )
-    else:
-        qrows = q.collect()
-        qids = np.asarray([r[query_id_col] for r in qrows], dtype=np.int64)
-        Q = (
-            np.asarray([r["qcodes"] for r in qrows], dtype=np.int64)
-            if qrows
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        qid_dt = queries.schema[query_id_col].dataType.simpleString()
-        id_dt = corpus.schema[id_col].dataType.simpleString()
-        schema = f"{query_id_col} {qid_dt}, {id_col} {id_dt}, score long"
+    qrows = q.collect()
+    qids = np.asarray([r[query_id_col] for r in qrows], dtype=np.int64)
+    Q = (
+        np.asarray([r["qcodes"] for r in qrows], dtype=np.int64)
+        if qrows
+        else np.zeros((0, 1), dtype=np.int64)
+    )
+    qid_dt = queries.schema[query_id_col].dataType.simpleString()
+    id_dt = corpus.schema[id_col].dataType.simpleString()
+    schema = f"{query_id_col} {qid_dt}, {id_col} {id_dt}, score long"
 
-        def _score(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0 or len(qids) == 0:
-                    continue
-                Cm = np.asarray(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["codes"]]
-                )
-                S = Cm @ Q.T  # (n, m) int64 — overflow-free: dim*127^2
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.tile(qids, n),
-                        id_col: np.repeat(pdf[id_col].to_numpy(), len(qids)),
-                        "score": S.ravel(),
-                    }
-                )
+    def _score(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0 or len(qids) == 0:
+                continue
+            Cm = np.asarray(
+                [np.asarray(v, dtype=np.int64) for v in pdf["codes"]]
+            )
+            S = Cm @ Q.T  # (n, m) int64 — overflow-free: dim*127^2
+            yield pd.DataFrame(
+                {
+                    query_id_col: np.tile(qids, n),
+                    id_col: np.repeat(pdf[id_col].to_numpy(), len(qids)),
+                    "score": S.ravel(),
+                }
+            )
 
-        scored = c.mapInPandas(_score, schema)
+    scored = c.mapInPandas(_score, schema)
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -946,7 +803,6 @@ def semantic_dedup(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_expr: bool = False,
     block: int = 1024,
     hot_cluster_rows: int | None = 10_000,
 ) -> DataFrame:
@@ -969,7 +825,7 @@ def semantic_dedup(
     same sequential float64 fold both engines already agree on
     (ann_topk / embedding_near_dup oracles).
 
-    Default path: assignment is map-only (Arrow batch, centroid
+    Assignment is map-only (Arrow batch, centroid
     matrix broadcast — k*(dim+1) doubles, <50 MB at k=4096,
     dim=1024), then ONE shuffle groups each cluster into a task and
     the drop rule runs as blocked dense algebra (_semantic_dom_block
@@ -989,16 +845,15 @@ def semantic_dedup(
     broadcast, and the dominated mask is computed MAP-SIDE over the
     cluster's rows in parallel batches (mapInPandas) — identical
     arithmetic through the shared kernel, so the result is
-    bit-identical to the grouped path (parity-pinned in pytest).
+    bit-identical to the grouped path (tests/test_dedup_text.py).
     hot_cluster_rows=None disables the probe (and the persist of the
     assigned relation the probe needs; when enabled, that cached
     relation lives until the session ends or the caller unpersists —
     the decontaminate_bloom ownership note applies).
 
-    use_expr=True selects the pure-Catalyst twin — a cid self-join
-    with the fold cosine, parity-pinned in pytest, kept for
-    oracle-shape clarity (it materializes pair rows, so it is the
-    small-cluster path only). No window over a content key anywhere
+    The DuckDB twin is `_duck_semantic_dedup_sql`, a cid self-join
+    with the fold cosine (the dedup_semantic oracle in
+    tests/test_oracle.py). No window over a content key anywhere
     (the exact_substring_spans lesson).
 
     Output: survivors as (id_col, cid bigint) — both integer columns,
@@ -1022,176 +877,132 @@ def semantic_dedup(
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
         .withColumn("cid", _assign_arrow_udf(cents)(F.col("__v")))
     )
-    if not use_expr:
-        C = {int(cid): np.asarray(c, dtype=np.float64) for cid, c in cents}
-        tau = float(threshold)
-        out_schema = f"{id_col} long, cid long"
+    C = {int(cid): np.asarray(c, dtype=np.float64) for cid, c in cents}
+    tau = float(threshold)
+    out_schema = f"{id_col} long, cid long"
 
-        def _drop_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            n = len(pdf)
-            cidv = int(pdf["cid"].iloc[0])
-            out_cols = {
-                id_col: pdf["__id"].astype("int64"),
-                "cid": np.full(n, cidv, dtype=np.int64),
-            }
-            if n <= 1:
-                return pd.DataFrame(out_cols)
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-            nrm, cs = _semantic_fold_stats(X, C[cidv])
-            dom = _semantic_dom_block(
-                X, ids, cs, nrm, X, ids, cs, nrm, tau, block
-            )
-            return pd.DataFrame(out_cols).loc[~dom]
+    def _drop_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = len(pdf)
+        cidv = int(pdf["cid"].iloc[0])
+        out_cols = {
+            id_col: pdf["__id"].astype("int64"),
+            "cid": np.full(n, cidv, dtype=np.int64),
+        }
+        if n <= 1:
+            return pd.DataFrame(out_cols)
+        ids = pdf["__id"].to_numpy(dtype=np.int64)
+        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
+        nrm, cs = _semantic_fold_stats(X, C[cidv])
+        dom = _semantic_dom_block(
+            X, ids, cs, nrm, X, ids, cs, nrm, tau, block
+        )
+        return pd.DataFrame(out_cols).loc[~dom]
 
-        if hot_cluster_rows is None:
-            # pure grouped path: no probe job, no persist (advice item
-            # 4 — the default path's probe is eager by necessity, but
-            # the opt-out path must stay fully lazy)
-            return assigned.groupBy("cid").applyInPandas(
-                _drop_group, schema=out_schema
-            )
-        # hot-cluster probe: map-side-combined counts, tiny collect
-        # (k rows — one per cluster)
-        assigned = assigned.persist()
-        counts = assigned.groupBy("cid").count().collect()
-        # Round-6: ADAPTIVE straggler threshold. With k clusters on P
-        # cores, the grouped path runs at most k tasks — k=8 on 32
-        # cores leaves 3/4 of the machine idle while every task grinds
-        # a B^2 kernel. A cluster is routed through the broadcast
-        # map-side path (bit-identical, parity-pinned) when it exceeds
-        # the smaller of the caller's hot_cluster_rows and ~total/(2P)
-        # — i.e. when it cannot be a fair per-core share. The adaptive
-        # term only drops below hot_cluster_rows when the whole corpus
-        # is small enough that collecting the hot set is trivially
-        # inside the broadcast budget (total < 2 * P * hot_cluster_rows
-        # rows); at production scale it is inert and the explicit
-        # hot_cluster_rows cap governs, exactly as before.
-        para = corpus.sparkSession.sparkContext.defaultParallelism
-        total_rows = sum(r["count"] for r in counts)
-        max_rows = max((r["count"] for r in counts), default=0)
-        adaptive = max(64, total_rows // (2 * max(para, 1)))
-        # engage the adaptive term only when the biggest grouped-path
-        # kernel is actually worth parallelizing (~max^2 * dim madds >=
-        # 2e8, i.e. >= ~0.2s of single-core work) — below that the
-        # collect+broadcast fixed costs exceed the straggler they fix
-        # (measured: +1.1s at sf0.1's 250-row clusters)
-        if max_rows * max_rows * dim < 200_000_000:
-            adaptive = int(hot_cluster_rows)
-        thr = min(int(hot_cluster_rows), adaptive)
-        hot = [r for r in counts if r["count"] > thr]
-        if not hot:
-            return assigned.groupBy("cid").applyInPandas(
-                _drop_group, schema=out_schema
-            )
-        budget = (512 << 20) // (dim * 8)
-        total_hot = sum(r["count"] for r in hot)
-        if total_hot > budget:
-            raise ValueError(
-                f"semantic_dedup: {len(hot)} hot clusters total {total_hot}"
-                f" rows > broadcast budget {budget}; increase n_centroids so"
-                " clusters shrink (SemDeDup's own knob) or raise"
-                " hot_cluster_rows past the cluster size"
-            )
-        hot_cids = sorted(int(r["cid"]) for r in hot)
-        spark = corpus.sparkSession
-        cold_out = (
-            assigned.where(~F.col("cid").isin(hot_cids))
-            .groupBy("cid")
-            .applyInPandas(_drop_group, schema=out_schema)
+    if hot_cluster_rows is None:
+        # pure grouped path: no probe job, no persist (advice item
+        # 4 — the default path's probe is eager by necessity, but
+        # the opt-out path must stay fully lazy)
+        return assigned.groupBy("cid").applyInPandas(
+            _drop_group, schema=out_schema
         )
-        # Round-6 (verdict item 1): ALL hot clusters are collected in
-        # ONE job and shipped in ONE broadcast; the dominated mask then
-        # runs as a single mapInPandas over the hot rows (batches group
-        # locally by cid), so N boilerplate mega-clusters cost one
-        # driver round-trip and one plan — not N sequential jobs. The
-        # budget guard above is enforced on the SUM over hot clusters
-        # (advice item 3), since that is what the driver and every
-        # executor actually hold.
-        hot_src = assigned.where(F.col("cid").isin(hot_cids)).select(
-            "cid", "__id", "__v"
+    # hot-cluster probe: map-side-combined counts, tiny collect
+    # (k rows — one per cluster)
+    assigned = assigned.persist()
+    counts = assigned.groupBy("cid").count().collect()
+    # Round-6: ADAPTIVE straggler threshold. With k clusters on P
+    # cores, the grouped path runs at most k tasks — k=8 on 32
+    # cores leaves 3/4 of the machine idle while every task grinds
+    # a B^2 kernel. A cluster is routed through the broadcast
+    # map-side path (bit-identical, tests/test_dedup_text.py) when it
+    # exceeds the smaller of the caller's hot_cluster_rows and ~total/(2P)
+    # — i.e. when it cannot be a fair per-core share. The adaptive
+    # term only drops below hot_cluster_rows when the whole corpus
+    # is small enough that collecting the hot set is trivially
+    # inside the broadcast budget (total < 2 * P * hot_cluster_rows
+    # rows); at production scale it is inert and the explicit
+    # hot_cluster_rows cap governs, exactly as before.
+    para = corpus.sparkSession.sparkContext.defaultParallelism
+    total_rows = sum(r["count"] for r in counts)
+    max_rows = max((r["count"] for r in counts), default=0)
+    adaptive = max(64, total_rows // (2 * max(para, 1)))
+    # engage the adaptive term only when the biggest grouped-path
+    # kernel is actually worth parallelizing (~max^2 * dim madds >=
+    # 2e8, i.e. >= ~0.2s of single-core work) — below that the
+    # collect+broadcast fixed costs exceed the straggler they fix
+    # (measured: +1.1s at sf0.1's 250-row clusters)
+    if max_rows * max_rows * dim < 200_000_000:
+        adaptive = int(hot_cluster_rows)
+    thr = min(int(hot_cluster_rows), adaptive)
+    hot = [r for r in counts if r["count"] > thr]
+    if not hot:
+        return assigned.groupBy("cid").applyInPandas(
+            _drop_group, schema=out_schema
         )
-        mats: dict[int, tuple] = {}
-        collected = hot_src.collect()
-        by_cid: dict[int, list] = {hc: [] for hc in hot_cids}
-        for r in collected:
-            by_cid[int(r["cid"])].append(r)
-        for hc in hot_cids:
-            rows = by_cid[hc]
-            ids_y = np.asarray([r["__id"] for r in rows], dtype=np.int64)
-            Y = np.asarray(
-                [np.asarray(r["__v"], dtype=np.float64) for r in rows]
-            )
-            nrm_y, cs_y = _semantic_fold_stats(Y, C[hc])
-            mats[hc] = (Y, ids_y, nrm_y, cs_y)
-        bc = spark.sparkContext.broadcast(mats)
+    budget = (512 << 20) // (dim * 8)
+    total_hot = sum(r["count"] for r in hot)
+    if total_hot > budget:
+        raise ValueError(
+            f"semantic_dedup: {len(hot)} hot clusters total {total_hot}"
+            f" rows > broadcast budget {budget}; increase n_centroids so"
+            " clusters shrink (SemDeDup's own knob) or raise"
+            " hot_cluster_rows past the cluster size"
+        )
+    hot_cids = sorted(int(r["cid"]) for r in hot)
+    spark = corpus.sparkSession
+    cold_out = (
+        assigned.where(~F.col("cid").isin(hot_cids))
+        .groupBy("cid")
+        .applyInPandas(_drop_group, schema=out_schema)
+    )
+    # Round-6 (verdict item 1): ALL hot clusters are collected in
+    # ONE job and shipped in ONE broadcast; the dominated mask then
+    # runs as a single mapInPandas over the hot rows (batches group
+    # locally by cid), so N boilerplate mega-clusters cost one
+    # driver round-trip and one plan — not N sequential jobs. The
+    # budget guard above is enforced on the SUM over hot clusters
+    # (advice item 3), since that is what the driver and every
+    # executor actually hold.
+    hot_src = assigned.where(F.col("cid").isin(hot_cids)).select(
+        "cid", "__id", "__v"
+    )
+    mats: dict[int, tuple] = {}
+    collected = hot_src.collect()
+    by_cid: dict[int, list] = {hc: [] for hc in hot_cids}
+    for r in collected:
+        by_cid[int(r["cid"])].append(r)
+    for hc in hot_cids:
+        rows = by_cid[hc]
+        ids_y = np.asarray([r["__id"] for r in rows], dtype=np.int64)
+        Y = np.asarray(
+            [np.asarray(r["__v"], dtype=np.float64) for r in rows]
+        )
+        nrm_y, cs_y = _semantic_fold_stats(Y, C[hc])
+        mats[hc] = (Y, ids_y, nrm_y, cs_y)
+    bc = spark.sparkContext.broadcast(mats)
 
-        def _hot_fn(batches):
-            m = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cidv, sub in pdf.groupby("cid", sort=False):
-                    hc = int(cidv)
-                    Yv, ids_yv, nrm_yv, cs_yv = m[hc]
-                    ids_b = sub["__id"].to_numpy(dtype=np.int64)
-                    Xb = np.asarray(
-                        [np.asarray(v, dtype=np.float64) for v in sub["__v"]]
-                    )
-                    nrm_b, cs_b = _semantic_fold_stats(Xb, C[hc])
-                    dom = _semantic_dom_block(
-                        Xb, ids_b, cs_b, nrm_b, Yv, ids_yv, cs_yv, nrm_yv,
-                        tau, block,
-                    )
-                    yield pd.DataFrame(
-                        {
-                            id_col: ids_b[~dom],
-                            "cid": np.full(int((~dom).sum()), hc, dtype=np.int64),
-                        }
-                    )
+    def _hot_fn(batches):
+        m = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            for cidv, sub in pdf.groupby("cid", sort=False):
+                hc = int(cidv)
+                Yv, ids_yv, nrm_yv, cs_yv = m[hc]
+                ids_b = sub["__id"].to_numpy(dtype=np.int64)
+                Xb = np.asarray(
+                    [np.asarray(v, dtype=np.float64) for v in sub["__v"]]
+                )
+                nrm_b, cs_b = _semantic_fold_stats(Xb, C[hc])
+                dom = _semantic_dom_block(
+                    Xb, ids_b, cs_b, nrm_b, Yv, ids_yv, cs_yv, nrm_yv,
+                    tau, block,
+                )
+                yield pd.DataFrame(
+                    {
+                        id_col: ids_b[~dom],
+                        "cid": np.full(int((~dom).sum()), hc, dtype=np.int64),
+                    }
+                )
 
-        hot_out = hot_src.mapInPandas(_hot_fn, schema=out_schema)
-        return cold_out.unionByName(hot_out)
-    cent_arr = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for _, c in cents]
-    )
-    cvec = F.element_at(cent_arr, F.col("cid") + 1)
-    base = (
-        assigned
-        .withColumn("__n", norm_expr(F.col("__v")))
-        .withColumn(
-            "__cs",
-            dot_expr(F.col("__v"), cvec) / (F.col("__n") * norm_expr(cvec)),
-        )
-        # persist: the x/y sides of the self-join and the final
-        # anti-join otherwise each re-run the assignment UDF + k-means
-        # feature scan (same boundary reasoning as minhash_lsh_pairs)
-        .persist()
-    )
-    base.count()
-    x = base.select(
-        F.col("__id").alias("id_x"), F.col("__v").alias("vx"),
-        F.col("__n").alias("nx"), F.col("__cs").alias("cs_x"), "cid",
-    )
-    y = base.select(
-        F.col("__id").alias("id_y"), F.col("__v").alias("vy"),
-        F.col("__n").alias("ny"), F.col("__cs").alias("cs_y"), "cid",
-    )
-    pair_cos = dot_expr(F.col("vx"), F.col("vy")) / (F.col("nx") * F.col("ny"))
-    dominated = (
-        x.join(y, "cid")
-        .where(F.col("id_x") != F.col("id_y"))
-        .where(pair_cos >= F.lit(float(threshold)))
-        .where(
-            (F.col("cs_y") < F.col("cs_x"))
-            | ((F.col("cs_y") == F.col("cs_x")) & (F.col("id_y") < F.col("id_x")))
-        )
-        .select(F.col("id_x").alias("__dropped"))
-        .distinct()
-    )
-    return (
-        base.join(
-            dominated, base["__id"] == dominated["__dropped"], "left_anti"
-        )
-        .select(F.col("__id").alias(id_col), F.col("cid").cast("long").alias("cid"))
-    )
+    hot_out = hot_src.mapInPandas(_hot_fn, schema=out_schema)
+    return cold_out.unionByName(hot_out)

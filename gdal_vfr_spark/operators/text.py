@@ -1,11 +1,12 @@
 """Text analysis for training-data pipelines: language ID, quality
 scoring, token counting, document fingerprinting.
 
-All pure Catalyst expressions over the shared tokenizer
-(functions.text_expr.tokens_expr) — each has an exact DuckDB-SQL twin
-in __spark_entry__.py. Heuristics are deliberately simple/deterministic
-(n-gram/stopword evidence), not model-based: the container has no ML
-runtime, and determinism is what the oracle gate needs.
+Catalyst expressions or Arrow kernels over the shared tokenizer
+contract (functions.text_expr.tokens_expr) — each has an exact
+DuckDB-SQL twin in __spark_entry__.py, compared by tests/test_oracle.py.
+Heuristics are deliberately simple/deterministic (n-gram/stopword
+evidence), not model-based: the engine ships no ML runtime, and
+determinism is what the oracle gate needs.
 """
 
 from __future__ import annotations
@@ -29,48 +30,6 @@ def token_count_expr(text) -> F.Column:
     return F.size(tokens_expr(text))
 
 
-def stopword_hits_expr(text, lang: str) -> F.Column:
-    """Count tokens (with multiplicity) in the language's stopword set."""
-    toks = tokens_expr(text)
-    stop = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-
-
-def lang_id_expr(text) -> F.Column:
-    """Argmax of stopword hit counts; ties broken by language code
-    order (deterministic); zero evidence -> 'und'."""
-    scores = [(lang, stopword_hits_expr(text, lang)) for lang in sorted(STOPWORDS)]
-    best_score = F.greatest(*[s for _, s in scores])
-    out = F.lit("und")
-    for lang, s in reversed(scores):  # earlier langs win ties -> apply last
-        out = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(out)
-    return out
-
-
-def quality_score_expr(text) -> F.Column:
-    """Deterministic quality heuristic in [0,1]:
-    0.4*length_score + 0.3*stopword_ratio + 0.3*alpha_ratio, where
-    length_score saturates at 100 tokens. Rounded to 6 digits via an
-    EXPLICIT floor(x*1e6 + 0.5)/1e6 — engine round() built-ins diverge
-    on true decimal halves (Spark BigDecimal half-up on the shortest
-    repr vs DuckDB's multiply trick on the binary double); the explicit
-    form is the same float64 ops in both engines, so it is bit-stable."""
-    t = F.col(text) if isinstance(text, str) else text
-    toks = tokens_expr(t)
-    n = F.size(toks).cast("double")
-    length_score = F.least(n / F.lit(100.0), F.lit(1.0))
-    all_stop = F.array(*[F.lit(s) for langset in sorted(STOPWORDS) for s in STOPWORDS[langset]])
-    stop_ratio = F.when(
-        n > 0,
-        F.size(F.filter(toks, lambda x: F.array_contains(all_stop, x))).cast("double") / n,
-    ).otherwise(F.lit(0.0))
-    alpha = F.length(F.regexp_replace(F.lower(t), "[^a-z]", "")).cast("double")
-    total = F.length(t).cast("double")
-    alpha_ratio = F.when(total > 0, alpha / total).otherwise(F.lit(0.0))
-    raw = F.lit(0.4) * length_score + F.lit(0.3) * stop_ratio + F.lit(0.3) * alpha_ratio
-    return F.floor(raw * F.lit(1000000.0) + F.lit(0.5)).cast("double") / F.lit(1000000.0)
-
-
 def fingerprint_expr(text) -> F.Column:
     """Content fingerprint: md5 of the sorted distinct token set —
     invariant to word order/whitespace (boilerplate-shuffle robust)."""
@@ -85,152 +44,114 @@ def with_lang_id(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "lang_pred",
-    use_expr: bool = False,
 ) -> DataFrame:
-    """Language ID column. Default path (round-6 optimization) is an
-    Arrow pandas UDF: tokens via the tokens_expr contract (lower,
-    split [^a-z0-9]+, drop empties — the word_shingle_hash_rows
-    precedent), per-language stopword hits via set lookups, argmax
-    with the same code-order tie-break. Stopword hits are exact
-    integer counts, so the Python path is trivially bit-identical to
-    the expression twin (parity-pinned in tests); a null text's scores
-    never beat `best > 0` in Catalyst, so like the empty doc both
-    paths emit 'und'. The Catalyst
-    chained-projection twin (use_expr=True) paid ~50 interpreted
-    higher-order array_contains steps per token (measured 5.5 s at
-    sf1.0 vs ~1 s for the Arrow pass; only the text column crosses
-    the boundary).
+    """Language ID column: an Arrow pandas UDF. Tokens follow the
+    tokens_expr contract (lower, split [^a-z0-9]+, drop empties — the
+    word_shingle_hash_rows precedent), per-language stopword hits are
+    set lookups, and the argmax breaks ties by language-code order;
+    zero evidence (empty or null text) gives 'und'. Stopword hits are
+    exact integer counts, so the result equals the DuckDB twin
+    (`_duck_lang_case` in __spark_entry__.py) exactly: tests/test_oracle.py
+    checks the text_lang query and tests/test_dedup_text.py the crafted
+    null / empty / digits-only rows. Only the text column crosses the
+    boundary (a Catalyst higher-order array_contains chain measured
+    5.5 s at sf1.0 vs ~1 s for this pass).
     """
-    if not use_expr:
-        import re as _re
+    import re as _re
 
-        langs = sorted(STOPWORDS)
-        sets = [frozenset(STOPWORDS[lang]) for lang in langs]
-        tok_re = _re.compile(_TOKEN_RE)
-
-        @F.pandas_udf("string")
-        def _lang(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append("und")
-                    continue
-                toks = [x for x in tok_re.split(t.lower()) if x]
-                scores = [0] * len(sets)
-                for x in toks:
-                    for i, s in enumerate(sets):
-                        if x in s:
-                            scores[i] += 1
-                best = max(scores)
-                out.append(
-                    langs[scores.index(best)] if best > 0 else "und"
-                )
-            return pd.Series(out, dtype="object")
-
-        from gdal_vfr_spark.plans.skew import spread_small_input
-
-        return spread_small_input(df).withColumn(out_col, _lang(F.col(text_col)))
     langs = sorted(STOPWORDS)
-    out = df.withColumn("__toks", tokens_expr(text_col))
-    for lang in langs:
-        stop = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
-        out = out.withColumn(
-            f"__s_{lang}", F.size(F.filter(F.col("__toks"), lambda t: F.array_contains(stop, t)))
-        )
-    best = F.greatest(*[F.col(f"__s_{lang}") for lang in langs])
-    out = out.withColumn("__best", best)
-    pred = F.lit("und")
-    for lang in reversed(langs):  # earlier langs win ties -> apply last
-        pred = F.when(
-            (F.col(f"__s_{lang}") == F.col("__best")) & (F.col("__best") > 0), F.lit(lang)
-        ).otherwise(pred)
-    return out.withColumn(out_col, pred).drop("__toks", "__best", *[f"__s_{lang}" for lang in langs])
+    sets = [frozenset(STOPWORDS[lang]) for lang in langs]
+    tok_re = _re.compile(_TOKEN_RE)
+
+    @F.pandas_udf("string")
+    def _lang(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                out.append("und")
+                continue
+            toks = [x for x in tok_re.split(t.lower()) if x]
+            scores = [0] * len(sets)
+            for x in toks:
+                for i, s in enumerate(sets):
+                    if x in s:
+                        scores[i] += 1
+            best = max(scores)
+            out.append(
+                langs[scores.index(best)] if best > 0 else "und"
+            )
+        return pd.Series(out, dtype="object")
+
+    from gdal_vfr_spark.plans.skew import spread_small_input
+
+    return spread_small_input(df).withColumn(out_col, _lang(F.col(text_col)))
 
 
 def with_quality(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "quality",
-    use_expr: bool = False,
 ) -> DataFrame:
-    """Quality score column. Default path (round-6 optimization) is an
-    Arrow pandas UDF replicating quality_score_expr's float64 ops in
-    the identical order — 0.4*length_score + 0.3*stop_ratio +
-    0.3*alpha_ratio evaluated left-associatively, the same explicit
-    floor(x*1e6 + 0.5)/1e6 rounding — so the score is bit-identical
-    to the expression twin (parity-pinned in tests, including null /
-    empty text: Catalyst's size(null) = null is skipped by least(), so
-    a null doc scores 0.4 — reproduced branch-for-branch). The
-    Catalyst chained-projection twin (use_expr=True) paid ~40
-    interpreted array_contains steps per token plus a regex rewrite
-    of the full text (measured 5.6 s at sf1.0 vs ~1 s; only the text
-    column crosses the boundary).
+    """Deterministic quality score in [0,1] as an Arrow pandas UDF:
+    0.4*length_score + 0.3*stop_ratio + 0.3*alpha_ratio, evaluated
+    left-associatively in float64, where length_score saturates at 100
+    tokens. Rounded to 6 digits via an EXPLICIT floor(x*1e6 + 0.5)/1e6
+    — engine round() built-ins diverge on true decimal halves (Spark
+    BigDecimal half-up on the shortest repr vs DuckDB's multiply trick
+    on the binary double); the explicit form is the same float64 ops
+    in both engines, so it is bit-stable. The score equals the DuckDB
+    twin (`_duck_quality_expr` in __spark_entry__.py) bit-for-bit:
+    tests/test_oracle.py checks the text_quality query and
+    tests/test_dedup_text.py the crafted null / empty / digits-only /
+    150-token rows. A null text scores 0.4, as in the oracle: the
+    token count is null, least() skips it (length_score = 1.0), and
+    both ratio guards give 0.0. Only the text column crosses the
+    boundary (a Catalyst array_contains chain plus a regex rewrite of
+    the full text measured 5.6 s at sf1.0 vs ~1 s for this pass).
     """
-    if not use_expr:
-        import math as _math
-        import re as _re
+    import math as _math
+    import re as _re
 
-        all_stop = frozenset(
-            s for langset in sorted(STOPWORDS) for s in STOPWORDS[langset]
-        )
-        tok_re = _re.compile(_TOKEN_RE)
-        non_alpha_re = _re.compile("[^a-z]")
-
-        @F.pandas_udf("double")
-        def _quality(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    # Catalyst: size(null) = null; least() SKIPS nulls,
-                    # so length_score = 1.0 and the when()-guards give
-                    # 0.0 ratios -> quality 0.4 (pinned in the parity
-                    # test's null row)
-                    toks = None
-                    n = 0.0
-                    length_score = 1.0
-                else:
-                    toks = [x for x in tok_re.split(t.lower()) if x]
-                    n = float(len(toks))
-                    length_score = min(n / 100.0, 1.0)
-                if n > 0:
-                    hits = 0
-                    for x in toks:
-                        if x in all_stop:
-                            hits += 1
-                    stop_ratio = float(hits) / n
-                else:
-                    stop_ratio = 0.0
-                if t is not None and len(t) > 0:
-                    alpha = float(len(non_alpha_re.sub("", t.lower())))
-                    alpha_ratio = alpha / float(len(t))
-                else:
-                    alpha_ratio = 0.0
-                raw = 0.4 * length_score + 0.3 * stop_ratio + 0.3 * alpha_ratio
-                out.append(_math.floor(raw * 1000000.0 + 0.5) / 1000000.0)
-            return pd.Series(out, dtype="float64")
-
-        from gdal_vfr_spark.plans.skew import spread_small_input
-
-        return spread_small_input(df).withColumn(
-            out_col, _quality(F.col(text_col))
-        )
-    t = F.col(text_col)
-    out = df.withColumn("__toks", tokens_expr(text_col)).withColumn(
-        "__n", F.size(F.col("__toks")).cast("double")
+    all_stop = frozenset(
+        s for langset in sorted(STOPWORDS) for s in STOPWORDS[langset]
     )
-    all_stop = F.array(*[F.lit(s) for langset in sorted(STOPWORDS) for s in STOPWORDS[langset]])
-    length_score = F.least(F.col("__n") / F.lit(100.0), F.lit(1.0))
-    stop_ratio = F.when(
-        F.col("__n") > 0,
-        F.size(F.filter(F.col("__toks"), lambda x: F.array_contains(all_stop, x))).cast("double")
-        / F.col("__n"),
-    ).otherwise(F.lit(0.0))
-    alpha = F.length(F.regexp_replace(F.lower(t), "[^a-z]", "")).cast("double")
-    total = F.length(t).cast("double")
-    alpha_ratio = F.when(total > 0, alpha / total).otherwise(F.lit(0.0))
-    raw = F.lit(0.4) * length_score + F.lit(0.3) * stop_ratio + F.lit(0.3) * alpha_ratio
-    score = F.floor(raw * F.lit(1000000.0) + F.lit(0.5)).cast("double") / F.lit(1000000.0)
-    return out.withColumn(out_col, score).drop("__toks", "__n")
+    tok_re = _re.compile(_TOKEN_RE)
+    non_alpha_re = _re.compile("[^a-z]")
+
+    @F.pandas_udf("double")
+    def _quality(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                # null token count: least() SKIPS nulls, so
+                # length_score = 1.0 and the guards give 0.0 ratios
+                toks = None
+                n = 0.0
+                length_score = 1.0
+            else:
+                toks = [x for x in tok_re.split(t.lower()) if x]
+                n = float(len(toks))
+                length_score = min(n / 100.0, 1.0)
+            if n > 0:
+                hits = 0
+                for x in toks:
+                    if x in all_stop:
+                        hits += 1
+                stop_ratio = float(hits) / n
+            else:
+                stop_ratio = 0.0
+            if t is not None and len(t) > 0:
+                alpha = float(len(non_alpha_re.sub("", t.lower())))
+                alpha_ratio = alpha / float(len(t))
+            else:
+                alpha_ratio = 0.0
+            raw = 0.4 * length_score + 0.3 * stop_ratio + 0.3 * alpha_ratio
+            out.append(_math.floor(raw * 1000000.0 + 0.5) / 1000000.0)
+        return pd.Series(out, dtype="float64")
+
+    from gdal_vfr_spark.plans.skew import spread_small_input
+
+    return spread_small_input(df).withColumn(out_col, _quality(F.col(text_col)))
 
 
 # Conservative PII patterns restricted to the regex subset Java
@@ -362,14 +283,11 @@ def chunk_tokens(
 
 
 def analyze(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach all four analysis columns in one projection (single pass)."""
-    return df.select(
-        "*",
-        token_count_expr(text_col).alias("n_tokens"),
-        lang_id_expr(text_col).alias("lang_pred"),
-        quality_score_expr(text_col).alias("quality"),
-        fingerprint_expr(text_col).alias("fingerprint"),
-    )
+    """Attach all four analysis columns: n_tokens, lang_pred (with_lang_id),
+    quality (with_quality) and fingerprint."""
+    out = df.select("*", token_count_expr(text_col).alias("n_tokens"))
+    out = with_quality(with_lang_id(out, text_col), text_col)
+    return out.withColumn("fingerprint", fingerprint_expr(text_col))
 
 
 def bm25_topk(
@@ -521,13 +439,47 @@ def value_quantiles(
     )
 
 
-def _repetition_stats_arrow(
-    df: DataFrame, text_col: str, id_col: str, top_n: int, dup_n: int
+def repetition_stats(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    top_n: int = 2,
+    dup_n: int = 5,
 ) -> DataFrame:
-    """Map-only Arrow kernel behind repetition_stats: per-doc integer
-    n-gram budgets via local counters — no shuffle, no gram rows on
-    the wire. Bit-identical to the Catalyst twin because every output
-    is exact integer arithmetic over the same token stream."""
+    """Gopher-style repetition profile per document, integer-exact
+    (semantics class: Rae et al. 2021, "Scaling Language Models"
+    §A1.1 repetition filters, re-expressed over the shared tokenizer).
+
+    Emits INTEGER character budgets, never float fractions, so the
+    cross-engine oracle is exact:
+      n_words / word_chars / distinct_words — token tally over the
+        shared tokenizer (word_chars excludes separators);
+      top{top_n}_chars — chars covered by the single most-covering
+        top_n-gram: max over grams of count * charlen(gram), where
+        charlen excludes the joining spaces (deterministic — an
+        integer max needs no most-frequent tie-break rule);
+      dup{dup_n}_chars — chars covered by dup_n-grams occurring more
+        than once (count * charlen summed over those grams);
+      keep_repetition — the filter verdict via integer
+        cross-multiplication (no float division): top-gram coverage
+        <= 20% of word_chars AND dup-gram coverage <= 15%.
+
+    Plan shape (scales): every budget is a PER-DOCUMENT aggregate, so
+    the default path is MAP-ONLY — an Arrow mapInPandas pass that
+    tokenizes (the tokens_expr contract: lower, split [^a-z0-9]+,
+    drop empties — the word_shingle_hash_rows precedent) and counts
+    each doc's n-grams locally. Zero shuffles: the n-gram stream
+    never crosses the wire at all (round-6 optimization; the old
+    tagged-explode + groupBy(id, n, gram) + groupBy(id) shape
+    shuffled ~12 gram rows per token twice — 19.7 s at sf1.0 vs the
+    per-doc counter's integer arithmetic). Every budget is an integer
+    computed from exact token counts, so the result equals the DuckDB
+    twin (`_duck_repetition_sql` in __spark_entry__.py, the
+    tagged-explode + two-aggregate shape) exactly: tests/test_oracle.py
+    checks the text_repetition query and tests/test_dedup_text.py the
+    crafted docs. Documents with zero tokens (or null text) emit no
+    row, mirroring the oracle's inner unnest.
+    """
     import re as _re
 
     import pandas as _pd
@@ -618,104 +570,6 @@ def _repetition_stats_arrow(
             )
 
     return src.mapInPandas(_stats, schema)
-
-
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 2,
-    dup_n: int = 5,
-    use_expr: bool = False,
-) -> DataFrame:
-    """Gopher-style repetition profile per document, integer-exact
-    (semantics class: Rae et al. 2021, "Scaling Language Models"
-    §A1.1 repetition filters, re-expressed over the shared tokenizer).
-
-    Emits INTEGER character budgets, never float fractions, so the
-    cross-engine oracle is exact:
-      n_words / word_chars / distinct_words — token tally over the
-        shared tokenizer (word_chars excludes separators);
-      top{top_n}_chars — chars covered by the single most-covering
-        top_n-gram: max over grams of count * charlen(gram), where
-        charlen excludes the joining spaces (deterministic — an
-        integer max needs no most-frequent tie-break rule);
-      dup{dup_n}_chars — chars covered by dup_n-grams occurring more
-        than once (count * charlen summed over those grams);
-      keep_repetition — the filter verdict via integer
-        cross-multiplication (no float division): top-gram coverage
-        <= 20% of word_chars AND dup-gram coverage <= 15%.
-
-    Plan shape (scales): every budget is a PER-DOCUMENT aggregate, so
-    the default path is MAP-ONLY — an Arrow mapInPandas pass that
-    tokenizes (the tokens_expr contract: lower, split [^a-z0-9]+,
-    drop empties — the word_shingle_hash_rows precedent) and counts
-    each doc's n-grams locally. Zero shuffles: the n-gram stream
-    never crosses the wire at all (round-6 optimization; the old
-    tagged-explode + groupBy(id, n, gram) + groupBy(id) shape
-    shuffled ~12 gram rows per token twice — 19.7 s at sf1.0 vs the
-    per-doc counter's integer arithmetic, parity-pinned in
-    tests/test_dedup_text.py). Every budget is an integer computed
-    from exact token counts, so the Python path is trivially
-    bit-identical to the Catalyst twin. Documents with zero tokens
-    (or null text) emit no row, mirroring the oracle's inner unnest.
-
-    use_expr=True keeps the tagged-single-explode Catalyst twin
-    (oracle-shape clarity; two keyed shuffles).
-    """
-    if not use_expr:
-        return _repetition_stats_arrow(df, text_col, id_col, top_n, dup_n)
-    ns = sorted({1, top_n, dup_n})
-    words = df.select(
-        F.col(id_col), tokens_expr(text_col).alias("__w")
-    )
-    w = F.col("__w")
-
-    def grams(n: int) -> F.Column:
-        if n == 1:
-            return w
-        return F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - F.lit(n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(w, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    def tag(n: int) -> F.Column:
-        # NB: bind n here, NOT via a defaulted second lambda param —
-        # a two-arg transform() lambda is called as (element, index).
-        return F.transform(
-            grams(n),
-            lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
-        )
-
-    tagged = F.flatten(F.array(*[tag(n) for n in ns]))
-    ex = words.select(id_col, F.explode(tagged).alias("t")).select(
-        id_col, F.col("t.n").alias("n"), F.col("t.gram").alias("gram")
-    )
-    counts = ex.groupBy(id_col, "n", "gram").agg(F.count("*").alias("cnt"))
-    charcov = F.col("cnt") * F.length(F.regexp_replace("gram", " ", ""))
-    c = counts.select(id_col, "n", "cnt", charcov.alias("cov"))
-    n1, nt, nd = F.col("n") == 1, F.col("n") == top_n, F.col("n") == dup_n
-    agg = c.groupBy(id_col).agg(
-        F.sum(F.when(n1, F.col("cnt"))).cast("long").alias("n_words"),
-        F.sum(F.when(n1, F.col("cov"))).cast("long").alias("word_chars"),
-        F.sum(F.when(n1, F.lit(1))).cast("long").alias("distinct_words"),
-        F.coalesce(F.max(F.when(nt, F.col("cov"))), F.lit(0))
-        .cast("long")
-        .alias(f"top{top_n}_chars"),
-        F.coalesce(
-            F.sum(F.when(nd & (F.col("cnt") > 1), F.col("cov"))), F.lit(0)
-        )
-        .cast("long")
-        .alias(f"dup{dup_n}_chars"),
-    )
-    keep = (
-        (F.col(f"top{top_n}_chars") * 5 <= F.col("word_chars"))
-        & (F.col(f"dup{dup_n}_chars") * 20 <= F.col("word_chars") * 3)
-    )
-    return agg.withColumn("keep_repetition", keep.cast("int"))
 
 
 # --- line-level cleaning (C4 §2.2 / RefinedWeb line-wise filters) --------

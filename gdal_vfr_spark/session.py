@@ -102,9 +102,7 @@ def get_spark(
     # spark-submit --py-files does this; addPyFile is the API-level
     # equivalent and also covers local mode when the driver's cwd is
     # not the repo root (worker processes don't inherit driver
-    # sys.path mutations).
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:  # already added in a reused session
-        pass
+    # sys.path mutations). Re-adding the zip to a reused session only
+    # logs a warning, so an exception here is a real failure.
+    spark.sparkContext.addPyFile(package_zip())
     return spark

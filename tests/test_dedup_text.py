@@ -1,9 +1,24 @@
+import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from gdal_vfr_spark.operators import dedup, multimodal, similarity, text
+
+
+def _duck(sql, **views):
+    """Run DuckDB oracle SQL with each Spark DataFrame of `views`
+    registered as a view under its keyword (documents, embeddings)."""
+    con = duckdb.connect()
+    try:
+        for name, df in views.items():
+            con.register(name, pa.Table.from_pandas(df.toPandas(), preserve_index=False))
+        return con.sql(sql).df()
+    finally:
+        con.close()
 
 
 @pytest.fixture(scope="module")
@@ -135,15 +150,12 @@ def test_ivf_topk_recall_and_partition_invariance(spark):
     c1 = similarity.kmeans_centroids(emb, k=8, n_iter=2)
     c2 = similarity.kmeans_centroids(emb.repartition(13), k=8, n_iter=2)
     assert c1 == c2
-    # Arrow fast path == pure-Catalyst fold, bit-for-bit (the Arrow
-    # UDF accumulates per-dim in fold order, so this is exact equality)
-    c3 = similarity.kmeans_centroids(emb, k=8, n_iter=2, use_expr=True)
-    assert c1 == c3
-    expr_topk = sorted(
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in similarity.ivf_topk(emb, q, k=3, use_expr=True).collect()
+    # ... and bit-identical to the DuckDB Lloyd unroll's centroids
+    ctes, cf = entry._duck_lloyd_af_ctes(8, 2, 64)
+    want = _duck(
+        f"WITH {', '.join(ctes)} SELECT cid, c FROM {cf} ORDER BY cid", embeddings=emb
     )
-    assert expr_topk == sorted((r["query_id"], r["vec_id"], r["rank"]) for r in got)
+    assert c1 == [(int(i), [float(x) for x in c]) for i, c in zip(want["cid"], want["c"])]
 
 
 def test_ivf_indexed_prunes_partitions(spark, tmp_path):
@@ -294,37 +306,51 @@ def test_multimodal_plumbing(spark):
 
 
 def test_minhash_fast_equals_expr(spark, docs):
-    fast = dedup.with_minhash(docs).select("doc_id", "minhash").collect()
-    slow = dedup.with_minhash(docs, use_expr=True).select("doc_id", "minhash").collect()
-    assert {r["doc_id"]: r["minhash"] for r in fast} == {
-        r["doc_id"]: r["minhash"] for r in slow
+    """with_minhash equals its DuckDB twin expression (the sig CTE of
+    _duck_sig_bands_cte) signature for signature, empty doc included."""
+    fast = {
+        r["doc_id"]: r["minhash"]
+        for r in dedup.with_minhash(docs).select("doc_id", "minhash").collect()
     }
+    sig = _duck(f"WITH {entry._duck_sig_bands_cte()} SELECT * FROM sig", documents=docs)
+    want = {
+        int(r["doc_id"]): [int(r[f"s{i}"]) for i in range(16)]
+        for r in sig.to_dict("records")
+    }
+    assert fast == want and len(fast) == 7
 
 
 def test_simhash_fast_equals_expr(spark, docs):
+    """with_simhash equals its DuckDB twin expression (the relational
+    token x bit vote of _duck_simhash_sql) at 32 and 64 bits."""
     nonempty = docs.where("length(text) > 0")
     for bits in (32, 64):
-        fast = dedup.with_simhash(nonempty, bits=bits).select("doc_id", "simhash").collect()
-        slow = dedup.with_simhash(nonempty, bits=bits, use_expr=True).select(
-            "doc_id", "simhash"
-        ).collect()
-        assert {r["doc_id"]: r["simhash"] for r in fast} == {
-            r["doc_id"]: r["simhash"] for r in slow
+        fast = {
+            r["doc_id"]: r["simhash"]
+            for r in dedup.with_simhash(nonempty, bits=bits).collect()
+        }
+        want = _duck(entry._duck_simhash_sql(bits), documents=nonempty)
+        assert fast == {
+            int(d): int(h) for d, h in zip(want["doc_id"], want["simhash"])
         }, bits
 
 
 def test_with_lang_id_matches_expr(spark, docs):
-    a = docs.select("doc_id", text.lang_id_expr("text").alias("lang_pred"))
+    """with_lang_id equals its DuckDB twin expression (_duck_lang_sql)
+    on the docs rows, the empty doc included."""
+    a = _duck(entry._duck_lang_sql(), documents=docs)
     b = text.with_lang_id(docs).select("doc_id", "lang_pred")
-    assert {r["doc_id"]: r["lang_pred"] for r in a.collect()} == {
+    assert dict(zip(a["doc_id"].astype(int), a["lang_pred"])) == {
         r["doc_id"]: r["lang_pred"] for r in b.collect()
     }
 
 
 def test_with_quality_matches_expr(spark, docs):
-    a = docs.select("doc_id", text.quality_score_expr("text").alias("quality"))
+    """with_quality equals its DuckDB twin expression (_duck_quality_sql)
+    on the docs rows, exact float equality."""
+    a = _duck(entry._duck_quality_sql(), documents=docs)
     b = text.with_quality(docs).select("doc_id", "quality")
-    assert {r["doc_id"]: r["quality"] for r in a.collect()} == {
+    assert {int(d): float(q) for d, q in zip(a["doc_id"], a["quality"])} == {
         r["doc_id"]: r["quality"] for r in b.collect()
     }
 
@@ -537,12 +563,13 @@ def test_temperature_quota_sample_semantics(spark):
 
 def test_word_shingles_expr_reference(spark):
     """Word 13-gram shingles match a plain-Python reference, including
-    the short-doc (full-sequence) and empty-text edges."""
+    the short-doc (full-sequence) and empty-text edges: the shingle
+    strings of the DuckDB twin expression (_duck_word_shingles), and
+    the md5-half hashes word_shingle_hash_rows emits for them."""
+    import hashlib
     import re as _re
 
-    from pyspark.sql import functions as F
-
-    from gdal_vfr_spark.functions.text_expr import word_shingles_expr
+    from gdal_vfr_spark.operators.dedup import word_shingle_hash_rows
 
     texts = [
         "The quick brown fox jumps over the lazy dog near the river bank today",
@@ -564,12 +591,25 @@ def test_word_shingles_expr_reference(spark):
                 out.append(g)
         return out
 
-    df = spark.createDataFrame([(t,) for t in texts], "text string").select(
-        "text", word_shingles_expr(F.col("text"), 13).alias("sh")
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    duck = _duck(
+        f"""SELECT doc_id, {entry._duck_word_shingles('toks', 13)} AS sh
+            FROM (SELECT doc_id, {entry._duck_tokens('text')} AS toks FROM documents)""",
+        documents=df,
     )
-    got = {r["text"]: list(r["sh"]) for r in df.collect()}
-    for t in texts:
-        assert got[t] == ref(t)
+    # DuckDB's list_distinct does not keep first-seen order, so the
+    # shingle lists compare as sorted lists (duplicates would still show)
+    got = {int(d): sorted(sh) for d, sh in zip(duck["doc_id"], duck["sh"])}
+    for i, t in enumerate(texts):
+        assert got[i] == sorted(ref(t))
+    hashed = sorted(
+        (r[0], r[1]) for r in word_shingle_hash_rows(df, "text", "doc_id", 13).collect()
+    )
+    assert hashed == sorted(
+        (i, hashlib.md5(g.encode()).hexdigest()[:16])
+        for i, t in enumerate(texts)
+        for g in ref(t)
+    )
 
 
 def test_decontaminate_word_mode(spark):
@@ -628,22 +668,36 @@ def test_multimodal_real_decode_roundtrip(spark):
 
 
 def test_word_shingle_rows_udf_expr_parity(spark, docs):
-    """The Arrow fast path and the Catalyst expression twin must emit
-    identical (doc_id, shingle-hash) sets (with_minhash-style pin)."""
+    """word_shingle_hash_rows emits exactly the (doc_id, shingle-hash)
+    rows of its DuckDB twin expression (_duck_word_shingles, hashed as
+    substr(md5(s), 1, 16)): the docs rows plus the short-doc
+    (full-sequence), empty-text and punctuation-split edges."""
     from gdal_vfr_spark.operators.dedup import word_shingle_hash_rows
 
+    edges = spark.createDataFrame(
+        [
+            (101, "The quick brown fox jumps over the lazy dog near the river bank today"),
+            (102, "short doc"),
+            (103, ""),
+            (104, "  punctuation, splits; tokens!  and    spaces  "),
+        ],
+        "doc_id long, text string",
+    )
+    src = docs.unionByName(edges)
     for n in (3, 13):
-        fast = {
+        fast = sorted(
             (r[0], r[1])
-            for r in word_shingle_hash_rows(docs, "text", "doc_id", n).collect()
-        }
-        expr = {
-            (r[0], r[1])
-            for r in word_shingle_hash_rows(
-                docs, "text", "doc_id", n, use_expr=True
-            ).collect()
-        }
-        assert fast == expr and len(fast) > 0
+            for r in word_shingle_hash_rows(src, "text", "doc_id", n).collect()
+        )
+        want = _duck(
+            f"""SELECT doc_id, substr(md5(sh), 1, 16) AS sh FROM (
+                  SELECT doc_id, unnest({entry._duck_word_shingles('toks', n)}) AS sh
+                  FROM (SELECT doc_id, {entry._duck_tokens('text')} AS toks
+                        FROM documents))""",
+            documents=src,
+        )
+        assert fast == sorted(zip(want["doc_id"].astype(int), want["sh"])), n
+        assert len(fast) > 0
 
 
 def test_int8_quantize_matches_numpy_twin(spark):
@@ -1016,8 +1070,6 @@ def test_pipeline_clean_full_gate_precedence(spark):
     -> quality -> repetition) partitions every doc into exactly one
     reason, reasons stay within the 6-value contract, and the
     round-5 gates actually fire on the sf0.001 fixture."""
-    import __spark_entry__ as entry
-
     rows = entry.q_pipeline_clean_full(spark, "/root/testdata/sf0.001").collect()
     total = sum(r["n_docs"] for r in rows)
     n_docs = spark.read.parquet(
@@ -1087,21 +1139,15 @@ def test_semantic_dedup_matches_numpy_rule(spark):
         ).collect()
     }
     assert got13 == survivors
-    # Arrow blocked-algebra path == pure-Catalyst fold twin,
-    # bit-for-bit (per-dim sequential accumulation argument), and the
-    # blocking itself cannot change the rule (block=7 forces splits)
-    expr_side = sorted(
-        (r["vec_id"], r["cid"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=tau, use_expr=True
-        ).collect()
-    )
-    assert expr_side == sorted((r["vec_id"], r["cid"]) for r in got)
+    # the blocking cannot change the rule (block=7 forces splits);
+    # exactness against the DuckDB twin is the dedup_semantic oracle in
+    # tests/test_oracle.py, which runs these same parameters
+    grouped = sorted((r["vec_id"], r["cid"]) for r in got)
     blocked = sorted(
         (r["vec_id"], r["cid"])
         for r in similarity.semantic_dedup(emb, threshold=tau, block=7).collect()
     )
-    assert blocked == expr_side
+    assert blocked == grouped
     # hot-cluster skew path == grouped path, bit-for-bit: a 50-row
     # threshold forces every cluster (53-71 members) through the
     # broadcast map-side kernel
@@ -1111,14 +1157,15 @@ def test_semantic_dedup_matches_numpy_rule(spark):
             emb, threshold=tau, hot_cluster_rows=50
         ).collect()
     )
-    assert hot == expr_side
+    assert hot == grouped
 
 
 def test_cosine_near_dup_pairs_kernel_parity(spark):
-    # round-6: the per-bucket numpy kernel must be bit-identical to the
-    # Catalyst self-join twin — same pairs AND same float64 cosines.
-    # n_planes=1 -> 2 fat buckets; block=16 forces multi-block
-    # (diagonal + off-diagonal) accumulation inside each bucket.
+    # the per-bucket numpy kernel must equal the DuckDB twin
+    # (_duck_srp_near_dup_sql) bit for bit — same pairs AND same
+    # float64 cosines. n_planes=1 -> 2 fat buckets; block=16 forces
+    # multi-block (diagonal + off-diagonal) accumulation inside each
+    # bucket.
     rng = np.random.default_rng(11)
     emb = rng.standard_normal((120, 16)).astype(np.float32)
     emb[50] = emb[10] + 1e-4  # planted near-dup
@@ -1134,28 +1181,34 @@ def test_cosine_near_dup_pairs_kernel_parity(spark):
     fast = similarity.cosine_near_dup_pairs(
         df, threshold=0.3, dim=16, n_planes=1, block=16
     ).collect()
-    slow = similarity.cosine_near_dup_pairs(
-        df, threshold=0.3, dim=16, n_planes=1, use_expr=True
-    ).collect()
+    want = _duck(
+        entry._duck_srp_near_dup_sql(threshold=0.3, n_planes=1, dim=16), embeddings=df
+    )
     f = {(r["id_a"], r["id_b"]): r["cosine"] for r in fast}
-    s = {(r["id_a"], r["id_b"]): r["cosine"] for r in slow}
+    s = {
+        (int(a), int(b)): float(c)
+        for a, b, c in zip(want["id_a"], want["id_b"], want["cosine"])
+    }
     assert len(f) > 10  # the planted dups and random >=0.3 pairs exist
     assert f == s  # exact float equality: bit-identical fold order
 
 
 def test_repetition_stats_arrow_equals_expr(spark, docs):
-    # round-6: the map-only Arrow path must match the tagged-explode
-    # Catalyst twin row-for-row (integer-exact budgets)
-    fast = text.repetition_stats(docs).collect()
-    slow = text.repetition_stats(docs, use_expr=True).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
-    assert len(fast) == 6  # empty doc dropped
+    # the map-only Arrow path must match its DuckDB twin expression
+    # (_duck_repetition_sql, the tagged-explode shape) row for row
+    # (integer-exact budgets)
+    fast = text.repetition_stats(docs)
+    want = _duck(entry._duck_repetition_sql(), documents=docs)[fast.columns]
+    got = sorted(map(tuple, fast.collect()))
+    assert got == sorted(tuple(int(v) for v in r) for r in want.itertuples(index=False))
+    assert len(got) == 6  # empty doc dropped
 
 
-def test_quality_lang_arrow_equals_expr(spark):
-    # round-6: Arrow pandas-UDF paths for with_quality / with_lang_id
-    # must be bit-identical to the Catalyst chained-projection twins,
-    # including the null and empty-text branches.
+def test_quality_lang_arrow_equals_expr(spark, docs):
+    # the Arrow pandas-UDF paths for with_quality / with_lang_id must
+    # equal their DuckDB twin expressions (_duck_quality_sql /
+    # _duck_lang_sql) exactly, on the docs rows and on crafted null,
+    # empty, digits-only and length-saturating rows.
     rows = [
         (1, "the quick brown fox jumps over the lazy dog in the park"),
         (2, "der schnelle braune fuchs und die katze ist mit dem hund"),
@@ -1166,24 +1219,22 @@ def test_quality_lang_arrow_equals_expr(spark):
         (7, "zzz 123 456 --- !!!"),
         (8, " ".join(f"w{i}" for i in range(150))),  # saturates length
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    fq = {r["doc_id"]: r["quality"] for r in text.with_quality(df).collect()}
-    sq = {
-        r["doc_id"]: r["quality"]
-        for r in text.with_quality(df, use_expr=True).collect()
-    }
-    assert fq == sq  # exact float equality
-    fl = {r["doc_id"]: r["lang_pred"] for r in text.with_lang_id(df).collect()}
-    sl = {
-        r["doc_id"]: r["lang_pred"]
-        for r in text.with_lang_id(df, use_expr=True).collect()
-    }
-    assert fl == sl
+    crafted = spark.createDataFrame(rows, ["doc_id", "text"])
+    for df in (docs, crafted):
+        fq = {r["doc_id"]: r["quality"] for r in text.with_quality(df).collect()}
+        wq = _duck(entry._duck_quality_sql(), documents=df)
+        assert fq == {
+            int(d): float(q) for d, q in zip(wq["doc_id"], wq["quality"])
+        }  # exact float equality
+        fl = {r["doc_id"]: r["lang_pred"] for r in text.with_lang_id(df).collect()}
+        wl = _duck(entry._duck_lang_sql(), documents=df)
+        assert fl == dict(zip(wl["doc_id"].astype(int), wl["lang_pred"]))
+    assert fq[6] == 0.4 and fl[6] == "und"  # null text
 
 
 def test_int8_topk_matmul_equals_expr(spark):
-    # round-6: the int64-matmul scorer must equal the Catalyst
-    # crossJoin twin exactly (integer dots are order-free-exact)
+    # the int64-matmul scorer must equal the DuckDB twin expression
+    # (_duck_int8_topk_sql) exactly (integer dots are order-free-exact)
     rng = np.random.default_rng(21)
     emb = rng.standard_normal((200, 16)).astype(np.float32)
     corpus = spark.createDataFrame(
@@ -1195,7 +1246,8 @@ def test_int8_topk_matmul_equals_expr(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     fast = similarity.int8_topk(corpus, q, k=5).collect()
-    slow = similarity.int8_topk(corpus, q, k=5, use_expr=True).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
+    want = _duck(entry._duck_int8_topk_sql(k=5, n_queries=4), embeddings=corpus)
+    assert sorted(map(tuple, fast)) == sorted(
+        tuple(int(v) for v in r) for r in want.itertuples(index=False)
+    )
     assert len(fast) == 20

@@ -4,6 +4,9 @@ Runs every queries() entry and its oracle_sql() twin at sf0.01,
 compares row count, column names, and order-insensitive values
 (columns sorted by name, rows sorted, exact equality — floats too,
 because the queries are engineered for cross-engine determinism).
+By default the Spark side is a BARE session (no Arrow, default
+shuffle partitions); tests/test_oracle.py makes the same comparison,
+through the same normalize(), in the tuned test session at sf0.001.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """

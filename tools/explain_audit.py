@@ -79,8 +79,8 @@ AUDIT = [
     # collect of the dimension anywhere in the plan.
     ("geo_pip_parcely_large", dict(max_python=5, want_broadcast=True, max_shuffles=5)),
     # decontamination: bench shingle set broadcast; python = the two
-    # word-shingle Arrow fast-path passes (corpus + bench side — the
-    # expression twin is parity-pinned, round-4 floor work); shuffles =
+    # word-shingle Arrow passes (corpus + bench side, round-4 floor
+    # work; checked against the DuckDB twin in pytest); shuffles =
     # 2 small-input round-robin rebalances (never fire at production
     # partition counts), bench distinct, per-doc count agg, orderBy
     ("dedup_decontaminate", dict(max_python=2, want_broadcast=True, max_shuffles=5)),
@@ -257,7 +257,7 @@ AUDIT = [
     ("m3_merge_state", dict(max_python=0, want_broadcast=True, max_shuffles=4)),
     ("dedup_keep_best", dict(max_python=1, max_shuffles=5)),
     # near-dup variants: banded/blocked joins, Arrow only at the
-    # signature pass (expression twins parity-pinned in pytest)
+    # signature pass (checked against the DuckDB twins in pytest)
     ("dedup_simhash", dict(max_python=1, max_shuffles=1)),
     ("dedup_ngram_jaccard", dict(max_python=2, want_broadcast=True, max_shuffles=4)),
     ("dedup_representatives", dict(max_python=2, want_broadcast=True, max_shuffles=6)),

@@ -64,20 +64,20 @@ def _get_spark(name: str):
 def _transform(part):
     """The measured per-unit stage: language-ID + quality gate +
     fingerprint over the unit's pages — a realistic map-heavy extract
-    step (all Catalyst; output rows ≈ input rows so the per-unit write
+    step (text.analyze; output rows ≈ input rows so the per-unit write
     is real work too)."""
     from pyspark.sql import functions as F
 
     from gdal_vfr_spark.operators import text as X
 
-    return part.select(
+    return X.analyze(part.select("url", "unit", "tile_key", "text")).select(
         "url",
         "unit",
         "tile_key",
-        X.lang_id_expr(F.col("text")).alias("lang_pred"),
-        X.quality_score_expr(F.col("text")).alias("quality"),
-        X.token_count_expr(F.col("text")).alias("n_tokens"),
-        X.fingerprint_expr(F.col("text")).alias("fp"),
+        "lang_pred",
+        "quality",
+        "n_tokens",
+        F.col("fingerprint").alias("fp"),
     )
 
 
