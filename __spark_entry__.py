@@ -120,7 +120,7 @@ ORACLE_OBEC = (
 
 def _duck_spread(e: str) -> str:
     """DuckDB SQL for the Morton part1by1 bit spread (mirror of
-    cells._part1by1 / cells.cell_expr)."""
+    cells._part1by1 / cells.with_cell)."""
     out = f"(({e}) & 4294967295)"
     for sh, mask in ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
                      (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),

@@ -539,7 +539,10 @@ def gen_webpages_sql(spark, n: int, null_frac_denom: int = 20, hotspot_denom: in
     ix = F.least(F.floor((lon - F.lit(LON0)) / F.lit(dx)).cast("long"), F.lit(GRID - 1))
     iy = F.least(F.floor((lat - F.lit(LAT0)) / F.lit(dy)).cast("long"), F.lit(GRID - 1))
     text = F.concat(F.lit("page "), F.col("i").cast("string"), F.lit(" content body"))
-    return df.select(
+    # the tile key reads the projected lon/lat attributes through
+    # with_cell's chained projections (null geotag -> -1), so the whole
+    # generator stays inside whole-stage codegen
+    pages = df.select(
         F.concat(F.lit("https://example.cz/p/"), F.col("i").cast("string")).alias("url"),
         (F.lit("2024-01-01 00:00:00").cast("timestamp") + F.make_interval(secs=F.col("i") % 86400)).alias("warc_ts"),
         F.encode(text, "utf-8").alias("html"),
@@ -553,10 +556,8 @@ def gen_webpages_sql(spark, n: int, null_frac_denom: int = 20, hotspot_denom: in
         F.when(is_null, F.lit(-1)).otherwise(F.lit(OBEC_BASE) + iy * GRID + ix).alias(
             "truth_obec_kod"
         ),
-        F.when(is_null, F.lit(-1)).otherwise(C.cell_expr(lon, lat, TILE_RES)).alias(
-            "truth_tile_key"
-        ),
     )
+    return C.with_cell(pages, TILE_RES, "lon", "lat", "truth_tile_key")
 
 
 # ------------------------------------------------------------- Spark entry

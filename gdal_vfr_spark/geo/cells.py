@@ -14,7 +14,9 @@ own deterministic cell scheme (public-knowledge Morton/Z-order curve):
 This reproduces the roles H3/S2 play in the north star: mixed-res
 encoding (resolution lives inside the id), k-ring neighborhoods, and
 polygon cell covers. Everything here is numpy-vectorized; the Spark
-entry points are Arrow pandas UDFs (no per-row Python).
+entry point for fixed-res encoding is with_cell, a chain of Catalyst
+projections inside whole-stage codegen, and mixed-res encoding is an
+Arrow pandas UDF (no per-row Python either way).
 
 Reference analogue: the reference has no spatial index at all — it
 relies on PostGIS + a btree on gml_id (vfr4ogr/vfrpg.py:120-163).
@@ -192,34 +194,6 @@ def _part1by1_expr(c):
     return c
 
 
-def cell_expr(lon, lat, res: int):
-    """Pure-Catalyst cell encoding — the hot path for 10^12 rows.
-
-    Same bit layout as cell_encode(), but expressed with built-in
-    column functions so it stays inside whole-stage codegen: no Arrow
-    boundary, no UDF duplication when Catalyst pushes derived null
-    filters. The pandas UDF variants below remain for mixed-res
-    encoding and for parity tests against this expression.
-    """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    n = 1 << res
-    ix = F.least(
-        F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
-    morton = _part1by1_expr(ix).bitwiseOR(F.shiftleft(_part1by1_expr(iy), 1))
-    cell = F.shiftleft(morton, _RES_BITS).bitwiseOR(F.lit(res))
-    bad = lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat)
-    return F.when(bad, F.lit(-1)).otherwise(cell)
-
-
 def cell_from_indices_expr(ix, iy, res: int):
     """Cell id from integer grid indices (Catalyst) — for building
     raster-side tile dimensions (J6) without going through lon/lat."""
@@ -231,40 +205,10 @@ def cell_from_indices_expr(ix, iy, res: int):
     return F.shiftleft(morton, _RES_BITS).bitwiseOR(F.lit(res))
 
 
-# ---------------------------------------------------------------- Spark UDFs
-
-
-def cell_udf(res: int):
-    """pandas_udf (lon, lat) -> cell id at fixed resolution.
-
-    Arrow-batched; replaces the reference's per-feature cursor loop
-    (vfr4ogr/vfrogr.py:556-609) with columnar batches.
-    """
-
-    @F.pandas_udf(LongType())
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = cell_encode(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), res)
-        return pd.Series(out)
-
-    return _enc
-
-
-@F.pandas_udf(LongType())
-def cell_mixed_res_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
-    """Mixed-resolution encode: each row carries its own resolution
-    (north-star: 'batched H3/S2 cell encoding at mixed resolutions')."""
-    lon_np = lon.to_numpy(dtype=np.float64)
-    lat_np = lat.to_numpy(dtype=np.float64)
-    res_np = res.to_numpy(dtype=np.int64)
-    out = np.full(len(lon_np), -1, dtype=np.int64)
-    for r in np.unique(res_np):
-        sel = res_np == r
-        out[sel] = cell_encode(lon_np[sel], lat_np[sel], int(r))
-    return pd.Series(out)
-
-
 def with_cell(df, res: int, lon_col: str = "lon", lat_col: str = "lat", out_col: str = "cell"):
-    """Attach a cell-id column — THE hot path for 10^12 rows.
+    """Attach a cell-id column — THE hot path for 10^12 rows, and the
+    engine's one Catalyst lon/lat encoder (same bit layout as
+    cell_encode; tests/test_cells.py pins it bit-for-bit).
 
     Built as a chain of small projections (one per Morton spread step)
     rather than one Column expression: a single nested expression
@@ -297,3 +241,20 @@ def with_cell(df, res: int, lon_col: str = "lon", lat_col: str = "lat", out_col:
     cell = F.shiftleft(morton, _RES_BITS).bitwiseOR(F.lit(res))
     bad = lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat)
     return out.withColumn(out_col, F.when(bad, F.lit(-1)).otherwise(cell)).drop(gx, gy)
+
+
+# ---------------------------------------------------------------- Spark UDFs
+
+
+@F.pandas_udf(LongType())
+def cell_mixed_res_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
+    """Mixed-resolution encode: each row carries its own resolution
+    (north-star: 'batched H3/S2 cell encoding at mixed resolutions')."""
+    lon_np = lon.to_numpy(dtype=np.float64)
+    lat_np = lat.to_numpy(dtype=np.float64)
+    res_np = res.to_numpy(dtype=np.int64)
+    out = np.full(len(lon_np), -1, dtype=np.int64)
+    for r in np.unique(res_np):
+        sel = res_np == r
+        out[sel] = cell_encode(lon_np[sel], lat_np[sel], int(r))
+    return pd.Series(out)

@@ -1,7 +1,15 @@
-"""kNN join via k-ring cell expansion + distance-bounded merge (J5).
+"""kNN and distance-band joins via k-ring cell expansion +
+distance-bounded merge (J5).
 
 Not in the reference (SURVEY.md §2.3 J5) — required by the north star:
 "kNN via k-ring cell expansion with a distance-bounded heap merge".
+
+Every target is a line segment, and a point target is the zero-length
+segment (x, y, x, y): for it _point_seg_dist2 returns
+(qx-x)^2 + (qy-y)^2 bit-for-bit (l2 = 0 forces t = 0, so px = x). One
+packed index (PackedSegmentIndex), one ring walk, one band kernel
+(_band_lines) and one broadcast shell therefore serve point and line
+targets alike.
 
 Execution shape: the target set (streets / municipality centroids — the
 dimension side) is packed into cell-bucketed numpy arrays and broadcast;
@@ -10,16 +18,19 @@ candidates are gathered ring-by-ring with vectorized bucket lookups
 (sorted-cell searchsorted, never per-row Python); a point is finished
 when its kth distance is within the ring's guarantee radius, and the
 few stragglers fall back to a vectorized brute-force pass — so results
-are EXACT, not approximate.
+are EXACT, not approximate. Target layers past the broadcast budget
+take the partitioned halo-grid joiners at the bottom of this module.
 
 Distance: planar squared-euclidean on lon/lat degrees (documented
 engine-wide; deterministic — products/sums of float64 only, no libm
-trig), ties broken by target key then insertion order.
+trig). A query's neighbors are distinct target keys, each at its
+minimum distance over the key's segments, ranked by (dist2, key).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import functools
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -37,194 +48,10 @@ from gdal_vfr_spark.geo import cells, halo, wkb
 BROADCAST_TARGET_BUDGET = 2_000_000
 
 
-def _check_broadcast_budget(targets_df: DataFrame, budget: int, partitioned_path: str):
-    """Fail fast when a driver-collect joiner is pointed at a layer that
-    only the partitioned path can hold (round-3 verdict item 8). The
-    count is one job over the (dimension-sized) target projection —
-    trivially cheaper than the collect it guards."""
-    n = targets_df.count()
-    if n > budget:
-        raise ValueError(
-            f"target layer has {n} rows — beyond the {budget}-row broadcast "
-            f"budget for this driver-collect joiner; use {partitioned_path} "
-            "(partitioned: targets never reach the driver)"
-        )
-
-
-@dataclass
-class PackedPointIndex:
-    """Cell-bucketed target points: arrays sorted by cell id so a cell's
-    bucket is one searchsorted range."""
-
-    x: np.ndarray  # (N,) float64, sorted by cell
-    y: np.ndarray
-    keys: np.ndarray  # (N,) int64
-    cell_ids: np.ndarray  # (N,) int64 sorted
-    res: int
-
-    @classmethod
-    def build(cls, x, y, keys, res: int) -> "PackedPointIndex":
-        x = np.asarray(x, dtype=np.float64)
-        y = np.asarray(y, dtype=np.float64)
-        keys = np.asarray(keys, dtype=np.int64)
-        cell_ids = cells.cell_encode(x, y, res)
-        order = np.lexsort((keys, cell_ids))
-        return cls(x[order], y[order], keys[order], cell_ids[order], res)
-
-    def ring_candidates(self, ix: np.ndarray, iy: np.ndarray, r: int):
-        """For query grid coords (ix, iy), return ragged candidate index
-        lists for all targets in cells at Chebyshev distance exactly r
-        (r=0 → own cell). Vectorized: one searchsorted per ring offset."""
-        n = np.int64(1) << np.int64(self.res)
-        offs = []
-        if r == 0:
-            offs = [(0, 0)]
-        else:
-            for d in range(-r, r + 1):
-                offs += [(d, -r), (d, r)]
-            for d in range(-r + 1, r):
-                offs += [(-r, d), (r, d)]
-        cand_idx: list[np.ndarray] = []
-        cand_q: list[np.ndarray] = []
-        for dx, dy in offs:
-            cx = ix + dx
-            cy = iy + dy
-            ok = (cx >= 0) & (cx < n) & (cy >= 0) & (cy < n)
-            if not ok.any():
-                continue
-            cid = (cells.morton_encode(cx[ok], cy[ok]) << np.int64(5)) | np.int64(self.res)
-            lo = np.searchsorted(self.cell_ids, cid, side="left")
-            hi = np.searchsorted(self.cell_ids, cid, side="right")
-            lens = hi - lo
-            nz = lens > 0
-            if not nz.any():
-                continue
-            qidx = np.flatnonzero(ok)[nz]
-            starts, counts = lo[nz], lens[nz]
-            flat = np.concatenate([np.arange(s, s + c) for s, c in zip(starts, counts)])
-            cand_idx.append(flat)
-            cand_q.append(np.repeat(qidx, counts))
-        if not cand_idx:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        return np.concatenate(cand_idx), np.concatenate(cand_q)
-
-
-def _topk_merge(qi, ti, d2, keys, k, nq):
-    """Per-query top-k from ragged (query, target, dist2) triples.
-    Sorted merge (lexsort) — the vectorized equivalent of a bounded
-    heap; deterministic tie-break on (dist2, key)."""
-    order = np.lexsort((keys[ti], d2, qi))
-    qs, ts, ds = qi[order], ti[order], d2[order]
-    # rank within query group
-    first = np.ones(len(qs), dtype=bool)
-    first[1:] = qs[1:] != qs[:-1]
-    grp_start = np.flatnonzero(first)
-    rank = np.arange(len(qs)) - np.repeat(grp_start, np.diff(np.append(grp_start, len(qs))))
-    keep = rank < k
-    return qs[keep], ts[keep], ds[keep], rank[keep]
-
-
-def knn_batch(
-    idx: PackedPointIndex, qx: np.ndarray, qy: np.ndarray, k: int, max_ring: int = 8
-):
-    """Exact kNN of query points against the packed index.
-
-    Returns (query_row, target_key, dist2, rank) arrays. Expands rings
-    until the kth best distance is certified ≤ the unsearched region's
-    minimum possible distance; remaining points brute-force.
-    """
-    nq = len(qx)
-    ix, iy = cells.lonlat_to_grid(qx, qy, idx.res)
-    n_grid = 1 << idx.res
-    cell_w = 360.0 / n_grid
-    cell_h = 180.0 / n_grid
-    guard = min(cell_w, cell_h)
-
-    best_q = np.empty(0, np.int64)
-    best_t = np.empty(0, np.int64)
-    best_d = np.empty(0, np.float64)
-    acc_q: list[np.ndarray] = []
-    acc_t: list[np.ndarray] = []
-    acc_d: list[np.ndarray] = []
-    active = np.arange(nq, dtype=np.int64)
-    max_possible_ring = int(np.ceil(n_grid))
-
-    for r in range(0, max_ring + 1):
-        if len(active) == 0:
-            break
-        ti, qpos = idx.ring_candidates(ix[active], iy[active], r)
-        if len(ti):
-            qglob = active[qpos]
-            dx = idx.x[ti] - qx[qglob]
-            dy = idx.y[ti] - qy[qglob]
-            acc_q.append(qglob)
-            acc_t.append(ti)
-            acc_d.append(dx * dx + dy * dy)
-        # certification: a target beyond ring r is at distance >= r*guard
-        if acc_q:
-            all_q = np.concatenate(acc_q)
-            all_t = np.concatenate(acc_t)
-            all_d = np.concatenate(acc_d)
-            counts = np.bincount(all_q, minlength=nq)
-            # kth distance per active query (inf if < k candidates)
-            kth = np.full(nq, np.inf)
-            if len(all_q):
-                oq, ot, od, orank = _topk_merge(all_q, all_t, all_d, idx.keys, k, nq)
-                last = orank == np.minimum(counts[oq] - 1, k - 1)
-                kth_vals = od[last]
-                kth_q = oq[last]
-                kth[kth_q] = np.where(counts[kth_q] >= k, kth_vals, np.inf)
-            certified = np.sqrt(kth[active]) <= r * guard
-            done = active[certified]
-            active = active[~certified]
-            if r >= max_ring and len(active):
-                break
-        if r >= max_possible_ring:
-            active = active[:0]
-            break
-
-    # finalize ring-certified results
-    if acc_q:
-        all_q = np.concatenate(acc_q)
-        all_t = np.concatenate(acc_t)
-        all_d = np.concatenate(acc_d)
-        done_mask = np.ones(nq, dtype=bool)
-        done_mask[active] = False
-        sel = done_mask[all_q]
-        best_q, best_t, best_d, best_r = _topk_merge(
-            all_q[sel], all_t[sel], all_d[sel], idx.keys, k, nq
-        )
-    else:
-        best_r = np.empty(0, np.int64)
-
-    # brute-force stragglers (uncertified after max_ring)
-    if len(active):
-        chunk = max(1, int(2e7 / max(len(idx.x), 1)))
-        bq, bt, bd, br = [], [], [], []
-        for s in range(0, len(active), chunk):
-            a = active[s : s + chunk]
-            dx = idx.x[None, :] - qx[a][:, None]
-            dy = idx.y[None, :] - qy[a][:, None]
-            d2 = dx * dx + dy * dy
-            kk = min(k, d2.shape[1])
-            part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
-            qi = np.repeat(a, kk)
-            ti = part.ravel()
-            di = d2[np.repeat(np.arange(len(a)), kk), ti]
-            q2, t2, d2f, r2 = _topk_merge(qi, ti, di, idx.keys, k, nq)
-            bq.append(q2), bt.append(t2), bd.append(d2f), br.append(r2)
-        best_q = np.concatenate([best_q] + bq)
-        best_t = np.concatenate([best_t] + bt)
-        best_d = np.concatenate([best_d] + bd)
-        best_r = np.concatenate([best_r] + br)
-
-    return best_q, idx.keys[best_t], best_d, best_r
-
-
 def _reduce_min_per_key(qi, kv, d2):
-    """Collapse (query, key) duplicates keeping the min distance —
-    needed for segment targets, where one street contributes many
-    segments (and a segment may register in several cover cells)."""
+    """Collapse (query, key) duplicates keeping the min distance: one
+    street contributes many segments, and a segment may register in
+    several cover cells. Output is sorted by (query, key)."""
     order = np.lexsort((d2, kv, qi))
     q, v, d = qi[order], kv[order], d2[order]
     first = np.ones(len(q), dtype=bool)
@@ -233,8 +60,10 @@ def _reduce_min_per_key(qi, kv, d2):
 
 
 def _topk_merge_vals(qi, kv, d2, k):
-    """_topk_merge over key VALUES (already reduced per key) instead of
-    target indices."""
+    """Per-query top-k from (query, key, dist2) triples already reduced
+    per key. Sorted merge (lexsort) — the vectorized equivalent of a
+    bounded heap; deterministic tie-break on (dist2, key). Returns
+    (query, key, dist2, rank)."""
     order = np.lexsort((kv, d2, qi))
     qs, vs, ds = qi[order], kv[order], d2[order]
     first = np.ones(len(qs), dtype=bool)
@@ -267,44 +96,25 @@ def _point_seg_dist2(qx, qy, x1, y1, x2, y2):
 def _band_lines(qx, qy, x1, y1, x2, y2, keys, maxd2):
     """Every (query, key) pair within sqrt(maxd2), min squared distance
     per key, over ALL given segments: blocked so each (points x
-    segments) temporary stays near 2e7 cells. Returns (query_idx, key,
-    d2)."""
+    segments) temporary stays near 2e7 cells. Pairs outside the band
+    drop BEFORE the per-key min-reduce, so its sort sees only band
+    pairs; a key with any pair in the band keeps its overall minimum,
+    so rows, order and d2 are those of reducing first. Returns
+    (query_idx, key, d2), sorted by (query_idx, key) per block."""
     chunk = max(1, int(2e7 / max(len(x1), 1)))
     out_q: list[np.ndarray] = []
     out_k: list[np.ndarray] = []
     out_d: list[np.ndarray] = []
     for s in range(0, len(qx), chunk):
-        e = min(s + chunk, len(qx))
         d2 = _point_seg_dist2(
-            qx[s:e][:, None], qy[s:e][:, None],
+            qx[s : s + chunk][:, None], qy[s : s + chunk][:, None],
             x1[None, :], y1[None, :], x2[None, :], y2[None, :],
         )
-        qi = np.repeat(np.arange(s, e, dtype=np.int64), d2.shape[1])
-        rq, rk, rd = _reduce_min_per_key(qi, np.tile(keys, e - s), d2.ravel())
-        keep = rd <= maxd2
-        out_q.append(rq[keep])
-        out_k.append(rk[keep])
-        out_d.append(rd[keep])
-    return np.concatenate(out_q), np.concatenate(out_k), np.concatenate(out_d)
-
-
-def _band_points(qx, qy, tx, ty, keys, maxd2):
-    """Every (query, target) pair within sqrt(maxd2) with its squared
-    euclidean distance, blocked like _band_lines. Returns (query_idx,
-    key, d2)."""
-    chunk = max(1, int(2e7 / max(len(tx), 1)))
-    out_q: list[np.ndarray] = []
-    out_k: list[np.ndarray] = []
-    out_d: list[np.ndarray] = []
-    for s in range(0, len(qx), chunk):
-        e = min(s + chunk, len(qx))
-        dx = qx[s:e][:, None] - tx[None, :]
-        dy = qy[s:e][:, None] - ty[None, :]
-        d2 = dx * dx + dy * dy
         qi, ti = np.nonzero(d2 <= maxd2)
-        out_q.append(qi + s)
-        out_k.append(keys[ti])
-        out_d.append(d2[qi, ti])
+        rq, rk, rd = _reduce_min_per_key(qi + s, keys[ti], d2[qi, ti])
+        out_q.append(rq)
+        out_k.append(rk)
+        out_d.append(rd)
     return np.concatenate(out_q), np.concatenate(out_k), np.concatenate(out_d)
 
 
@@ -330,38 +140,48 @@ def _decode_segments(keys_and_wkb):
 
 @dataclass
 class PackedSegmentIndex:
-    """Cell-bucketed line segments for point-to-LINE kNN (J5 extension:
-    nearest street — the reference's AdresniMista.UliceKod ground truth,
-    gfs/AdresniMista.gfs:69-74, over gfs/Ulice.gfs:8-12 geometry).
+    """Cell-bucketed line segments — the one target index of this
+    module. Streets (J5 extension: nearest street, the reference's
+    AdresniMista.UliceKod ground truth, gfs/AdresniMista.gfs:69-74, over
+    gfs/Ulice.gfs:8-12 geometry) come in through build(); a point layer
+    is passed straight to the constructor as (x, y, x, y, keys, res).
 
     Each segment registers in every cell its bbox intersects (same
-    cover idea as the polygon side); entries are sorted by cell id so a
-    bucket is one searchsorted range. keys repeat per segment — queries
-    reduce to distinct keys via min-distance before ranking."""
+    cover idea as the polygon side; a point's bbox is its own cell);
+    entries are sorted by cell id so a bucket is one searchsorted range.
+    keys repeat per segment — queries reduce to distinct keys via
+    min-distance before ranking."""
 
     x1: np.ndarray  # (S,) float64 segment endpoints
     y1: np.ndarray
     x2: np.ndarray
     y2: np.ndarray
     keys: np.ndarray  # (S,) int64 target key per segment
-    cell_ids: np.ndarray  # (E,) int64 sorted cover entries
-    seg_idx: np.ndarray  # (E,) int64 segment per entry
     res: int
+    cell_ids: np.ndarray = field(init=False)  # (E,) int64 sorted cover entries
+    seg_idx: np.ndarray = field(init=False)  # (E,) int64 segment per entry
+
+    def __post_init__(self):
+        x1, y1, x2, y2 = self.x1, self.y1, self.x2, self.y2
+        seg_idx, cell_ids = cells.cover_bboxes(
+            np.minimum(x1, x2), np.minimum(y1, y2),
+            np.maximum(x1, x2), np.maximum(y1, y2), self.res,
+        )
+        order = np.argsort(cell_ids, kind="stable")
+        self.cell_ids, self.seg_idx = cell_ids[order], seg_idx[order]
 
     @classmethod
     def build(cls, keys_and_wkb: list[tuple[int, bytes]], res: int) -> "PackedSegmentIndex":
-        x1, y1, x2, y2, keys = _decode_segments(keys_and_wkb)
-        seg_idx, cell_ids = cells.cover_bboxes(
-            np.minimum(x1, x2), np.minimum(y1, y2),
-            np.maximum(x1, x2), np.maximum(y1, y2), res,
-        )
-        order = np.argsort(cell_ids, kind="stable")
-        return cls(x1, y1, x2, y2, keys, cell_ids[order], seg_idx[order], res)
+        return cls(*_decode_segments(keys_and_wkb), res)
 
-    # same ring-walk as PackedPointIndex.ring_candidates, over cover
-    # entries (a segment can appear in several cells; the per-key
-    # min-reduce collapses duplicates downstream)
     def ring_candidates(self, ix: np.ndarray, iy: np.ndarray, r: int):
+        """For query grid coords (ix, iy), return (segment, query) index
+        arrays for every cover entry in the cells at Chebyshev distance
+        exactly r (r=0 → own cell), offset by offset and query by query.
+        A segment can appear in several cells; the per-key min-reduce
+        collapses duplicates downstream. One searchsorted per ring
+        offset, and each bucket range expands by repeat/cumsum as in
+        cells.cover_bboxes — no per-query Python."""
         n = np.int64(1) << np.int64(self.res)
         if r == 0:
             offs = [(0, 0)]
@@ -381,16 +201,13 @@ class PackedSegmentIndex:
                 continue
             cid = (cells.morton_encode(cx[ok], cy[ok]) << np.int64(5)) | np.int64(self.res)
             lo = np.searchsorted(self.cell_ids, cid, side="left")
-            hi = np.searchsorted(self.cell_ids, cid, side="right")
-            lens = hi - lo
-            nz = lens > 0
-            if not nz.any():
+            counts = np.searchsorted(self.cell_ids, cid, side="right") - lo
+            total = int(counts.sum())
+            if not total:
                 continue
-            qidx = np.flatnonzero(ok)[nz]
-            starts, counts = lo[nz], lens[nz]
-            flat = np.concatenate([np.arange(s, s + c) for s, c in zip(starts, counts)])
+            flat = np.repeat(lo - np.cumsum(counts) + counts, counts) + np.arange(total)
             cand_idx.append(self.seg_idx[flat])
-            cand_q.append(np.repeat(qidx, counts))
+            cand_q.append(np.repeat(np.flatnonzero(ok), counts))
         if not cand_idx:
             return np.empty(0, np.int64), np.empty(0, np.int64)
         return np.concatenate(cand_idx), np.concatenate(cand_q)
@@ -442,34 +259,40 @@ def range_lines_batch(
             acc_d.append(d2)
     if not acc_q:
         return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64)
-    rq, rv, rd = _reduce_min_per_key(
-        np.concatenate(acc_q), np.concatenate(acc_v), np.concatenate(acc_d)
-    )
-    keep = rd <= max_dist * max_dist
-    return rq[keep], rv[keep], rd[keep]
+    # band filter before the per-key reduce, as in _band_lines
+    d2 = np.concatenate(acc_d)
+    keep = d2 <= max_dist * max_dist
+    return _reduce_min_per_key(np.concatenate(acc_q)[keep], np.concatenate(acc_v)[keep], d2[keep])
 
 
 def knn_lines_batch(
     idx: PackedSegmentIndex, qx: np.ndarray, qy: np.ndarray, k: int, max_ring: int = 8
 ):
-    """Exact k nearest LINE targets (distinct keys) per query point.
-    Ring expansion with the same certification as knn_batch: a segment
+    """Exact k nearest targets (distinct keys) per query point, for
+    line and point (zero-length segment) targets alike. Returns
+    (query_idx, key, dist2, rank).
+
+    Rings expand until the kth best distance is certified: a segment
     not registered within Chebyshev ring r has its bbox outside the
-    (2r+1)^2 block, so its distance is >= r*guard. Stragglers fall back
-    to a blocked brute-force pass over all segments."""
+    (2r+1)^2 block, so its distance is >= r*guard. Stragglers left
+    after max_ring fall back to a blocked brute-force pass over all
+    segments; both paths rank by (dist2, key)."""
     nq = len(qx)
     ix, iy = cells.lonlat_to_grid(qx, qy, idx.res)
     n_grid = 1 << idx.res
     guard = min(360.0 / n_grid, 180.0 / n_grid)
 
-    acc_q: list[np.ndarray] = []
-    acc_v: list[np.ndarray] = []
-    acc_d: list[np.ndarray] = []
+    # Running top-k per query, sorted by (query, dist2, key). A key that
+    # drops out of it never returns to the final top-k: the kth entry
+    # only improves as rings add candidates, and a key's segments in
+    # later rings bring their own distances. So each ring reduces just
+    # its new candidates plus at most k kept rows per query.
+    best_q = np.empty(0, np.int64)
+    best_v = np.empty(0, np.int64)
+    best_d = np.empty(0, np.float64)
+    best_r = np.empty(0, np.int64)
     active = np.arange(nq, dtype=np.int64)
-    max_possible_ring = int(np.ceil(n_grid))
-    best = None
-
-    for r in range(0, max_ring + 1):
+    for r in range(max_ring + 1):
         if len(active) == 0:
             break
         ti, qpos = idx.ring_candidates(ix[active], iy[active], r)
@@ -478,59 +301,86 @@ def knn_lines_batch(
             d2 = _point_seg_dist2(
                 qx[qglob], qy[qglob], idx.x1[ti], idx.y1[ti], idx.x2[ti], idx.y2[ti]
             )
-            acc_q.append(qglob)
-            acc_v.append(idx.keys[ti])
-            acc_d.append(d2)
-        if acc_q:
-            rq, rv, rd = _reduce_min_per_key(
-                np.concatenate(acc_q), np.concatenate(acc_v), np.concatenate(acc_d)
+            best_q, best_v, best_d, best_r = _topk_merge_vals(
+                *_reduce_min_per_key(
+                    np.concatenate([best_q, qglob]),
+                    np.concatenate([best_v, idx.keys[ti]]),
+                    np.concatenate([best_d, d2]),
+                ),
+                k,
             )
-            counts = np.bincount(rq, minlength=nq)
-            kth = np.full(nq, np.inf)
-            if len(rq):
-                oq, ov, od, orank = _topk_merge_vals(rq, rv, rd, k)
-                last = orank == np.minimum(counts[oq] - 1, k - 1)
-                kth[oq[last]] = np.where(counts[oq[last]] >= k, od[last], np.inf)
-            certified = np.sqrt(kth[active]) <= r * guard
-            active = active[~certified]
-            if r >= max_ring and len(active):
-                break
-        if r >= max_possible_ring:
+        if r >= n_grid:  # every cell searched: each top-k is complete
             active = active[:0]
             break
+        kth = np.full(nq, np.inf)  # inf while a query has < k keys
+        last = best_r == k - 1
+        kth[best_q[last]] = best_d[last]
+        active = active[~(np.sqrt(kth[active]) <= r * guard)]
 
-    out_q = np.empty(0, np.int64)
-    out_v = np.empty(0, np.int64)
-    out_d = np.empty(0, np.float64)
-    out_r = np.empty(0, np.int64)
-    if acc_q:
-        rq, rv, rd = _reduce_min_per_key(
-            np.concatenate(acc_q), np.concatenate(acc_v), np.concatenate(acc_d)
+    done = np.ones(nq, dtype=bool)
+    done[active] = False
+    sel = done[best_q]
+    out = [(best_q[sel], best_v[sel], best_d[sel], best_r[sel])]
+    chunk = max(1, int(2e7 / max(len(idx.x1), 1)))
+    for s in range(0, len(active), chunk):
+        a = active[s : s + chunk]
+        d2 = _point_seg_dist2(
+            qx[a][:, None], qy[a][:, None],
+            idx.x1[None, :], idx.y1[None, :], idx.x2[None, :], idx.y2[None, :],
         )
-        done_mask = np.ones(nq, dtype=bool)
-        done_mask[active] = False
-        sel = done_mask[rq]
-        out_q, out_v, out_d, out_r = _topk_merge_vals(rq[sel], rv[sel], rd[sel], k)
+        out.append(_topk_merge_vals(
+            *_reduce_min_per_key(np.repeat(a, d2.shape[1]), np.tile(idx.keys, len(a)), d2.ravel()),
+            k,
+        ))
+    return tuple(np.concatenate(c) for c in zip(*out))
 
-    if len(active):
-        nseg = max(len(idx.x1), 1)
-        chunk = max(1, int(2e7 / nseg))
-        for s in range(0, len(active), chunk):
-            a = active[s : s + chunk]
-            d2 = _point_seg_dist2(
-                qx[a][:, None], qy[a][:, None],
-                idx.x1[None, :], idx.y1[None, :], idx.x2[None, :], idx.y2[None, :],
+
+def _default_res(n_targets: int) -> int:
+    """Index resolution aiming for ~2 targets per cell: 4^res ≈
+    n_targets/2, clamped to [3, MAX_RES]."""
+    return int(np.clip(np.ceil(np.log2(max(n_targets, 2)) / 2) + 1, 3, cells.MAX_RES))
+
+
+def _map_points(bc, points_df, lon_col, lat_col, id_col, batch, ranked: bool) -> DataFrame:
+    """The broadcast shell of every map-only join here: keep the
+    geotagged (id, lon, lat) rows and run `batch(index, qx, qy)` ->
+    (query_idx, key, dist2[, rank]) over each Arrow batch against the
+    broadcast index `bc` — one pass, zero shuffle on the point side.
+    Output: (id_col, neighbor_key, dist2[, rank])."""
+    from gdal_vfr_spark.plans.skew import spread_small_input
+
+    fields = [
+        points_df.schema[id_col],
+        T.StructField("neighbor_key", T.LongType()),
+        T.StructField("dist2", T.DoubleType()),
+    ]
+    if ranked:
+        fields.append(T.StructField("rank", T.IntegerType()))
+    # round-6: the ring-walk kernel is the whole cost of these joins;
+    # spread a few-partition point scan so it runs on every core
+    # (no-op on production partition counts)
+    src = spread_small_input(
+        points_df.select(id_col, lon_col, lat_col).where(
+            F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
+        )
+    )
+
+    def _map(batches):
+        index: PackedSegmentIndex = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qi, keys, d2, *rank = batch(
+                index,
+                pdf[lon_col].to_numpy(dtype=np.float64),
+                pdf[lat_col].to_numpy(dtype=np.float64),
             )
-            qi = np.repeat(a, d2.shape[1])
-            kv = np.tile(idx.keys, len(a))
-            rq, rv, rd = _reduce_min_per_key(qi, kv, d2.ravel())
-            q2, v2, d2f, r2 = _topk_merge_vals(rq, rv, rd, k)
-            out_q = np.concatenate([out_q, q2])
-            out_v = np.concatenate([out_v, v2])
-            out_d = np.concatenate([out_d, d2f])
-            out_r = np.concatenate([out_r, r2])
+            out = {id_col: pdf[id_col].to_numpy()[qi], "neighbor_key": keys, "dist2": d2}
+            if ranked:
+                out["rank"] = rank[0].astype(np.int32)
+            yield pd.DataFrame(out)
 
-    return out_q, out_v, out_d, out_r
+    return src.mapInPandas(_map, schema=T.StructType(fields))
 
 
 class LineKNNJoiner:
@@ -547,22 +397,19 @@ class LineKNNJoiner:
         res: int | None = None,
         max_broadcast_rows: int = BROADCAST_TARGET_BUDGET,
     ):
-        spark = targets_df.sparkSession
         pruned = targets_df.select(target_key, geom_col).where(
             F.col(geom_col).isNotNull()
         )
-        _check_broadcast_budget(
+        halo._check_broadcast_budget(
             pruned,
             max_broadcast_rows,
             "gdal_vfr_spark.geo.knn.PartitionedLineRangeJoiner",
         )
-        rows = pruned.collect()
-        pairs = [(int(r[0]), bytes(r[1])) for r in rows]
-        if res is None:
-            nseg = max(len(pairs), 2)
-            res = int(np.clip(np.ceil(np.log2(nseg) / 2) + 1, 3, cells.MAX_RES))
-        self.index = PackedSegmentIndex.build(pairs, res)
-        self._bc = spark.sparkContext.broadcast(self.index)
+        pairs = [(int(r[0]), bytes(r[1])) for r in pruned.collect()]
+        self.index = PackedSegmentIndex.build(
+            pairs, _default_res(len(pairs)) if res is None else res
+        )
+        self._bc = targets_df.sparkSession.sparkContext.broadcast(self.index)
 
     def apply(
         self,
@@ -573,45 +420,8 @@ class LineKNNJoiner:
         id_col: str = "url",
         max_ring: int = 8,
     ) -> DataFrame:
-        bc = self._bc
-        id_field = points_df.schema[id_col]
-        out_schema = T.StructType(
-            [
-                id_field,
-                T.StructField("neighbor_key", T.LongType()),
-                T.StructField("dist2", T.DoubleType()),
-                T.StructField("rank", T.IntegerType()),
-            ]
-        )
-        from gdal_vfr_spark.plans.skew import spread_small_input
-
-        # round-6: the ring-walk kernel is the whole cost of this join;
-        # spread a few-partition point scan so it runs on every core
-        # (no-op on production partition counts)
-        src = spread_small_input(
-            points_df.select(id_col, lon_col, lat_col).where(
-                F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
-            )
-        )
-
-        def _map(batches):
-            index: PackedSegmentIndex = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qx = pdf[lon_col].to_numpy(dtype=np.float64)
-                qy = pdf[lat_col].to_numpy(dtype=np.float64)
-                qi, keys, d2, rank = knn_lines_batch(index, qx, qy, k, max_ring=max_ring)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy()[qi],
-                        "neighbor_key": keys,
-                        "dist2": d2,
-                        "rank": rank.astype(np.int32),
-                    }
-                )
-
-        return src.mapInPandas(_map, schema=out_schema)
+        batch = functools.partial(knn_lines_batch, k=k, max_ring=max_ring)
+        return _map_points(self._bc, points_df, lon_col, lat_col, id_col, batch, ranked=True)
 
     def apply_range(
         self,
@@ -625,40 +435,8 @@ class LineKNNJoiner:
         line key) pair within max_dist, with the min squared distance.
         Same map-only shape as kNN apply(): broadcast index, one Arrow
         pass, zero shuffle on the point side."""
-        bc = self._bc
-        id_field = points_df.schema[id_col]
-        out_schema = T.StructType(
-            [
-                id_field,
-                T.StructField("neighbor_key", T.LongType()),
-                T.StructField("dist2", T.DoubleType()),
-            ]
-        )
-        from gdal_vfr_spark.plans.skew import spread_small_input
-
-        src = spread_small_input(
-            points_df.select(id_col, lon_col, lat_col).where(
-                F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
-            )
-        )
-
-        def _map(batches):
-            index: PackedSegmentIndex = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qx = pdf[lon_col].to_numpy(dtype=np.float64)
-                qy = pdf[lat_col].to_numpy(dtype=np.float64)
-                qi, keys, d2 = range_lines_batch(index, qx, qy, max_dist)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy()[qi],
-                        "neighbor_key": keys,
-                        "dist2": d2,
-                    }
-                )
-
-        return src.mapInPandas(_map, schema=out_schema)
+        batch = functools.partial(range_lines_batch, max_dist=max_dist)
+        return _map_points(self._bc, points_df, lon_col, lat_col, id_col, batch, ranked=False)
 
 
 def range_join_lines(
@@ -716,64 +494,27 @@ def knn_join(
     max_ring: int = 8,
     max_broadcast_rows: int = BROADCAST_TARGET_BUDGET,
 ) -> DataFrame:
-    """For each point, its k nearest targets: (id_col, neighbor_key,
-    dist2, rank). Map-only over the point side; targets broadcast.
-    Targets beyond max_broadcast_rows raise — use
-    knn_join_points_large / PartitionedPointRangeJoiner for huge point
-    dimensions (countrywide AdresniMista scale)."""
-    spark = points_df.sparkSession
+    """For each point, its k nearest POINT targets: (id_col,
+    neighbor_key, dist2, rank). Each target is packed as the
+    zero-length segment (x, y, x, y) and served by the same kernel and
+    broadcast shell as LineKNNJoiner.apply. Targets beyond
+    max_broadcast_rows raise — use knn_join_points_large /
+    PartitionedPointRangeJoiner for huge point dimensions (countrywide
+    AdresniMista scale)."""
     pruned = targets_df.select(target_key, target_lon, target_lat).where(
         F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull()
     )
-    _check_broadcast_budget(
+    halo._check_broadcast_budget(
         pruned, max_broadcast_rows, "gdal_vfr_spark.geo.knn.knn_join_points_large"
     )
     rows = pruned.collect()
+    tk = np.asarray([r[0] for r in rows], dtype=np.int64)
     tx = np.asarray([r[1] for r in rows], dtype=np.float64)
     ty = np.asarray([r[2] for r in rows], dtype=np.float64)
-    tk = np.asarray([r[0] for r in rows], dtype=np.int64)
-    if res is None:
-        # aim for ~2 targets per cell: res s.t. 4^res ≈ n_targets/2
-        res = int(np.clip(np.ceil(np.log2(max(len(tk), 2)) / 2) + 1, 3, cells.MAX_RES))
-    idx = PackedPointIndex.build(tx, ty, tk, res)
-    bc = spark.sparkContext.broadcast(idx)
-
-    id_field = points_df.schema[id_col]
-    out_schema = T.StructType(
-        [
-            id_field,
-            T.StructField("neighbor_key", T.LongType()),
-            T.StructField("dist2", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-
-    from gdal_vfr_spark.plans.skew import spread_small_input
-
-    src = spread_small_input(
-        points_df.select(id_col, lon_col, lat_col).where(
-            F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
-        )
-    )
-
-    def _map(batches):
-        index: PackedPointIndex = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qx = pdf[lon_col].to_numpy(dtype=np.float64)
-            qy = pdf[lat_col].to_numpy(dtype=np.float64)
-            qi, keys, d2, rank = knn_batch(index, qx, qy, k, max_ring=max_ring)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[qi],
-                    "neighbor_key": keys,
-                    "dist2": d2,
-                    "rank": rank.astype(np.int32),
-                }
-            )
-
-    return src.mapInPandas(_map, schema=out_schema)
+    idx = PackedSegmentIndex(tx, ty, tx, ty, tk, _default_res(len(tk)) if res is None else res)
+    bc = points_df.sparkSession.sparkContext.broadcast(idx)
+    batch = functools.partial(knn_lines_batch, k=k, max_ring=max_ring)
+    return _map_points(bc, points_df, lon_col, lat_col, id_col, batch, ranked=True)
 
 
 class _PartitionedRangeJoiner:
@@ -793,14 +534,15 @@ class _PartitionedRangeJoiner:
        no target (most of the planet, for a street layer).
     3. surviving points shuffle ONCE, keyed by the bucket of their gres
        cell (halo.refine_by_bucket), into one kernel call per bucket
-       that runs the subclass's blocked `_band` on each group's slice.
+       that runs the blocked _band_lines on each group's slice, reading
+       the segment endpoints from the subclass's `_coords` columns (a
+       point target's endpoints are (x, y, x, y)).
 
     gres defaults to halo.default_gres(max_dist) (cell side >=
     16*max_dist); pass gres to tune. A hot group is one slice of one
     bucket's kernel call."""
 
-    _coords: tuple[str, ...] = ()  # group-table coordinate columns
-    _band = None  # (qx, qy, *coords, keys, maxd2) -> (query_idx, key, d2)
+    _coords: tuple[str, ...] = ()  # group-table x1, y1, x2, y2 columns
 
     def __init__(self, max_dist: float, gres: int | None):
         self.max_dist = float(max_dist)
@@ -821,7 +563,7 @@ class _PartitionedRangeJoiner:
     ) -> DataFrame:
         halo.ensure_persisted(self._groups_sdf)
         maxd2 = self.max_dist * self.max_dist
-        band, coords = self._band, self._coords
+        coords = self._coords
         out_schema = T.StructType(
             [
                 points_df.schema[id_col],
@@ -829,12 +571,12 @@ class _PartitionedRangeJoiner:
                 T.StructField("dist2", T.DoubleType()),
             ]
         )
-        src = (
-            points_df.select(id_col, lon_col, lat_col)
-            .where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
-            .withColumn("__grp", cells.cell_expr(F.col(lon_col), F.col(lat_col), self.gres))
-            .join(F.broadcast(self._present), "__grp", "leftsemi")
-        )
+        src = cells.with_cell(
+            points_df.select(id_col, lon_col, lat_col).where(
+                F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull()
+            ),
+            self.gres, lon_col, lat_col, "__grp",
+        ).join(F.broadcast(self._present), "__grp", "leftsemi")
 
         def _refine(pts: pd.DataFrame, tgt: pd.DataFrame) -> pd.DataFrame:
             qx = pts[lon_col].to_numpy(dtype=np.float64)
@@ -847,7 +589,7 @@ class _PartitionedRangeJoiner:
             for qi, ti in halo.group_slices(
                 pts["__grp"].to_numpy(dtype=np.int64), tgt["__grp"].to_numpy(dtype=np.int64)
             ):
-                rq, rk, rd = band(qx[qi], qy[qi], *(c[ti] for c in tc), keys[ti], maxd2)
+                rq, rk, rd = _band_lines(qx[qi], qy[qi], *(c[ti] for c in tc), keys[ti], maxd2)
                 out_i.append(qi[rq])
                 out_k.append(rk)
                 out_d.append(rd)
@@ -876,7 +618,6 @@ class PartitionedLineRangeJoiner(_PartitionedRangeJoiner):
     _PartitionedRangeJoiner for the shared skeleton."""
 
     _coords = ("x1", "y1", "x2", "y2")
-    _band = staticmethod(_band_lines)
 
     def __init__(
         self,
@@ -917,16 +658,16 @@ class PartitionedPointRangeJoiner(_PartitionedRangeJoiner):
     AdresniMista scale: ~3M definition points, gfs/AdresniMista.gfs:
     8-24 x 6,258 OB files in test_suite/db_uksh.txt — past the
     broadcast budget of knn_join), the point twin of
-    PartitionedLineRangeJoiner: a target point is a zero-length segment
-    for registration, and the refine computes exact squared-euclidean
-    distances (_band_points, blocked numpy) within the band. See
+    PartitionedLineRangeJoiner: a target point is the zero-length
+    segment (x, y, x, y) for registration and for the refine, whose
+    _band_lines distance is then the exact squared-euclidean one. The
+    group table keeps one (x, y) pair per row. See
     _PartitionedRangeJoiner for the shared skeleton.
 
     Bounded-radius kNN on top = apply() + a rank window (see
     knn_join_points_large) — the same recipe the street layer uses."""
 
-    _coords = ("x", "y")
-    _band = staticmethod(_band_points)
+    _coords = ("x", "y", "x", "y")
 
     def __init__(
         self,

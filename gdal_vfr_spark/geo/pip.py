@@ -323,14 +323,12 @@ def build_index(
     cover is built distributedly and whose geometry never leaves the
     executors."""
     pruned = polys_df.select(key_col, geom_col).where(F.col(geom_col).isNotNull())
-    n = pruned.count()
-    if n > max_broadcast_rows:
-        raise ValueError(
-            f"polygon layer has {n} rows — beyond the {max_broadcast_rows}-row "
-            "driver-collect budget for PIPJoiner/build_index; use "
-            "gdal_vfr_spark.geo.pip.PartitionedPIPJoiner (distributed cover; "
-            "broadcast_cover=False past ~budget/4 polygons)"
-        )
+    halo._check_broadcast_budget(
+        pruned,
+        max_broadcast_rows,
+        "gdal_vfr_spark.geo.pip.PartitionedPIPJoiner (distributed cover; "
+        "broadcast_cover=False past ~budget/4 polygons)",
+    )
     rows = pruned.collect()
     return PackedPolygonIndex.build([(int(r[0]), bytes(r[1])) for r in rows])
 

@@ -24,11 +24,6 @@ from gdal_vfr_spark.geo import cells
 DEFAULT_TILE_RES = 15
 
 
-def tile_key_expr(lon="lon", lat="lat", res: int = DEFAULT_TILE_RES):
-    """Pure-Catalyst tile key (stays in whole-stage codegen)."""
-    return cells.cell_expr(lon, lat, res)
-
-
 def with_tile_key(
     df: DataFrame,
     res: int = DEFAULT_TILE_RES,

@@ -114,10 +114,11 @@ def word_shingle_hash_rows(
     per element), which measured 2x slower than the whole char-shingle
     path despite 6x fewer units. Tokenization is the tokens_expr
     contract: lower, split on [^a-z0-9]+, drop empties; docs shorter
-    than n tokens contribute their full sequence; empty dropped. The
-    DuckDB twin is `_duck_word_shingles` in __spark_entry__.py (the
-    dedup_decontaminate oracle); tests/test_dedup_text.py compares the
-    hashes with it on crafted docs at n = 3 and 13."""
+    than n tokens contribute their full sequence; empty and null texts
+    contribute nothing. The DuckDB twin is `_duck_word_shingles` in
+    __spark_entry__.py (the dedup_decontaminate oracle);
+    tests/test_dedup_text.py compares the hashes with it on crafted docs
+    at n = 3 and 13."""
     cols = ([id_col] if id_col else []) + [text_col]
     src = df.select(*cols)
     # a corpus at scale arrives in thousands of parquet splits; a
@@ -146,7 +147,10 @@ def word_shingle_hash_rows(
             texts = pdf[text_col]
             ids = pdf[id_col] if id_col else None
             for j in range(len(pdf)):
-                toks = [t for t in tok_re.split(str(texts.iloc[j]).lower()) if t]
+                text = texts.iloc[j]
+                if text is None:  # null text: no shingle, as in the DuckDB twin
+                    continue
+                toks = [t for t in tok_re.split(str(text).lower()) if t]
                 if len(toks) <= n:
                     grams = {" ".join(toks)} if toks else set()
                 else:

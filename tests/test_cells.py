@@ -95,10 +95,9 @@ def test_mixed_res_udf(spark):
 
 
 def test_cell_expr_matches_numpy(spark):
-    """Catalyst expression and numpy/pandas-UDF encode must agree
-    bit-for-bit (the expression is the 10^12-row hot path)."""
+    """The Catalyst encoder (with_cell) and the numpy encode must agree
+    bit-for-bit (with_cell is the 10^12-row hot path)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     rng = np.random.default_rng(5)
     lon = rng.uniform(-180, 180, 2000)
@@ -107,11 +106,31 @@ def test_cell_expr_matches_numpy(spark):
     pdf.loc[:10, "lon"] = None
     df = spark.createDataFrame(pdf)
     for res in (0, 7, 15, cells.MAX_RES):
-        got = (
-            df.select(cells.cell_expr("lon", "lat", res).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
+        got = cells.with_cell(df, res).toPandas()["cell"].to_numpy()
         lon2 = pdf["lon"].to_numpy(dtype=np.float64)
         want = cells.cell_encode(lon2, lat, res)
         assert np.array_equal(got, want), res
+
+
+def test_gen_webpages_sql_compiles_without_codegen_fallback(spark):
+    """The bench-scale page generator (truth_tile_key via with_cell)
+    must compile inside whole-stage codegen: with the interpreted
+    fallback switched off, a method past the JVM's 64 KB limit raises
+    instead of silently running interpreted. Its tile key must equal
+    the numpy encode."""
+    from gdal_vfr_spark import datagen
+
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        pdf = datagen.gen_webpages_sql(spark, 1000).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    want = cells.cell_encode(
+        pdf["lon"].to_numpy(dtype=np.float64),
+        pdf["lat"].to_numpy(dtype=np.float64),
+        datagen.TILE_RES,
+    )
+    assert np.array_equal(pdf["truth_tile_key"].to_numpy(), want)
+    assert (want == -1).sum() == 50  # every 20th geotag is null

@@ -563,9 +563,9 @@ def test_temperature_quota_sample_semantics(spark):
 
 def test_word_shingles_expr_reference(spark):
     """Word 13-gram shingles match a plain-Python reference, including
-    the short-doc (full-sequence) and empty-text edges: the shingle
-    strings of the DuckDB twin expression (_duck_word_shingles), and
-    the md5-half hashes word_shingle_hash_rows emits for them."""
+    the short-doc (full-sequence), empty-text and null-text edges: the
+    shingle strings of the DuckDB twin expression (_duck_word_shingles),
+    and the md5-half hashes word_shingle_hash_rows emits for them."""
     import hashlib
     import re as _re
 
@@ -576,9 +576,12 @@ def test_word_shingles_expr_reference(spark):
         "short doc",
         "",
         "  punctuation, splits; tokens!  and    spaces  ",
+        None,
     ]
 
     def ref(t, n=13):
+        if t is None:
+            return []
         toks = [x for x in _re.split(r"[^a-z0-9]+", t.lower()) if x]
         if len(toks) <= n:
             grams = [" ".join(toks)]
@@ -599,7 +602,11 @@ def test_word_shingles_expr_reference(spark):
     )
     # DuckDB's list_distinct does not keep first-seen order, so the
     # shingle lists compare as sorted lists (duplicates would still show)
-    got = {int(d): sorted(sh) for d, sh in zip(duck["doc_id"], duck["sh"])}
+    # (a null text gives a NULL list in DuckDB)
+    got = {
+        int(d): sorted(sh) if sh is not None else []
+        for d, sh in zip(duck["doc_id"], duck["sh"])
+    }
     for i, t in enumerate(texts):
         assert got[i] == sorted(ref(t))
     hashed = sorted(
@@ -671,7 +678,8 @@ def test_word_shingle_rows_udf_expr_parity(spark, docs):
     """word_shingle_hash_rows emits exactly the (doc_id, shingle-hash)
     rows of its DuckDB twin expression (_duck_word_shingles, hashed as
     substr(md5(s), 1, 16)): the docs rows plus the short-doc
-    (full-sequence), empty-text and punctuation-split edges."""
+    (full-sequence), empty-text, null-text and punctuation-split
+    edges."""
     from gdal_vfr_spark.operators.dedup import word_shingle_hash_rows
 
     edges = spark.createDataFrame(
@@ -680,6 +688,7 @@ def test_word_shingle_rows_udf_expr_parity(spark, docs):
             (102, "short doc"),
             (103, ""),
             (104, "  punctuation, splits; tokens!  and    spaces  "),
+            (105, None),
         ],
         "doc_id long, text string",
     )

@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 
 from gdal_vfr_spark import datagen
-from gdal_vfr_spark.geo.knn import PackedPointIndex, knn_batch, knn_join
+from gdal_vfr_spark.geo.knn import PackedSegmentIndex, knn_join, knn_lines_batch
 
 
 def brute_knn(qx, qy, tx, ty, tk, k):
@@ -22,8 +22,9 @@ def test_knn_batch_exact_vs_brute():
     tk = rng.permutation(300).astype(np.int64)
     qx = rng.uniform(14, 15, 500)
     qy = rng.uniform(49.5, 50.5, 500)
-    idx = PackedPointIndex.build(tx, ty, tk, res=12)
-    qi, keys, d2, rank = knn_batch(idx, qx, qy, k=3)
+    # point targets are zero-length segments of the one target index
+    idx = PackedSegmentIndex(tx, ty, tx, ty, tk, res=12)
+    qi, keys, d2, rank = knn_lines_batch(idx, qx, qy, k=3)
     want = brute_knn(qx, qy, tx, ty, tk, 3)
     got: dict[int, list] = {}
     for a, b, c, r in zip(qi, keys, d2, rank):
@@ -36,9 +37,35 @@ def test_knn_batch_exact_vs_brute():
 
 def test_knn_batch_few_targets():
     # fewer targets than k: returns all of them
-    idx = PackedPointIndex.build([14.1, 14.9], [50.0, 50.1], [7, 3], res=10)
-    qi, keys, d2, rank = knn_batch(idx, np.asarray([14.5]), np.asarray([50.0]), k=5)
+    tx, ty = np.asarray([14.1, 14.9]), np.asarray([50.0, 50.1])
+    idx = PackedSegmentIndex(tx, ty, tx, ty, np.asarray([7, 3]), res=10)
+    qi, keys, d2, rank = knn_lines_batch(idx, np.asarray([14.5]), np.asarray([50.0]), k=5)
     assert sorted(keys.tolist()) == [3, 7]
+
+
+def test_knn_brute_force_ties_follow_key():
+    """max_ring=0 sends every query to the brute-force pass. On a dyadic
+    grid (exact float distances) several targets tie at rank k; the
+    ranks must follow the key, as in brute_knn, not the order in which
+    a partial sort happens to leave the tied targets."""
+    rng = np.random.default_rng(9)
+    g = np.arange(9, dtype=np.float64) * 0.125
+    tx = np.repeat(14.0 + g, 9)
+    ty = np.tile(49.5 + g, 9)
+    tk = rng.permutation(len(tx)).astype(np.int64)
+    # queries on cell centers and on grid edges: 4 or 2 equidistant
+    # nearest targets each
+    qx = np.concatenate([14.0625 + g[:8], 14.0625 + g[:8]])
+    qy = np.concatenate([49.5625 + g[:8], 49.5 + g[1:]])
+    idx = PackedSegmentIndex(tx, ty, tx, ty, tk, res=10)
+    want = brute_knn(qx, qy, tx, ty, tk, 3)
+    for max_ring in (0, 8):
+        qi, keys, d2, rank = knn_lines_batch(idx, qx, qy, k=3, max_ring=max_ring)
+        got: dict[int, list] = {}
+        for a, b, c, r in zip(qi, keys, d2, rank):
+            got.setdefault(int(a), []).append((int(r), int(b), float(c)))
+        for i in range(len(qx)):
+            assert [(kk, dd) for _, kk, dd in sorted(got[i])] == want[i], (max_ring, i)
 
 
 def test_knn_join_spark(spark):
@@ -199,7 +226,7 @@ def test_point_seg_dist2_properties():
     never exceeds either endpoint distance, symmetric under endpoint
     swap, ~0 for points ON the segment, and degenerate segments reduce
     to point distance."""
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     from gdal_vfr_spark.geo.knn import _point_seg_dist2
 
@@ -234,7 +261,27 @@ def test_point_seg_dist2_properties():
         # multiplies, per the repo's no-libm exactness rule
         assert d_deg == (qx - x1) * (qx - x1) + (qy - y1) * (qy - y1)
 
+    # a point target is the zero-length segment (x, y, x, y): its
+    # distance is the point kernel's dx*dx + dy*dy (dx = x - qx) bit
+    # for bit, signed zeros and mixed magnitudes included
+    full = st.floats(allow_nan=False, allow_infinity=False, width=64)
+
+    @given(full, full, full, full)
+    @example(0.0, -0.0, -0.0, 0.0)
+    @example(-0.0, -0.0, 0.0, -0.0)
+    @example(5e-324, -1e-310, 14.123456789, 1e150)
+    @example(-179.99999999999997, 89.99999999999999, 1e-300, -2.5e-8)
+    @settings(max_examples=300, deadline=None)
+    def run_zero_length(qx, qy, x, y):
+        qx, qy, x, y = map(np.float64, (qx, qy, x, y))
+        with np.errstate(over="ignore", invalid="ignore"):
+            d = _point_seg_dist2(qx, qy, x, y, x, y)
+            dx, dy = x - qx, y - qy
+            want = dx * dx + dy * dy
+        assert np.float64(d).tobytes() == want.tobytes()
+
     run()
+    run_zero_length()
 
 
 def test_range_lines_batch_vs_brute():
