@@ -31,8 +31,17 @@ if _REPO not in sys.path:
 
 from gdal_vfr_spark import datagen  # noqa: E402
 from gdal_vfr_spark.geo import cells  # noqa: E402
-from gdal_vfr_spark.geo.knn import knn_join  # noqa: E402
-from gdal_vfr_spark.geo.pip import point_in_polygon_join  # noqa: E402
+from gdal_vfr_spark.geo.knn import (  # noqa: E402
+    LineKNNJoiner,
+    PartitionedLineRangeJoiner,
+    PartitionedPointRangeJoiner,
+    knn_join,
+)
+from gdal_vfr_spark.geo.pip import (  # noqa: E402
+    PartitionedPIPJoiner,
+    PIPJoiner,
+    point_in_polygon_join,
+)
 from gdal_vfr_spark.functions import html_text  # noqa: E402
 from gdal_vfr_spark.operators import dedup, similarity, text as text_ops  # noqa: E402
 from gdal_vfr_spark.session import package_zip  # noqa: E402
@@ -1046,63 +1055,38 @@ def q_w_tumbling_hour(spark, sf_dir):
 _JOINER_CACHE: dict = {}
 
 
-def _obce_joiner(spark):
-    key = (spark.sparkContext.applicationId, "obce")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.pip import PIPJoiner
+def _joiner(spark, name: str, build: Callable[[], object]):
+    """The prepared joiner `name` of this SparkSession, built once."""
+    key = (spark.sparkContext.applicationId, name)
+    if key not in _JOINER_CACHE:
+        _JOINER_CACHE[key] = build()
+    return _JOINER_CACHE[key]
 
-        j = PIPJoiner(
-            datagen.gen_obce(spark),
-            poly_key="kod",
-            geom_col="originalni_hranice",
-            out_key="obec_kod",
-        )
-        _JOINER_CACHE[key] = j
-    return j
+
+def _obce_joiner(spark):
+    return _joiner(spark, "obce", lambda: PIPJoiner(
+        datagen.gen_obce(spark), poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod",
+    ))
 
 
 def _ku_joiner(spark):
-    key = (spark.sparkContext.applicationId, "ku")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.pip import PIPJoiner
-
-        j = PIPJoiner(
-            datagen.gen_katastralni_uzemi(spark),
-            poly_key="kod",
-            geom_col="originalni_hranice",
-            out_key="ku_kod",
-        )
-        _JOINER_CACHE[key] = j
-    return j
+    return _joiner(spark, "ku", lambda: PIPJoiner(
+        datagen.gen_katastralni_uzemi(spark),
+        poly_key="kod", geom_col="originalni_hranice", out_key="ku_kod",
+    ))
 
 
 def _parcely_large_joiner(spark):
-    key = (spark.sparkContext.applicationId, "parcely_large")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
-
-        j = PartitionedPIPJoiner(
-            datagen.gen_parcely_large(spark, n_side=350),
-            poly_key="kod",
-            geom_col="originalni_hranice",
-            out_key="parcel_kod",
-        )
-        _JOINER_CACHE[key] = j
-    return j
+    return _joiner(spark, "parcely_large", lambda: PartitionedPIPJoiner(
+        datagen.gen_parcely_large(spark, n_side=350),
+        poly_key="kod", geom_col="originalni_hranice", out_key="parcel_kod",
+    ))
 
 
 def _ulice_joiner(spark):
-    key = (spark.sparkContext.applicationId, "ulice")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.knn import LineKNNJoiner
-
-        j = LineKNNJoiner(datagen.gen_ulice(spark), target_key="kod")
-        _JOINER_CACHE[key] = j
-    return j
+    return _joiner(
+        spark, "ulice", lambda: LineKNNJoiner(datagen.gen_ulice(spark), target_key="kod")
+    )
 
 
 def q_geo_pip_counts(spark, sf_dir):
@@ -3436,18 +3420,9 @@ def q_stream_sessionize(spark, sf_dir):
 
 
 def _ulice_large_joiner(spark):
-    key = (spark.sparkContext.applicationId, "ulice_large")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner
-
-        j = PartitionedLineRangeJoiner(
-            datagen.gen_ulice_large(spark, n_side=350),
-            target_key="kod",
-            max_dist=0.004,
-        )
-        _JOINER_CACHE[key] = j
-    return j
+    return _joiner(spark, "ulice_large", lambda: PartitionedLineRangeJoiner(
+        datagen.gen_ulice_large(spark, n_side=350), target_key="kod", max_dist=0.004,
+    ))
 
 
 def q_geo_range_join_large(spark, sf_dir, sort_barrier: bool = True):
@@ -3496,18 +3471,9 @@ def q_geo_knn_lines_large(spark, sf_dir):
 
 
 def _am_large_joiner(spark):
-    key = (spark.sparkContext.applicationId, "am_large")
-    j = _JOINER_CACHE.get(key)
-    if j is None:
-        from gdal_vfr_spark.geo.knn import PartitionedPointRangeJoiner
-
-        j = PartitionedPointRangeJoiner(
-            datagen.gen_adresni_mista_large(spark, n_side=350),
-            target_key="kod",
-            max_dist=0.004,
-        )
-        _JOINER_CACHE[key] = j
-    return j
+    return _joiner(spark, "am_large", lambda: PartitionedPointRangeJoiner(
+        datagen.gen_adresni_mista_large(spark, n_side=350), target_key="kod", max_dist=0.004,
+    ))
 
 
 def q_geo_knn_points_large(spark, sf_dir):

@@ -3,6 +3,7 @@
 Two parts:
 1. Headline per-query timings at $SPARK_GRAFT_SF_DIR (default
    /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+   SPARK_GRAFT_CPUS defaults to every core of the host (session.local_cores).
 2. The authoritative north-star metric (BASELINE.json): spatial-join +
    tile-assignment throughput (pages/sec) on the synthetic webtext
    table joined to the RUIAN-style obce polygons, run at TWO
@@ -352,17 +353,12 @@ def main() -> None:
     _wait_for_idle()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     skip_spatial = os.environ.get("SPARK_GRAFT_SKIP_SPATIAL") == "1"
 
     import __spark_entry__ as entrymod
     from gdal_vfr_spark import get_spark
 
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:

@@ -41,12 +41,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from gdal_vfr_spark import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "bench_extra",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark("bench_extra", extra_conf={"spark.ui.showConsoleProgress": "false"})
     qs = entrymod.queries()
     timings: dict[str, float] = {}
     for name in args.queries:

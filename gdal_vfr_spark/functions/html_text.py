@@ -22,28 +22,21 @@ Extraction pipeline (order matters and is part of the contract):
    semantics, not recursive);
 5. collapse runs of ``[ \\t\\n\\r]`` to one space and trim.
 
-Two implementations, byte-identical by test:
+One implementation, :func:`extract_text_expr`: a pure Catalyst
+expression chain (JVM regex, whole-stage codegen; zero Python
+boundary), the 10^12-row hot path. Its second opinion is the DuckDB
+oracle's ``_duck_extract_expr`` (``__spark_entry__``), byte-identical by
+test (tests/test_html_extract.py).
 
-- :func:`extract_text_expr` — pure Catalyst expression chain (JVM
-  regex, whole-stage codegen; zero Python boundary). The 10^12-row
-  hot path.
-- :func:`extract_text_arrow` — ``mapInPandas`` over Arrow batches
-  (vectorized pandas ``.str`` ops, no per-row Python), for pipelines
-  that already sit on the Arrow side (e.g. fused with multimodal
-  decode stubs, operators/multimodal.py).
-
-The regex subset used is valid and equivalent in Java (Spark), RE2
-(DuckDB oracle) and Python (Arrow path): inline ``(?s)``, non-greedy
-``.*?``, explicit whitespace classes (NOT ``\\s`` — Java's ``\\s``
-includes ``\\x0b``, RE2's does not).
+The regex subset used is valid and equivalent in Java (Spark) and RE2
+(DuckDB oracle): inline ``(?s)``, non-greedy ``.*?``, explicit
+whitespace classes (NOT ``\\s`` — Java's ``\\s`` includes ``\\x0b``,
+RE2's does not).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 # (?s) so script/style bodies may span newlines; [^<]* after the tag
 # name guard keeps `<scriptx>` from matching.
@@ -81,42 +74,3 @@ def escape_text_expr(text) -> F.Column:
                     ("&quot;", '"'), ("&#39;", "'")):
         c = F.replace(c, F.lit(ch), F.lit(ent))
     return c
-
-
-def _extract_pdf(s: pd.Series) -> pd.Series:
-    """Vectorized pandas extraction — same pipeline, same bytes."""
-    s = s.str.replace(BLOCK_RE, " ", regex=True)
-    s = s.str.replace(TAG_RE, " ", regex=True)
-    for ent, ch in ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return s.str.replace(WS_RE, " ", regex=True).str.strip()
-
-
-def extract_text_arrow(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text_extracted",
-    binary: bool = True,
-) -> DataFrame:
-    """Arrow-batched extraction via mapInPandas (keeps every other
-    column; schema = input + out_col:string). Byte-identical to
-    extract_text_expr by test (tests/test_html_extract.py)."""
-    # fresh StructType: df.schema is cached on the DataFrame and
-    # StructType.add mutates in place
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    cols = [f.name for f in df.schema.fields if f.name != out_col]
-    out_schema = StructType(
-        [f for f in df.schema.fields if f.name != out_col]
-        + [StructField(out_col, StringType())]
-    )
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raw = pdf[html_col]
-            s = raw.str.decode("utf-8") if binary else raw
-            pdf = pdf[cols].copy()
-            pdf[out_col] = _extract_pdf(s.astype("object"))
-            yield pdf
-
-    return df.mapInPandas(_map, schema=out_schema)

@@ -158,20 +158,25 @@ def cover_bbox(
     )[1]
 
 
-def cover_bboxes(lon_min, lat_min, lon_max, lat_max, res: int):
-    """Vectorized cover of many bboxes: (row, cell) arrays listing every
-    cell at resolution res that bbox `row` touches (edges inclusive).
-    Each row's cells come out in row-major (iy outer, ix inner) order,
-    the order cover_bbox's meshgrid produced; one repeat/cumsum pass,
-    no per-row Python."""
-    ix0, iy0 = lonlat_to_grid(lon_min, lat_min, res)
-    ix1, iy1 = lonlat_to_grid(lon_max, lat_max, res)
+def grid_ranges(ix0, iy0, ix1, iy1):
+    """(row, gx, gy) arrays listing every grid cell of the inclusive
+    index ranges ix0..ix1 x iy0..iy1, row by row, each row's cells in
+    row-major (iy outer, ix inner) order; one repeat/cumsum pass, no
+    per-row Python."""
     nx = ix1 - ix0 + 1
     cnt = nx * (iy1 - iy0 + 1)
     row = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
     k = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    gx = ix0[row] + k % nx[row]
-    gy = iy0[row] + k // nx[row]
+    return row, ix0[row] + k % nx[row], iy0[row] + k // nx[row]
+
+
+def cover_bboxes(lon_min, lat_min, lon_max, lat_max, res: int):
+    """Vectorized cover of many bboxes: (row, cell) arrays listing every
+    cell at resolution res that bbox `row` touches (edges inclusive),
+    in grid_ranges order (the order cover_bbox's meshgrid produced)."""
+    ix0, iy0 = lonlat_to_grid(lon_min, lat_min, res)
+    ix1, iy1 = lonlat_to_grid(lon_max, lat_max, res)
+    row, gx, gy = grid_ranges(ix0, iy0, ix1, iy1)
     return row, (morton_encode(gx, gy) << np.int64(_RES_BITS)) | np.int64(res)
 
 

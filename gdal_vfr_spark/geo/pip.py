@@ -23,14 +23,26 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, StructType
+from pyspark.storagelevel import StorageLevel
 
 from gdal_vfr_spark.geo import cells, halo, wkb
+
+# Cover-resolution policy (PackedPolygonIndex.auto_res, pick_cover_res):
+# ~16x16 cells per median polygon bbox, within a cover row budget — one
+# for the driver-built broadcast cover, one for the distributed one.
+_CELLS_PER_POLY = 256.0
+_COVER_ROWS = 200_000.0
+_PARTITIONED_COVER_ROWS = 250_000.0
+# a PartitionedPIPJoiner group cell is 2^_GROUP_BITS cover cells a side
+_GROUP_BITS = 4
+_RID = "__pip_rid"  # row id a left join re-joins its hits on
 
 
 @dataclass
@@ -52,30 +64,21 @@ class PackedPolygonIndex:
     keys: np.ndarray
 
     @classmethod
-    def build(cls, keys_and_wkb: list[tuple[int, bytes]]) -> "PackedPolygonIndex":
-        verts_list: list[np.ndarray] = []
-        ring_off = [0]
-        poly_ring = [0]
-        bboxes = []
-        keys = []
-        total = 0
+    def build(cls, keys_and_wkb: Iterable[tuple[int, bytes]]) -> "PackedPolygonIndex":
+        """Decode and pack (key, WKB) polygon rows — the one WKB decode
+        of every polygon path here."""
+        keys, polys = [], []
         for key, buf in keys_and_wkb:
-            rings = wkb.decode_rings(bytes(buf))
-            for r in rings:
-                verts_list.append(r)
-                total += len(r)
-                ring_off.append(total)
-            poly_ring.append(len(ring_off) - 1)
-            allv = np.concatenate(rings)
-            bboxes.append(
-                (allv[:, 0].min(), allv[:, 1].min(), allv[:, 0].max(), allv[:, 1].max())
-            )
             keys.append(key)
+            polys.append(wkb.decode_rings(bytes(buf)))
+        rings = [r for rs in polys for r in rs]
+        allv = [np.concatenate(rs) for rs in polys]
+        bbox = [(*v.min(axis=0), *v.max(axis=0)) for v in allv]
         return cls(
-            verts=np.concatenate(verts_list) if verts_list else np.empty((0, 2)),
-            ring_off=np.asarray(ring_off, dtype=np.int64),
-            poly_ring=np.asarray(poly_ring, dtype=np.int64),
-            bbox=np.asarray(bboxes, dtype=np.float64).reshape(-1, 4),
+            verts=np.concatenate(rings) if rings else np.empty((0, 2)),
+            ring_off=np.cumsum([0] + [len(r) for r in rings], dtype=np.int64),
+            poly_ring=np.cumsum([0] + [len(rs) for rs in polys], dtype=np.int64),
+            bbox=np.asarray(bbox, dtype=np.float64).reshape(-1, 4),
             keys=np.asarray(keys, dtype=np.int64),
         )
 
@@ -130,112 +133,96 @@ class PackedPolygonIndex:
             out[grp] = self.contains_one(p, px[grp], py[grp])
         return out
 
-    def _edges(self, p: int) -> np.ndarray:
-        """(E, 4) per-edge endpoints (x1, y1, x2, y2) over all rings of
-        polygon p — used once at cover-build time."""
-        out = []
-        for r in range(self.poly_ring[p], self.poly_ring[p + 1]):
-            ring = self.verts[self.ring_off[r] : self.ring_off[r + 1]]
-            out.append(
-                np.stack([ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]], axis=1)
-            )
-        return np.concatenate(out) if out else np.empty((0, 4))
-
     def cover(self, res: int) -> pd.DataFrame:
-        """(cell, pidx, key, interior) cover table at resolution res:
-        every cell whose bbox intersects the polygon's bbox.
+        """(cell, pidx, poly_key, interior) cover table at resolution
+        res: every cell whose bbox intersects the polygon's bbox, per
+        polygon in cells.cover_bboxes order.
 
         `interior` certifies cells whose closed rectangle no polygon
         edge touches AND whose center the even-odd test puts inside:
         containment is then CONSTANT over the cell (parity can only
         change across an edge), so candidate points in interior cells
         are hits with no refinement — they never cross the Python
-        boundary. The test is conservative (edge-bbox overlap against
-        an epsilon-inflated rect), so a misclassification can only
-        send extra rows to the refine step, never skip it. Boundary
-        cells keep the exact winding refine."""
+        boundary. The test is conservative (exact SAT segment-vs-rect
+        against an epsilon-inflated rect), so a misclassification can
+        only send extra rows to the refine step, never skip it. Boundary
+        cells keep the exact winding refine.
+
+        One vectorised pass, ~edges + cells work instead of cells x
+        edges per polygon: each ring edge is paired only with the cells
+        of its own bbox grown by one cell (a superset of those whose
+        inflated rect it can touch), clipped to its polygon's range, and
+        each touching pair maps back to its cover row arithmetically."""
         n = 1 << res
         dx, dy = 360.0 / n, 180.0 / n
         eps_x, eps_y = dx * 1e-9, dy * 1e-9
-        cells_out, pidx_out, key_out, int_out = [], [], [], []
-        for p in range(len(self.keys)):
-            lon_min, lat_min, lon_max, lat_max = self.bbox[p]
-            ix0, iy0 = cells.lonlat_to_grid(
-                np.asarray([lon_min]), np.asarray([lat_min]), res
+        ix0, iy0 = cells.lonlat_to_grid(self.bbox[:, 0], self.bbox[:, 1], res)
+        ix1, iy1 = cells.lonlat_to_grid(self.bbox[:, 2], self.bbox[:, 3], res)
+        pidx, gx, gy = cells.grid_ranges(ix0, iy0, ix1, iy1)
+        nx = ix1 - ix0 + 1
+        cnt = nx * (iy1 - iy0 + 1)
+        start = np.cumsum(cnt) - cnt
+        # ring edges (v, v+1): every vertex but a ring's last starts one
+        e = np.setdiff1d(np.arange(len(self.verts) - 1), self.ring_off[1:] - 1)
+        n_verts = np.diff(self.ring_off[self.poly_ring])
+        ep = np.repeat(np.arange(len(self.keys), dtype=np.int64), n_verts)[e]
+        (x1, y1), (x2, y2) = self.verts[e].T, self.verts[e + 1].T
+        exmin, exmax = np.minimum(x1, x2), np.maximum(x1, x2)
+        eymin, eymax = np.minimum(y1, y2), np.maximum(y1, y2)
+        fx0, fy0 = cells.lonlat_to_grid(exmin, eymin, res)
+        fx1, fy1 = cells.lonlat_to_grid(exmax, eymax, res)
+        fx0, fy0 = np.maximum(fx0 - 1, ix0[ep]), np.maximum(fy0 - 1, iy0[ep])
+        fx1, fy1 = np.minimum(fx1 + 1, ix1[ep]), np.minimum(fy1 + 1, iy1[ep])
+        ends = np.cumsum((fx1 - fx0 + 1) * (fy1 - fy0 + 1))
+        touched = np.zeros(len(pidx), dtype=bool)
+        e0 = 0
+        while e0 < len(e):
+            # edge blocks of ~2^17 (edge, cell) pairs keep each temporary
+            # ~1 MB, L2-resident like contains_one's; a block holds at
+            # least one edge, whose pairs never exceed its polygon's rows
+            done = ends[e0 - 1] if e0 else 0
+            e1 = max(int(np.searchsorted(ends, done + (1 << 17), side="right")), e0 + 1)
+            k, px, py = cells.grid_ranges(fx0[e0:e1], fy0[e0:e1], fx1[e0:e1], fy1[e0:e1])
+            k += e0
+            cxmin = px * dx - 180.0 - eps_x
+            cxmax = (px + 1) * dx - 180.0 + eps_x
+            cymin = py * dy - 90.0 - eps_y
+            cymax = (py + 1) * dy - 90.0 + eps_y
+            # exact SAT segment-vs-rect: separating axes are x, y
+            # (edge bbox vs rect) and the segment normal (all 4 rect
+            # corners strictly on one side). A corner exactly ON the
+            # line counts as touching (conservative).
+            hit = (
+                (exmin[k] <= cxmax) & (exmax[k] >= cxmin)
+                & (eymin[k] <= cymax) & (eymax[k] >= cymin)
             )
-            ix1, iy1 = cells.lonlat_to_grid(
-                np.asarray([lon_max]), np.asarray([lat_max]), res
+            k, px, py, cxmin, cxmax, cymin, cymax = (
+                v[hit] for v in (k, px, py, cxmin, cxmax, cymin, cymax)
             )
-            xs = np.arange(int(ix0[0]), min(int(ix1[0]), n - 1) + 1, dtype=np.int64)
-            ys = np.arange(int(iy0[0]), min(int(iy1[0]), n - 1) + 1, dtype=np.int64)
-            gx, gy = np.meshgrid(xs, ys)
-            gx, gy = gx.ravel(), gy.ravel()
-            cc = (
-                (cells.morton_encode(gx, gy) << np.int64(5)) | np.int64(res)
-            ).astype(np.int64)
-            cxmin = gx * dx - 180.0 - eps_x
-            cxmax = (gx + 1) * dx - 180.0 + eps_x
-            cymin = gy * dy - 90.0 - eps_y
-            cymax = (gy + 1) * dy - 90.0 + eps_y
-            ed = self._edges(p)
-            touched = np.zeros(len(cc), dtype=bool)
-            if len(ed):
-                # exact SAT segment-vs-rect, (C, E) blocked over edges:
-                # separating axes are x, y (edge-bbox vs rect) and the
-                # segment normal (all 4 rect corners strictly on one
-                # side). Corner exactly ON the line counts as touching
-                # (conservative).
-                for e0 in range(0, len(ed), 2048):
-                    e = ed[e0 : e0 + 2048]
-                    x1, y1, x2, y2 = e[:, 0], e[:, 1], e[:, 2], e[:, 3]
-                    bb = (
-                        (np.minimum(x1, x2)[None, :] <= cxmax[:, None])
-                        & (np.maximum(x1, x2)[None, :] >= cxmin[:, None])
-                        & (np.minimum(y1, y2)[None, :] <= cymax[:, None])
-                        & (np.maximum(y1, y2)[None, :] >= cymin[:, None])
-                    )
-                    edx, edy = (x2 - x1)[None, :], (y2 - y1)[None, :]
-                    pos = np.zeros(bb.shape, dtype=bool)
-                    neg = np.zeros(bb.shape, dtype=bool)
-                    first = True
-                    for cx, cy in (
-                        (cxmin, cymin), (cxmin, cymax), (cxmax, cymin), (cxmax, cymax)
-                    ):
-                        d = edx * (cy[:, None] - y1[None, :]) - edy * (
-                            cx[:, None] - x1[None, :]
-                        )
-                        if first:
-                            pos, neg, first = d > 0, d < 0, False
-                        else:
-                            pos &= d > 0
-                            neg &= d < 0
-                    touched |= (bb & ~pos & ~neg).any(axis=1)
-            centers_x = gx * dx - 180.0 + dx / 2
-            centers_y = gy * dy - 90.0 + dy / 2
-            interior = ~touched
-            if interior.any():
-                inside = self.contains_one(p, centers_x[interior], centers_y[interior])
-                tmp = np.zeros(len(cc), dtype=bool)
-                tmp[np.flatnonzero(interior)[inside]] = True
-                interior = tmp
-            cells_out.append(cc)
-            pidx_out.append(np.full(len(cc), p, dtype=np.int64))
-            key_out.append(np.full(len(cc), self.keys[p], dtype=np.int64))
-            int_out.append(interior)
+            edx, edy, ex, ey = x2[k] - x1[k], y2[k] - y1[k], x1[k], y1[k]
+            d = np.stack([
+                edx * (cy - ey) - edy * (cx - ex) for cx in (cxmin, cxmax) for cy in (cymin, cymax)
+            ])
+            sel = ~((d.min(axis=0) > 0) | (d.max(axis=0) < 0))
+            p = ep[k[sel]]
+            touched[start[p] + (py[sel] - iy0[p]) * nx[p] + (px[sel] - ix0[p])] = True
+            e0 = e1
+        interior = ~touched
+        cand = np.flatnonzero(interior)
+        if len(cand):
+            interior[cand] = self.contains(
+                pidx[cand], gx[cand] * dx - 180.0 + dx / 2, gy[cand] * dy - 90.0 + dy / 2
+            )
         return pd.DataFrame(
             {
-                "cell": np.concatenate(cells_out),
-                "pidx": np.concatenate(pidx_out),
-                "poly_key": np.concatenate(key_out),
-                "interior": np.concatenate(int_out),
+                "cell": (cells.morton_encode(gx, gy) << np.int64(5)) | np.int64(res),
+                "pidx": pidx,
+                "poly_key": self.keys[pidx],
+                "interior": interior,
             }
         )
 
-    def auto_res(
-        self,
-        target_cells_per_poly: float = 256.0,
-        cover_budget_rows: float = 200_000.0,
-    ) -> int:
+    def auto_res(self) -> int:
         """Pick a cover resolution: median polygon bbox ≈ target cells,
         CAPPED so the whole cover table stays within a fixed row budget.
         Coarser -> more refine work; finer -> wider cover table. The
@@ -258,20 +245,10 @@ class PackedPolygonIndex:
             return 0
         w = np.median(self.bbox[:, 2] - self.bbox[:, 0])
         h = np.median(self.bbox[:, 3] - self.bbox[:, 1])
-        return pick_cover_res(
-            len(self.keys),
-            float(max(w, h)),
-            target_cells_per_poly,
-            cover_budget_rows,
-        )
+        return pick_cover_res(len(self.keys), float(max(w, h)), _COVER_ROWS)
 
 
-def pick_cover_res(
-    n_polys: int,
-    median_span: float,
-    target_cells_per_poly: float = 256.0,
-    cover_budget_rows: float = 200_000.0,
-) -> int:
+def pick_cover_res(n_polys: int, median_span: float, cover_budget_rows: float) -> int:
     """Cover-resolution policy shared by the broadcast and partitioned
     joiners (see PackedPolygonIndex.auto_res for the rationale): median
     polygon bbox ≈ target cells, capped so estimated cover rows stay
@@ -289,7 +266,7 @@ def pick_cover_res(
     switch to the shuffled candidate join
     (PartitionedPIPJoiner(broadcast_cover=False))."""
     span = max(float(median_span), 1e-12)
-    per_side = max(target_cells_per_poly**0.5, 1.0)
+    per_side = max(_CELLS_PER_POLY**0.5, 1.0)
     res = int(np.clip(np.ceil(np.log2(360.0 / span * per_side)), 0, cells.MAX_RES))
     target = max(cover_budget_rows, 4.0 * max(n_polys, 1))
     while res > 0:
@@ -333,12 +310,43 @@ def build_index(
     return PackedPolygonIndex.build([(int(r[0]), bytes(r[1])) for r in rows])
 
 
+def _candidates(points_df, res, cover_sdf, broadcast, lon_col, lat_col, how):
+    """The candidate stage both joiners share: check `how`, tag the
+    points with a row id for a left join, encode their cells JVM-side
+    and equi-join the cover on the cell (the page side never shuffles
+    when the cover is broadcast). Returns (tagged points, candidates)."""
+    if how not in ("inner", "left"):
+        raise ValueError(f"unsupported how={how!r}")
+    base = points_df
+    if how == "left":
+        # unique row id so the hit rows rejoin 1:1 — joining back on
+        # the full column set multiplies duplicate input rows and is
+        # fragile on float columns. monotonically_increasing_id is
+        # stable for a deterministic scan (partition id + offset).
+        base = points_df.withColumn(_RID, F.monotonically_increasing_id())
+    pts = cells.with_cell(base, res, lon_col, lat_col, out_col="__cell")
+    cover = F.broadcast(cover_sdf) if broadcast else cover_sdf
+    cand = pts.join(cover, on=pts["__cell"] == cover_sdf["cell"], how="inner")
+    return base, cand.drop("cell")
+
+
+def _finish(base, hits, out_key, how):
+    """Name the hits' key column; a left join re-joins them to every
+    tagged point, so misses keep a NULL key."""
+    hits = hits.withColumnRenamed("poly_key", out_key)
+    if how == "inner":
+        return hits
+    return base.join(hits.select(_RID, out_key), on=_RID, how="left").drop(_RID)
+
+
 class PIPJoiner:
     """Prepared point-in-polygon join: index build + cover table +
     broadcast happen ONCE (driver-side, seconds), then `apply()` joins
     any number of point DataFrames/batches — the once-per-job vs
     per-batch split a production pipeline needs (the reference's
     analogue: PostGIS indexes built once at import, vfrpg.py:120-163).
+    An empty polygon layer gives an empty cover: inner joins return no
+    rows, left joins every point with a NULL key.
     """
 
     def __init__(
@@ -354,10 +362,8 @@ class PIPJoiner:
         self.index = build_index(polys_df, poly_key, geom_col)
         self.res = res if res is not None else self.index.auto_res()
         self._bc = spark.sparkContext.broadcast(self.index)
-        self._cover_sdf = (
-            spark.createDataFrame(self.index.cover(self.res))
-            if len(self.index.keys)
-            else None
+        self._cover_sdf = spark.createDataFrame(
+            self.index.cover(self.res), "cell long, pidx long, poly_key long, interior boolean"
         )
 
     def apply(
@@ -367,35 +373,14 @@ class PIPJoiner:
         lat_col: str = "lat",
         how: str = "inner",
     ) -> DataFrame:
-        out_key = self.out_key
-        if self._cover_sdf is None:
-            # empty dimension side: inner join is empty; left join
-            # keeps all points with a NULL key
-            empty_key = F.lit(None).cast("long").alias(out_key)
-            if how == "inner":
-                return points_df.withColumn(out_key, empty_key).limit(0)
-            return points_df.withColumn(out_key, empty_key)
-
-        cover_sdf = self._cover_sdf
-        bc = self._bc
         # (round-6 measured negative result: unconditionally spreading
         # points_df here cost more than it saved for interior-heavy
         # joins — geo_pip_counts 1.37s -> 1.8s at sf1.0, the exchange
         # of the full-width point rows outweighing the mostly-JVM
         # refine. Callers with boundary-heavy refines spread their own
         # narrow point projection instead: q_geo_pip_hierarchy3.)
-        base = points_df
-        rid = "__pip_rid"
-        if how == "left":
-            # unique row id so the hit rows rejoin 1:1 — joining back on
-            # the full column set multiplies duplicate input rows and is
-            # fragile on float columns. monotonically_increasing_id is
-            # stable for a deterministic scan (partition id + offset).
-            base = points_df.withColumn(rid, F.monotonically_increasing_id())
-        pts = cells.with_cell(base, self.res, lon_col, lat_col, out_col="__cell")
-        cand = pts.join(
-            F.broadcast(cover_sdf), on=pts["__cell"] == cover_sdf["cell"], how="inner"
-        ).drop("cell")
+        base, cand = _candidates(points_df, self.res, self._cover_sdf, True, lon_col, lat_col, how)
+        bc = self._bc
 
         @F.pandas_udf(BooleanType())
         def _refine(lon: pd.Series, lat: pd.Series, pidx: pd.Series) -> pd.Series:
@@ -430,14 +415,8 @@ class PIPJoiner:
             cand.withColumn("__hit", F.col("interior") | refined)
             .where(F.col("__hit"))
             .drop("__hit", "pidx", "__cell", "interior")
-            .withColumnRenamed("poly_key", out_key)
         )
-        if how == "inner":
-            return hits
-        if how == "left":
-            keyed = hits.select(rid, out_key)
-            return base.join(keyed, on=rid, how="left").drop(rid)
-        raise ValueError(f"unsupported how={how!r}")
+        return _finish(base, hits, self.out_key, how)
 
 
 def _span_stats(polys: DataFrame, geom_col: str) -> tuple[int, float]:
@@ -447,14 +426,8 @@ def _span_stats(polys: DataFrame, geom_col: str) -> tuple[int, float]:
 
     @F.pandas_udf("double")
     def _span(geom: pd.Series) -> pd.Series:
-        out = np.empty(len(geom), dtype=np.float64)
-        for i, buf in enumerate(geom):
-            allv = np.concatenate(wkb.decode_rings(bytes(buf)))
-            out[i] = max(
-                float(allv[:, 0].max() - allv[:, 0].min()),
-                float(allv[:, 1].max() - allv[:, 1].min()),
-            )
-        return pd.Series(out)
+        bbox = PackedPolygonIndex.build(enumerate(geom)).bbox
+        return pd.Series(np.maximum(bbox[:, 2] - bbox[:, 0], bbox[:, 3] - bbox[:, 1]))
 
     row = (
         polys.select(_span(F.col(geom_col)).alias("s"))
@@ -462,6 +435,11 @@ def _span_stats(polys: DataFrame, geom_col: str) -> tuple[int, float]:
         .first()
     )
     return int(row["n"]), float(row["med"] if row["med"] is not None else 0.0)
+
+
+def _pack(pdf: pd.DataFrame) -> PackedPolygonIndex:
+    """Pack a batch of (__pkey, __geom) polygon rows."""
+    return PackedPolygonIndex.build(zip(pdf["__pkey"], pdf["__geom"]))
 
 
 class PartitionedPIPJoiner:
@@ -476,9 +454,9 @@ class PartitionedPIPJoiner:
     1. cover table (cell, poly_key, interior) — built DISTRIBUTEDLY via
        mapInPandas (each task packs its polygon batch and emits its
        cover rows), row-budgeted by pick_cover_res, broadcast to keep
-       the page side map-only exactly like the broadcast path. At the
-       default 500k-row budget that is ~15 MB — bounded regardless of
-       vertex counts (measured: a 2M-row budget triples per-action
+       the page side map-only exactly like the broadcast path. The
+       250k-row budget (_PARTITIONED_COVER_ROWS) bounds it regardless
+       of vertex counts (measured: a 2M-row budget triples per-action
        broadcast-rebuild cost for no candidate-quality gain on the
        parcel fixture — the budget trades JVM-side pruning for
        broadcast size, and the knee is early).
@@ -488,15 +466,15 @@ class PartitionedPIPJoiner:
        few groups it straddles). Stays a distributed DataFrame; the
        refine shuffles it by bucket.
 
-    apply(): pages get cells JVM-side, broadcast-join the cover
-    (map-only, pages never shuffle for candidate generation),
-    interior-certified candidates are hits with zero Python, and ONLY
-    boundary-cell candidates shuffle — keyed by the bucket of their
-    cell's gres parent (halo.refine_by_bucket) — into one kernel call
-    per bucket that packs the bucket's polygons once and runs the same
-    vectorized even-odd test as the broadcast path. Identical results
-    (pip parity pinned in tests/test_pip.py); one extra shuffle of the
-    boundary slice is the price of not broadcasting vertices.
+    apply(): the same candidate stage as PIPJoiner (pages get cells
+    JVM-side and join the cover map-only), interior-certified
+    candidates are hits with zero Python, and ONLY boundary-cell
+    candidates shuffle — keyed by the bucket of their cell's gres
+    parent (halo.refine_by_bucket) — into one kernel call per bucket
+    that packs the bucket's polygons once and runs the same vectorized
+    even-odd test as the broadcast path. Identical results (pip parity
+    pinned in tests/test_pip.py); one extra shuffle of the boundary
+    slice is the price of not broadcasting vertices.
 
     Megacity skew: a hot group's boundary candidates all land in one
     bucket, i.e. one task. salt>1 replicates each polygon row into
@@ -518,8 +496,6 @@ class PartitionedPIPJoiner:
         geom_col: str = "geometry",
         res: int | None = None,
         out_key: str | None = None,
-        cover_budget_rows: float = 250_000.0,
-        group_bits: int = 4,
         salt: int = 1,
         broadcast_cover: bool = True,
     ):
@@ -528,7 +504,6 @@ class PartitionedPIPJoiner:
             F.col(poly_key).cast("long").alias("__pkey"),
             F.col(geom_col).alias("__geom"),
         ).where(F.col(geom_col).isNotNull())
-        self._polys = polys
         if res is None:
             n, med = _span_stats(polys, "__geom")
             # cover res is budget-driven (pick_cover_res): coarser
@@ -536,9 +511,9 @@ class PartitionedPIPJoiner:
             # per point), finer ones cost broadcast-rebuild time, and on
             # the 122,500-parcel fixture the rebuild dominates (res 16
             # vs 17: 380k vs 770k rows, ~2.4x faster per action)
-            res = pick_cover_res(n, med, cover_budget_rows=cover_budget_rows)
+            res = pick_cover_res(n, med, _PARTITIONED_COVER_ROWS)
         self.res = res
-        self.gres = max(res - group_bits, 0)
+        self.gres = max(res - _GROUP_BITS, 0)
         self.salt = max(int(salt), 1)
         # cover rows are bounded below by n_polys (>= 1 row each), so
         # past ~budget/4 polygons the broadcast is inherently over
@@ -551,12 +526,8 @@ class PartitionedPIPJoiner:
 
         def _cover(batches):
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                idx = PackedPolygonIndex.build(
-                    [(int(k), bytes(b)) for k, b in zip(pdf["__pkey"], pdf["__geom"])]
-                )
-                yield idx.cover(rres)[["cell", "poly_key", "interior"]]
+                if len(pdf):
+                    yield _pack(pdf).cover(rres)[["cell", "poly_key", "interior"]]
 
         # persisted: the cover is re-joined by every apply()/action and
         # is small by construction (the row budget)
@@ -568,19 +539,14 @@ class PartitionedPIPJoiner:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                geom = pdf["__geom"].to_numpy()
-                bbox = np.empty((len(pdf), 4))
-                for i, buf in enumerate(geom):
-                    allv = np.concatenate(wkb.decode_rings(bytes(buf)))
-                    bbox[i] = (*allv.min(axis=0), *allv.max(axis=0))
-                row, grp = cells.cover_bboxes(*bbox.T, gres)
+                row, grp = cells.cover_bboxes(*_pack(pdf).bbox.T, gres)
                 row, grp = np.repeat(row, nsalt), np.repeat(grp, nsalt)
                 yield pd.DataFrame(
                     {
                         "__grp": grp,
                         "__gsalt": np.tile(np.arange(nsalt, dtype=np.int32), len(row) // nsalt),
                         "__pkey": pdf["__pkey"].to_numpy(dtype=np.int64)[row],
-                        "__geom": geom[row],
+                        "__geom": pdf["__geom"].to_numpy()[row],
                     }
                 )
 
@@ -588,8 +554,6 @@ class PartitionedPIPJoiner:
         # partitioned analogue of PIPJoiner's one-time broadcast build),
         # O(dimension) with small duplication, disk-backed so a 10^7-poly
         # layer spills instead of evicting
-        from pyspark.storagelevel import StorageLevel
-
         self._groups_sdf = polys.mapInPandas(
             _groups, "__grp long, __gsalt int, __pkey long, __geom binary"
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -601,8 +565,6 @@ class PartitionedPIPJoiner:
         lat_col: str = "lat",
         how: str = "inner",
     ) -> DataFrame:
-        if how not in ("inner", "left"):
-            raise ValueError(f"unsupported how={how!r}")
         # re-arm the prepared-index caches: spark.catalog.clearCache()
         # (or an explicit unpersist) silently REMOVES the persist mark,
         # after which every action would rebuild the cover and group
@@ -610,18 +572,10 @@ class PartitionedPIPJoiner:
         # on the parcel fixture. persist() after unpersist re-registers.
         halo.ensure_persisted(self._cover_sdf)
         halo.ensure_persisted(self._groups_sdf)
-        out_key = self.out_key
         res, gres, nsalt = self.res, self.gres, self.salt
-        base = points_df
-        rid = "__pip_rid"
-        if how == "left":
-            base = points_df.withColumn(rid, F.monotonically_increasing_id())
-        pts = cells.with_cell(base, res, lon_col, lat_col, out_col="__cell")
-        cover = self._cover_sdf
-        cover_side = F.broadcast(cover) if self.broadcast_cover else cover
-        cand = pts.join(
-            cover_side, on=pts["__cell"] == cover["cell"], how="inner"
-        ).drop("cell")
+        base, cand = _candidates(
+            points_df, res, self._cover_sdf, self.broadcast_cover, lon_col, lat_col, how
+        )
         inner_hits = cand.where(F.col("interior")).drop("__cell", "interior")
         # cell -> gres parent, pure bit ops in codegen: drop the 5 res
         # bits and 2*(res-gres) morton bits, re-tag with gres
@@ -642,7 +596,6 @@ class PartitionedPIPJoiner:
         helper = ("__cell", "interior", "__grp", "__gsalt")
         out_fields = [f for f in boundary.schema.fields if f.name not in helper]
         names = [f.name for f in out_fields]
-        from pyspark.sql.types import StructType
 
         def _refine(cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame) -> pd.DataFrame:
             # one call per bucket: every group hashed here arrives at
@@ -654,10 +607,7 @@ class PartitionedPIPJoiner:
                 return cand_pdf.loc[:, names].iloc[0:0]
             want = cand_pdf["poly_key"].to_numpy(dtype=np.int64)
             polys = poly_pdf[poly_pdf["__pkey"].isin(want)]
-            polys = polys.drop_duplicates("__pkey").sort_values("__pkey")
-            idx = PackedPolygonIndex.build(
-                list(zip(polys["__pkey"].tolist(), polys["__geom"]))
-            )
+            idx = _pack(polys.drop_duplicates("__pkey").sort_values("__pkey"))
             hit = idx.contains(
                 np.searchsorted(idx.keys, want),
                 cand_pdf[lon_col].to_numpy(dtype=np.float64),
@@ -668,11 +618,7 @@ class PartitionedPIPJoiner:
         refined = halo.refine_by_bucket(
             boundary, self._groups_sdf, ["__grp", "__gsalt"], _refine, StructType(out_fields)
         )
-        hits = inner_hits.unionByName(refined).withColumnRenamed("poly_key", out_key)
-        if how == "inner":
-            return hits
-        keyed = hits.select(rid, out_key)
-        return base.join(keyed, on=rid, how="left").drop(rid)
+        return _finish(base, inner_hits.unionByName(refined), self.out_key, how)
 
     # ---- index persistence -------------------------------------------
     # The cover + group tables ARE the prepared index (build-once /
@@ -713,8 +659,6 @@ class PartitionedPIPJoiner:
         depends on cluster memory, not on how the index was built)."""
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        from pyspark.storagelevel import StorageLevel
-
         obj = cls.__new__(cls)
         obj.res = int(meta["res"])
         obj.gres = int(meta["gres"])
@@ -723,7 +667,6 @@ class PartitionedPIPJoiner:
         obj.broadcast_cover = (
             bool(meta["broadcast_cover"]) if broadcast_cover is None else broadcast_cover
         )
-        obj._polys = None
         obj._cover_sdf = spark.read.parquet(os.path.join(path, "cover")).persist()
         obj._groups_sdf = spark.read.parquet(os.path.join(path, "groups")).persist(
             StorageLevel.MEMORY_AND_DISK

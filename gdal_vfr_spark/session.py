@@ -9,6 +9,7 @@ harmless on local[N].
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import zipfile
 
@@ -40,6 +41,32 @@ def package_zip() -> str:
     return out
 
 
+def local_cores() -> int:
+    """Cores for a local[N] master: SPARK_GRAFT_CPUS, else every core
+    this process may run on. An override beyond the host raises
+    instead of oversubscribing it."""
+    host = len(os.sched_getaffinity(0))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", host))
+    if not 0 < cores <= host:
+        raise ValueError(f"SPARK_GRAFT_CPUS={cores} outside 1..{host} (cores of this host)")
+    return cores
+
+
+def driver_memory() -> str:
+    """spark.driver.memory: SPARK_DRIVER_MEM, else half the physical
+    RAM, which leaves the other half to the Python workers and the OS.
+    An override that is not below physical RAM raises."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mem = os.environ.get("SPARK_DRIVER_MEM", f"{ram_mb // 2}m")
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"SPARK_DRIVER_MEM={mem!r} is not a JVM memory size")
+    mb = int(m[1]) * {"k": 2**-10, "": 1, "m": 1, "g": 2**10, "t": 2**20}[m[2]]
+    if mb >= ram_mb:
+        raise ValueError(f"SPARK_DRIVER_MEM={mem} is not below physical RAM ({ram_mb}m)")
+    return mem
+
+
 def get_spark(
     app_name: str = "gdal_vfr_spark",
     master: str | None = None,
@@ -54,9 +81,12 @@ def get_spark(
       batches, never per-row pickling.
     - shuffle.partitions sized to cores locally; on a real cluster this
       is ~2-3x total executor cores (set via spark-submit conf).
+    - master and driver memory default from the host (local_cores,
+      driver_memory); a `master` or `spark.driver.memory` the caller
+      passes wins, and a second call only returns the live session.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    extra_conf = extra_conf or {}
+    master = master or os.environ.get("SPARK_MASTER") or f"local[{local_cores()}]"
     nshuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
@@ -70,7 +100,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # filter-free MAX/MIN/COUNT (A5-style sequence resync) answered
@@ -94,7 +123,9 @@ def get_spark(
         # ones (guide §5). 2min bounds the accumulation window.
         .config("spark.cleaner.periodicGC.interval", "2min")
     )
-    for k, v in (extra_conf or {}).items():
+    if "spark.driver.memory" not in extra_conf:
+        builder = builder.config("spark.driver.memory", driver_memory())
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,8 +1,11 @@
 """Byte-identical HTML -> text extraction (BASELINE.json:input_hint
 per-row invariant: 'byte-identical extracted text per url')."""
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from gdal_vfr_spark import datagen
 from gdal_vfr_spark.functions import html_text
 
@@ -21,28 +24,41 @@ CASES = [
 ]
 
 
-def test_expr_extraction_cases(spark):
-    df = spark.createDataFrame(
-        [(i, h) for i, (h, _) in enumerate(CASES)], "i int, html binary"
-    )
-    got = {
+def _spark_extract(spark, rows):
+    """{i: extract_text_expr(html)} over (i, html bytes) rows."""
+    df = spark.createDataFrame(rows, "i int, html binary")
+    return {
         r["i"]: r["t"]
         for r in df.select("i", html_text.extract_text_expr("html").alias("t")).collect()
     }
+
+
+def _duck_extract(rows):
+    """{i: the DuckDB oracle's extraction} over the same rows (the
+    oracle's pages are text, so the UTF-8 decode happens here)."""
+    con = duckdb.connect()
+    try:
+        con.register(
+            "pages", pd.DataFrame({"i": [i for i, _ in rows], "html": [h.decode() for _, h in rows]})
+        )
+        return dict(con.sql(f"SELECT i, {entry._duck_extract_expr()} FROM pages").fetchall())
+    finally:
+        con.close()
+
+
+def test_expr_extraction_cases(spark):
+    got = _spark_extract(spark, [(i, h) for i, (h, _) in enumerate(CASES)])
     for i, (_, want) in enumerate(CASES):
         assert got[i] == want, (i, CASES[i][0], got[i], want)
 
 
 def test_arrow_path_matches_expr_path(spark):
-    df = spark.createDataFrame(
-        [(i, h) for i, (h, _) in enumerate(CASES)], "i int, html binary"
-    )
-    expr = df.select("i", html_text.extract_text_expr("html").alias("t"))
-    arrow = html_text.extract_text_arrow(df, "html", out_col="t").select("i", "t")
-    both = expr.alias("a").join(arrow.alias("b"), "i")
-    n_diff = both.where(F.col("a.t") != F.col("b.t")).count()
-    assert n_diff == 0
-    assert arrow.count() == len(CASES)
+    """The Catalyst extraction is byte-identical to the DuckDB oracle's
+    (_duck_extract_expr) on every crafted case."""
+    rows = [(i, h) for i, (h, _) in enumerate(CASES)]
+    got = _spark_extract(spark, rows)
+    assert len(got) == len(CASES)
+    assert got == _duck_extract(rows)
 
 
 def test_webpages_per_url_invariant(spark):
@@ -72,9 +88,9 @@ def test_escape_roundtrip(spark):
 
 
 def test_hypothesis_arrow_expr_parity(spark):
-    """Property test: Java-regex (expr) and Python-re (Arrow) paths are
-    byte-identical on adversarial strings — angle brackets, partial
-    entities, script/style fragments, whitespace runs."""
+    """Property test: Java regex (Spark) and RE2 (DuckDB oracle) give
+    byte-identical extractions on adversarial strings — angle brackets,
+    partial entities, script/style fragments, whitespace runs."""
     from hypothesis import given, settings, strategies as st
 
     alphabet = st.sampled_from(
@@ -86,19 +102,7 @@ def test_hypothesis_arrow_expr_parity(spark):
     @settings(max_examples=30, deadline=None)
     @given(st.lists(texts, min_size=1, max_size=20))
     def check(batch):
-        df = spark.createDataFrame(
-            [(i, t.encode("utf-8")) for i, t in enumerate(batch)], "i int, html binary"
-        )
-        expr = {
-            r["i"]: r["t"]
-            for r in df.select("i", html_text.extract_text_expr("html").alias("t")).collect()
-        }
-        arrow = {
-            r["i"]: r["t"]
-            for r in html_text.extract_text_arrow(df, "html", out_col="t")
-            .select("i", "t")
-            .collect()
-        }
-        assert expr == arrow
+        rows = [(i, t.encode("utf-8")) for i, t in enumerate(batch)]
+        assert _spark_extract(spark, rows) == _duck_extract(rows)
 
     check()

@@ -274,3 +274,127 @@ def test_partitioned_pip_one_bucket(spark, one_bucket):
         assert groups.where(f"s != {salt}").count() == 0
     test_partitioned_pip_parity_with_broadcast(spark)
     test_partitioned_pip_parcely_large_truth(spark)
+
+
+def _touches(edge, x0, y0, x1, y1):
+    """Segment vs closed rect, one pair: separated on x, on y, or by the
+    segment's line (all 4 corners strictly on one side)."""
+    ax, ay, bx, by = edge
+    if min(ax, bx) > x1 or max(ax, bx) < x0 or min(ay, by) > y1 or max(ay, by) < y0:
+        return False
+    d = [(bx - ax) * (cy - ay) - (by - ay) * (cx - ax) for cx in (x0, x1) for cy in (y0, y1)]
+    return not (all(v > 0 for v in d) or all(v < 0 for v in d))
+
+
+def _even_odd(edges, bbox, x, y):
+    xmin, ymin, xmax, ymax = bbox
+    if not (xmin <= x <= xmax and ymin <= y <= ymax):
+        return False
+    inside = False
+    for ax, ay, bx, by in edges:
+        if (ay > y) != (by > y) and x < ax + (y - ay) * ((bx - ax) / (by - ay)):
+            inside = not inside
+    return inside
+
+
+def _brute_cover(idx, res):
+    """cover() one cell at a time against every edge of its polygon,
+    in plain Python floats: the polygon's bbox cells row-major, a cell
+    interior when no edge touches its 1e-9-inflated rect and its
+    center is inside."""
+    from gdal_vfr_spark.geo import cells
+
+    n = 1 << res
+    dx, dy = 360.0 / n, 180.0 / n
+    ex, ey = dx * 1e-9, dy * 1e-9
+    gxs, gys, pidx, interior = [], [], [], []
+    for p in range(len(idx.keys)):
+        rings = [
+            idx.verts[idx.ring_off[r] : idx.ring_off[r + 1]].tolist()
+            for r in range(idx.poly_ring[p], idx.poly_ring[p + 1])
+        ]
+        edges = [(*a, *b) for ring in rings for a, b in zip(ring[:-1], ring[1:])]
+        bbox = idx.bbox[p].tolist()
+        (ix0, ix1), (iy0, iy1) = cells.lonlat_to_grid(
+            np.asarray(bbox[0::2]), np.asarray(bbox[1::2]), res
+        )
+        for gy in range(int(iy0), int(iy1) + 1):
+            for gx in range(int(ix0), int(ix1) + 1):
+                x0, x1 = gx * dx - 180.0 - ex, (gx + 1) * dx - 180.0 + ex
+                y0, y1 = gy * dy - 90.0 - ey, (gy + 1) * dy - 90.0 + ey
+                touched = any(_touches(e, x0, y0, x1, y1) for e in edges)
+                cx, cy = gx * dx - 180.0 + dx / 2, gy * dy - 90.0 + dy / 2
+                gxs.append(gx)
+                gys.append(gy)
+                pidx.append(p)
+                interior.append(not touched and _even_odd(edges, bbox, cx, cy))
+    cell = (cells.morton_encode(np.asarray(gxs), np.asarray(gys)) << np.int64(5)) | res
+    pidx = np.asarray(pidx, dtype=np.int64)
+    return pd.DataFrame(
+        {"cell": cell.astype(np.int64), "pidx": pidx, "poly_key": idx.keys[pidx],
+         "interior": np.asarray(interior, dtype=bool)}
+    )
+
+
+def test_cover_matches_brute_force():
+    """The vectorised cover equals the one-cell-at-a-time reference,
+    rows, order and dtypes, on random polygons with holes whose
+    vertices sit on cell boundaries, 1e-12 off them or in between, with
+    zero-length edges, at several res; plus a triangle whose long
+    diagonal edge alone pairs with more cells than one edge block
+    holds. Every point sampled inside an interior cell is inside."""
+    rng = np.random.default_rng(17)
+    base = 14
+    n = 1 << base
+    dx, dy = 360.0 / n, 180.0 / n
+    polys = []
+    for key in range(24):
+        m = int(rng.integers(3, 9))
+        gx = 8200 + rng.integers(0, 12, m) + key * 3
+        gy = 12100 + rng.integers(0, 12, m)
+        off = rng.choice([0.0, 1e-12, -1e-12, 0.37], size=(m, 2))
+        ring = np.c_[(gx + off[:, 0]) * dx - 180.0, (gy + off[:, 1]) * dy - 90.0]
+        ring = np.insert(ring, 1, ring[1], axis=0)  # zero-length edge
+        rings = [np.r_[ring, ring[:1]]]
+        if key % 2:
+            c = ring.mean(axis=0)
+            hole = c + 0.3 * (ring[:3] - c)
+            rings.append(np.r_[hole, hole[:1]])
+        polys.append((1000 + key, wkb.polygon(rings)))
+    idx = PackedPolygonIndex.build(polys)
+    for res in (base - 2, base, base + 1, base + 3):
+        got = idx.cover(res)
+        pd.testing.assert_frame_equal(got, _brute_cover(idx, res))
+    assert got["interior"].any() and not got["interior"].all()
+
+    tri = np.asarray([[14.0, 49.5], [15.1, 49.5], [15.1, 50.05], [14.0, 49.5]])
+    idx = PackedPolygonIndex.build([(7, wkb.polygon([tri]))])
+    got = idx.cover(17)
+    assert len(got) > 1 << 17  # the diagonal's pairs alone exceed one block
+    pd.testing.assert_frame_equal(got, _brute_cover(idx, 17))
+
+    from gdal_vfr_spark.geo import cells
+
+    inner = got[got["interior"]]
+    lon0, lat0, lon1, lat1 = cells.cell_bounds(inner["cell"].to_numpy())
+    u = rng.uniform(0.001, 0.999, size=(2, len(inner)))
+    px, py = lon0 + u[0] * (lon1 - lon0), lat0 + u[1] * (lat1 - lat0)
+    assert idx.contains(inner["pidx"].to_numpy(), px, py).all()
+
+
+def test_pip_empty_layer_checks_how(spark):
+    """An empty polygon layer still validates `how`: outer raises, left
+    keeps every point with a NULL key, inner returns nothing."""
+    import pytest
+
+    from gdal_vfr_spark.geo.pip import PIPJoiner
+
+    pages = datagen.gen_webpages(spark, n=200, seed=5)
+    polys = spark.createDataFrame([], "kod long, geom binary")
+    joiner = PIPJoiner(polys, poly_key="kod", geom_col="geom", out_key="obec_kod")
+    with pytest.raises(ValueError, match="outer"):
+        joiner.apply(pages, how="outer")
+    left = joiner.apply(pages, how="left")
+    assert left.columns == pages.columns + ["obec_kod"]
+    assert left.count() == 200 and left.where("obec_kod is not null").count() == 0
+    assert joiner.apply(pages).count() == 0

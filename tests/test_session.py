@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 import __spark_entry__ as entry
@@ -21,3 +23,29 @@ def test_shipping_failure_raises(spark, monkeypatch):
         session.get_spark("gdal_vfr_spark_tests", master="local[4]", shuffle_partitions=8)
     with pytest.raises(OSError, match="package zip"):
         entry._ensure_shipped(spark)
+
+
+def test_host_derived_defaults(monkeypatch):
+    """local[N] and driver memory come from the host; an override that
+    exceeds the host raises. (The helpers are tested directly: a second
+    get_spark() would only return the live session.)"""
+    cores = len(os.sched_getaffinity(0))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert session.local_cores() == cores
+    assert session.driver_memory() == f"{ram_mb // 2}m"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    assert session.local_cores() == 1
+    for bad in (str(cores + 1), "0"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            session.local_cores()
+
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "512m")
+    assert session.driver_memory() == "512m"
+    for bad in (f"{ram_mb}m", f"{ram_mb // 1024 + 1}g", "1t", "lots"):
+        monkeypatch.setenv("SPARK_DRIVER_MEM", bad)
+        with pytest.raises(ValueError, match="SPARK_DRIVER_MEM"):
+            session.driver_memory()

@@ -11,7 +11,8 @@ the operators' shuffle volume does NOT grow with the corpus — the
 property claimed in operators/sketches.py — measured, not argued.
 
 Usage: python tools/sketch_scale_run.py [n_keys] [cpus]
-       (defaults 100_000_000 and 32; prints one JSON line per op)
+       (defaults 100_000_000 and session.local_cores(); prints one JSON
+       line per op)
 
 The same run at two parallelism levels evidences scaling:
   SPARK_GRAFT_CPUS=8 python tools/sketch_scale_run.py
@@ -28,11 +29,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gdal_vfr_spark import get_spark  # noqa: E402
+from gdal_vfr_spark.session import local_cores  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    cpus = sys.argv[2] if len(sys.argv) > 2 else os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else local_cores()
 
     from pyspark.sql import functions as F
 
@@ -82,7 +84,7 @@ def main() -> int:
             {
                 "metric": "sketch build throughput (keys/sec)",
                 "n_keys": n,
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "ops": results,
             }
         )
