@@ -2,7 +2,7 @@
 
 Everything here is built-in `pyspark.sql.functions` composition — JVM
 side, inside whole-stage codegen. The DuckDB-oracle equivalents in
-`__spark_entry__.py` mirror these expressions 1:1 (same tokenizer
+`duck_sql.py` mirror these expressions 1:1 (same tokenizer
 regex, same md5-based hashing, same fold order), which is what makes
 the driver's value-hash comparison exact.
 """

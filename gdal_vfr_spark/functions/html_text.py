@@ -25,7 +25,7 @@ Extraction pipeline (order matters and is part of the contract):
 One implementation, :func:`extract_text_expr`: a pure Catalyst
 expression chain (JVM regex, whole-stage codegen; zero Python
 boundary), the 10^12-row hot path. Its second opinion is the DuckDB
-oracle's ``_duck_extract_expr`` (``__spark_entry__``), byte-identical by
+oracle's ``_duck_extract_expr`` (``duck_sql``), byte-identical by
 test (tests/test_html_extract.py).
 
 The regex subset used is valid and equivalent in Java (Spark) and RE2

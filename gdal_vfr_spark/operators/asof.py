@@ -3,18 +3,14 @@
 Absent in the reference (SURVEY.md §2.11 lists theta/as-of joins as
 explicit absences) but a staple of event-to-snapshot alignment in
 web-scale pipelines (e.g. page crawl_ts -> latest polygon validity
-interval, PlatiOd/PlatiDo semantics in §1.3). Implemented as the
-canonical Spark decomposition: cogroup on the equi-key, Arrow-batched
-pandas merge_asof per group (cf. public cogroup example in Spark docs).
-
-Scale shape: both sides shuffle once on the key; each group is merged
-in one vectorized pandas call. Skewed keys are split by AQE; for a
-pathological single key, pre-salt by time bucket.
+interval, PlatiOd/PlatiDo semantics in §1.3). Implemented as one window
+pass with no Python boundary; its second opinion is DuckDB's native
+`ASOF LEFT JOIN` (the asof_join oracle in tests/test_oracle.py and the
+crafted rows of tests/test_asof.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -25,72 +21,23 @@ def asof_join(
     on: str,
     by: str,
     right_cols: list[str] | None = None,
-    direction: str = "backward",
 ) -> DataFrame:
-    """For each left row, attach the right row with the greatest
-    `on` value <= left's `on` (direction='backward'), matched within
-    the same `by` key. Right side must be unique per (by, on) for
-    deterministic output — enforce upstream with a window dedup.
-    """
-    rcols = right_cols or [c for c in right.columns if c not in (on, by)]
-    out_schema = left.schema
-    from pyspark.sql import types as T
-
-    fields = list(out_schema.fields)
-    for c in rcols:
-        fields.append(right.schema[c])
-    schema = T.StructType(fields)
-
-    lsel = left
-    rsel = right.select(by, on, *rcols)
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in fields])
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if len(rpdf) == 0:
-            for c in rcols:
-                lpdf[c] = None
-            return lpdf
-        rpdf = rpdf.sort_values(on, kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=[by]),
-            on=on,
-            direction=direction,
-            suffixes=("", "__r"),
-        )
-        return merged[[f.name for f in fields]]
-
-    return (
-        lsel.groupBy(by)
-        .cogroup(rsel.groupBy(by))
-        .applyInPandas(merge, schema=schema)
-    )
-
-
-def asof_join_window(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str] | None = None,
-) -> DataFrame:
-    """As-of (backward) join with NO Python boundary — the scale path.
+    """For each left row, attach the right row with the greatest `on`
+    value <= left's `on`, matched within the same `by` key (backward
+    as-of; NULLs when there is none). Ties (left.on == right.on) match:
+    right rows sort before left rows at equal timestamps.
 
     Union both sides (right rows carry their payload, left rows carry
     nulls), one window sort per key, and `last(ignorenulls)` forwards
-    each right payload to every later left row. Same result as
-    asof_join(direction='backward') when the right side is unique per
-    (by, on) and its payload columns are non-null (a null payload value
-    would be skipped by ignorenulls — enforce upstream).
+    each right payload to every later left row. The right side must be
+    unique per (by, on) and its payload columns non-null (a null
+    payload value would be skipped by ignorenulls) — enforce upstream
+    with a window dedup.
 
     Scale shape: ONE shuffle (the window's hash partition on `by`),
-    everything inside whole-stage codegen; vs the cogroup variant's two
-    shuffles plus per-group Arrow round-trips — at millions of small
-    groups the per-group overhead dominates, this form doesn't pay it.
-    Ties (left.on == right.on) match, like merge_asof backward: right
-    rows sort before left rows at equal timestamps.
+    everything inside whole-stage codegen. A cogrouped pandas
+    merge_asof pays two shuffles plus per-group Arrow round-trips,
+    which dominate at millions of small groups.
     """
     rcols = right_cols or [c for c in right.columns if c not in (on, by)]
     lcols = [c for c in left.columns]

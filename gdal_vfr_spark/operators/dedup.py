@@ -116,7 +116,7 @@ def word_shingle_hash_rows(
     contract: lower, split on [^a-z0-9]+, drop empties; docs shorter
     than n tokens contribute their full sequence; empty and null texts
     contribute nothing. The DuckDB twin is `_duck_word_shingles` in
-    __spark_entry__.py (the dedup_decontaminate oracle);
+    duck_sql.py (the dedup_decontaminate oracle);
     tests/test_dedup_text.py compares the hashes with it on crafted docs
     at n = 3 and 13."""
     cols = ([id_col] if id_col else []) + [text_col]
@@ -192,7 +192,7 @@ def with_minhash(
     (Kirsch-Mitzenmacher double hashing — k-fold less hashing than a
     per-(i, shingle) md5, which is what holds at 10^12 docs). The
     DuckDB twin is the `sig` CTE of `_duck_sig_bands_cte` in
-    __spark_entry__.py; tests/test_dedup_text.py compares the
+    duck_sql.py; tests/test_dedup_text.py compares the
     signatures with it on crafted docs, and tests/test_oracle.py every
     MinHash query."""
     P = 2147483647
@@ -432,7 +432,7 @@ def with_simhash(
 
     An Arrow pandas UDF (hashlib + numpy bit unpack); a Catalyst
     fold measured ~20x slower. The DuckDB twin is `_duck_simhash_sql`
-    in __spark_entry__.py, a relational token x bit vote;
+    in duck_sql.py, a relational token x bit vote;
     tests/test_dedup_text.py compares it at 32 and 64 bits on crafted
     docs, and tests/test_oracle.py the dedup_simhash query."""
     nhex = bits // 4

@@ -11,11 +11,18 @@ MATCHED THEN INSERT *`; this sandbox has no Iceberg runtime, so
 ParquetTable implements the same semantics read-merge-overwrite with an
 atomic directory swap (same commit granularity the reference gets from
 its per-layer transaction, vfrogr.py:543-544,:611-613).
+
+Each lifecycle rule has one implementation: the M1 mode rule is one
+pattern (`CHANGE_NAME_RE`) that the driver scalar and the Catalyst
+column both read, FIDs come from one per-partition-offset pass
+(`assign_fids`), both tables run one merge pass (`_merge_pass`) and
+commit through one directory swap (`_swap_dir`).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
@@ -51,30 +58,28 @@ LAYER_CODES = {
 }
 
 
+# M1 — mode dispatch (vfrogr.py:992-1003): a batch whose file name's
+# last `_` component, directories and extensions stripped, starts with
+# 'Z' (either case) is a change batch. One pattern, read by `re` on the
+# driver and by `rlike` in Catalyst (it stays in the Java ∩ Python-re
+# subset: explicit classes, no lookarounds or backrefs).
+CHANGE_NAME_RE = r"(?i)^(?:[^/]*/)*(?:[^/._]*_)*z[^/._]*(?:\.[^/]*)?$"
+
+
 def decide_mode(batch_name: str, append_flag: bool = False) -> str:
-    """M1 — mode dispatch (vfrogr.py:992-1003): last underscore-
-    component of the batch/file name starting with 'Z' => change mode;
-    --append => append; else full write."""
-    stem = os.path.basename(batch_name).split(".")[0]
-    last = stem.split("_")[-1]
-    if last.upper().startswith("Z"):
+    """M1 for one batch name: change by CHANGE_NAME_RE; else append
+    when --append is set; else full write."""
+    if re.search(CHANGE_NAME_RE, batch_name):
         return MODE_CHANGE
     return MODE_APPEND if append_flag else MODE_WRITE
 
 
 def decide_mode_expr(name_col, append_col=None):
-    """M1 as a Catalyst expression — the distributed twin of
-    decide_mode (vfrogr.py:992-1003) for manifest-sized DataFrames:
-    strip directories and extensions, take the last `_` component of
-    the stem, leading 'Z' (case-insensitive) => change; else append
-    when the append flag column is true; else write. Pure string
-    functions — no Python on the hot path."""
-    stem = F.split(F.element_at(F.split(name_col, "/"), -1), r"\.").getItem(0)
-    last = F.element_at(F.split(stem, "_"), -1)
-    is_change = F.upper(F.substring(last, 1, 1)) == "Z"
+    """M1 as a Catalyst column over a name column, the same rule as
+    decide_mode (pure JVM regex — no Python on the hot path)."""
     append = F.lit(False) if append_col is None else append_col
     return (
-        F.when(is_change, F.lit(MODE_CHANGE))
+        F.when(name_col.rlike(CHANGE_NAME_RE), F.lit(MODE_CHANGE))
         .when(append, F.lit(MODE_APPEND))
         .otherwise(F.lit(MODE_WRITE))
     )
@@ -192,34 +197,24 @@ def apply_changes(
     return survivors.unionByName(inserts.select(*current.columns))
 
 
-def assign_fids(df: DataFrame, key: str = "gml_id", fid_col: str = "fid") -> DataFrame:
-    """§2.5 — deterministic FID: row_number over the natural key. The
-    reference assigns FIDs by arrival order (vfrogr.py:582,:601-603);
-    arrival order doesn't exist in a distributed scan, so FIDs are
-    derived from the key order instead (documented deviation,
-    SURVEY.md §7.3: values differ, row content identical).
-
-    NOTE: the no-partition window is a single-reducer global sort —
-    fine for test determinism and small dimensions, wrong at 100 TB.
-    Use assign_fids_distributed for the scale path (identical output
-    for unique keys)."""
-    w = Window.orderBy(F.col(key).asc())
-    return df.withColumn(fid_col, F.row_number().over(w))
-
-
-def assign_fids_distributed(
+def assign_fids(
     df: DataFrame,
     key: str = "gml_id",
     fid_col: str = "fid",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Scale-safe twin of assign_fids: dense 1-based FIDs in key order
-    with NO global single-reducer sort. Range-partition by key + sort
-    within partitions (the same shuffle a sorted write needs anyway),
-    count rows per partition (one cheap aggregate), then a map-only
-    Arrow pass adds cumulative offset + local position. Output is
-    content-identical to assign_fids when keys are unique (equal-key tie
-    order is arbitrary in both, like the reference's arrival order)."""
+    """§2.5 — deterministic FID: dense 1-based FIDs in key order. The
+    reference assigns FIDs by arrival order (vfrogr.py:582,:601-603);
+    arrival order doesn't exist in a distributed scan, so FIDs are
+    derived from the key order instead (documented deviation,
+    SURVEY.md §7.3: values differ, row content identical).
+
+    No global single-reducer sort: range-partition by key + sort within
+    partitions (the same shuffle a sorted write needs anyway), count
+    rows per partition (one cheap aggregate), then a map-only Arrow
+    pass adds cumulative offset + local position. On unique keys this
+    equals `row_number() OVER (ORDER BY key)`; equal-key tie order is
+    arbitrary, like the reference's arrival order."""
     from pyspark import TaskContext
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -252,6 +247,40 @@ def assign_fids_distributed(
     return d.mapInPandas(_add, schema=out_schema)
 
 
+def _swap_dir(src: str, dst: str) -> None:
+    """The one commit step: move `dst` aside, rename `src` into its
+    place, then drop the old copy — readers see the old or the new
+    directory, never a torn one. A missing `src` (a merged bucket with
+    no rows left) leaves `dst` absent."""
+    old = f"{dst}.__old_{uuid.uuid4().hex[:8]}"
+    if os.path.exists(dst):
+        os.rename(dst, old)
+    if os.path.exists(src):
+        os.rename(src, dst)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _merge_pass(
+    spark, current: DataFrame | None, changes: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """M3 — classify -> dedup -> apply against `current` (None = no
+    table yet: every change is an add). Returns (merged state, change
+    tally). The tally (A3) is collected HERE, before the caller commits
+    `merged` over the snapshot `current` reads, and comes back as a
+    driver-local DataFrame so callers can log it like the reference's
+    summary (vfrogr.py:617-627)."""
+    if current is None:
+        classified = changes.withColumn("action", F.lit("add"))
+        current = spark.createDataFrame([], changes.drop("action").schema)
+    else:
+        current = dedup_current(current, key=key, order_col=key)
+        classified = classify_changes(changes, current, key=key)
+    merged = apply_changes(current, classified, key=key)
+    tally = classified.groupBy("action").agg(F.count("*").alias("n"))
+    return merged, spark.createDataFrame(tally.collect(), tally.schema)
+
+
 class ParquetTable:
     """Minimal transactional table: parquet directory + atomic swap.
 
@@ -274,12 +303,7 @@ class ParquetTable:
     def _commit(self, df: DataFrame) -> None:
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(staging)
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(staging, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        _swap_dir(staging, self.path)
 
     def write(self, df: DataFrame, overwrite: bool = False) -> None:
         """M2 — create-or-replace. Without overwrite, an existing table
@@ -300,12 +324,7 @@ class ParquetTable:
             raise FileExistsError(
                 f"{self.path} already exists; use overwrite=True or append_dir()"
             )
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(src, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        _swap_dir(src, self.path)
 
     def append_dir(self, src: str) -> None:
         """Directory-append: move the new data files into the table
@@ -361,21 +380,10 @@ class ParquetTable:
         reference's summary (vfrogr.py:617-627). O(table) per batch —
         the uniform-commit stand-in; BucketedParquetTable below is the
         O(delta) layout."""
-        if not self.exists():
-            classified = changes.withColumn("action", F.lit("add"))
-            merged = apply_changes(
-                self.spark.createDataFrame([], changes.drop("action").schema),
-                classified,
-                key=key,
-            )
-        else:
-            current = dedup_current(self.read(), key=key, order_col=key)
-            classified = classify_changes(changes, current, key=key)
-            merged = apply_changes(current, classified, key=key)
-        tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-        tally_rows = tally.collect()
+        current = self.read() if self.exists() else None
+        merged, tally = _merge_pass(self.spark, current, changes, key)
         self._commit(merged)
-        return self.spark.createDataFrame(tally_rows, tally.schema)
+        return tally
 
 
 class BucketedParquetTable:
@@ -416,15 +424,13 @@ class BucketedParquetTable:
         if self.exists() and not overwrite:
             raise FileExistsError(f"{self.path} already exists; use overwrite=True")
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
+        self._write_buckets(df, staging)
+        _swap_dir(staging, self.path)
+
+    def _write_buckets(self, df: DataFrame, path: str) -> None:
         df.withColumn("__bucket", self._bucket()).write.mode("overwrite").partitionBy(
             "__bucket"
-        ).parquet(staging)
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(staging, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        ).parquet(path)
 
     def merge(self, changes: DataFrame, key: str | None = None) -> DataFrame:
         key = key or self.key
@@ -433,23 +439,15 @@ class BucketedParquetTable:
                 f"table is bucketed by {self.key!r}; cannot merge on {key!r}"
             )
         if not self.exists():
-            classified = changes.withColumn("action", F.lit("add"))
-            merged = apply_changes(
-                self.spark.createDataFrame([], changes.drop("action").schema),
-                classified,
-                key=key,
-            )
-            tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-            tally_rows = tally.collect()
+            merged, tally = _merge_pass(self.spark, None, changes, key)
             self.write(merged)
-            return self.spark.createDataFrame(tally_rows, tally.schema)
+            return tally
         buckets = sorted(
             r["b"]
             for r in changes.select(self._bucket().alias("b")).distinct().collect()
         )
         if not buckets:
-            empty = self.spark.createDataFrame([], "action string, n long")
-            return empty
+            return self.spark.createDataFrame([], "action string, n long")
         # keys hash to exactly one bucket, so classification against the
         # touched-bucket slice equals classification against the full
         # table — rows elsewhere cannot share a key with any change
@@ -458,25 +456,11 @@ class BucketedParquetTable:
             .where(F.col("__bucket").isin([int(b) for b in buckets]))
             .drop("__bucket")
         )
-        current = dedup_current(cur, key=key, order_col=key)
-        classified = classify_changes(changes, current, key=key)
-        merged = apply_changes(current, classified, key=key)
-        tally = classified.groupBy("action").agg(F.count("*").alias("n"))
-        tally_rows = tally.collect()
+        merged, tally = _merge_pass(self.spark, cur, changes, key)
         staging = f"{self.path}.__staging_{uuid.uuid4().hex[:8]}"
-        merged.withColumn("__bucket", self._bucket()).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(staging)
-        tag = uuid.uuid4().hex[:8]
+        self._write_buckets(merged, staging)
         for b in buckets:
-            src = os.path.join(staging, f"__bucket={int(b)}")
-            dst = os.path.join(self.path, f"__bucket={int(b)}")
-            old = f"{dst}.__old_{tag}"
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            if os.path.exists(src):
-                os.rename(src, dst)
-            if os.path.exists(old):
-                shutil.rmtree(old)
+            part = f"__bucket={int(b)}"
+            _swap_dir(os.path.join(staging, part), os.path.join(self.path, part))
         shutil.rmtree(staging, ignore_errors=True)
-        return self.spark.createDataFrame(tally_rows, tally.schema)
+        return tally

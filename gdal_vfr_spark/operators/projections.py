@@ -91,22 +91,12 @@ def align_schema(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*columns)
 
 
-def lowercase_layer_names(name: str, schema: str | None = None) -> str:
-    """P7 + F6 — output table naming: lowercase, `vfr_` prefix when the
-    schema starts with a digit (vfrogr.py:460-462,:976-978)."""
-    n = name.lower()
-    if schema and schema[:1].isdigit():
-        return f"vfr_{schema.lower()}.{n}"
-    return f"{schema.lower()}.{n}" if schema else n
-
-
 def layer_output_name_expr(name_col, schema_col=None):
-    """P7 + F6 (+ M4's per-file schema naming, vfrogr.py:975-978) as a
-    Catalyst expression — the distributed twin of
-    lowercase_layer_names for manifest-sized DataFrames: lowercase the
-    layer name; when a schema is present prepend `schema.`, with a
-    `vfr_` prefix whenever the schema starts with a digit (PG schema
-    names cannot)."""
+    """P7 + F6 — output table naming (vfrogr.py:460-462), plus M4's
+    per-file schema naming (vfrogr.py:975-978), as a Catalyst
+    expression: lowercase the layer name; when a schema is present
+    (non-NULL, non-empty) prepend `schema.`, with a `vfr_` prefix
+    whenever the schema starts with a digit (PG schema names cannot)."""
     n = F.lower(name_col)
     if schema_col is None:
         return n

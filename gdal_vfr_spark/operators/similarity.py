@@ -291,7 +291,9 @@ def _kmeans_iter_partials(
                     m = d < best_d
                     best_d = np.where(m, d, best_d)
                     best = np.where(m, j, best)
-            Q = np.floor(E * scale).astype(np.int64)
+            # a null element arrives as NaN: it joins no fixed-point sum
+            # (as DuckDB's sum skips a NULL) but its vector still counts
+            Q = np.floor(np.where(np.isfinite(E), E, 0.0) * scale).astype(np.int64)
             for j in range(k):
                 mask = best == j
                 if mask.any():
@@ -340,7 +342,12 @@ def kmeans_centroids(
     is irrelevant to a coarse quantizer. Collecting k*(dim+1) numbers
     per round to the driver is the standard distributed-kmeans shape
     (k=4096, dim=1024 is still <50 MB at 100 TB corpus scale).
-    Empty clusters keep their previous centroid. The centroids equal
+    Empty clusters keep their previous centroid. A null (or other
+    non-finite) element of a non-seed vector is left out of its
+    position's sum while the vector still counts toward the member
+    count, like DuckDB's `sum` skipping a NULL; every distance of such
+    a vector is NaN, so it joins cid 0 (the oracle's NULL distances tie
+    and fall back to the smallest cid). The centroids equal
     the DuckDB twin's unroll of the same Lloyd iterations
     (`_duck_lloyd_af_ctes`) bit for bit (tests/test_dedup_text.py); the
     ann_ivf_topk, ann_ivf_indexed and dedup_semantic oracles
@@ -537,13 +544,8 @@ def cosine_near_dup_pairs(
     the 2048-row block (2048^2 float64 ~ 32 MB), so an oversized
     bucket degrades to more block iterations, never OOM."""
     planes = random_hyperplanes(dim, n_planes, seed)
-    # per-row norm before the self-join: inside a bucket of size m each
-    # vector otherwise recomputes its norm fold m-1 times (bit-identical
-    # either way; cosine = dot / (na * nb) like near_dup_pairs_exact)
-    keyed = (
-        df.select(id_col, vec_col)
-        .withColumn("bucket", srp_bucket_expr(vec_col, planes))
-        .withColumn("__n", norm_expr(F.col(vec_col)))
+    keyed = df.select(id_col, vec_col).withColumn(
+        "bucket", srp_bucket_expr(vec_col, planes)
     )
     id_dt = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_dt}, id_b {id_dt}, cosine double"
@@ -611,7 +613,7 @@ def cosine_near_dup_pairs(
             }
         )
 
-    return keyed.drop("__n").groupBy("bucket").applyInPandas(
+    return keyed.groupBy("bucket").applyInPandas(
         lambda pdf: _bucket_pairs(pdf), schema=out_schema
     )
 

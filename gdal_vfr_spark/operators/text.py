@@ -3,7 +3,7 @@ scoring, token counting, document fingerprinting.
 
 Catalyst expressions or Arrow kernels over the shared tokenizer
 contract (functions.text_expr.tokens_expr) — each has an exact
-DuckDB-SQL twin in __spark_entry__.py, compared by tests/test_oracle.py.
+DuckDB-SQL twin in duck_sql.py, compared by tests/test_oracle.py.
 Heuristics are deliberately simple/deterministic (n-gram/stopword
 evidence), not model-based: the engine ships no ML runtime, and
 determinism is what the oracle gate needs.
@@ -51,7 +51,7 @@ def with_lang_id(
     set lookups, and the argmax breaks ties by language-code order;
     zero evidence (empty or null text) gives 'und'. Stopword hits are
     exact integer counts, so the result equals the DuckDB twin
-    (`_duck_lang_case` in __spark_entry__.py) exactly: tests/test_oracle.py
+    (`_duck_lang_case` in duck_sql.py) exactly: tests/test_oracle.py
     checks the text_lang query and tests/test_dedup_text.py the crafted
     null / empty / digits-only rows. Only the text column crosses the
     boundary (a Catalyst higher-order array_contains chain measured
@@ -100,7 +100,7 @@ def with_quality(
     BigDecimal half-up on the shortest repr vs DuckDB's multiply trick
     on the binary double); the explicit form is the same float64 ops
     in both engines, so it is bit-stable. The score equals the DuckDB
-    twin (`_duck_quality_expr` in __spark_entry__.py) bit-for-bit:
+    twin (`_duck_quality_expr` in duck_sql.py) bit-for-bit:
     tests/test_oracle.py checks the text_quality query and
     tests/test_dedup_text.py the crafted null / empty / digits-only /
     150-token rows. A null text scores 0.4, as in the oracle: the
@@ -474,7 +474,7 @@ def repetition_stats(
     shuffled ~12 gram rows per token twice — 19.7 s at sf1.0 vs the
     per-doc counter's integer arithmetic). Every budget is an integer
     computed from exact token counts, so the result equals the DuckDB
-    twin (`_duck_repetition_sql` in __spark_entry__.py, the
+    twin (`_duck_repetition_sql` in duck_sql.py, the
     tagged-explode + two-aggregate shape) exactly: tests/test_oracle.py
     checks the text_repetition query and tests/test_dedup_text.py the
     crafted docs. Documents with zero tokens (or null text) emit no

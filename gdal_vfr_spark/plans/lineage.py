@@ -120,25 +120,27 @@ def run_stage_resumable(
     )
     if stage_input_path is not None:
         # Staged-layout reuse is guarded by a FINGERPRINT, not just
-        # _SUCCESS (round-6 correctness fix): a re-run with the same
-        # stage_input_path but different pages / prefix_res / tile_res
-        # would otherwise silently read the stale layout and produce
-        # wrong per-unit output. The fingerprint covers the staging
-        # parameters, the keyed schema, and the input row count; any
-        # mismatch re-stages with mode=overwrite. The count is one
-        # narrow scan of the input per call — the price of detecting a
-        # changed input behind an unchanged path. (The existence checks
-        # are local-filesystem only; for HDFS/S3 staging, front this
-        # with the Hadoop FileSystem API or a catalog table.)
+        # _SUCCESS: a re-run with the same stage_input_path but
+        # different pages / prefix_res / tile_res would otherwise
+        # silently read the stale layout and produce wrong per-unit
+        # output. The fingerprint covers the staging parameters, the
+        # keyed schema, and the input's row count and order-free
+        # content hash, so changed content behind an unchanged path
+        # re-stages even at an unchanged count (one aggregate: one
+        # narrow scan of the input per call). The existence checks are
+        # local-filesystem only; for HDFS/S3 staging, front this with
+        # the Hadoop FileSystem API or a catalog table.
         import json
         import os
 
+        n_rows, h = pages.agg(F.count("*"), content_hash_expr(pages)).first()
         fp = json.dumps(
             {
                 "prefix_res": prefix_res,
                 "tile_res": tile_res,
                 "schema": keyed.schema.simpleString(),
-                "n_rows": pages.count(),
+                "n_rows": n_rows,
+                "content_hash": h,
             },
             sort_keys=True,
         )

@@ -6,7 +6,8 @@ The reference resolves `--type ST_UKSH --date 20240601:20240603` into
 concrete VFR file names (date defaulting, interval expansion, URL
 prefixing). Here the same resolution produces a *manifest DataFrame* of
 batch ids that drives the per-batch loop — no network: at runtime
-batches are pre-landed tables/partitions.
+batches are pre-landed tables/partitions. The F8 file-name rule is one
+table that `resolve_file_names` and `file_name_expr` both read.
 """
 
 from __future__ import annotations
@@ -46,24 +47,29 @@ def expand_date_interval(spec: str, today: dt.date | None = None) -> list[dt.dat
     return [start + dt.timedelta(days=i) for i in range((end - start).days + 1)]
 
 
-def resolve_file_names(
-    vfr_type: str, dates: list[dt.date], special: bool = False
-) -> list[str]:
-    """`{date}_{type}.xml.gz|zip` synthesis (parse.py:74-79) with the
-    soucasna/specialni routing for UVOH files (vfrogr.py:346-350)."""
-    ext = "xml.zip" if special or vfr_type.upper().endswith("UVOH") else "xml.gz"
-    prefix = "specialni" if special or vfr_type.upper().endswith("UVOH") else "soucasna"
-    return [f"{prefix}/{d.strftime('%Y%m%d')}_{vfr_type}.{ext}" for d in dates]
+# F8 — file-name synthesis `{prefix}{date}_{type}{ext}` (parse.py:74-79):
+# types ending in UVOH live under specialni/ as .xml.zip (vfrogr.py:
+# 346-350), every other type under soucasna/ as .xml.gz. The driver list
+# and the Catalyst column both read this one rule.
+SPECIAL_TYPE_SUFFIX = "UVOH"
+SPECIAL_FILE = ("specialni/", ".xml.zip")
+CURRENT_FILE = ("soucasna/", ".xml.gz")
+
+
+def resolve_file_names(vfr_type: str, dates: list[dt.date]) -> list[str]:
+    """F8 for one type over a date list (the manifest's batch ids)."""
+    special = vfr_type.upper().endswith(SPECIAL_TYPE_SUFFIX)
+    prefix, ext = SPECIAL_FILE if special else CURRENT_FILE
+    return [f"{prefix}{d.strftime('%Y%m%d')}_{vfr_type}{ext}" for d in dates]
 
 
 def file_name_expr(type_col, date_col):
-    """F8 — extension/prefix dispatch as a Catalyst expression, the
-    distributed twin of resolve_file_names (parse.py:74-79 synthesis;
-    UVOH routing vfrogr.py:346-350): UVOH types live under `specialni/`
-    as `.xml.zip`, everything else under `soucasna/` as `.xml.gz`."""
-    is_special = F.upper(type_col).endswith("UVOH")
-    prefix = F.when(is_special, F.lit("specialni/")).otherwise(F.lit("soucasna/"))
-    ext = F.when(is_special, F.lit(".xml.zip")).otherwise(F.lit(".xml.gz"))
+    """F8 as a Catalyst column over (type, date) columns."""
+    special = F.upper(type_col).endswith(SPECIAL_TYPE_SUFFIX)
+    prefix, ext = (
+        F.when(special, F.lit(s)).otherwise(F.lit(c))
+        for s, c in zip(SPECIAL_FILE, CURRENT_FILE)
+    )
     return F.concat(prefix, F.date_format(date_col, "yyyyMMdd"), F.lit("_"), type_col, ext)
 
 

@@ -1,10 +1,27 @@
-"""As-of join: window (JVM) formulation vs cogrouped-pandas reference
-implementation — identical output on deterministic data with ties,
-missing keys, and keys with no earlier right row."""
+"""As-of join: the window (JVM) formulation vs DuckDB's native
+`ASOF LEFT JOIN` on the same rows — identical output on deterministic
+data with ties, missing keys, and keys with no earlier right row."""
 
+import duckdb
 from pyspark.sql import functions as F
 
-from gdal_vfr_spark.operators.asof import asof_join, asof_join_window
+from gdal_vfr_spark.operators.asof import asof_join
+
+
+def _duck_asof(left, right):
+    """(id, key, t, val) rows of DuckDB's backward as-of left join."""
+    con = duckdb.connect()
+    try:
+        con.register("l", left.toPandas())
+        con.register("r", right.toPandas())
+        return sorted(
+            con.sql(
+                "SELECT l.id, l.key, l.t, r.val FROM l ASOF LEFT JOIN r"
+                " ON l.key = r.key AND l.t >= r.t"
+            ).fetchall()
+        )
+    finally:
+        con.close()
 
 
 def _fixtures(spark):
@@ -31,26 +48,24 @@ def _fixtures(spark):
 
 def test_window_matches_cogroup(spark):
     left, right = _fixtures(spark)
-    a = asof_join(left, right, on="t", by="key", right_cols=["val"])
-    b = asof_join_window(left, right, on="t", by="key", right_cols=["val"])
-    rows_a = sorted(tuple(r) for r in a.select("id", "key", "t", "val").collect())
-    rows_b = sorted(tuple(r) for r in b.select("id", "key", "t", "val").collect())
-    assert rows_a == rows_b
-    assert len(rows_b) == 6
+    out = asof_join(left, right, on="t", by="key", right_cols=["val"])
+    got = sorted(tuple(r) for r in out.select("id", "key", "t", "val").collect())
+    assert got == _duck_asof(left, right)
+    assert len(got) == 6
 
 
 def test_window_semantics(spark):
     left, right = _fixtures(spark)
     got = {
         r["id"]: r["val"]
-        for r in asof_join_window(left, right, on="t", by="key").collect()
+        for r in asof_join(left, right, on="t", by="key").collect()
     }
     assert got == {1: 100, 2: 101, 3: 102, 4: 200, 5: None, 6: None}
 
 
 def test_window_no_python_boundary(spark):
     left, right = _fixtures(spark)
-    plan = asof_join_window(left, right, on="t", by="key")._jdf.queryExecution().executedPlan().toString()
+    plan = asof_join(left, right, on="t", by="key")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "FlatMapCoGroupsInPandas" not in plan
 
 
@@ -65,8 +80,6 @@ def test_larger_parity(spark):
         ((F.col("id") * 104729) % 1000).alias("t"),
         (F.col("id") + 10000).alias("val"),
     ).groupBy("key", "t").agg(F.max("val").alias("val"))
-    a = asof_join(left, right, on="t", by="key", right_cols=["val"])
-    b = asof_join_window(left, right, on="t", by="key", right_cols=["val"])
-    rows_a = sorted(tuple(r) for r in a.collect())
-    rows_b = sorted(tuple(r) for r in b.collect())
-    assert rows_a == rows_b
+    out = asof_join(left, right, on="t", by="key", right_cols=["val"])
+    got = sorted(tuple(r) for r in out.select("id", "key", "t", "val").collect())
+    assert got == _duck_asof(left, right)

@@ -1,3 +1,5 @@
+import os
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -6,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
+from gdal_vfr_spark import duck_sql
 from gdal_vfr_spark.operators import dedup, multimodal, similarity, text
 
 
@@ -151,11 +154,35 @@ def test_ivf_topk_recall_and_partition_invariance(spark):
     c2 = similarity.kmeans_centroids(emb.repartition(13), k=8, n_iter=2)
     assert c1 == c2
     # ... and bit-identical to the DuckDB Lloyd unroll's centroids
-    ctes, cf = entry._duck_lloyd_af_ctes(8, 2, 64)
+    ctes, cf = duck_sql._duck_lloyd_af_ctes(8, 2, 64)
     want = _duck(
         f"WITH {', '.join(ctes)} SELECT cid, c FROM {cf} ORDER BY cid", embeddings=emb
     )
     assert c1 == [(int(i), [float(x) for x in c]) for i, c in zip(want["cid"], want["c"])]
+
+
+def test_kmeans_centroids_skip_null_elements(spark):
+    """A null element (NaN in the kernel) is left out of its position's
+    fixed-point sum while its vector still counts, bit-identical to the
+    DuckDB Lloyd unroll, where `sum` skips the NULL."""
+    # the fixture tables live in the testdata directory beside the checkout
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    emb = spark.read.parquet(os.path.join(root, "testdata", "sf0.001", "embeddings.parquet"))
+    holes = emb.withColumn(
+        "embedding",
+        F.when(
+            # an odd count of holes (the unmasked kernel's INT64_MIN
+            # cancels in pairs), none of them among the 8 seed ids
+            F.col("vec_id").isin(10, 17, 24),
+            F.expr("transform(embedding, (x, i) -> IF(i = 5, NULL, x))"),
+        ).otherwise(F.col("embedding")),
+    )
+    got = similarity.kmeans_centroids(holes, k=8, n_iter=2)
+    ctes, cf = duck_sql._duck_lloyd_af_ctes(8, 2, 64)
+    want = _duck(
+        f"WITH {', '.join(ctes)} SELECT cid, c FROM {cf} ORDER BY cid", embeddings=holes
+    )
+    assert got == [(int(i), [float(x) for x in c]) for i, c in zip(want["cid"], want["c"])]
 
 
 def test_ivf_indexed_prunes_partitions(spark, tmp_path):
@@ -312,7 +339,7 @@ def test_minhash_fast_equals_expr(spark, docs):
         r["doc_id"]: r["minhash"]
         for r in dedup.with_minhash(docs).select("doc_id", "minhash").collect()
     }
-    sig = _duck(f"WITH {entry._duck_sig_bands_cte()} SELECT * FROM sig", documents=docs)
+    sig = _duck(f"WITH {duck_sql._duck_sig_bands_cte()} SELECT * FROM sig", documents=docs)
     want = {
         int(r["doc_id"]): [int(r[f"s{i}"]) for i in range(16)]
         for r in sig.to_dict("records")
@@ -329,7 +356,7 @@ def test_simhash_fast_equals_expr(spark, docs):
             r["doc_id"]: r["simhash"]
             for r in dedup.with_simhash(nonempty, bits=bits).collect()
         }
-        want = _duck(entry._duck_simhash_sql(bits), documents=nonempty)
+        want = _duck(duck_sql._duck_simhash_sql(bits), documents=nonempty)
         assert fast == {
             int(d): int(h) for d, h in zip(want["doc_id"], want["simhash"])
         }, bits
@@ -338,7 +365,7 @@ def test_simhash_fast_equals_expr(spark, docs):
 def test_with_lang_id_matches_expr(spark, docs):
     """with_lang_id equals its DuckDB twin expression (_duck_lang_sql)
     on the docs rows, the empty doc included."""
-    a = _duck(entry._duck_lang_sql(), documents=docs)
+    a = _duck(duck_sql._duck_lang_sql(), documents=docs)
     b = text.with_lang_id(docs).select("doc_id", "lang_pred")
     assert dict(zip(a["doc_id"].astype(int), a["lang_pred"])) == {
         r["doc_id"]: r["lang_pred"] for r in b.collect()
@@ -348,7 +375,7 @@ def test_with_lang_id_matches_expr(spark, docs):
 def test_with_quality_matches_expr(spark, docs):
     """with_quality equals its DuckDB twin expression (_duck_quality_sql)
     on the docs rows, exact float equality."""
-    a = _duck(entry._duck_quality_sql(), documents=docs)
+    a = _duck(duck_sql._duck_quality_sql(), documents=docs)
     b = text.with_quality(docs).select("doc_id", "quality")
     assert {int(d): float(q) for d, q in zip(a["doc_id"], a["quality"])} == {
         r["doc_id"]: r["quality"] for r in b.collect()
@@ -596,8 +623,8 @@ def test_word_shingles_expr_reference(spark):
 
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     duck = _duck(
-        f"""SELECT doc_id, {entry._duck_word_shingles('toks', 13)} AS sh
-            FROM (SELECT doc_id, {entry._duck_tokens('text')} AS toks FROM documents)""",
+        f"""SELECT doc_id, {duck_sql._duck_word_shingles('toks', 13)} AS sh
+            FROM (SELECT doc_id, {duck_sql._duck_tokens('text')} AS toks FROM documents)""",
         documents=df,
     )
     # DuckDB's list_distinct does not keep first-seen order, so the
@@ -700,8 +727,8 @@ def test_word_shingle_rows_udf_expr_parity(spark, docs):
         )
         want = _duck(
             f"""SELECT doc_id, substr(md5(sh), 1, 16) AS sh FROM (
-                  SELECT doc_id, unnest({entry._duck_word_shingles('toks', n)}) AS sh
-                  FROM (SELECT doc_id, {entry._duck_tokens('text')} AS toks
+                  SELECT doc_id, unnest({duck_sql._duck_word_shingles('toks', n)}) AS sh
+                  FROM (SELECT doc_id, {duck_sql._duck_tokens('text')} AS toks
                         FROM documents))""",
             documents=src,
         )
@@ -1191,7 +1218,7 @@ def test_cosine_near_dup_pairs_kernel_parity(spark):
         df, threshold=0.3, dim=16, n_planes=1, block=16
     ).collect()
     want = _duck(
-        entry._duck_srp_near_dup_sql(threshold=0.3, n_planes=1, dim=16), embeddings=df
+        duck_sql._duck_srp_near_dup_sql(threshold=0.3, n_planes=1, dim=16), embeddings=df
     )
     f = {(r["id_a"], r["id_b"]): r["cosine"] for r in fast}
     s = {
@@ -1207,7 +1234,7 @@ def test_repetition_stats_arrow_equals_expr(spark, docs):
     # (_duck_repetition_sql, the tagged-explode shape) row for row
     # (integer-exact budgets)
     fast = text.repetition_stats(docs)
-    want = _duck(entry._duck_repetition_sql(), documents=docs)[fast.columns]
+    want = _duck(duck_sql._duck_repetition_sql(), documents=docs)[fast.columns]
     got = sorted(map(tuple, fast.collect()))
     assert got == sorted(tuple(int(v) for v in r) for r in want.itertuples(index=False))
     assert len(got) == 6  # empty doc dropped
@@ -1231,12 +1258,12 @@ def test_quality_lang_arrow_equals_expr(spark, docs):
     crafted = spark.createDataFrame(rows, ["doc_id", "text"])
     for df in (docs, crafted):
         fq = {r["doc_id"]: r["quality"] for r in text.with_quality(df).collect()}
-        wq = _duck(entry._duck_quality_sql(), documents=df)
+        wq = _duck(duck_sql._duck_quality_sql(), documents=df)
         assert fq == {
             int(d): float(q) for d, q in zip(wq["doc_id"], wq["quality"])
         }  # exact float equality
         fl = {r["doc_id"]: r["lang_pred"] for r in text.with_lang_id(df).collect()}
-        wl = _duck(entry._duck_lang_sql(), documents=df)
+        wl = _duck(duck_sql._duck_lang_sql(), documents=df)
         assert fl == dict(zip(wl["doc_id"].astype(int), wl["lang_pred"]))
     assert fq[6] == 0.4 and fl[6] == "und"  # null text
 
@@ -1255,7 +1282,7 @@ def test_int8_topk_matmul_equals_expr(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     fast = similarity.int8_topk(corpus, q, k=5).collect()
-    want = _duck(entry._duck_int8_topk_sql(k=5, n_queries=4), embeddings=corpus)
+    want = _duck(duck_sql._duck_int8_topk_sql(k=5, n_queries=4), embeddings=corpus)
     assert sorted(map(tuple, fast)) == sorted(
         tuple(int(v) for v in r) for r in want.itertuples(index=False)
     )

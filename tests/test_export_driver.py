@@ -136,23 +136,22 @@ def test_resolve_options_precedence(tmp_path):
 
 
 def test_layer_output_name_expr_parity(spark):
-    """P7/F6 Catalyst twin vs lowercase_layer_names across the schema
-    branches (none, plain, digit-leading)."""
+    """P7/F6 naming across the schema branches (none, plain,
+    digit-leading, empty) against the reference's literal names."""
     from pyspark.sql import functions as F
 
-    from gdal_vfr_spark.operators.projections import (
-        layer_output_name_expr,
-        lowercase_layer_names,
-    )
+    from gdal_vfr_spark.operators.projections import layer_output_name_expr
 
-    cases = [("StavebniObjekty", None), ("Ulice", "RUIAN_Main"),
-             ("Parcely", "20240630_ob"), ("AdresniMista", "")]
-    df = spark.createDataFrame(cases, "name string, schema string").select(
-        "name", "schema",
-        layer_output_name_expr(F.col("name"), F.col("schema")).alias("out"),
-    )
-    for r in df.collect():
-        assert r["out"] == lowercase_layer_names(r["name"], r["schema"] or None)
+    cases = [
+        ("StavebniObjekty", None, "stavebniobjekty"),
+        ("Ulice", "RUIAN_Main", "ruian_main.ulice"),
+        ("Parcely", "20240630_ob", "vfr_20240630_ob.parcely"),
+        ("AdresniMista", "", "adresnimista"),
+    ]
+    df = spark.createDataFrame(
+        [(n, sc) for n, sc, _ in cases], "name string, schema string"
+    ).select(layer_output_name_expr(F.col("name"), F.col("schema")).alias("out"))
+    assert [r["out"] for r in df.collect()] == [want for *_, want in cases]
     # no-schema overload
     one = spark.createDataFrame([("Obce",)], "name string").select(
         layer_output_name_expr(F.col("name")).alias("out")

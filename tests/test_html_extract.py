@@ -5,8 +5,7 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry
-from gdal_vfr_spark import datagen
+from gdal_vfr_spark import datagen, duck_sql
 from gdal_vfr_spark.functions import html_text
 
 CASES = [
@@ -41,7 +40,7 @@ def _duck_extract(rows):
         con.register(
             "pages", pd.DataFrame({"i": [i for i, _ in rows], "html": [h.decode() for _, h in rows]})
         )
-        return dict(con.sql(f"SELECT i, {entry._duck_extract_expr()} FROM pages").fetchall())
+        return dict(con.sql(f"SELECT i, {duck_sql._duck_extract_expr()} FROM pages").fetchall())
     finally:
         con.close()
 

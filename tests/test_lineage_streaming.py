@@ -124,10 +124,9 @@ def test_lineage_staged_input_partition_pruned(spark, tmp_path):
 
 
 def test_lineage_staged_fingerprint_restages(spark, tmp_path):
-    """Round-6 correctness guard: reusing a staged layout under the
-    same path with DIFFERENT parameters or a different input must
-    re-stage (the old behavior keyed reuse on _SUCCESS alone and
-    silently read the stale layout)."""
+    """Reusing a staged layout under the same path with DIFFERENT
+    parameters or a different input — even one of the same row count —
+    must re-stage instead of silently reading the stale layout."""
     pages = datagen.gen_webpages(spark, n=600, seed=33).where("lon is not null")
 
     def transform(part):
@@ -177,6 +176,17 @@ def test_lineage_staged_fingerprint_restages(spark, tmp_path):
         prefix_res=6, stage_input_path=str(staged),
     )
     assert (staged / "_SUCCESS").stat().st_mtime != mtime2
+    # same row count, different content -> re-staged too: the
+    # fingerprint folds in the order-free content hash
+    mtime3 = (staged / "_SUCCESS").stat().st_mtime
+    edited = pages2.withColumn("url", F.concat(F.col("url"), F.lit("?v=2")))
+    run_stage_resumable(
+        spark, edited, "x", transform, LineageLog(spark, str(tmp_path / "lin_e")),
+        str(tmp_path / "out_e"), prefix_res=6, stage_input_path=str(staged),
+    )
+    assert (staged / "_SUCCESS").stat().st_mtime != mtime3
+    got = spark.read.parquet(str(tmp_path / "out_e/unit=*")).select("url").toPandas()
+    assert sorted(got["url"]) == sorted(edited.select("url").toPandas()["url"])
 
 
 def test_hot_keys_and_salted_join(spark):
@@ -380,21 +390,26 @@ def test_streaming_sessionize_state_spans_batches(spark, tmp_path):
 
 
 def test_file_name_expr_matches_python(spark):
-    """F8 Catalyst twin vs resolve_file_names on both routing branches."""
+    """F8 as a column and as the driver list, on both routing branches
+    (UVOH in either case => specialni/.xml.zip)."""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
     from gdal_vfr_spark.sources.manifest import file_name_expr, resolve_file_names
 
-    cases = [("ST_UKSH", dt.date(2024, 6, 30)), ("ST_UVOH", dt.date(2024, 7, 1)),
-             ("OB_530743_UKSH", dt.date(2024, 1, 31))]
+    cases = [
+        ("ST_UKSH", dt.date(2024, 6, 30), "soucasna/20240630_ST_UKSH.xml.gz"),
+        ("ST_UVOH", dt.date(2024, 7, 1), "specialni/20240701_ST_UVOH.xml.zip"),
+        ("OB_530743_UKSH", dt.date(2024, 1, 31), "soucasna/20240131_OB_530743_UKSH.xml.gz"),
+        ("st_uvoh", dt.date(2024, 2, 29), "specialni/20240229_st_uvoh.xml.zip"),
+    ]
     df = spark.createDataFrame(
-        [(t, d) for t, d in cases], "vfr_type string, d date"
+        [(t, d) for t, d, _ in cases], "vfr_type string, d date"
     ).select(file_name_expr(F.col("vfr_type"), F.col("d")).alias("name"))
-    got = [r["name"] for r in df.collect()]
-    want = [resolve_file_names(t, [d])[0] for t, d in cases]
-    assert got == want
+    want = [name for *_, name in cases]
+    assert [r["name"] for r in df.collect()] == want
+    assert [resolve_file_names(t, [d])[0] for t, d, _ in cases] == want
 
 
 def test_retry_plan_semantics(spark):

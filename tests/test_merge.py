@@ -19,11 +19,36 @@ def obce_state(spark, seed=42):
     )
 
 
+# (batch name, is a change batch) — M1's rule (vfrogr.py:992-1003):
+# the last `_` component of the file name, directories and extensions
+# stripped, starts with 'Z' in either case
+MODE_CASES = [
+    ("20240707_ST_ZKSH.xml.gz", True),
+    ("20240630_OB_500011_UKSH.xml.gz", False),
+    ("/some/dir/20140707_ST_UVOH.xml.zip", False),
+    ("soucasna/20240601_OB_12345_ZKSH.xml.gz", True),
+    ("20240630_ST_UKSH.xml.gz", False),
+    ("20240707_st_zksh.xml.gz", True),  # lower case
+    ("/data/Z_dir/20240630_ST_UKSH.xml.gz", False),  # Z only in a directory
+    ("20240630_ST_UKSH.Z_x.gz", False),  # Z only after the first dot
+    ("a.b/c_Zd", True),  # dot only in a directory
+    ("/d/.ZKSH", False),  # empty stem
+    ("20240707_ST_ZKSH_", False),  # empty last component
+    ("ZKSH", True),
+    ("", False),
+]
+
+
+def _want_mode(is_change, append):
+    if is_change:
+        return M.MODE_CHANGE
+    return M.MODE_APPEND if append else M.MODE_WRITE
+
+
 def test_decide_mode():
-    assert M.decide_mode("20240707_ST_ZKSH.xml.gz") == M.MODE_CHANGE
-    assert M.decide_mode("20240630_OB_500011_UKSH.xml.gz") == M.MODE_WRITE
-    assert M.decide_mode("20240630_OB_500011_UKSH.xml.gz", append_flag=True) == M.MODE_APPEND
-    assert M.decide_mode("/some/dir/20140707_ST_UVOH.xml.zip") == M.MODE_WRITE
+    for append in (False, True):
+        for name, is_change in MODE_CASES:
+            assert M.decide_mode(name, append_flag=append) == _want_mode(is_change, append), name
 
 
 def test_write_append_overwrite_passes(spark, tmp_path):
@@ -106,26 +131,33 @@ def test_assign_fids_deterministic(spark):
 
 
 def test_assign_fids_distributed_matches_window(spark):
-    """Scale-safe per-partition-offset FIDs == global-window FIDs on
-    unique keys, regardless of input order or partition count, and the
-    plan carries no single-partition global sort."""
+    """Per-partition-offset FIDs == DuckDB's `row_number() OVER (ORDER
+    BY gml_id)` on unique keys, regardless of input order or partition
+    count, and the plan carries no single-partition global sort."""
+    import duckdb
+
     state = obce_state(spark)
-    want = sorted(
-        map(tuple, M.assign_fids(state).select("gml_id", "fid").collect())
-    )
+    con = duckdb.connect()
+    try:
+        con.register("state", state.toPandas())
+        want = sorted(
+            con.sql(
+                "SELECT gml_id, row_number() OVER (ORDER BY gml_id) AS fid FROM state"
+            ).fetchall()
+        )
+    finally:
+        con.close()
     for nparts in (1, 3, 16):
         got = sorted(
             map(
                 tuple,
-                M.assign_fids_distributed(
-                    state.orderBy(F.rand(11)), num_partitions=nparts
-                )
+                M.assign_fids(state.orderBy(F.rand(11)), num_partitions=nparts)
                 .select("gml_id", "fid")
                 .collect(),
             )
         )
         assert got == want, nparts
-    plan = M.assign_fids_distributed(state)._jdf.queryExecution().executedPlan().toString()
+    plan = M.assign_fids(state)._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
 
 
@@ -261,27 +293,20 @@ def test_append_schema_evolution(spark, tmp_path):
 
 
 def test_decide_mode_expr_parity(spark):
-    """The Catalyst M1 twin must agree with the Python decide_mode on
-    every name shape the reference produces (vfrogr.py:992-1003)."""
+    """The Catalyst column reads the same M1 pattern as decide_mode;
+    Java's regex engine must give the same modes on every case."""
     from pyspark.sql import functions as F
 
-    names = [
-        "20240707_ST_ZKSH.xml.gz",
-        "20240630_OB_500011_UKSH.xml.gz",
-        "/some/dir/20140707_ST_UVOH.xml.zip",
-        "soucasna/20240601_OB_12345_ZKSH.xml.gz",
-        "20240630_ST_UKSH.xml.gz",
-    ]
+    df = spark.createDataFrame([(n,) for n, _ in MODE_CASES], "name string")
     for append in (False, True):
-        df = spark.createDataFrame([(n,) for n in names], "name string")
         got = {
             r["name"]: r["mode"]
             for r in df.select(
                 "name", M.decide_mode_expr(F.col("name"), F.lit(append)).alias("mode")
             ).collect()
         }
-        for n in names:
-            assert got[n] == M.decide_mode(n, append_flag=append)
+        for name, is_change in MODE_CASES:
+            assert got[name] == _want_mode(is_change, append), name
 
 
 def test_forced_drop_and_copy_toggle_exprs(spark):
