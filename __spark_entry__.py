@@ -35,7 +35,6 @@ from gdal_vfr_spark.geo.knn import (  # noqa: E402
     LineKNNJoiner,
     PartitionedLineRangeJoiner,
     PartitionedPointRangeJoiner,
-    knn_join,
 )
 from gdal_vfr_spark.geo.pip import (  # noqa: E402
     PartitionedPIPJoiner,
@@ -455,6 +454,27 @@ def _tile_store_dir(prefix: str = "gvs_tiles_") -> str:
     return d
 
 
+def _stage_stream(prefix: str, batches) -> tuple[str, str]:
+    """Stage a stream's micro-batches in a fresh _tile_store_dir(prefix):
+    each DataFrame of `batches` becomes ONE parquet file
+    <dir>/src/0001.parquet, 0002.parquet, ... Names and mtimes both
+    increase with the batch number, so a file source's order is the
+    batch order. Returns (dir, source dir); the dir's unique basename
+    also names the stream's memory sink."""
+    import glob
+    import shutil
+
+    tmp = _tile_store_dir(prefix=prefix)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    for i, batch in enumerate(batches, start=1):
+        stage = os.path.join(tmp, f"stage{i}")
+        batch.coalesce(1).write.parquet(stage)
+        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+        shutil.move(part, os.path.join(src, f"{i:04d}.parquet"))
+    return tmp, src
+
+
 def q_geo_tile_bbox_read(spark, sf_dir):
     """M5 read path — partition-pruned bbox scan over the tile-
     partitioned layout (write_tiled once per session; read_tiles_bbox
@@ -536,29 +556,39 @@ def q_geo_shape_stats(spark, sf_dir):
     ).orderBy("kod")
 
 
+def _centers_joiner(spark):
+    """Point-target kNN joiner over the 10x10 municipality centers."""
+    return _joiner(spark, "centers", lambda: LineKNNJoiner.from_points(
+        spark.createDataFrame(
+            [
+                (500000 + iy * 10 + ix, 14.0 + (ix + 0.5) * 0.1, 49.5 + (iy + 0.5) * 0.1)
+                for iy in range(10)
+                for ix in range(10)
+            ],
+            "kod long, lon double, lat double",
+        ),
+        target_key="kod",
+    ))
+
+
 def q_geo_knn(spark, sf_dir):
     """J5 north-star — 3 nearest municipality centers per sampled page
     (k-ring expansion + certified merge); oracle = cross join + rank."""
     _ensure_shipped(spark)
-    import pandas as pd
-
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 100 == 1)
-    centers = pd.DataFrame(
-        [
-            {
-                "kod": 500000 + iy * 10 + ix,
-                "lon": 14.0 + (ix + 0.5) * 0.1,
-                "lat": 49.5 + (iy + 0.5) * 0.1,
-            }
-            for iy in range(10)
-            for ix in range(10)
-        ]
-    )
-    targets = spark.createDataFrame(centers)
-    out = knn_join(g, targets, k=3, target_key="kod", id_col="event_id")
+    out = _centers_joiner(spark).apply(g, k=3, id_col="event_id")
     return out.select(
         "event_id", F.col("neighbor_key").alias("kod"), (F.col("rank") + 1).cast("long").alias("rank")
     )
+
+
+def _knn_rows(out: DataFrame) -> DataFrame:
+    """(event_id, kod, 1-based rank) rows of a kNN result."""
+    return out.select(
+        "event_id",
+        F.col("neighbor_key").alias("kod"),
+        (F.col("rank") + 1).cast("long").alias("rank"),
+    ).orderBy("event_id", "rank")
 
 
 def q_geo_knn_lines(spark, sf_dir):
@@ -575,11 +605,7 @@ def q_geo_knn_lines(spark, sf_dir):
     # (round-6 measured negative result: a pre-sort localCheckpoint
     # barrier here was +0.1s — the kernel reads from a reusable
     # shuffle, so the sort sampler's re-run is already cheap)
-    return out.select(
-        "event_id",
-        F.col("neighbor_key").alias("kod"),
-        (F.col("rank") + 1).cast("long").alias("rank"),
-    ).orderBy("event_id", "rank")
+    return _knn_rows(out)
 
 
 def q_geo_range_join(spark, sf_dir):
@@ -961,9 +987,6 @@ def q_stream_change_merge(spark, sf_dir):
     batch 1 per key (last writer wins) — final per-status counts have
     an exact SQL twin."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import change_stream_merge
 
     o = _read(spark, sf_dir, "orders")
@@ -973,16 +996,8 @@ def q_stream_change_merge(spark, sf_dir):
     c2 = o.where(F.col("o_orderkey") % 5 == 0).select(
         F.col("o_orderkey").alias("gml_id"), F.lit("X2").alias("status")
     )
-    tmp = _tile_store_dir(prefix="gvs_stream_")
-    chg = os.path.join(tmp, "changes")
-    os.makedirs(chg)
-    for i, batch in enumerate((c1, c2), start=1):
-        stage = os.path.join(tmp, f"stage{i}")
-        batch.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        # name + mtime both increase with batch number, so the file
-        # source's order matches the reference's apply order
-        shutil.move(part, os.path.join(chg, f"{i:04d}.parquet"))
+    # the file source's order is the reference's apply order
+    tmp, chg = _stage_stream("gvs_stream_", (c1, c2))
     table = change_stream_merge(
         spark,
         chg,
@@ -996,9 +1011,6 @@ def q_stream_change_merge(spark, sf_dir):
     )
 
 
-_SDEDUP_SEQ = [0]
-
-
 def q_stream_dedup(spark, sf_dir):
     """§2.10 + dedup family — STATEFUL streaming exact-dedup
     (applyInPandasWithState): the document stream arrives as two files
@@ -1007,33 +1019,19 @@ def q_stream_dedup(spark, sf_dir):
     second batch. Exact oracle: min doc_id per md5 over the unioned
     stream input."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import streaming_exact_dedup
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     dups = docs.select((F.col("doc_id") + 1000).alias("doc_id"), "text")
-    tmp = _tile_store_dir(prefix="gvs_sdedup_")
-    src = os.path.join(tmp, "docs")
-    os.makedirs(src)
-    for i, batch in enumerate((docs, dups), start=1):
-        stage = os.path.join(tmp, f"stage{i}")
-        batch.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"{i:04d}.parquet"))
-    _SDEDUP_SEQ[0] += 1
+    tmp, src = _stage_stream("gvs_sdedup_", (docs, dups))
     out = streaming_exact_dedup(
         spark,
         src,
         schema=docs.schema,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
-        out_table=f"stream_dedup_{_SDEDUP_SEQ[0]}",
+        out_table=os.path.basename(tmp),
     )
     return out.orderBy("doc_id")
-
-
-_SMINH_SEQ = [0]
 
 
 def q_stream_minhash_dedup(spark, sf_dir):
@@ -1046,34 +1044,22 @@ def q_stream_minhash_dedup(spark, sf_dir):
     signatures/bands regenerated in SQL with earlier = (earlier batch,
     or smaller id in the same batch)."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import streaming_minhash_dedup
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     hist = docs.where(F.col("doc_id") % 3 != 0)
     batch = docs.where(F.col("doc_id") % 3 == 0)
-    tmp = _tile_store_dir(prefix="gvs_sminh_")
-    src = os.path.join(tmp, "docs")
-    os.makedirs(src)
-    for i, part_df in enumerate((hist, batch), start=1):
-        stage = os.path.join(tmp, f"stage{i}")
-        part_df.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"{i:04d}.parquet"))
-    _SMINH_SEQ[0] += 1
+    tmp, src = _stage_stream("gvs_sminh_", (hist, batch))
     out = streaming_minhash_dedup(
         spark,
         src,
         schema=docs.schema,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
-        out_table=f"stream_minhash_{_SMINH_SEQ[0]}",
+        out_table=os.path.basename(tmp),
     )
     return out.orderBy("doc_id")
 
 
-_STTL_SEQ = [0]
 _STTL_BASE_US = 1704067200000000  # 2024-01-01 UTC in microseconds
 _STTL_BATCH_US = 10 * 86400 * 1_000_000  # 10-day terciles
 _STTL_TTL_MS = 5 * 86400 * 1000  # 5-day state TTL
@@ -1090,9 +1076,6 @@ def q_stream_first_per_ttl(spark, sf_dir):
     Exact oracle: the watermark/timeout recurrence unrolled over the
     three batches at Spark's millisecond precision."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import streaming_first_per_ttl
 
     events = _read(spark, sf_dir, "events").select("user_id", "ts", "event_id")
@@ -1102,27 +1085,16 @@ def q_stream_first_per_ttl(spark, sf_dir):
         f"least((unix_micros(cast(ts as timestamp)) - {_STTL_BASE_US})"
         f" div {_STTL_BATCH_US}, 2)"
     )
-    tmp = _tile_store_dir(prefix="gvs_sttl_")
-    src = os.path.join(tmp, "events")
-    os.makedirs(src)
-    for i in range(3):
-        stage = os.path.join(tmp, f"stage{i}")
-        events.where(tercile == i).coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"{i + 1:04d}.parquet"))
-    _STTL_SEQ[0] += 1
+    tmp, src = _stage_stream("gvs_sttl_", [events.where(tercile == i) for i in range(3)])
     out = streaming_first_per_ttl(
         spark,
         src,
         schema=events.schema,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
-        out_table=f"stream_ttl_{_STTL_SEQ[0]}",
+        out_table=os.path.basename(tmp),
         ttl_ms=_STTL_TTL_MS,
     )
     return out.orderBy("user_id", "emit_ms")
-
-
-_SDECON_SEQ = [0]
 
 
 def q_stream_decontaminate(spark, sf_dir):
@@ -1133,37 +1105,23 @@ def q_stream_decontaminate(spark, sf_dir):
     batch dedup_decontaminate over the same input — the oracle IS the
     batch twin's SQL."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import streaming_decontaminate
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.where(F.col("doc_id") % 50 == 7).select(
         F.substring("text", 10, 200).alias("text")
     )
-    tmp = _tile_store_dir(prefix="gvs_sdecon_")
-    src = os.path.join(tmp, "docs")
-    os.makedirs(src)
     halves = (docs.where(F.col("doc_id") % 2 == 0), docs.where(F.col("doc_id") % 2 == 1))
-    for i, batch in enumerate(halves, start=1):
-        stage = os.path.join(tmp, f"stage{i}")
-        batch.coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"{i:04d}.parquet"))
-    _SDECON_SEQ[0] += 1
+    tmp, src = _stage_stream("gvs_sdecon_", halves)
     out = streaming_decontaminate(
         spark,
         src,
         schema=docs.schema,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
-        out_table=f"stream_decon_{_SDECON_SEQ[0]}",
+        out_table=os.path.basename(tmp),
         bench_df=bench,
     )
     return out.orderBy("doc_id")
-
-
-_WSTREAM_SEQ = [0]
 
 
 def q_stream_window_counts(spark, sf_dir):
@@ -1182,8 +1140,7 @@ def q_stream_window_counts(spark, sf_dir):
         .parquet(sf_dir)
     )
     agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    _WSTREAM_SEQ[0] += 1
-    name = f"gvs_wstream_{_WSTREAM_SEQ[0]}"
+    name = os.path.basename(_tile_store_dir(prefix="gvs_wstream_"))
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -1213,8 +1170,7 @@ def q_stream_pip_counts(spark, sf_dir):
     )
     joined = _obce_joiner(spark).apply(_geo_projection(stream))
     agg = joined.groupBy("obec_kod").agg(F.count("*").alias("n_pages"))
-    _WSTREAM_SEQ[0] += 1
-    name = f"gvs_pipstream_{_WSTREAM_SEQ[0]}"
+    name = os.path.basename(_tile_store_dir(prefix="gvs_pipstream_"))
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -2653,9 +2609,6 @@ def q_w_sessionize(spark, sf_dir):
     return sessionize(e, gap_minutes=30).orderBy("user_id", "session_idx")
 
 
-_SSESS_SEQ = [0]
-
-
 def q_stream_sessionize(spark, sf_dir):
     """§2.10 + sessions — STATEFUL streaming sessionization
     (applyInPandasWithState with real cross-batch state: the open
@@ -2664,31 +2617,22 @@ def q_stream_sessionize(spark, sf_dir):
     append mode, open sessions stay in state. Exact oracle: batch
     sessionize MINUS each user's final (still-open) session."""
     _ensure_shipped(spark)
-    import glob
-    import shutil
-
     from gdal_vfr_spark.streaming.incremental import streaming_sessionize
 
     e = _read(spark, sf_dir, "events").select(
         "user_id", "event_id", F.col("ts").cast("timestamp").alias("ts")
     )
     cut = e.agg(F.expr("percentile_approx(ts, 0.5)").alias("c")).first()["c"]
-    tmp = _tile_store_dir(prefix="gvs_ssess_")
-    src = os.path.join(tmp, "events")
-    os.makedirs(src)
-    batches = (e.where(F.col("ts") <= F.lit(cut)), e.where(F.col("ts") > F.lit(cut)))
-    for i, batch in enumerate(batches, start=1):
-        stage = os.path.join(tmp, f"stage{i}")
-        batch.repartition(1).sortWithinPartitions("ts", "event_id").write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src, f"{i:04d}.parquet"))
-    _SSESS_SEQ[0] += 1
+    tmp, src = _stage_stream("gvs_ssess_", [
+        b.repartition(1).sortWithinPartitions("ts", "event_id")
+        for b in (e.where(F.col("ts") <= F.lit(cut)), e.where(F.col("ts") > F.lit(cut)))
+    ])
     out = streaming_sessionize(
         spark,
         src,
         schema=e.schema,
         checkpoint_dir=os.path.join(tmp, "ckpt"),
-        out_table=f"stream_sessionize_{_SSESS_SEQ[0]}",
+        out_table=os.path.basename(tmp),
         gap_minutes=30,
     )
     return out.orderBy("user_id", "session_idx")
@@ -2726,23 +2670,9 @@ def q_geo_knn_lines_large(spark, sf_dir):
     construction (band distances are exact; rank ties break on kod
     identically in both engines)."""
     _ensure_shipped(spark)
-    from pyspark.sql import Window
-
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
-    out = _ulice_large_joiner(spark).apply(g, id_col="event_id")
-    w = Window.partitionBy("event_id").orderBy(
-        F.asc("dist2"), F.asc("neighbor_key")
-    )
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select(
-            "event_id",
-            F.col("neighbor_key").alias("kod"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-        .orderBy("event_id", "rank")
-    )
+    out = _ulice_large_joiner(spark).apply_knn(g, 3, id_col="event_id")
+    return _knn_rows(out)
 
 
 def _am_large_joiner(spark):
@@ -2754,26 +2684,17 @@ def _am_large_joiner(spark):
 def q_geo_knn_points_large(spark, sf_dir):
     """Bounded-radius kNN at ADDRESS-POINT scale (round-3 verdict item
     3): the 3 nearest of 122,500 grid address points WITHIN max_dist
-    per sampled page, via knn_join_points_large — the partitioned
-    point twin of geo_knn_lines_large. Target coordinates never reach
+    per sampled page, via PartitionedPointRangeJoiner.apply_knn — the
+    partitioned point twin of geo_knn_lines_large. Target coordinates never reach
     the driver and are never broadcast (PartitionedPointRangeJoiner:
     distributed halo-registered group table + presence-set prune +
     cogrouped refine); kNN = band join + rank window. Exact by
     construction (identical float64 synthesis both engines; rank ties
     break on kod)."""
     _ensure_shipped(spark)
-    from gdal_vfr_spark.geo.knn import knn_join_points_large
-
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
-    out = knn_join_points_large(
-        g, None, k=3, max_dist=0.004, target_key="kod",
-        id_col="event_id", joiner=_am_large_joiner(spark),
-    )
-    return out.select(
-        "event_id",
-        F.col("neighbor_key").alias("kod"),
-        (F.col("rank") + 1).cast("long").alias("rank"),
-    ).orderBy("event_id", "rank")
+    out = _am_large_joiner(spark).apply_knn(g, 3, id_col="event_id")
+    return _knn_rows(out)
 
 
 def q_graph_pagerank(spark, sf_dir):

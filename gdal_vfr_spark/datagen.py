@@ -332,7 +332,7 @@ def gen_adresni_mista_large(spark, n_side: int = 350):
     countrywide-AdresniMista stand-in (gfs/AdresniMista.gfs:8-24 over
     6,258 OB files): n_side=350 gives 122,500 points, past any
     driver-broadcast comfort zone at real scale — pairs with
-    PartitionedPointRangeJoiner / knn_join_points_large the way
+    PartitionedPointRangeJoiner (apply / apply_knn) the way
     gen_ulice_large pairs with PartitionedLineRangeJoiner."""
     dx = (LON1 - LON0) / n_side
     dy = (LAT1 - LAT0) / n_side

@@ -1,6 +1,8 @@
-"""Shared skeleton of the partitioned halo-grid joins (PIP, line range,
-point range), and the broadcast budget gate that sends a too-large
-target layer from the driver-collect joiners to them.
+"""Shared skeleton of the partitioned halo-grid joins
+(pip.PartitionedPIPJoiner, knn.PartitionedLineRangeJoiner,
+knn.PartitionedPointRangeJoiner), and the broadcast budget gate that
+sends a too-large target layer from the driver-collect joiners
+(pip.PIPJoiner, knn.LineKNNJoiner) to them.
 
 Every partitioned joiner keys its build side by coarse gres-cells
 ("groups"): a build row is registered in every group its bbox, inflated
@@ -30,17 +32,17 @@ from pyspark.sql import DataFrame, functions as F
 from gdal_vfr_spark.geo import cells
 
 
-def _check_broadcast_budget(targets_df: DataFrame, budget: int, partitioned_path: str):
-    """Fail fast when a driver-collect joiner (PIP, kNN, line band) is
-    pointed at a layer that only its partitioned counterpart can hold
-    (round-3 verdict item 8). The count is one job over the
-    (dimension-sized) target projection — trivially cheaper than the
-    collect it guards."""
+def _check_broadcast_budget(targets_df: DataFrame, budget: int, partitioned: str):
+    """Fail fast when a driver-collect joiner (PIPJoiner, LineKNNJoiner)
+    is pointed at a layer that only its partitioned counterpart class
+    `partitioned` can hold (round-3 verdict item 8). The count is one
+    job over the (dimension-sized) target projection — trivially
+    cheaper than the collect it guards."""
     n = targets_df.count()
     if n > budget:
         raise ValueError(
             f"target layer has {n} rows — beyond the {budget}-row broadcast "
-            f"budget for this driver-collect joiner; use {partitioned_path} "
+            f"budget for this driver-collect joiner; use {partitioned} "
             "(partitioned: targets never reach the driver)"
         )
 

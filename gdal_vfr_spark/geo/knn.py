@@ -21,6 +21,13 @@ few stragglers fall back to a vectorized brute-force pass — so results
 are EXACT, not approximate. Target layers past the broadcast budget
 take the partitioned halo-grid joiners at the bottom of this module.
 
+The prepared joiners are the way in, each built once and applied per
+batch: LineKNNJoiner (a line layer) and LineKNNJoiner.from_points (a
+point layer) broadcast their index and give kNN (apply) and the
+distance band (apply_range); PartitionedLineRangeJoiner and
+PartitionedPointRangeJoiner keep the targets on the executors and give
+the band (apply) and the bounded-radius kNN on top of it (apply_knn).
+
 Distance: planar squared-euclidean on lon/lat degrees (documented
 engine-wide; deterministic — products/sums of float64 only, no libm
 trig). A query's neighbors are distinct target keys, each at its
@@ -383,33 +390,56 @@ def _map_points(bc, points_df, lon_col, lat_col, id_col, batch, ranked: bool) ->
     return src.mapInPandas(_map, schema=T.StructType(fields))
 
 
-class LineKNNJoiner:
-    """Prepared line-kNN join: segment decode + cell cover + broadcast
-    happen ONCE; apply() joins any number of point batches — the same
-    once-per-job vs per-batch split as PIPJoiner (the street layer is a
-    dimension table; its prepared index amortizes across batches)."""
+def _point_segments(rows):
+    """(x1, y1, x2, y2, key) arrays of (key, x, y) point rows: each
+    point is the zero-length segment (x, y, x, y)."""
+    tk = np.asarray([r[0] for r in rows], dtype=np.int64)
+    tx = np.asarray([r[1] for r in rows], dtype=np.float64)
+    ty = np.asarray([r[2] for r in rows], dtype=np.float64)
+    return tx, ty, tx, ty, tk
 
-    def __init__(
-        self,
+
+class LineKNNJoiner:
+    """Prepared kNN / distance-band join over a broadcast target index:
+    decode + cell cover + broadcast happen ONCE; apply() and
+    apply_range() join any number of point batches — the same
+    once-per-job vs per-batch split as PIPJoiner (the street layer is a
+    dimension table; its prepared index amortizes across batches).
+
+    The constructor takes a line layer (WKB column); from_points() takes a
+    point layer (lon/lat columns), packed as zero-length segments. Both
+    refuse a layer past BROADCAST_TARGET_BUDGET rows: the partitioned
+    range joiners below hold it instead."""
+
+    def __init__(self, targets_df: DataFrame, target_key: str, geom_col: str = "definicni_cara"):
+        pruned = targets_df.select(target_key, geom_col).where(F.col(geom_col).isNotNull())
+        self._prepare(pruned, "gdal_vfr_spark.geo.knn.PartitionedLineRangeJoiner", _decode_segments)
+
+    @classmethod
+    def from_points(
+        cls,
         targets_df: DataFrame,
         target_key: str,
-        geom_col: str = "definicni_cara",
-        res: int | None = None,
-        max_broadcast_rows: int = BROADCAST_TARGET_BUDGET,
-    ):
-        pruned = targets_df.select(target_key, geom_col).where(
-            F.col(geom_col).isNotNull()
+        target_lon: str = "lon",
+        target_lat: str = "lat",
+    ) -> "LineKNNJoiner":
+        """The joiner over a POINT target layer: each (lon, lat) target
+        is the zero-length segment (x, y, x, y), served by the same
+        kernel and broadcast shell as a street."""
+        pruned = targets_df.select(target_key, target_lon, target_lat).where(
+            F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull()
         )
-        halo._check_broadcast_budget(
-            pruned,
-            max_broadcast_rows,
-            "gdal_vfr_spark.geo.knn.PartitionedLineRangeJoiner",
-        )
-        pairs = [(int(r[0]), bytes(r[1])) for r in pruned.collect()]
-        self.index = PackedSegmentIndex.build(
-            pairs, _default_res(len(pairs)) if res is None else res
-        )
-        self._bc = targets_df.sparkSession.sparkContext.broadcast(self.index)
+        obj = cls.__new__(cls)
+        obj._prepare(pruned, "gdal_vfr_spark.geo.knn.PartitionedPointRangeJoiner", _point_segments)
+        return obj
+
+    def _prepare(self, pruned: DataFrame, partitioned: str, segments) -> None:
+        """Budget guard, one collect, `segments(rows)` -> (x1, y1, x2,
+        y2, key) packed at the ~2-targets-per-cell res, broadcast."""
+        halo._check_broadcast_budget(pruned, BROADCAST_TARGET_BUDGET, partitioned)
+        rows = pruned.collect()
+        self.index = PackedSegmentIndex(*segments(rows), _default_res(len(rows)))
+        self._bc = pruned.sparkSession.sparkContext.broadcast(self.index)
 
     def apply(
         self,
@@ -418,9 +448,10 @@ class LineKNNJoiner:
         lon_col: str = "lon",
         lat_col: str = "lat",
         id_col: str = "url",
-        max_ring: int = 8,
     ) -> DataFrame:
-        batch = functools.partial(knn_lines_batch, k=k, max_ring=max_ring)
+        """k nearest targets (distinct keys) per point: (id_col,
+        neighbor_key, dist2, rank), map-only over the broadcast index."""
+        batch = functools.partial(knn_lines_batch, k=k)
         return _map_points(self._bc, points_df, lon_col, lat_col, id_col, batch, ranked=True)
 
     def apply_range(
@@ -437,84 +468,6 @@ class LineKNNJoiner:
         pass, zero shuffle on the point side."""
         batch = functools.partial(range_lines_batch, max_dist=max_dist)
         return _map_points(self._bc, points_df, lon_col, lat_col, id_col, batch, ranked=False)
-
-
-def range_join_lines(
-    points_df: DataFrame,
-    targets_df: DataFrame,
-    max_dist: float,
-    target_key: str,
-    geom_col: str = "definicni_cara",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-    id_col: str = "url",
-) -> DataFrame:
-    """One-shot distance-band join (all lines within max_dist per
-    point) over a fresh LineKNNJoiner."""
-    joiner = LineKNNJoiner(targets_df, target_key, geom_col, res=res)
-    return joiner.apply_range(
-        points_df, max_dist, lon_col=lon_col, lat_col=lat_col, id_col=id_col
-    )
-
-
-def knn_join_lines(
-    points_df: DataFrame,
-    targets_df: DataFrame,
-    k: int,
-    target_key: str,
-    geom_col: str = "definicni_cara",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-    id_col: str = "url",
-    max_ring: int = 8,
-) -> DataFrame:
-    """k nearest LINE features (streets) per point: (id_col,
-    neighbor_key, dist2, rank). One-shot convenience over LineKNNJoiner
-    — broadcast packed index, map-only Arrow pass, zero shuffle on the
-    point side."""
-    joiner = LineKNNJoiner(targets_df, target_key, geom_col, res=res)
-    return joiner.apply(
-        points_df, k, lon_col=lon_col, lat_col=lat_col, id_col=id_col, max_ring=max_ring
-    )
-
-
-def knn_join(
-    points_df: DataFrame,
-    targets_df: DataFrame,
-    k: int,
-    target_key: str,
-    target_lon: str = "lon",
-    target_lat: str = "lat",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-    id_col: str = "url",
-    max_ring: int = 8,
-    max_broadcast_rows: int = BROADCAST_TARGET_BUDGET,
-) -> DataFrame:
-    """For each point, its k nearest POINT targets: (id_col,
-    neighbor_key, dist2, rank). Each target is packed as the
-    zero-length segment (x, y, x, y) and served by the same kernel and
-    broadcast shell as LineKNNJoiner.apply. Targets beyond
-    max_broadcast_rows raise — use knn_join_points_large /
-    PartitionedPointRangeJoiner for huge point dimensions (countrywide
-    AdresniMista scale)."""
-    pruned = targets_df.select(target_key, target_lon, target_lat).where(
-        F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull()
-    )
-    halo._check_broadcast_budget(
-        pruned, max_broadcast_rows, "gdal_vfr_spark.geo.knn.knn_join_points_large"
-    )
-    rows = pruned.collect()
-    tk = np.asarray([r[0] for r in rows], dtype=np.int64)
-    tx = np.asarray([r[1] for r in rows], dtype=np.float64)
-    ty = np.asarray([r[2] for r in rows], dtype=np.float64)
-    idx = PackedSegmentIndex(tx, ty, tx, ty, tk, _default_res(len(tk)) if res is None else res)
-    bc = points_df.sparkSession.sparkContext.broadcast(idx)
-    batch = functools.partial(knn_lines_batch, k=k, max_ring=max_ring)
-    return _map_points(bc, points_df, lon_col, lat_col, id_col, batch, ranked=True)
 
 
 class _PartitionedRangeJoiner:
@@ -603,6 +556,32 @@ class _PartitionedRangeJoiner:
 
         return halo.refine_by_bucket(src, self._groups_sdf, ["__grp"], _refine, out_schema)
 
+    def apply_knn(
+        self,
+        points_df: DataFrame,
+        k: int,
+        lon_col: str = "lon",
+        lat_col: str = "lat",
+        id_col: str = "url",
+    ) -> DataFrame:
+        """Bounded-radius kNN: the k nearest targets WITHIN max_dist per
+        point, with no driver collect of the target side (round-3
+        verdict item 3) — apply()'s band, then one rank window per id
+        with the engine-wide tie-break (dist2, neighbor_key). Output is
+        apply()'s plus a 0-based int `rank`, as LineKNNJoiner.apply.
+        The radius bound keeps the refine work per group finite at 10^7+
+        targets; unbounded kNN at that scale widens max_dist (a new
+        joiner) for the points left with fewer than k rows."""
+        from pyspark.sql import Window
+
+        band = self.apply(points_df, lon_col, lat_col, id_col)
+        w = Window.partitionBy(id_col).orderBy(F.col("dist2").asc(), F.col("neighbor_key").asc())
+        return (
+            band.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .withColumn("rank", (F.col("rank") - 1).cast("int"))
+        )
+
 
 class PartitionedLineRangeJoiner(_PartitionedRangeJoiner):
     """Distance-band join for HUGE line layers (street-scale: 10^6-10^8
@@ -657,15 +636,13 @@ class PartitionedPointRangeJoiner(_PartitionedRangeJoiner):
     """Distance-band join for HUGE point target layers (countrywide
     AdresniMista scale: ~3M definition points, gfs/AdresniMista.gfs:
     8-24 x 6,258 OB files in test_suite/db_uksh.txt — past the
-    broadcast budget of knn_join), the point twin of
+    broadcast budget of LineKNNJoiner.points), the point twin of
     PartitionedLineRangeJoiner: a target point is the zero-length
     segment (x, y, x, y) for registration and for the refine, whose
     _band_lines distance is then the exact squared-euclidean one. The
     group table keeps one (x, y) pair per row. See
-    _PartitionedRangeJoiner for the shared skeleton.
-
-    Bounded-radius kNN on top = apply() + a rank window (see
-    knn_join_points_large) — the same recipe the street layer uses."""
+    _PartitionedRangeJoiner for the shared skeleton; apply_knn() is
+    the bounded-radius kNN on top, as for the street layer."""
 
     _coords = ("x", "y", "x", "y")
 
@@ -700,39 +677,3 @@ class PartitionedPointRangeJoiner(_PartitionedRangeJoiner):
         ).where(F.col(target_lon).isNotNull() & F.col(target_lat).isNotNull())
         self._index(pts.mapInPandas(_groups, "__grp long, __key long, x double, y double"))
 
-
-def knn_join_points_large(
-    points_df: DataFrame,
-    targets_df: DataFrame,
-    k: int,
-    max_dist: float,
-    target_key: str,
-    target_lon: str = "lon",
-    target_lat: str = "lat",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    id_col: str = "url",
-    joiner: "PartitionedPointRangeJoiner | None" = None,
-) -> DataFrame:
-    """Bounded-radius kNN against a HUGE point target layer: the k
-    nearest targets within max_dist per query point, with no driver
-    collect of the target side (round-3 verdict item 3). Band join via
-    PartitionedPointRangeJoiner, then a rank window per query id with
-    the engine-wide deterministic tie-break (dist2, neighbor_key).
-    The radius bound is what keeps the refine work per group finite at
-    10^7+ targets; callers needing unbounded kNN at that scale should
-    widen max_dist adaptively (double-and-retry on points with < k
-    neighbors), each retry reusing the same prepared joiner."""
-    from pyspark.sql import Window
-
-    if joiner is None:
-        joiner = PartitionedPointRangeJoiner(
-            targets_df, target_key, max_dist, target_lon=target_lon, target_lat=target_lat
-        )
-    band = joiner.apply(points_df, lon_col=lon_col, lat_col=lat_col, id_col=id_col)
-    w = Window.partitionBy(id_col).orderBy(F.col("dist2").asc(), F.col("neighbor_key").asc())
-    return (
-        band.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .withColumn("rank", (F.col("rank") - 1).cast("int"))
-    )

@@ -1,5 +1,5 @@
-"""Point-in-polygon join: broadcast packed polygon index + cell-cover
-equi-join + vectorized even-odd refinement.
+"""Point-in-polygon join: packed polygon index + cell-cover equi-join +
+vectorized even-odd refinement.
 
 North-star operator J4 (SURVEY.md §2.3). The reference never computes
 containment — its data *carries* parent codes as FK columns
@@ -7,10 +7,17 @@ containment — its data *carries* parent codes as FK columns
 re-derives them spatially, and the generated fixtures' ground-truth
 columns verify the output row-for-row.
 
+Two prepared joiners are the way in, each built once and applied per
+batch like the reference's build-indexes-once import
+(vfrpg.py:120-163): PIPJoiner collects and broadcasts the polygon layer
+(admin layers: ~10^4-10^6 rows), PartitionedPIPJoiner keeps it on the
+executors (parcel scale). Both take their cover resolution and cover
+shape from the layer itself; `apply(points, how="inner"|"left")` is the
+join.
+
 Execution shape (scale rationale):
-- The polygon side (admin layers: ~10^4-10^6 rows) is packed into flat
-  numpy arrays and broadcast once; the page side (10^12 rows) NEVER
-  shuffles: candidates come from a broadcast hash join on the cell id,
+- The page side (10^12 rows) NEVER shuffles while the cover is
+  broadcast: candidates come from a broadcast hash join on the cell id,
   refinement is a map-only Arrow UDF. The whole join is embarrassingly
   parallel over page partitions, which is what makes the >=0.8 scaling
   efficiency achievable — there is no shuffle to contend on.
@@ -240,7 +247,8 @@ class PackedPolygonIndex:
         100-polygon layer keeps the full 16x16, a 1,600-parcel layer
         gets ~11x11, and huge layers coarsen until the estimate
         bottoms out near ~4 rows/poly — past ~budget/4 polygons use
-        the partitioned joiner (broadcast_cover=False at the extreme)."""
+        the partitioned joiner, which shuffles its cover past
+        BROADCAST_POLY_BUDGET polygons."""
         if len(self.keys) == 0:
             return 0
         w = np.median(self.bbox[:, 2] - self.bbox[:, 0])
@@ -262,9 +270,9 @@ def pick_cover_res(n_polys: int, median_span: float, cover_budget_rows: float) -
     covers only cost refine work, never correctness. Cover rows can
     never go below ~n_polys (every polygon emits >= 1 row), so the
     loop's target bottoms out at ~4*n_polys — past ~budget/4 polygons
-    the broadcast is inherently over budget and the caller should
-    switch to the shuffled candidate join
-    (PartitionedPIPJoiner(broadcast_cover=False))."""
+    the broadcast is inherently over budget, which is why
+    PartitionedPIPJoiner shuffles its cover past BROADCAST_POLY_BUDGET
+    polygons."""
     span = max(float(median_span), 1e-12)
     per_side = max(_CELLS_PER_POLY**0.5, 1.0)
     res = int(np.clip(np.ceil(np.log2(360.0 / span * per_side)), 0, cells.MAX_RES))
@@ -278,36 +286,13 @@ def pick_cover_res(n_polys: int, median_span: float, cover_budget_rows: float) -
     return res
 
 
-# Driver-collect budget for the broadcast PIP path: past this the
-# vertex arrays stop being driver/broadcast material and the caller
-# must use PartitionedPIPJoiner (distributed cover build; past
-# ~budget/4 polys broadcast_cover=False too). Verified exact at 810k
-# polygons on the partitioned path (BASELINE.md).
+# Polygon budget of the broadcast shapes: PIPJoiner refuses a layer
+# past it (its vertex arrays stop being driver/broadcast material), and
+# PartitionedPIPJoiner broadcasts its cover up to it and shuffles the
+# candidate join beyond. Measured: an 810k-polygon layer broadcast its
+# 4.2M-row cover exactly, and a 12.25M-polygon grid ran exact on the
+# shuffle (BASELINE.md).
 BROADCAST_POLY_BUDGET = 1_000_000
-
-
-def build_index(
-    polys_df: DataFrame,
-    key_col: str,
-    geom_col: str,
-    max_broadcast_rows: int = BROADCAST_POLY_BUDGET,
-) -> PackedPolygonIndex:
-    """Collect the (small) polygon side and pack it. At 100 TB the
-    polygon side is the dimension table — collecting it to the driver
-    and broadcasting is the intended strategy (SURVEY.md §4 item 3).
-    Layers beyond max_broadcast_rows raise instead of OOMing the
-    driver (round-3 verdict item 8): use PartitionedPIPJoiner, whose
-    cover is built distributedly and whose geometry never leaves the
-    executors."""
-    pruned = polys_df.select(key_col, geom_col).where(F.col(geom_col).isNotNull())
-    halo._check_broadcast_budget(
-        pruned,
-        max_broadcast_rows,
-        "gdal_vfr_spark.geo.pip.PartitionedPIPJoiner (distributed cover; "
-        "broadcast_cover=False past ~budget/4 polygons)",
-    )
-    rows = pruned.collect()
-    return PackedPolygonIndex.build([(int(r[0]), bytes(r[1])) for r in rows])
 
 
 def _candidates(points_df, res, cover_sdf, broadcast, lon_col, lat_col, how):
@@ -347,6 +332,12 @@ class PIPJoiner:
     analogue: PostGIS indexes built once at import, vfrpg.py:120-163).
     An empty polygon layer gives an empty cover: inner joins return no
     rows, left joins every point with a NULL key.
+
+    The polygon side is the dimension table: it is collected to the
+    driver, packed and broadcast (SURVEY.md §4 item 3). A layer past
+    BROADCAST_POLY_BUDGET raises instead of OOMing the driver (round-3
+    verdict item 8); PartitionedPIPJoiner builds its cover distributedly
+    and never moves the geometry.
     """
 
     def __init__(
@@ -354,13 +345,16 @@ class PIPJoiner:
         polys_df: DataFrame,
         poly_key: str,
         geom_col: str = "geometry",
-        res: int | None = None,
         out_key: str | None = None,
     ):
         self.out_key = out_key or poly_key
+        pruned = polys_df.select(poly_key, geom_col).where(F.col(geom_col).isNotNull())
+        halo._check_broadcast_budget(
+            pruned, BROADCAST_POLY_BUDGET, "gdal_vfr_spark.geo.pip.PartitionedPIPJoiner"
+        )
+        self.index = PackedPolygonIndex.build((int(k), bytes(g)) for k, g in pruned.collect())
+        self.res = self.index.auto_res()
         spark = polys_df.sparkSession
-        self.index = build_index(polys_df, poly_key, geom_col)
-        self.res = res if res is not None else self.index.auto_res()
         self._bc = spark.sparkContext.broadcast(self.index)
         self._cover_sdf = spark.createDataFrame(
             self.index.cover(self.res), "cell long, pidx long, poly_key long, interior boolean"
@@ -454,7 +448,9 @@ class PartitionedPIPJoiner:
     1. cover table (cell, poly_key, interior) — built DISTRIBUTEDLY via
        mapInPandas (each task packs its polygon batch and emits its
        cover rows), row-budgeted by pick_cover_res, broadcast to keep
-       the page side map-only exactly like the broadcast path. The
+       the page side map-only exactly like the broadcast path up to
+       BROADCAST_POLY_BUDGET polygons, and shuffle-joined on the cell
+       key past it (the polygon count comes from _span_stats). The
        250k-row budget (_PARTITIONED_COVER_ROWS) bounds it regardless
        of vertex counts (measured: a 2M-row budget triples per-action
        broadcast-rebuild cost for no candidate-quality gain on the
@@ -494,34 +490,29 @@ class PartitionedPIPJoiner:
         polys_df: DataFrame,
         poly_key: str,
         geom_col: str = "geometry",
-        res: int | None = None,
         out_key: str | None = None,
         salt: int = 1,
-        broadcast_cover: bool = True,
     ):
         self.out_key = out_key or poly_key
         polys = polys_df.select(
             F.col(poly_key).cast("long").alias("__pkey"),
             F.col(geom_col).alias("__geom"),
         ).where(F.col(geom_col).isNotNull())
-        if res is None:
-            n, med = _span_stats(polys, "__geom")
-            # cover res is budget-driven (pick_cover_res): coarser
-            # covers cost refine fan-out (~(cell/poly + 1)^2 candidates
-            # per point), finer ones cost broadcast-rebuild time, and on
-            # the 122,500-parcel fixture the rebuild dominates (res 16
-            # vs 17: 380k vs 770k rows, ~2.4x faster per action)
-            res = pick_cover_res(n, med, _PARTITIONED_COVER_ROWS)
-        self.res = res
+        n, med = _span_stats(polys, "__geom")
+        # cover res is budget-driven (pick_cover_res): coarser covers
+        # cost refine fan-out (~(cell/poly + 1)^2 candidates per point),
+        # finer ones cost broadcast-rebuild time, and on the
+        # 122,500-parcel fixture the rebuild dominates (res 16 vs 17:
+        # 380k vs 770k rows, ~2.4x faster per action)
+        self.res = res = pick_cover_res(n, med, _PARTITIONED_COVER_ROWS)
         self.gres = max(res - _GROUP_BITS, 0)
         self.salt = max(int(salt), 1)
-        # cover rows are bounded below by n_polys (>= 1 row each), so
-        # past ~budget/4 polygons the broadcast is inherently over
-        # budget: broadcast_cover=False switches the candidate join to
-        # a shuffle join on the cell key (pages repartition once; the
+        # cover rows are bounded below by n_polys (>= 1 row each): past
+        # BROADCAST_POLY_BUDGET polygons the candidate join becomes a
+        # shuffle join on the cell key (pages repartition once; the
         # cover stays a distributed table) — slower per page, but the
         # only shape that holds at 10^7+ polygons
-        self.broadcast_cover = broadcast_cover
+        self.broadcast_cover = n <= BROADCAST_POLY_BUDGET
         rres, gres, nsalt = self.res, self.gres, self.salt
 
         def _cover(batches):
@@ -650,13 +641,10 @@ class PartitionedPIPJoiner:
             )
 
     @classmethod
-    def load_index(
-        cls, spark, path: str, broadcast_cover: bool | None = None
-    ) -> "PartitionedPIPJoiner":
+    def load_index(cls, spark, path: str) -> "PartitionedPIPJoiner":
         """Re-arm a joiner from a save_index() directory. apply() is
-        bit-identical to the builder's (parity pinned in tests/test_pip.py);
-        `broadcast_cover` may be overridden at load time (the budget rule
-        depends on cluster memory, not on how the index was built)."""
+        bit-identical to the builder's (parity pinned in tests/test_pip.py),
+        with the cover shape the builder derived from its polygon count."""
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
         obj = cls.__new__(cls)
@@ -664,33 +652,10 @@ class PartitionedPIPJoiner:
         obj.gres = int(meta["gres"])
         obj.salt = int(meta["salt"])
         obj.out_key = meta["out_key"]
-        obj.broadcast_cover = (
-            bool(meta["broadcast_cover"]) if broadcast_cover is None else broadcast_cover
-        )
+        obj.broadcast_cover = bool(meta["broadcast_cover"])
         obj._cover_sdf = spark.read.parquet(os.path.join(path, "cover")).persist()
         obj._groups_sdf = spark.read.parquet(os.path.join(path, "groups")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         return obj
 
-
-def point_in_polygon_join(
-    points_df: DataFrame,
-    polys_df: DataFrame,
-    poly_key: str,
-    geom_col: str = "geometry",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int | None = None,
-    how: str = "inner",
-    out_key: str | None = None,
-) -> DataFrame:
-    """points ⋈_contains polys → points columns + `out_key` (polygon key).
-
-    One-shot convenience over PIPJoiner (prepare + apply). how='inner'
-    drops non-matching points; how='left' keeps them with a NULL key
-    (the reference's keep-and-count semantics for features without
-    geometry, vfrogr.py:592-598).
-    """
-    joiner = PIPJoiner(polys_df, poly_key, geom_col, res=res, out_key=out_key)
-    return joiner.apply(points_df, lon_col=lon_col, lat_col=lat_col, how=how)

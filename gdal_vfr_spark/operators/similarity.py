@@ -330,7 +330,9 @@ def kmeans_centroids(
     Init = the k smallest-id vectors, relabelled cid 0..k-1 in id order
     (deterministic, SQL-replicable via row_number over ORDER BY id, and
     independent of the corpus id scheme — ids need not be dense or
-    0-based). Raises if the corpus has fewer than k rows.
+    0-based). Raises if the corpus has fewer than k rows, or if a seed
+    vector is null or holds a null element (a centroid cannot start
+    from a hole).
     Each iteration is ONE fused Arrow pass (_kmeans_iter_partials:
     map-side nearest-centroid assignment plus per-task partial sums, no
     shuffle of vectors), then ONE partial+final aggregation keyed by
@@ -359,6 +361,12 @@ def kmeans_centroids(
         raise ValueError(
             f"kmeans_centroids: corpus has {len(seeds)} rows < k={k} seeds"
         )
+    for r in seeds:
+        if r[vec_col] is None or None in r[vec_col]:
+            raise ValueError(
+                f"kmeans_centroids: seed vector {id_col}={r[id_col]} is null or "
+                "holds a null element"
+            )
     cents = [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(seeds)]
     scale = float(QUANT_SCALE)
     for _ in range(n_iter):

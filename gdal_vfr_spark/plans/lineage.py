@@ -20,12 +20,15 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from gdal_vfr_spark.geo import tiles
 from gdal_vfr_spark.operators.merge import ParquetTable
+
+_TWO63, _TWO64 = Decimal(2**63), Decimal(2**64)
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -40,12 +43,16 @@ LINEAGE_SCHEMA = T.StructType(
 
 
 def content_hash_expr(df: DataFrame) -> F.Column:
-    """Order-insensitive content hash of all columns: xor-fold of
-    per-row xxhash64. Deterministic under repartitioning."""
+    """Order-insensitive content hash of all columns: the wrapping
+    (mod 2^64) sum of per-row xxhash64, as a long. Deterministic under
+    repartitioning. A sum, not an xor-fold: xor cancels equal rows in
+    pairs, so {A, A} -> {B, B} would keep the hash (0). The sum runs
+    exactly in decimal(38,0) — a long sum would overflow under ANSI —
+    and is reduced to a signed long afterwards."""
     row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
-    # xor aggregate via sum of biased hashes is order-sensitive-free;
-    # Spark lacks bit_xor agg pre-3.x? it has bit_xor since 3.0
-    return F.bit_xor(row_hash)
+    wrapped = F.pmod(F.sum(row_hash.cast("decimal(38,0)")), F.lit(_TWO64))
+    signed = F.when(wrapped >= F.lit(_TWO63), wrapped - F.lit(_TWO64)).otherwise(wrapped)
+    return signed.cast("long")
 
 
 @dataclass

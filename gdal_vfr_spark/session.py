@@ -8,6 +8,7 @@ harmless on local[N].
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import tempfile
@@ -29,15 +30,28 @@ _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def package_zip() -> str:
     """Zip gdal_vfr_spark for --py-files / addPyFile shipping (the
-    north rule's deployment mode: `spark-submit --py-files`)."""
-    out = os.path.join(tempfile.gettempdir(), "gdal_vfr_spark_pkg.zip")
-    src = os.path.join(_PKG_ROOT, "gdal_vfr_spark")
-    with zipfile.ZipFile(out, "w") as zf:
-        for dirpath, _dirnames, filenames in os.walk(src):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, _PKG_ROOT))
+    north rule's deployment mode: `spark-submit --py-files`).
+
+    One zip per checkout: the file name carries a hash of the package
+    root, so sessions from two checkouts on one host never ship each
+    other's engine. The zip is written to a temp file and moved into
+    place, so a reader never sees a half-written one."""
+    root = _PKG_ROOT
+    tag = hashlib.sha1(root.encode()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(), f"gdal_vfr_spark_pkg_{tag}.zip")
+    src = os.path.join(root, "gdal_vfr_spark")
+    fd, tmp = tempfile.mkstemp(prefix=f".gdal_vfr_spark_pkg_{tag}_", dir=os.path.dirname(out))
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for dirpath, _dirnames, filenames in os.walk(src):
+                for fn in filenames:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        zf.write(full, os.path.relpath(full, root))
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 

@@ -185,6 +185,29 @@ def test_kmeans_centroids_skip_null_elements(spark):
     assert got == [(int(i), [float(x) for x in c]) for i, c in zip(want["cid"], want["c"])]
 
 
+def test_kmeans_centroids_null_seed_raises(spark):
+    """A seed vector (one of the k smallest ids) that is null or holds a
+    null element cannot start a centroid: kmeans_centroids raises a
+    ValueError naming the seed id."""
+    # the fixture tables live in the testdata directory beside the checkout
+    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    emb = spark.read.parquet(os.path.join(root, "testdata", "sf0.001", "embeddings.parquet"))
+    hole = emb.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == 3,
+            F.expr("transform(embedding, (x, i) -> IF(i = 5, NULL, x))"),
+        ).otherwise(F.col("embedding")),
+    )
+    with pytest.raises(ValueError, match="vec_id=3"):
+        similarity.kmeans_centroids(hole, k=8, n_iter=1)
+    gone = emb.withColumn(
+        "embedding", F.when(F.col("vec_id") != 2, F.col("embedding"))
+    )
+    with pytest.raises(ValueError, match="vec_id=2"):
+        similarity.kmeans_centroids(gone, k=8, n_iter=1)
+
+
 def test_ivf_indexed_prunes_partitions(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 5).select(

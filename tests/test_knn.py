@@ -2,7 +2,7 @@ import numpy as np
 import pandas as pd
 
 from gdal_vfr_spark import datagen
-from gdal_vfr_spark.geo.knn import PackedSegmentIndex, knn_join, knn_lines_batch
+from gdal_vfr_spark.geo.knn import LineKNNJoiner, PackedSegmentIndex, knn_lines_batch
 
 
 def brute_knn(qx, qy, tx, ty, tk, k):
@@ -85,7 +85,7 @@ def test_knn_join_spark(spark):
                 }
             )
     targets = spark.createDataFrame(pd.DataFrame(centers))
-    out = knn_join(pages, targets, k=1, target_key="kod").collect()
+    out = LineKNNJoiner.from_points(targets, target_key="kod").apply(pages, k=1).collect()
     pages_pd = pages.where("lon is not null").toPandas()
     assert len(out) == len(pages_pd)
     # nearest center of a grid == containing cell == truth_obec_kod
@@ -111,12 +111,8 @@ def test_knn_join_k3_matches_brute(spark):
         }
     )
     out = (
-        knn_join(
-            spark.createDataFrame(qpdf),
-            spark.createDataFrame(tpdf),
-            k=3,
-            target_key="kod",
-        )
+        LineKNNJoiner.from_points(spark.createDataFrame(tpdf), target_key="kod")
+        .apply(spark.createDataFrame(qpdf), k=3)
         .orderBy("url", "rank")
         .collect()
     )
@@ -183,11 +179,9 @@ def test_knn_join_lines_spark(spark):
     """End-to-end: nearest street (gen_ulice WKB) per page; every page's
     rank-1 street must lie in the page's own obec (streets never cross
     obec boundaries in the fixture)."""
-    from gdal_vfr_spark.geo.knn import knn_join_lines
-
     pages = datagen.gen_webpages(spark, n=1500, seed=13)
     ulice = datagen.gen_ulice(spark, seed=13)
-    out = knn_join_lines(pages, ulice, k=1, target_key="kod", id_col="url")
+    out = LineKNNJoiner(ulice, target_key="kod").apply(pages, k=1, id_col="url")
     joined = out.join(pages.select("url", "truth_obec_kod"), "url")
     pdf = joined.toPandas()
     n_geo = pages.where("lon is not null").count()
@@ -210,11 +204,9 @@ def test_nearest_street_matches_ulice_fk(spark):
     real ulice WKB must reproduce it for every geotagged address."""
     from pyspark.sql import functions as F
 
-    from gdal_vfr_spark.geo.knn import knn_join_lines
-
     am = datagen.gen_adresni_mista(spark)
     ulice = datagen.gen_ulice(spark)
-    out = knn_join_lines(am, ulice, k=1, target_key="kod", id_col="kod")
+    out = LineKNNJoiner(ulice, target_key="kod").apply(am, k=1, id_col="kod")
     joined = out.join(am.select("kod", "ulice_kod"), "kod")
     n = am.where("lon is not null").count()
     assert joined.count() == n
@@ -314,12 +306,10 @@ def test_range_lines_batch_vs_brute():
 
 
 def test_range_join_lines_spark(spark):
-    from gdal_vfr_spark.geo.knn import range_join_lines
-
     pages = datagen.gen_webpages(spark, n=2000, seed=11)
     ulice = datagen.gen_ulice(spark)
-    out = range_join_lines(
-        pages, ulice, max_dist=0.02, target_key="kod", id_col="url"
+    out = LineKNNJoiner(ulice, target_key="kod").apply_range(
+        pages, max_dist=0.02, id_col="url"
     ).collect()
     assert len(out) > 0
     assert all(r["dist2"] <= 0.02 * 0.02 for r in out)
@@ -365,14 +355,14 @@ def test_partitioned_line_range_parity(spark):
     segment side) must return exactly the broadcast path's band."""
     from pyspark.sql import functions as F
 
-    from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner, range_join_lines
+    from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner
 
     pages = datagen.gen_webpages(spark, n=1500, seed=19)
     ulice = datagen.gen_ulice(spark)
     want = sorted(
         (r["url"], r["neighbor_key"], round(r["dist2"], 15))
-        for r in range_join_lines(
-            pages, ulice, max_dist=0.02, target_key="kod", id_col="url"
+        for r in LineKNNJoiner(ulice, target_key="kod").apply_range(
+            pages, max_dist=0.02, id_col="url"
         ).collect()
     )
     pj = PartitionedLineRangeJoiner(ulice, target_key="kod", max_dist=0.02)
@@ -401,17 +391,50 @@ def test_partitioned_line_range_parity(spark):
         assert abs(pt["lat"] - yc) <= 0.004 + 1e-12
 
 
-def test_partitioned_point_range_and_knn(spark):
-    """PartitionedPointRangeJoiner (no driver collect of the target
-    side) must match a local brute-force band + kNN on the same grid
-    points; knn_join_points_large ranks the band deterministically."""
-    import numpy as np
+def test_partitioned_line_range_knn(spark):
+    """PartitionedLineRangeJoiner.apply_knn == a brute-force band (min
+    distance per street within max_dist) ranked by (dist2, key): every
+    point gets exactly min(k, band size) rows, in that order."""
     from pyspark.sql import functions as F
 
     from gdal_vfr_spark.geo.knn import (
-        PartitionedPointRangeJoiner,
-        knn_join_points_large,
+        PartitionedLineRangeJoiner,
+        _decode_segments,
+        _point_seg_dist2,
     )
+
+    k, maxd = 3, 0.02
+    pages = datagen.gen_webpages(spark, n=800, seed=41)
+    ulice = datagen.gen_ulice(spark)
+    x1, y1, x2, y2, keys = _decode_segments(
+        (int(r["kod"]), bytes(r["definicni_cara"]))
+        for r in ulice.select("kod", "definicni_cara").collect()
+    )
+    want = {}
+    for r in pages.where(F.col("lon").isNotNull()).select("url", "lon", "lat").collect():
+        d2 = _point_seg_dist2(r["lon"], r["lat"], x1, y1, x2, y2)
+        per_key: dict[int, float] = {}
+        for kk, d in zip(keys, d2):
+            per_key[int(kk)] = min(per_key.get(int(kk), np.inf), float(d))
+        band = sorted((d, kk) for kk, d in per_key.items() if d <= maxd * maxd)
+        if band:
+            want[r["url"]] = [(rank, kk, d) for rank, (d, kk) in enumerate(band[:k])]
+    assert any(len(v) == k for v in want.values()) and any(len(v) < k for v in want.values())
+    pj = PartitionedLineRangeJoiner(ulice, target_key="kod", max_dist=maxd)
+    got: dict = {}
+    for r in pj.apply_knn(pages, k, id_col="url").collect():
+        got.setdefault(r["url"], []).append((r["rank"], r["neighbor_key"], r["dist2"]))
+    assert {u: sorted(v) for u, v in got.items()} == want
+
+
+def test_partitioned_point_range_and_knn(spark):
+    """PartitionedPointRangeJoiner (no driver collect of the target
+    side) must match a local brute-force band + kNN on the same grid
+    points; apply_knn ranks the band deterministically."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from gdal_vfr_spark.geo.knn import PartitionedPointRangeJoiner
 
     n_side, maxd = 60, 0.004
     pages = datagen.gen_webpages(spark, n=1500, seed=23)
@@ -445,15 +468,18 @@ def test_partitioned_point_range_and_knn(spark):
     }
     assert got == want and len(got) > 0
     # kNN on top: rank within each url ordered by (dist2, key), k=2
-    out = knn_join_points_large(
-        pages, None, k=2, max_dist=maxd, target_key="kod", id_col="url", joiner=pj
-    ).collect()
+    out = pj.apply_knn(pages, 2, id_col="url").collect()
     by_url: dict = {}
     for u, key, d2r in want:
         by_url.setdefault(u, []).append((d2r, key))
     for r in out:
         ranked = sorted(by_url[r["url"]])[: 2]
         assert (round(r["dist2"], 15), r["neighbor_key"]) == ranked[r["rank"]]
+    # every url with a band gets exactly min(k, band size) rows
+    n_out: dict = {}
+    for r in out:
+        n_out[r["url"]] = n_out.get(r["url"], 0) + 1
+    assert n_out == {u: min(2, len(b)) for u, b in by_url.items()}
 
 
 def test_partitioned_line_range_one_bucket(spark, one_bucket):
@@ -463,7 +489,7 @@ def test_partitioned_line_range_one_bucket(spark, one_bucket):
     broadcast path's exact dist2."""
     from pyspark.sql import functions as F
 
-    from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner, range_join_lines
+    from gdal_vfr_spark.geo.knn import PartitionedLineRangeJoiner
 
     pages = datagen.gen_webpages(spark, n=1500, seed=19)
     ulice = datagen.gen_ulice(spark)
@@ -477,30 +503,30 @@ def test_partitioned_line_range_one_bucket(spark, one_bucket):
     assert len({(u, k) for u, k, _ in got}) == len(got)
     want = sorted(
         (r["url"], r["neighbor_key"], r["dist2"])
-        for r in range_join_lines(
-            pages, ulice, max_dist=0.02, target_key="kod", id_col="url"
+        for r in LineKNNJoiner(ulice, target_key="kod").apply_range(
+            pages, max_dist=0.02, id_col="url"
         ).collect()
     )
     assert got == want
     test_partitioned_point_range_and_knn(spark)
 
 
-def test_broadcast_budget_guards(spark):
+def test_broadcast_budget_guards(spark, monkeypatch):
     """Driver-collect joiners refuse layers beyond the broadcast
-    budget with a pointer to the partitioned path (verdict item 8)."""
+    budget with a pointer to the partitioned class (verdict item 8).
+    The two budget constants are lowered below the fixture sizes."""
     import pytest as _pytest
-    from gdal_vfr_spark.geo.knn import LineKNNJoiner, knn_join
-    from gdal_vfr_spark.geo.pip import build_index
+    from gdal_vfr_spark.geo import knn, pip
 
-    pages = datagen.gen_webpages(spark, n=50, seed=7)
     am = datagen.gen_adresni_mista_large(spark, n_side=20)  # 400 rows
-    with _pytest.raises(ValueError, match="knn_join_points_large"):
-        knn_join(
-            pages, am, k=1, target_key="kod", id_col="url", max_broadcast_rows=100
-        )
+    monkeypatch.setattr(knn, "BROADCAST_TARGET_BUDGET", 100)
+    with _pytest.raises(ValueError, match="PartitionedPointRangeJoiner"):
+        LineKNNJoiner.from_points(am, target_key="kod")
+    monkeypatch.setattr(knn, "BROADCAST_TARGET_BUDGET", 1)
     ulice = datagen.gen_ulice(spark)
     with _pytest.raises(ValueError, match="PartitionedLineRangeJoiner"):
-        LineKNNJoiner(ulice, target_key="kod", max_broadcast_rows=1)
+        LineKNNJoiner(ulice, target_key="kod")
+    monkeypatch.setattr(pip, "BROADCAST_POLY_BUDGET", 10)
     obce = datagen.gen_obce(spark)
     with _pytest.raises(ValueError, match="PartitionedPIPJoiner"):
-        build_index(obce, "kod", "originalni_hranice", max_broadcast_rows=10)
+        pip.PIPJoiner(obce, "kod", "originalni_hranice")

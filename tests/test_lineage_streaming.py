@@ -189,6 +189,40 @@ def test_lineage_staged_fingerprint_restages(spark, tmp_path):
     assert sorted(got["url"]) == sorted(edited.select("url").toPandas()["url"])
 
 
+def test_lineage_duplicate_pairs_change_hash(spark, tmp_path):
+    """An input made only of duplicated row pairs that changes {A, A} ->
+    {B, B} keeps its row count per unit; it must still re-stage, and
+    every unit's lineage hash must change (an xor-fold cancels each
+    pair to 0 on both sides)."""
+    base = datagen.gen_webpages(spark, n=300, seed=35).where("lon is not null")
+    a = base.select("url", "lon", "lat")
+    b = a.withColumn("url", F.concat(F.col("url"), F.lit("#b")))
+    pairs_a, pairs_b = a.unionAll(a), b.unionAll(b)
+
+    def transform(part):
+        return part.select("url", "lon", "lat")
+
+    staged = tmp_path / "staged"
+    logs = []
+    for name, pages in (("a", pairs_a), ("b", pairs_b)):
+        log = LineageLog(spark, str(tmp_path / f"lin_{name}"))
+        mtime = (staged / "_SUCCESS").stat().st_mtime if logs else None
+        run_stage_resumable(
+            spark, pages, "x", transform, log, str(tmp_path / f"out_{name}"),
+            prefix_res=8, stage_input_path=str(staged),
+        )
+        if mtime is not None:
+            assert (staged / "_SUCCESS").stat().st_mtime != mtime  # re-staged
+        logs.append(log.read().select("unit", "n_rows", "content_hash").toPandas())
+    got = spark.read.parquet(str(tmp_path / "out_b/unit=*")).select("url").toPandas()
+    assert sorted(got["url"]) == sorted(pairs_b.select("url").toPandas()["url"])
+    la, lb = (df.set_index("unit").sort_index() for df in logs)
+    assert len(la) > 1 and la.index.equals(lb.index)
+    assert (la["n_rows"] == lb["n_rows"]).all()
+    assert (la["content_hash"] != lb["content_hash"]).all()
+    assert (la["content_hash"] != 0).all()
+
+
 def test_hot_keys_and_salted_join(spark):
     pages = datagen.gen_webpages(spark, n=5000, seed=33).where("lon is not null")
     hot = skew.hot_keys(pages, "truth_obec_kod", sample_frac=0.3, threshold_frac=0.1)

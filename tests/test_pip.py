@@ -2,8 +2,8 @@ import numpy as np
 import pandas as pd
 
 from gdal_vfr_spark import datagen
-from gdal_vfr_spark.geo import wkb
-from gdal_vfr_spark.geo.pip import PackedPolygonIndex, point_in_polygon_join
+from gdal_vfr_spark.geo import pip, wkb
+from gdal_vfr_spark.geo.pip import PackedPolygonIndex, PIPJoiner
 
 
 def test_packed_index_contains():
@@ -28,13 +28,12 @@ def test_packed_index_contains():
 def test_pip_join_matches_ground_truth(spark):
     pages = datagen.gen_webpages(spark, n=3000, seed=7)
     obce = datagen.gen_obce(spark, seed=7)
-    joined = point_in_polygon_join(
-        pages,
+    joined = PIPJoiner(
         obce,
         poly_key="kod",
         geom_col="originalni_hranice",
         out_key="obec_kod",
-    )
+    ).apply(pages)
     rows = joined.select("url", "obec_kod", "truth_obec_kod").collect()
     n_geo = pages.where("lon is not null").count()
     assert len(rows) == n_geo  # every geotagged page matched exactly one obec
@@ -45,10 +44,9 @@ def test_pip_join_matches_ground_truth(spark):
 def test_pip_join_left_keeps_nulls(spark):
     pages = datagen.gen_webpages(spark, n=500, seed=11)
     obce = datagen.gen_obce(spark, seed=11)
-    joined = point_in_polygon_join(
-        pages, obce, poly_key="kod", geom_col="originalni_hranice",
-        out_key="obec_kod", how="left",
-    )
+    joined = PIPJoiner(
+        obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod",
+    ).apply(pages, how="left")
     assert joined.count() == 500
     nulls = joined.where("obec_kod is null").count()
     assert nulls == pages.where("lon is null").count()
@@ -61,9 +59,9 @@ def test_pip_counts_per_obec(spark):
 
     pages = datagen.gen_webpages(spark, n=2000, seed=3)
     obce = datagen.gen_obce(spark, seed=3)
-    joined = point_in_polygon_join(
-        pages, obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod"
-    )
+    joined = PIPJoiner(
+        obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod"
+    ).apply(pages)
     got = {
         r["obec_kod"]: r["n"]
         for r in joined.groupBy("obec_kod").agg(F.count("*").alias("n")).collect()
@@ -202,50 +200,55 @@ def test_partitioned_pip_survives_clearcache(spark):
     assert out.count() == want
 
 
-def test_partitioned_pip_shuffle_cover_parity(spark):
-    """broadcast_cover=False (the 10^7+-polygon shape: cell-keyed
-    shuffle candidate join) must return exactly the broadcast-cover
-    rows."""
+def test_partitioned_pip_shuffle_cover_parity(spark, monkeypatch):
+    """Past BROADCAST_POLY_BUDGET polygons (the 10^7+-polygon shape:
+    cell-keyed shuffle candidate join) the joiner must return exactly
+    the broadcast-cover rows. The budget is lowered below the layer's
+    polygon count so both shapes run on the same layer."""
     from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
 
     pages = datagen.gen_webpages(spark, n=1200, seed=29)
     obce = datagen.gen_obce(spark, seed=29)
-    want = sorted(
-        (r["url"], r["obec_kod"])
-        for r in PartitionedPIPJoiner(
+    rows = {}
+    for budget in (pip.BROADCAST_POLY_BUDGET, 0):
+        monkeypatch.setattr(pip, "BROADCAST_POLY_BUDGET", budget)
+        pj = PartitionedPIPJoiner(
             obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod"
-        ).apply(pages).select("url", "obec_kod").collect()
-    )
-    got = sorted(
-        (r["url"], r["obec_kod"])
-        for r in PartitionedPIPJoiner(
-            obce, poly_key="kod", geom_col="originalni_hranice",
-            out_key="obec_kod", broadcast_cover=False,
-        ).apply(pages).select("url", "obec_kod").collect()
-    )
-    assert got == want
+        )
+        rows[pj.broadcast_cover] = sorted(
+            (r["url"], r["obec_kod"])
+            for r in pj.apply(pages).select("url", "obec_kod").collect()
+        )
+    assert set(rows) == {True, False}  # both shapes ran
+    assert rows[False] == rows[True]
 
 
-def test_partitioned_pip_index_save_load_parity(spark, tmp_path):
+def test_partitioned_pip_index_save_load_parity(spark, tmp_path, monkeypatch):
     """save_index/load_index round-trip: a joiner re-armed from the
     parquet index returns exactly the builder's rows (both cover
-    modes), without touching the raw dimension layer."""
+    modes: the budget is lowered below the layer's polygon count for
+    the shuffle one), without touching the raw dimension layer."""
     from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
 
     pages = datagen.gen_webpages(spark, n=1500, seed=31)
     parcels = datagen.gen_parcely_large(spark, n_side=40)
-    built = PartitionedPIPJoiner(
-        parcels, poly_key="kod", geom_col="originalni_hranice", out_key="parcel_kod"
-    )
-    want = sorted(
-        (r["url"], r["parcel_kod"])
-        for r in built.apply(pages).select("url", "parcel_kod").collect()
-    )
-    idx_dir = str(tmp_path / "pip_index")
-    built.save_index(idx_dir)
-    for bc in (None, False):
-        loaded = PartitionedPIPJoiner.load_index(spark, idx_dir, broadcast_cover=bc)
+    want = None
+    for bc, budget in ((True, pip.BROADCAST_POLY_BUDGET), (False, 0)):
+        monkeypatch.setattr(pip, "BROADCAST_POLY_BUDGET", budget)
+        built = PartitionedPIPJoiner(
+            parcels, poly_key="kod", geom_col="originalni_hranice", out_key="parcel_kod"
+        )
+        assert built.broadcast_cover == bc
+        if want is None:
+            want = sorted(
+                (r["url"], r["parcel_kod"])
+                for r in built.apply(pages).select("url", "parcel_kod").collect()
+            )
+        idx_dir = str(tmp_path / f"pip_index_{bc}")
+        built.save_index(idx_dir)
+        loaded = PartitionedPIPJoiner.load_index(spark, idx_dir)
         assert loaded.res == built.res and loaded.gres == built.gres
+        assert loaded.broadcast_cover == bc
         got = sorted(
             (r["url"], r["parcel_kod"])
             for r in loaded.apply(pages).select("url", "parcel_kod").collect()

@@ -49,3 +49,27 @@ def test_host_derived_defaults(monkeypatch):
         monkeypatch.setenv("SPARK_DRIVER_MEM", bad)
         with pytest.raises(ValueError, match="SPARK_DRIVER_MEM"):
             session.driver_memory()
+
+
+def test_package_zip_per_checkout(tmp_path, monkeypatch):
+    """Two checkouts on one host get two zips, each holding its own
+    root's engine files, so their sessions never ship each other's."""
+    import zipfile
+
+    zips = []
+    for name in ("a", "b"):
+        pkg = tmp_path / name / "gdal_vfr_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text(f"CHECKOUT = {name!r}\n")
+        (pkg / f"only_{name}.py").write_text("")
+        monkeypatch.setattr(session, "_PKG_ROOT", str(tmp_path / name))
+        zips.append(session.package_zip())
+    assert zips[0] != zips[1]
+    for name, path in zip(("a", "b"), zips):
+        with zipfile.ZipFile(path) as zf:
+            assert sorted(zf.namelist()) == [
+                "gdal_vfr_spark/__init__.py",
+                f"gdal_vfr_spark/only_{name}.py",
+            ]
+            assert zf.read("gdal_vfr_spark/__init__.py").decode() == f"CHECKOUT = {name!r}\n"
+        os.unlink(path)

@@ -2,8 +2,9 @@
 (round-4 verdict item 3).
 
 BENCH's ratio-confirmed >=0.8 efficiency evidence covers the broadcast
-PIPJoiner; this tool extends it to the PartitionedPIPJoiner
-(broadcast_cover=False) — the only shape that holds at 10^7+ polygons
+PIPJoiner; this tool extends it to the PartitionedPIPJoiner's
+shuffle-cover shape (derived past pip.BROADCAST_POLY_BUDGET polygons) —
+the only shape that holds at 10^7+ polygons
 (the full-country workload: test_suite/db_uksh.txt, 6,259 files).
 
 Measured job = the north-star pipeline on the partitioned path: pages
@@ -154,8 +155,8 @@ def ensure_inputs() -> None:
             poly_key="kod",
             geom_col="originalni_hranice",
             out_key="parcel_kod",
-            broadcast_cover=False,
         )
+        assert not joiner.broadcast_cover  # the 10^7+-polygon shape under test
         joiner.save_index(INDEX_PATH)
     spark.stop()
 

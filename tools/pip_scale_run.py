@@ -1,18 +1,19 @@
 """10^7-polygon shuffle-cover PIP measurement (round-3 verdict item 4).
 
 Extends the 810k-polygon evidence (BASELINE.md) to the scale the
-`PartitionedPIPJoiner(broadcast_cover=False)` escape hatch was built
-for: a 12.25M-parcel grid (n_side=3500 — chosen so 7*(2j+1) = 2k has
+shuffle-cover shape of `PartitionedPIPJoiner` was built for: a
+12.25M-parcel grid (n_side=3500 — chosen so 7*(2j+1) = 2k has
 no integer solution, keeping the webpage point lattice provably off
 parcel edges; 1000/gcd(3500,1000) = 2 is even, the fixture edge rule)
 joined against geotagged synthetic pages, with the exact arithmetic
 ground truth checked for EVERY matched page.
 
-Past ~budget/4 polygons the cover broadcast is inherently over budget,
-so broadcast_cover=False switches the candidate join to a cell-keyed
-shuffle (pages repartition once; the cover stays a distributed table)
-— the only shape that holds at 10^7+ polygons. This script measures
-that shape end-to-end and prints ONE JSON line for BASELINE.md.
+Past `pip.BROADCAST_POLY_BUDGET` polygons the joiner switches its
+candidate join to a cell-keyed shuffle (pages repartition once; the
+cover stays a distributed table) — the only shape that holds at 10^7+
+polygons. This script measures that shape end-to-end (the default grid
+is past the budget, and the JSON line records the derived
+`broadcast_cover`) and prints ONE JSON line for BASELINE.md.
 
 Usage (idle host — same caveat as bench.py):
     python tools/pip_scale_run.py [n_side=3500] [n_pages=400000]
@@ -55,7 +56,6 @@ def main() -> None:
         poly_key="kod",
         geom_col="originalni_hranice",
         out_key="parcel_kod",
-        broadcast_cover=False,
     )
     build_s = time.time() - t0
 
