@@ -77,21 +77,18 @@ from gdal_vfr_spark.duck_sql import (  # noqa: E402
 )
 from gdal_vfr_spark.functions import html_text  # noqa: E402
 from gdal_vfr_spark.operators import dedup, similarity, text as text_ops  # noqa: E402
-from gdal_vfr_spark.session import package_zip  # noqa: E402
+from gdal_vfr_spark.session import ship_package  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the engine to executor workers of a driver-owned session.
-    Re-adding the same zip to a live session only logs a warning, so
-    any exception here is a real failure and propagates."""
-    spark.sparkContext.addPyFile(package_zip())
-
-
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # a driver-owned session has not shipped the engine to its
+    # executors; every query that reads a table ships it here, once
+    # per application
+    ship_package(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
@@ -344,6 +341,7 @@ def _joiner(spark, name: str, build: Callable[[], object]):
     """The prepared joiner `name` of this SparkSession, built once."""
     key = (spark.sparkContext.applicationId, name)
     if key not in _JOINER_CACHE:
+        ship_package(spark)  # the build runs Python workers
         _JOINER_CACHE[key] = build()
     return _JOINER_CACHE[key]
 
@@ -378,7 +376,6 @@ def q_geo_pip_counts(spark, sf_dir):
     """J4 north-star — point-in-polygon page counts per municipality,
     via the REAL cell-cover + winding-refine machinery; oracle = floor
     arithmetic (grid ground truth, SURVEY.md §1.4)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir)
     joined = _obce_joiner(spark).apply(g)
     return joined.groupBy("obec_kod").agg(F.count("*").alias("n_pages")).orderBy("obec_kod")
@@ -386,7 +383,6 @@ def q_geo_pip_counts(spark, sf_dir):
 
 def q_geo_pip_rows(spark, sf_dir):
     """J4 row-level containment assignments (sampled)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 10 == 1)
     joined = _obce_joiner(spark).apply(g)
     return joined.select("event_id", "obec_kod")
@@ -403,7 +399,6 @@ def q_geo_pip_parcely_large(spark, sf_dir):
     test_suite/OB_UKSH.xml.gz, SURVEY §5). Oracle = floor arithmetic
     over the same grid; n_side=350 provably keeps the point lattice off
     parcel edges (7*(2j+1) = 20k has no integer solution)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 3 == 0)
     joined = _parcely_large_joiner(spark).apply(g)
     return (
@@ -422,7 +417,6 @@ def q_geo_pip_hierarchy_parcel(spark, sf_dir):
     the containment FK) -> per-obec page counts. Oracle = the direct
     floor-arithmetic obec assignment — equal BY CONSTRUCTION because
     every parcel nests exactly inside one obec."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 3 == 0)
     joined = _parcely_large_joiner(spark).apply(g)
     return (
@@ -486,8 +480,6 @@ def q_geo_tile_bbox_read(spark, sf_dir):
     partitions, the whole extent is one directory). Oracle =
     arithmetic bbox filter + direct prefix-res cell assignment (the
     prefix of a res-15 tile IS the res-10 cell, by floor nesting)."""
-    _ensure_shipped(spark)
-
     from gdal_vfr_spark.geo import tiles
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -512,7 +504,7 @@ def q_a2_wkb_validity(spark, sf_dir):
     header) tallied as valid/invalid/null via the vectorized validity
     UDF. Oracle = pure arithmetic over the kod range (the corruption
     and the generator's null pattern are both functions of kod)."""
-    _ensure_shipped(spark)
+    ship_package(spark)
     from gdal_vfr_spark.operators import counts as counts_ops
 
     obce = datagen.gen_obce(spark)
@@ -537,7 +529,7 @@ def q_geo_shape_stats(spark, sf_dir):
     generalized-null pattern is a function of kod), so a header
     off-by-one, a wrong hole sign, or a centroid normalization bug
     breaks the hash."""
-    _ensure_shipped(spark)
+    ship_package(spark)
     from gdal_vfr_spark.operators import counts as counts_ops
 
     obce = datagen.gen_obce(spark)
@@ -574,7 +566,6 @@ def _centers_joiner(spark):
 def q_geo_knn(spark, sf_dir):
     """J5 north-star — 3 nearest municipality centers per sampled page
     (k-ring expansion + certified merge); oracle = cross join + rank."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 100 == 1)
     out = _centers_joiner(spark).apply(g, k=3, id_col="event_id")
     return out.select(
@@ -599,7 +590,6 @@ def q_geo_knn_lines(spark, sf_dir):
     oracle regenerates the street endpoints arithmetically (bit-equal
     doubles) and ranks by the same clamped-projection distance in the
     same float64 op order."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 100 == 1)
     out = _ulice_joiner(spark).apply(g, k=3, id_col="event_id")
     # (round-6 measured negative result: a pre-sort localCheckpoint
@@ -614,7 +604,6 @@ def q_geo_range_join(spark, sf_dir):
     kNN). Certified ring cover over the same broadcast segment index;
     oracle = the same clamped-projection distance vs the same literal
     threshold, so the pair set and the d2 values are bit-equal."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 100 == 1)
     out = _ulice_joiner(spark).apply_range(g, max_dist=0.01, id_col="event_id")
     return out.select(
@@ -878,7 +867,6 @@ def q_s7_export_fanout(spark, sf_dir):
     write path, the null-geometry skip and the S8 delete, not just the
     counts. g_point is NULL for key%3==0 (skipped rows); g_line is all
     NULL, so its output is dropped entirely."""
-    _ensure_shipped(spark)
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from gdal_vfr_spark.operators.export import export_layers
@@ -957,7 +945,6 @@ def q_m4_schema_per_file(spark, sf_dir):
     tests/test_merge.py). The query writes the partitioned layout once
     per session, reads two of the four batches back through the pruned
     path, and aggregates — the oracle recomputes from the base table."""
-    _ensure_shipped(spark)
     key_expr = F.col("o_orderkey")
     store_key = (spark.sparkContext.applicationId, sf_dir, "m4")
     path = _M4_STORE.get(store_key)
@@ -986,7 +973,6 @@ def q_stream_change_merge(spark, sf_dir):
     order (vfrogr.py:934-1025). Two change batches: batch 2 overrides
     batch 1 per key (last writer wins) — final per-status counts have
     an exact SQL twin."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import change_stream_merge
 
     o = _read(spark, sf_dir, "orders")
@@ -1018,7 +1004,6 @@ def q_stream_dedup(spark, sf_dir):
     must emit each content hash exactly once, suppressing the entire
     second batch. Exact oracle: min doc_id per md5 over the unioned
     stream input."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import streaming_exact_dedup
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1043,7 +1028,6 @@ def q_stream_minhash_dedup(spark, sf_dir):
     the per-doc verdict is any-band-collided. Exact oracle: the same
     signatures/bands regenerated in SQL with earlier = (earlier batch,
     or smaller id in the same batch)."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import streaming_minhash_dedup
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1075,7 +1059,6 @@ def q_stream_first_per_ttl(spark, sf_dir):
     emission + 5-day TTL — that user's batch-3 event emits AGAIN.
     Exact oracle: the watermark/timeout recurrence unrolled over the
     three batches at Spark's millisecond precision."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import streaming_first_per_ttl
 
     events = _read(spark, sf_dir, "events").select("user_id", "ts", "event_id")
@@ -1104,7 +1087,6 @@ def q_stream_decontaminate(spark, sf_dir):
     micro-batch (stream-static join). Complete-mode counts equal the
     batch dedup_decontaminate over the same input — the oracle IS the
     batch twin's SQL."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import streaming_decontaminate
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1130,7 +1112,6 @@ def q_stream_window_counts(spark, sf_dir):
     2h watermark, 1h tumbling windows. With all data available the
     watermark drops nothing, so the final complete-mode result equals
     the batch w_tumbling_hour — an exact oracle for the streaming path."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import windowed_event_counts
 
     batch_schema = _read(spark, sf_dir, "events").schema
@@ -1161,7 +1142,6 @@ def q_stream_pip_counts(spark, sf_dir):
     per-obec counts aggregate across micro-batches in complete mode.
     With all files available the final table equals the batch
     geo_pip_counts — the exact oracle for the streaming spatial path."""
-    _ensure_shipped(spark)
     batch_schema = _read(spark, sf_dir, "events").schema
     stream = (
         spark.readStream.schema(batch_schema)
@@ -1748,7 +1728,6 @@ def q_pipeline_e2e(spark, sf_dir, quality_min: float = 0.45):
     dedup (first doc per content hash) -> geotag -> point-in-polygon
     containment -> per-(municipality, language) doc counts. Every stage
     is exact, so the WHOLE pipeline has a value-hash oracle."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.plans.skew import spread_small_input
 
     raw = _read(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2186,7 +2165,6 @@ def q_multimodal_meta(spark, sf_dir):
     fake path. EXACT oracle on every column: DuckDB rebuilds the
     byte-identical ASCII-safe PPM payload and recomputes dims from
     the synthesis rule, octet lengths, and md5 over the same bytes."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.operators import multimodal
 
     docs = _read(spark, sf_dir, "documents")
@@ -2201,7 +2179,6 @@ def q_multimodal_frames(spark, sf_dir):
     frame hash is gone from this query). EXACT oracle including the
     hash: DuckDB rebuilds the payload and md5s the same scanline
     substring."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.operators import multimodal
 
     docs = _read(spark, sf_dir, "documents")
@@ -2224,7 +2201,6 @@ def q_multimodal_decode(spark, sf_dir, sort_barrier: bool = True):
     nearest-neighbor index maps are integer floors), so a single
     off-by-one in header parsing, chunk walking, or the resize index
     map breaks the hash match."""
-    _ensure_shipped(spark)
     import numpy as _np
     import pandas as _pd
 
@@ -2458,7 +2434,6 @@ def q_geo_pip_hierarchy(spark, sf_dir):
     katastralni uzemi polygons (400, real PIP) -> roll up to obce via
     the KU->obec parent FK. Must equal direct obec containment (the
     reference's carried parent codes are consistent by construction)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir)
     joined = _ku_joiner(spark).apply(g)
     parents = datagen.gen_katastralni_uzemi(spark).select(
@@ -2480,7 +2455,6 @@ def q_geo_pip_hierarchy3(spark, sf_dir):
     (gfs/StavebniObjekty.gfs:44-75) -> obec parent rollup. Output: per
     obec, the PIP-derived count and the FK-derived count (equal by
     construction — the engine must prove it spatially)."""
-    _ensure_shipped(spark)
     am = datagen.gen_adresni_mista(spark)
     so = datagen.gen_stavebni_objekty(spark)
     parents = datagen.gen_katastralni_uzemi(spark).select(
@@ -2616,7 +2590,6 @@ def q_stream_sessionize(spark, sf_dir):
     at the median timestamp; sessions closed by a 30-min gap emit in
     append mode, open sessions stay in state. Exact oracle: batch
     sessionize MINUS each user's final (still-open) session."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.streaming.incremental import streaming_sessionize
 
     e = _read(spark, sf_dir, "events").select(
@@ -2653,7 +2626,6 @@ def q_geo_range_join_large(spark, sf_dir, sort_barrier: bool = True):
     presence set and shuffle once to meet their group's segments.
     Oracle = brute-force clamped-projection distances over the
     arithmetically regenerated street grid."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
     out = _ulice_large_joiner(spark).apply(g, id_col="event_id")
     return _sort_once(
@@ -2669,7 +2641,6 @@ def q_geo_knn_lines_large(spark, sf_dir):
     PartitionedLineRangeJoiner band join + one rank window. Exact by
     construction (band distances are exact; rank ties break on kod
     identically in both engines)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
     out = _ulice_large_joiner(spark).apply_knn(g, 3, id_col="event_id")
     return _knn_rows(out)
@@ -2691,7 +2662,6 @@ def q_geo_knn_points_large(spark, sf_dir):
     cogrouped refine); kNN = band join + rank window. Exact by
     construction (identical float64 synthesis both engines; rank ties
     break on kod)."""
-    _ensure_shipped(spark)
     g = _events_geo(spark, sf_dir).where(F.col("event_id") % 200 == 1)
     out = _am_large_joiner(spark).apply_knn(g, 3, id_col="event_id")
     return _knn_rows(out)
@@ -2723,7 +2693,6 @@ def q_asof_join(spark, sf_dir):
     Right side deduped to one order per (custkey, date) for determinism;
     oracle = DuckDB native ASOF JOIN. One window pass (one shuffle, no
     Python boundary)."""
-    _ensure_shipped(spark)
     from gdal_vfr_spark.operators.asof import asof_join
 
     e = (
@@ -2751,7 +2720,6 @@ def q_asof_join(spark, sf_dir):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: spatial-join page counts per municipality on sf0.001
     (the minimum end-to-end slice from SURVEY.md §7.1 item 2)."""
-    _ensure_shipped(spark)
     return q_geo_pip_counts(spark, "/root/testdata/sf0.001")
 
 

@@ -7,11 +7,13 @@ Two parts:
 2. The authoritative north-star metric (BASELINE.json): spatial-join +
    tile-assignment throughput (pages/sec) on the synthetic webtext
    table joined to the RUIAN-style obce polygons, run at TWO
-   parallelism levels ($SPARK_GRAFT_BENCH_LEVELS, default "2,8" i.e.
-   local[2] = N and local[8] = 4N) on the SAME parquet input, reporting
-   scaling efficiency = (thr_hi / thr_lo) / (hi / lo).
-   Each level runs in a subprocess so JVM/thread-pool state can't leak
-   between levels.
+   parallelism levels ($SPARK_GRAFT_BENCH_LEVELS, default "1,<cores>")
+   on the SAME parquet input, reporting scaling efficiency =
+   (thr_hi / thr_lo) / (hi / lo).
+
+The measurement pieces the tools/ runners share live here too:
+level_session, confirmed_min, time_query, json_worker, two_levels and
+levels.
 
 Prints ONE JSON line:
 {"metric": ..., "value": <total headline sec>, "unit": "sec",
@@ -22,7 +24,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
@@ -117,150 +118,136 @@ def _materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def make_joiner(spark):
-    """Once-per-job polygon-side preparation (index + cover +
-    broadcast) — amortized over every batch like the reference's
-    build-indexes-once import (vfrpg.py:120-163). Densified polygons:
-    identical grid geometry/ground truth, but realistic RUIAN-scale
-    vertex counts (~256/ring) so the winding refinement does honest
-    per-edge work."""
-    from gdal_vfr_spark import datagen
-    from gdal_vfr_spark.geo.pip import PIPJoiner
-
-    obce = datagen.gen_obce(spark, densify=64)
-    return PIPJoiner(obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod")
+def _check_level(cpus: int) -> int:
+    host = len(os.sched_getaffinity(0))
+    if not 0 < cpus <= host:
+        raise ValueError(f"parallelism level {cpus} outside 1..{host} (cores of this host)")
+    return cpus
 
 
-def spatial_pipeline(spark, path: str, joiner=None):
-    """The measured job: read pages -> PIP join to obce -> Z-order
-    tile key -> per-(obec, tile-prefix) counts."""
-    from pyspark.sql import functions as F
+def levels() -> tuple[int, int]:
+    """The two parallelism levels (lo, hi) of a scaling measurement:
+    $SPARK_GRAFT_BENCH_LEVELS ("lo,hi"), default 1 and every core
+    (session.local_cores). A level beyond the host raises."""
+    from gdal_vfr_spark.session import local_cores
 
-    from gdal_vfr_spark.geo import tiles
-
-    if joiner is None:
-        joiner = make_joiner(spark)
-    pages = spark.read.parquet(path)
-    joined = joiner.apply(pages)
-    keyed = tiles.with_tile_key(joined, res=tiles.DEFAULT_TILE_RES)
-    return keyed.groupBy(
-        "obec_kod", tiles.tile_prefix_expr("tile_key", 6).alias("tile_prefix")
-    ).agg(F.count("*").alias("n_pages"))
+    raw = os.environ.get("SPARK_GRAFT_BENCH_LEVELS") or f"1,{local_cores()}"
+    lo, hi = (_check_level(int(x)) for x in raw.split(","))
+    return lo, hi
 
 
-def run_spatial_worker(cpus: int, path: str) -> None:
-    """Subprocess entry: run the spatial job at local[cpus], print JSON.
-
-    Inside the subprocess the min is CONFIRMED, not taken on faith:
-    after the warmup, measured runs repeat until the second-lowest time
-    is within 20% of the lowest (up to `cap` runs). A single host-load
-    spike on this shared box can inflate one 15-second window by 25%+;
-    requiring two independent near-agreeing samples means a spike must
-    span most of the subprocess's life to contaminate its reported
-    floor (round-3 fix: BENCH_r03 recorded efficiency 0.715 because
-    every hi-level subprocess ran exactly one measured run and all of
-    them caught the same load window)."""
+def level_session(name: str, cpus: int):
+    """The session of one parallelism level: local[cpus], at least 8
+    shuffle partitions, no console progress. A `cpus` beyond the host
+    raises."""
     from gdal_vfr_spark import get_spark
 
-    spark = get_spark(
-        f"bench_spatial_{cpus}",
+    return get_spark(
+        f"{name}_{_check_level(cpus)}",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 8),
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    n_geo = spark.read.parquet(path).where("lon is not null").count()
-    joiner = make_joiner(spark)
-    _materialize(spatial_pipeline(spark, path, joiner))  # warmup: JIT, codegen, worker pool
-    # cheaper levels afford more confirmation attempts: a hi-level run
-    # is ~4x shorter than a lo-level run on the same input
-    cap = 3 if cpus <= 4 else 5
+
+
+def confirmed_min(run, cap: int, tol: float) -> tuple[float, list[float]]:
+    """Time `run()` until its min is CONFIRMED, not taken on faith:
+    stop once the second-lowest time is within `tol` x the lowest
+    (up to `cap` runs). Returns (min, all samples). A single host-load
+    spike on a shared box can inflate one window by 25%+; requiring two
+    independent near-agreeing samples means a spike must span most of
+    the measurement to contaminate its floor (round-3 fix: BENCH_r03
+    recorded efficiency 0.715 because every hi-level subprocess ran
+    exactly one measured run and all of them caught the same load
+    window)."""
     times: list[float] = []
     for _ in range(cap):
-        t0 = time.time()
-        _materialize(spatial_pipeline(spark, path, joiner))
-        times.append(time.time() - t0)
+        t0 = time.perf_counter()
+        run()
+        times.append(time.perf_counter() - t0)
         if len(times) >= 2:
             lo1, lo2 = sorted(times)[:2]
-            if lo2 <= lo1 * 1.2:
+            if lo2 <= lo1 * tol:
                 break
-    dt = min(times)
-    print(
-        json.dumps(
-            {
-                "cpus": cpus,
-                "sec": dt,
-                "all_secs": [round(t, 2) for t in times],
-                "pages": n_geo,
-                "pages_per_sec": n_geo / dt,
-            }
-        )
+    return min(times), times
+
+
+def time_query(spark, build, cap: int = 5) -> tuple[float, list[float]]:
+    """One per-query measurement: drop leftover persists of PREVIOUS
+    queries, one FULL warm-up run (JIT, codegen, python-worker pool,
+    eager caches), then the confirmed min within 30% of the frame
+    `build()` returns, materialized to a noop sink.
+
+    The suite otherwise accumulates cached relations until the store
+    starts evicting, and an evicted signature cache turns a 2.7s
+    minhash run into 4-8s depending on suite order: each query is
+    measured with ITS OWN warm cache only. Plain best-of-2 is defeated
+    by this shared host's sustained load spikes (a noisy-neighbor
+    window once inflated a 0.9s query to 29s for both of its runs);
+    confirmation forces at least one measurement from outside the
+    spike."""
+    spark.catalog.clearCache()
+    _materialize(build())
+    return confirmed_min(lambda: _materialize(build()), cap, 1.3)
+
+
+def json_worker(argv: list[str], expect: int = 0) -> dict | None:
+    """Run `python *argv` from the repo root and return the JSON object
+    on its last stdout line that starts with "{". A wrong exit code, or
+    a clean exit without such a line, raises with the stderr tail. A
+    worker expected to die (expect != 0) may print none: None."""
+    proc = subprocess.run(
+        [sys.executable, *argv], capture_output=True, text=True, cwd=REPO
     )
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+    if proc.returncode != expect or not (lines or expect):
+        raise RuntimeError(
+            f"worker {argv} exited {proc.returncode} (wanted {expect})"
+            f"{'' if lines else ' without a JSON line'}:\n{proc.stderr[-3000:]}"
+        )
+    return json.loads(lines[-1]) if lines else None
 
 
-def bench_spatial() -> dict:
-    """North-star measurement with a ratio-confirmed stopping rule.
+def two_levels(run_level, rate_key: str, lo: int, hi: int, min_pairs: int, max_pairs: int, max_extra: int) -> dict:
+    """Scaling efficiency (rate_hi / rate_lo) / (hi / lo) with a
+    ratio-confirmed stopping rule. `run_level(cpus)` measures one level
+    (normally a subprocess that confirms its own min) and returns a
+    dict with "sec" and `rate_key`; the best (lowest "sec") result per
+    level is kept under "n<cpus>".
 
     Levels are INTERLEAVED (lo, hi, lo, hi, ...) so both sample
-    overlapping time windows on this shared host — one quiet window
+    overlapping time windows on this shared host: one quiet window
     hitting only one level otherwise skews the efficiency ratio by
-    ±0.1. Each subprocess internally confirms its own min (see
-    run_spatial_worker). On top of that, the OUTER loop confirms the
-    efficiency ratio itself: after each (lo, hi) pair it recomputes
-    efficiency from the best-so-far throughputs and stops only once
-    two consecutive estimates agree within 5% (>= 3 pairs, <= 5
-    pairs). Min-based throughput is the right estimator here — host
-    noise only ever ADDS time, so the min over samples converges to
-    the true floor and the ratio of floors is the true scaling
-    efficiency; the stopping rule just forces enough samples that the
-    estimate has actually converged before it is reported
-    (BASELINE.md documents contaminated single-window ratios of
-    0.61-0.73 for code whose converged ratio is 0.86-0.91)."""
-    from gdal_vfr_spark import get_spark, datagen
-
-    if not os.path.exists(SPATIAL_PATH):
-        spark = get_spark(
-            "bench_datagen", extra_conf={"spark.ui.showConsoleProgress": "false"}
-        )
-        datagen.gen_webpages_sql(spark, SPATIAL_N).repartition(192).write.mode(
-            "overwrite"
-        ).parquet(SPATIAL_PATH)
-        spark.stop()
-    out = {}
-    lo, hi = (
-        int(x) for x in os.environ.get("SPARK_GRAFT_BENCH_LEVELS", "2,8").split(",")
-    )
-    # tags are derived from the ACTUAL parallelism levels measured, so
-    # the BENCH JSON is self-describing (round-1 advice: hard-coded
-    # n8/n32 tags mislabeled the default local[2]/local[8] run).
-    out["levels"] = {"lo": lo, "hi": hi}
+    +-0.1. After each (lo, hi) pair the efficiency is recomputed from
+    the best-so-far rates, and the loop stops only once two
+    consecutive estimates agree within 5% (>= min_pairs, <= max_pairs
+    pairs). Min-based throughput is the right estimator here: host
+    noise only ever ADDS time, so the min over samples converges to the
+    true floor and the ratio of floors is the true scaling efficiency;
+    the stopping rule forces enough samples that the estimate has
+    converged before it is reported (BASELINE.md documents
+    contaminated single-window ratios of 0.61-0.73 for code whose
+    converged ratio is 0.86-0.91)."""
+    out: dict = {"levels": {"lo": lo, "hi": hi}}
     samples: dict[int, list[float]] = {lo: [], hi: []}
+    eff_history: list[float] = []
+    load_history: list[float] = []
+    bar = 0.8  # BASELINE.json north-rule scaling bar
 
-    def _run_level(cpus: int) -> None:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--spatial-worker", str(cpus), SPATIAL_PATH],
-            capture_output=True,
-            text=True,
-            cwd=REPO,
-        )
-        line = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")][-1]
-        res = json.loads(line)
+    def _run(cpus: int) -> None:
+        res = run_level(cpus)
         tag = f"n{cpus}"
-        samples[cpus].append(round(res["pages_per_sec"]))
+        samples[cpus].append(round(res[rate_key]))
         if tag not in out or res["sec"] < out[tag]["sec"]:
             out[tag] = res
 
-    eff_history: list[float] = []
-    load_history: list[float] = []
-    min_pairs, max_pairs, max_extra = 3, 5, 3
-    bar = 0.8  # BASELINE.json north-rule scaling bar
-
     def _pair() -> None:
         load_history.append(round(os.getloadavg()[0], 1))
-        _run_level(lo)
-        _run_level(hi)
-        thr_lo = out[f"n{lo}"]["pages_per_sec"]
-        thr_hi = out[f"n{hi}"]["pages_per_sec"]
-        eff_history.append(round((thr_hi / thr_lo) / (hi / lo), 3))
+        _run(lo)
+        _run(hi)
+        rate_lo = out[f"n{lo}"][rate_key]
+        rate_hi = out[f"n{hi}"][rate_key]
+        eff_history.append(round((rate_hi / rate_lo) / (hi / lo), 3))
 
     def _stable() -> bool:
         return (
@@ -304,6 +291,81 @@ def bench_spatial() -> dict:
     out["load_at_pairs"] = load_history
     out["throughput_samples"] = {f"n{k}": v for k, v in samples.items()}
     return out
+
+
+def make_joiner(spark):
+    """Once-per-job polygon-side preparation (index + cover +
+    broadcast) — amortized over every batch like the reference's
+    build-indexes-once import (vfrpg.py:120-163). Densified polygons:
+    identical grid geometry/ground truth, but realistic RUIAN-scale
+    vertex counts (~256/ring) so the winding refinement does honest
+    per-edge work."""
+    from gdal_vfr_spark import datagen
+    from gdal_vfr_spark.geo.pip import PIPJoiner
+
+    obce = datagen.gen_obce(spark, densify=64)
+    return PIPJoiner(obce, poly_key="kod", geom_col="originalni_hranice", out_key="obec_kod")
+
+
+def spatial_pipeline(pages, joiner):
+    """The measured job: PIP join pages to the joiner's polygons ->
+    Z-order tile key -> per-(polygon, tile-prefix) counts."""
+    from pyspark.sql import functions as F
+
+    from gdal_vfr_spark.geo import tiles
+
+    joined = joiner.apply(pages)
+    keyed = tiles.with_tile_key(joined, res=tiles.DEFAULT_TILE_RES)
+    return keyed.groupBy(
+        joiner.out_key, tiles.tile_prefix_expr("tile_key", 6).alias("tile_prefix")
+    ).agg(F.count("*").alias("n_pages"))
+
+
+def spatial_level(cpus: int, pages, joiner, n_geo: int, **extra) -> str:
+    """One level's JSON line: the confirmed min (second-lowest within
+    20%) of the warm spatial_pipeline over `n_geo` geotagged pages."""
+    # cheaper levels afford more confirmation attempts: a hi-level run
+    # is ~4x shorter than a lo-level run on the same input
+    dt, times = confirmed_min(
+        lambda: _materialize(spatial_pipeline(pages, joiner)), 3 if cpus <= 4 else 5, 1.2
+    )
+    all_secs = [round(t, 2) for t in times]
+    rec = {"cpus": cpus, "sec": dt, "all_secs": all_secs, **extra, "pages": n_geo}
+    return json.dumps({**rec, "pages_per_sec": n_geo / dt})
+
+
+def run_spatial_worker(cpus: int, path: str) -> None:
+    """Subprocess entry: run the spatial job at local[cpus], print JSON."""
+    spark = level_session("bench_spatial", cpus)
+    pages = spark.read.parquet(path)
+    n_geo = pages.where("lon is not null").count()
+    joiner = make_joiner(spark)
+    _materialize(spatial_pipeline(pages, joiner))  # warmup: JIT, codegen, worker pool
+    print(spatial_level(cpus, pages, joiner, n_geo))
+
+
+def bench_spatial() -> dict:
+    """North-star measurement: the spatial job at the two levels(), each
+    level in its own subprocess (so JVM/thread-pool state can't leak
+    between levels), under two_levels' ratio-confirmed protocol."""
+    from gdal_vfr_spark import get_spark, datagen
+
+    if not os.path.exists(SPATIAL_PATH):
+        spark = get_spark(
+            "bench_datagen", extra_conf={"spark.ui.showConsoleProgress": "false"}
+        )
+        datagen.gen_webpages_sql(spark, SPATIAL_N).repartition(192).write.mode(
+            "overwrite"
+        ).parquet(SPATIAL_PATH)
+        spark.stop()
+    lo, hi = levels()
+    # tags are derived from the ACTUAL parallelism levels measured, so
+    # the BENCH JSON is self-describing (round-1 advice: hard-coded
+    # n8/n32 tags mislabeled the default local[2]/local[8] run).
+    def run_level(cpus: int) -> dict:
+        return json_worker([os.path.abspath(__file__), "--spatial-worker", str(cpus), SPATIAL_PATH])
+
+    return two_levels(run_level, "pages_per_sec", lo, hi, 3, 5, 3)
 
 
 def _historical_floors() -> dict[str, float]:
@@ -362,30 +424,8 @@ def main() -> None:
     qs = entrymod.queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        # drop leftover persists from PREVIOUS queries: the suite
-        # otherwise accumulates cached relations until the store starts
-        # evicting, and an evicted signature cache turns a 2.7s minhash
-        # run into 4-8s depending on suite order — each query should be
-        # measured with ITS OWN warm cache only
-        spark.catalog.clearCache()
-        # FULL warmup run (JIT, codegen, python-worker pool, eager
-        # caches), then measured runs until the min is CONFIRMED by a
-        # second run within 30% (up to 5 runs) — plain best-of-2 is
-        # defeated by this shared host's sustained load spikes (a
-        # noisy-neighbor window once inflated a 0.9s query to 29s for
-        # both of its runs); confirmation forces at least one
-        # measurement from outside the spike
-        _materialize(qs[name](spark, sf_dir))
-        times: list[float] = []
-        for _ in range(5):
-            t0 = time.time()
-            _materialize(qs[name](spark, sf_dir))
-            times.append(time.time() - t0)
-            if len(times) >= 2:
-                lo1, lo2 = sorted(times)[:2]
-                if lo2 <= lo1 * 1.3:
-                    break
-        timings[name] = round(min(times), 3)
+        best, _ = time_query(spark, lambda: qs[name](spark, sf_dir))
+        timings[name] = round(best, 3)
     total = round(sum(timings.values()), 3)
     spark.stop()
 

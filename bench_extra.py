@@ -1,15 +1,12 @@
-"""Round-6 optimization measurement harness (bench.py is FROZEN for
-the driver; this file carries the extra measurements the optimization
-guide asks for: per-query noop-sink isolation at an arbitrary SF dir
-and formatted-plan capture).
+"""Round-6 optimization measurement harness: per-query noop-sink
+isolation at an arbitrary SF dir and formatted-plan capture, beside
+the headline suite of bench.py.
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 q1 q2 ...
   python bench_extra.py --sf /root/testdata/sf0.1 --plans plans/r06 --tag before q1 ...
 
-Methodology matches bench.py exactly (clearCache per query, one full
-warmup materialization, then measured runs until the min is confirmed
-by a second run within 30%, up to 5 runs, noop sink).
+Each query is timed with bench.py's per-query step (bench.time_query).
 """
 
 from __future__ import annotations
@@ -18,14 +15,11 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-
-def _materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
+from bench import time_query  # noqa: E402
 
 
 def main() -> None:
@@ -45,13 +39,12 @@ def main() -> None:
     qs = entrymod.queries()
     timings: dict[str, float] = {}
     for name in args.queries:
-        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        df = qs[name](spark, args.sf)
         if args.plans:
             import contextlib
             import io
 
+            spark.catalog.clearCache()
             # explain-only variants expose plans that the production
             # path hides behind an execution-time localCheckpoint
             variants = getattr(entrymod, "plan_variants", dict)()
@@ -64,17 +57,8 @@ def main() -> None:
                 f.write(buf.getvalue())
         if args.no_time:
             continue
-        _materialize(df)
-        times: list[float] = []
-        for _ in range(args.runs):
-            t0 = time.time()
-            _materialize(qs[name](spark, args.sf))
-            times.append(time.time() - t0)
-            if len(times) >= 2:
-                lo1, lo2 = sorted(times)[:2]
-                if lo2 <= lo1 * 1.3:
-                    break
-        timings[name] = round(min(times), 3)
+        best, times = time_query(spark, lambda: qs[name](spark, args.sf), args.runs)
+        timings[name] = round(best, 3)
         print(f"## {name}: {timings[name]}s  (samples: {[round(t,2) for t in times]})", flush=True)
     spark.stop()
     print(json.dumps({"sf_dir": args.sf, "queries": timings, "total": round(sum(timings.values()), 3)}))

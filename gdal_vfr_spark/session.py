@@ -8,6 +8,7 @@ harmless on local[N].
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import re
@@ -34,9 +35,14 @@ def package_zip() -> str:
 
     One zip per checkout: the file name carries a hash of the package
     root, so sessions from two checkouts on one host never ship each
-    other's engine. The zip is written to a temp file and moved into
-    place, so a reader never sees a half-written one."""
-    root = _PKG_ROOT
+    other's engine. It is built at most once per process and root."""
+    return _build_zip(_PKG_ROOT)
+
+
+@functools.cache
+def _build_zip(root: str) -> str:
+    """Write root's engine to a temp file and move it into place, so a
+    reader never sees a half-written zip."""
     tag = hashlib.sha1(root.encode()).hexdigest()[:12]
     out = os.path.join(tempfile.gettempdir(), f"gdal_vfr_spark_pkg_{tag}.zip")
     src = os.path.join(root, "gdal_vfr_spark")
@@ -53,6 +59,22 @@ def package_zip() -> str:
         os.unlink(tmp)
         raise
     return out
+
+
+# applicationIds whose executors already have the engine zip
+_SHIPPED: set[str] = set()
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship the engine to the executor Python workers of `spark`'s
+    application, once per application: a second addPyFile of the same
+    zip is ignored by Spark yet appends it again to the driver's
+    sys.path and the workers' include list."""
+    path = package_zip()
+    app = spark.sparkContext.applicationId
+    if app not in _SHIPPED:
+        spark.sparkContext.addPyFile(path)
+        _SHIPPED.add(app)
 
 
 def local_cores() -> int:
@@ -147,7 +169,6 @@ def get_spark(
     # spark-submit --py-files does this; addPyFile is the API-level
     # equivalent and also covers local mode when the driver's cwd is
     # not the repo root (worker processes don't inherit driver
-    # sys.path mutations). Re-adding the zip to a reused session only
-    # logs a warning, so an exception here is a real failure.
-    spark.sparkContext.addPyFile(package_zip())
+    # sys.path mutations). An exception here is a real failure.
+    ship_package(spark)
     return spark

@@ -1,28 +1,68 @@
 import os
+import sys
 
 import pytest
 
 import __spark_entry__ as entry
 from gdal_vfr_spark import session
 
+SF = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "testdata",
+    "sf0.001",
+)
+
 
 def test_shipping_failure_raises(spark, monkeypatch):
     """A package zip that cannot be built must fail get_spark() and the
     driver-session shipping loudly, not leave workers without the
-    engine. (Re-adding a good zip to a live session only logs a
-    warning, so no benign case needs an exception swallowed.)"""
+    engine."""
 
     def broken():
         raise OSError("cannot build the package zip")
 
     monkeypatch.setattr(session, "package_zip", broken)
-    monkeypatch.setattr(entry, "package_zip", broken)
     # the conftest session's own settings, so the shared session is
     # left as it was
     with pytest.raises(OSError, match="package zip"):
         session.get_spark("gdal_vfr_spark_tests", master="local[4]", shuffle_partitions=8)
     with pytest.raises(OSError, match="package zip"):
-        entry._ensure_shipped(spark)
+        entry._read(spark, SF, "events")
+
+
+def test_engine_shipped_once_per_application(spark, monkeypatch):
+    """A reused get_spark() session and two geo queries build the
+    engine zip at most once and add it at most once: Spark ignores a
+    re-add, yet each one rewrote the zip and appended it again to the
+    driver's sys.path and the workers' include list."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    builds, adds = [], []
+    mkstemp = tempfile.mkstemp
+
+    def counting_mkstemp(*args, **kwargs):
+        if kwargs.get("prefix", "").startswith(".gdal_vfr_spark_pkg_"):
+            builds.append(kwargs["prefix"])
+        return mkstemp(*args, **kwargs)
+
+    sc = spark.sparkContext
+    add = sc.addPyFile
+
+    def counting_add(path):
+        adds.append(path)
+        add(path)
+
+    monkeypatch.setattr(tempfile, "mkstemp", counting_mkstemp)
+    monkeypatch.setattr(sc, "addPyFile", counting_add)
+    assert session.get_spark("gdal_vfr_spark_tests", master="local[4]", shuffle_partitions=8) is spark
+    entry.q_geo_pip_counts(spark, SF)
+    entry.q_geo_knn(spark, SF)
+    assert len(builds) <= 1 and len(adds) <= 1, (builds, adds)
+    name = os.path.basename(session.package_zip())
+    assert sc._python_includes.count(name) == 1
+    assert sys.path.count(os.path.join(SparkFiles.getRootDirectory(), name)) == 1
 
 
 def test_host_derived_defaults(monkeypatch):

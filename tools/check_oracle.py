@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from gdal_vfr_spark import get_spark
+from gdal_vfr_spark.session import local_cores
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -57,7 +58,7 @@ def main() -> int:
         from pyspark.sql import SparkSession
 
         spark = (
-            SparkSession.builder.master("local[8]")
+            SparkSession.builder.master(f"local[{local_cores()}]")
             .appName("oracle_check_bare")
             .config("spark.ui.enabled", "false")
             .config("spark.ui.showConsoleProgress", "false")

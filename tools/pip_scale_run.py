@@ -30,18 +30,43 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def parcel_truth(n_side: int):
+    """The arithmetic ground truth: the parcel grid is axis-aligned, so
+    the true parcel of (lon, lat) is the floor cell, and the lattice
+    never sits on an edge (see module docstring), so floor == PIP."""
+    from pyspark.sql import functions as F
+
+    from gdal_vfr_spark import datagen
+
+    return F.lit(datagen.PARL_BASE) + (
+        F.floor((F.col("lat") - F.lit(49.5)) * n_side).cast("long") * n_side
+        + F.floor((F.col("lon") - F.lit(14.0)) * n_side).cast("long")
+    )
+
+
+def parcel_joiner(spark, n_side: int):
+    """The prepared index over the n_side x n_side parcel grid."""
+    from gdal_vfr_spark import datagen
+    from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
+
+    return PartitionedPIPJoiner(
+        datagen.gen_parcely_large(spark, n_side=n_side),
+        poly_key="kod",
+        geom_col="originalni_hranice",
+        out_key="parcel_kod",
+    )
+
+
 def main() -> None:
     n_side = int(sys.argv[1]) if len(sys.argv) > 1 else 3500
     n_pages = int(sys.argv[2]) if len(sys.argv) > 2 else 400_000
     from pyspark.sql import functions as F
 
     from gdal_vfr_spark import datagen, get_spark
-    from gdal_vfr_spark.geo.pip import PartitionedPIPJoiner
 
     spark = get_spark(
         "pip_scale_run", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    parcely = datagen.gen_parcely_large(spark, n_side=n_side)
     pages = (
         datagen.gen_webpages_sql(spark, n_pages)
         .where(F.col("lon").isNotNull())
@@ -51,21 +76,8 @@ def main() -> None:
     n_geo = pages.count()
 
     t0 = time.time()
-    joiner = PartitionedPIPJoiner(
-        parcely,
-        poly_key="kod",
-        geom_col="originalni_hranice",
-        out_key="parcel_kod",
-    )
+    joiner = parcel_joiner(spark, n_side)
     build_s = time.time() - t0
-
-    # arithmetic ground truth: the parcel grid is axis-aligned, so the
-    # true parcel of (lon, lat) is the floor cell — and the lattice
-    # never sits on an edge (see module docstring), so floor == PIP.
-    truth = F.lit(datagen.PARL_BASE) + (
-        F.floor((F.col("lat") - F.lit(49.5)) * n_side).cast("long") * n_side
-        + F.floor((F.col("lon") - F.lit(14.0)) * n_side).cast("long")
-    )
 
     # FIRST action: materializes the persisted cover + group tables
     # (the O(dimension) index build — mapInPandas WKB decode of every
@@ -77,7 +89,7 @@ def main() -> None:
     joined = joiner.apply(pages).persist()
     n_matched = joined.count()
     first_s = time.time() - t1
-    n_bad = joined.where(F.col("parcel_kod") != truth).count()
+    n_bad = joined.where(F.col("parcel_kod") != parcel_truth(n_side)).count()
     joined.unpersist()
     t2 = time.time()
     n2 = joiner.apply(pages).count()

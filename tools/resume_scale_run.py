@@ -25,40 +25,31 @@ driver — resume state flows ONLY through the on-disk lineage table,
 exactly the production restart path; on a cluster the lineage
 ParquetTable would be an Iceberg metadata table).
 
+Every phase runs on local[session.local_cores()].
+
 Usage (idle host):  python tools/resume_scale_run.py [n_pages] [crash_after]
-Env: SPARK_GRAFT_RESUME_CPUS (default 32).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import json_worker, level_session  # noqa: E402
+from gdal_vfr_spark.session import local_cores  # noqa: E402
+
 N_PAGES = int(os.environ.get("SPARK_GRAFT_RESUME_NPAGES", 6_000_000))
-CPUS = int(os.environ.get("SPARK_GRAFT_RESUME_CPUS", 32))
 WORK = os.environ.get("SPARK_GRAFT_RESUME_DIR", "/tmp/gdal_vfr_resume")
 PAGES_PATH = f"{WORK}/pages_{N_PAGES}"
 # the webtext extent is ~1°x1°: one Morton cell at res<=8. Res 10
 # (~0.35° cells) splits it into ~16 real spatial work units.
 PREFIX_RES = int(os.environ.get("SPARK_GRAFT_RESUME_PREFIX_RES", 10))
 STAGE = "quality_extract"
-
-
-def _get_spark(name: str):
-    from gdal_vfr_spark import get_spark
-
-    return get_spark(
-        name,
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
 
 
 def _transform(part):
@@ -86,7 +77,7 @@ def ensure_pages() -> None:
         return
     from gdal_vfr_spark import datagen
 
-    spark = _get_spark("resume_gen")
+    spark = level_session("resume_gen", local_cores())
     # only the stage's columns: keeps the generator plan inside the
     # janino 64KB codegen limit (the truth_tile_key expression alone
     # exceeds it and forces an interpreted fallback)
@@ -95,7 +86,7 @@ def ensure_pages() -> None:
         .where("lon is not null")
         .select("url", "lon", "lat", "text")
     )
-    df.repartition(CPUS * 4).write.mode("overwrite").parquet(PAGES_PATH)
+    df.repartition(local_cores() * 4).write.mode("overwrite").parquet(PAGES_PATH)
     spark.stop()
 
 
@@ -107,7 +98,7 @@ def run_worker(tag: str, crash_after: int) -> None:
     the overwrite on resume covers it either way)."""
     from gdal_vfr_spark.plans.lineage import LineageLog, run_stage_resumable
 
-    spark = _get_spark(f"resume_{tag}")
+    spark = level_session(f"resume_{tag}", local_cores())
     pages = spark.read.parquet(PAGES_PATH).select("url", "lon", "lat", "text")
     log = LineageLog(spark, f"{WORK}/{tag}/lineage")
 
@@ -154,7 +145,7 @@ def verify_worker() -> None:
 
     from gdal_vfr_spark.plans.lineage import LineageLog, content_hash_expr
 
-    spark = _get_spark("resume_verify")
+    spark = level_session("resume_verify", local_cores())
     # glob to the unit leaves: the data files already carry a `unit`
     # column, so root-level partition discovery of the unit= dirs
     # would collide with the data schema
@@ -182,20 +173,6 @@ def verify_worker() -> None:
     spark.stop()
 
 
-def _sub(args: list[str], expect: int = 0) -> dict | None:
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), *args],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-    )
-    if proc.returncode != expect:
-        sys.stderr.write(proc.stderr[-3000:])
-        raise SystemExit(f"phase {args} exit {proc.returncode} (wanted {expect})")
-    lines = [l for l in proc.stdout.strip().splitlines() if l.startswith("{")]
-    return json.loads(lines[-1]) if lines else None
-
-
 def _mtimes(root: str) -> dict[str, float]:
     out = {}
     for dirpath, _dirs, files in os.walk(root):
@@ -216,25 +193,26 @@ def main() -> None:
     globals()["PAGES_PATH"] = f"{WORK}/pages_{n_pages}"
 
     ensure_pages()
+    me = os.path.abspath(__file__)
     for tag in ("baseline", "resumed"):
         shutil.rmtree(f"{WORK}/{tag}", ignore_errors=True)
 
-    base = _sub(["--worker", "baseline", "0"])
+    base = json_worker([me, "--worker", "baseline", "0"])
     n_units = base["lineage_units"]
     k = crash_after or max(1, n_units // 2)
     print(json.dumps({"phase": "baseline", **base, "crash_after": k}))
 
     t0 = time.time()
-    _sub(["--worker", "resumed", str(k)], expect=137)
+    json_worker([me, "--worker", "resumed", str(k)], expect=137)
     crash_wall = time.time() - t0
     done_before = _mtimes(f"{WORK}/resumed/out")
 
-    res = _sub(["--worker", "resumed", "0"])
+    res = json_worker([me, "--worker", "resumed", "0"])
     after = _mtimes(f"{WORK}/resumed/out")
     touched = sorted(
         p for p, m in done_before.items() if after.get(p) != m
     )
-    ver = _sub(["--verify"])
+    ver = json_worker([me, "--verify"])
 
     summary = {
         "n_pages_geotagged": base["n_rows_total"],

@@ -11,17 +11,16 @@ It then measures `similarity.semantic_dedup`'s blocked Arrow path:
 
 1. cluster-size distribution (max cluster, p99) from the assignment
    alone — one map-side-combined groupBy;
-2. end-to-end wall time + survivor counts at TWO parallelism levels
-   (subprocess workers on the same parquet input, lo then hi), with
-   vectors/sec and scaling efficiency — the same two-level protocol
-   shape as bench.py's spatial metric.
+2. end-to-end wall time + survivor counts at the two bench.levels()
+   (subprocess workers on the same parquet input, under
+   bench.two_levels), with vectors/sec and scaling efficiency.
 
 The blocked drop rule never materializes pair rows and caps its
 scratch matrix at ~256 MB (block height adapts to cluster size), so
 the hot cluster costs more BLOCK ITERATIONS inside one task, never
 memory. Prints ONE JSON line for BASELINE.md.
 
-Usage (idle host): python tools/semdedup_scale_run.py [n=500000] [lo=8] [hi=32]
+Usage (idle host): python tools/semdedup_scale_run.py [n=500000]
 Worker mode (internal): semdedup_scale_run.py --worker <cpus> <parquet>
 """
 
@@ -29,12 +28,19 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import (  # noqa: E402
+    _wait_for_idle,
+    confirmed_min,
+    json_worker,
+    level_session,
+    levels,
+    two_levels,
+)
 
 DIM = 64
 K = 128
@@ -82,26 +88,21 @@ def gen_vectors(spark, n: int):
 def run_worker(cpus: int, path: str) -> None:
     from pyspark.sql import functions as F
 
-    from gdal_vfr_spark import get_spark
     from gdal_vfr_spark.operators import similarity
 
-    spark = get_spark(
-        f"semdedup_scale_{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(8, cpus),
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = level_session("semdedup_scale", cpus)
     emb = spark.read.parquet(path)
     n = emb.count()  # warm the input cache path / JIT
-    best = None
-    survivors = None
-    for _ in range(2):
-        t0 = time.time()
-        survivors = similarity.semantic_dedup(
-            emb, threshold=TAU, n_centroids=K, n_iter=2, dim=DIM
-        ).count()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
+    survivors = []
+
+    def run() -> None:
+        survivors.append(
+            similarity.semantic_dedup(
+                emb, threshold=TAU, n_centroids=K, n_iter=2, dim=DIM
+            ).count()
+        )
+
+    best, _ = confirmed_min(run, 2, 1.2)  # best of two
     hot_kept = (
         similarity.semantic_dedup(
             emb, threshold=TAU, n_centroids=K, n_iter=2, dim=DIM
@@ -110,12 +111,11 @@ def run_worker(cpus: int, path: str) -> None:
         .count()
     )
     print(
-        "WORKER "
-        + json.dumps(
+        json.dumps(
             {
                 "cpus": cpus,
                 "n": n,
-                "survivors": survivors,
+                "survivors": survivors[-1],
                 "hot_cluster_survivors": hot_kept,
                 "sec": round(best, 2),
                 "vecs_per_sec": int(n / best),
@@ -130,12 +130,10 @@ def main() -> None:
         run_worker(int(sys.argv[2]), sys.argv[3])
         return
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-    lo = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    hi = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    lo, hi = levels()
 
     from pyspark.sql import functions as F
 
-    from bench import _wait_for_idle
     from gdal_vfr_spark import get_spark
     from gdal_vfr_spark.operators import similarity
 
@@ -175,26 +173,15 @@ def main() -> None:
         "n_clusters": int(dist["n_clusters"]),
         "max_cluster": int(dist["max_cluster"]),
         "p99_cluster": int(dist["p99_cluster"]),
-        "levels": {},
     }
-    for cpus in (lo, hi):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--worker", str(cpus), INPUT],
-            capture_output=True,
-            text=True,
-        )
-        line = next(
-            (ln for ln in proc.stdout.splitlines() if ln.startswith("WORKER ")),
-            None,
-        )
-        if line is None:
-            raise RuntimeError(
-                f"worker local[{cpus}] failed:\n{proc.stderr[-2000:]}"
-            )
-        out["levels"][f"local[{cpus}]"] = json.loads(line[len("WORKER "):])
-    lo_r = out["levels"][f"local[{lo}]"]["vecs_per_sec"]
-    hi_r = out["levels"][f"local[{hi}]"]["vecs_per_sec"]
-    out["scaling_efficiency"] = round((hi_r / lo_r) / (hi / lo), 3)
+
+    def run_level(cpus: int) -> dict:
+        return json_worker([os.path.abspath(__file__), "--worker", str(cpus), INPUT])
+
+    proto = two_levels(run_level, "vecs_per_sec", lo, hi, 2, 3, 2)
+    out["levels"] = {f"local[{c}]": proto.pop(f"n{c}") for c in (lo, hi)}
+    del proto["levels"]
+    out.update(proto)
     print(json.dumps(out))
 
 

@@ -10,13 +10,10 @@ constant state, kilobyte-scale exchange. This is the evidence that
 the operators' shuffle volume does NOT grow with the corpus — the
 property claimed in operators/sketches.py — measured, not argued.
 
-Usage: python tools/sketch_scale_run.py [n_keys] [cpus]
-       (defaults 100_000_000 and session.local_cores(); prints one JSON
-       line per op)
-
-The same run at two parallelism levels evidences scaling:
-  SPARK_GRAFT_CPUS=8 python tools/sketch_scale_run.py
-  SPARK_GRAFT_CPUS=32 python tools/sketch_scale_run.py
+Usage: python tools/sketch_scale_run.py [n_keys]
+       (default 100_000_000, on local[session.local_cores()]; prints
+       one JSON line). The same run at two SPARK_GRAFT_CPUS values
+       evidences scaling.
 """
 
 from __future__ import annotations
@@ -28,23 +25,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from gdal_vfr_spark import get_spark  # noqa: E402
+from bench import level_session  # noqa: E402
 from gdal_vfr_spark.session import local_cores  # noqa: E402
 
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else local_cores()
+    cpus = local_cores()
 
     from pyspark.sql import functions as F
 
     from gdal_vfr_spark.operators import sketches as sk
 
-    spark = get_spark(
-        "sketch_scale",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = level_session("sketch_scale", cpus)
 
     # 10^8 rows, ~37M distinct keys (known truth: id % 37_000_003),
     # Zipf-free uniform stream — the hash grind dominates either way
