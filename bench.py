@@ -395,15 +395,20 @@ def _historical_floors() -> dict[str, float]:
 
 def _wait_for_idle(threshold: float = 6.0, max_wait: float = 120.0) -> None:
     """Hold the measurement until the 1-minute load average drops below
-    `threshold` (bounded wait): launching into the tail of another
-    job's load (measured: a suite launched at load 11.6 recorded its
-    first queries at 2.2-2.6x their floors, CONFIRMED — the spike
+    `threshold` per 32 cores (bounded wait): launching into the tail of
+    another job's load (measured: a suite launched at load 11.6 recorded
+    its first queries at 2.2-2.6x their floors, CONFIRMED — the spike
     outlived the per-query retry budget). A bounded settle-wait costs
-    at most 2 minutes and removes the worst contamination mode the
-    per-query confirmation can't."""
+    at most `max_wait` s and removes the worst contamination mode the
+    per-query confirmation can't. The thresholds were set on a 32-core
+    host, so they scale with session.local_cores(): the same share of
+    busy cores holds the run on any host."""
+    from gdal_vfr_spark.session import local_cores
+
+    limit = threshold * local_cores() / 32
     t0 = time.time()
     while time.time() - t0 < max_wait:
-        if os.getloadavg()[0] < threshold:
+        if os.getloadavg()[0] < limit:
             return
         time.sleep(10)
 

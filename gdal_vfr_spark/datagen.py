@@ -540,7 +540,7 @@ def gen_webpages_sql(spark, n: int, null_frac_denom: int = 20, hotspot_denom: in
     iy = F.least(F.floor((lat - F.lit(LAT0)) / F.lit(dy)).cast("long"), F.lit(GRID - 1))
     text = F.concat(F.lit("page "), F.col("i").cast("string"), F.lit(" content body"))
     # the tile key reads the projected lon/lat attributes through
-    # with_cell's chained projections (null geotag -> -1), so the whole
+    # with_cell's projection chain (null geotag -> -1), so the whole
     # generator stays inside whole-stage codegen
     pages = df.select(
         F.concat(F.lit("https://example.cz/p/"), F.col("i").cast("string")).alias("url"),

@@ -14,9 +14,10 @@ own deterministic cell scheme (public-knowledge Morton/Z-order curve):
 This reproduces the roles H3/S2 play in the north star: mixed-res
 encoding (resolution lives inside the id), k-ring neighborhoods, and
 polygon cell covers. Everything here is numpy-vectorized; the Spark
-entry point for fixed-res encoding is with_cell, a chain of Catalyst
-projections inside whole-stage codegen, and mixed-res encoding is an
-Arrow pandas UDF (no per-row Python either way).
+entry point for fixed-res encoding is with_cell, one SQL select that
+Catalyst plans as a chain of projections inside whole-stage codegen,
+and mixed-res encoding is an Arrow pandas UDF (no per-row Python
+either way).
 
 Reference analogue: the reference has no spatial index at all — it
 relies on PostGIS + a btree on gml_id (vfr4ogr/vfrpg.py:120-163).
@@ -210,42 +211,62 @@ def cell_from_indices_expr(ix, iy, res: int):
     return F.shiftleft(morton, _RES_BITS).bitwiseOR(F.lit(res))
 
 
+def quote_name(name: str) -> str:
+    """A column name as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def with_cell(df, res: int, lon_col: str = "lon", lat_col: str = "lat", out_col: str = "cell"):
     """Attach a cell-id column — THE hot path for 10^12 rows, and the
     engine's one Catalyst lon/lat encoder (same bit layout as
-    cell_encode; tests/test_cells.py pins it bit-for-bit).
+    cell_encode; tests/test_cells.py pins it bit-for-bit). An existing
+    `out_col` is replaced in place, as withColumn does.
 
-    Built as a chain of small projections (one per Morton spread step)
-    rather than one Column expression: a single nested expression
-    duplicates its subtree at every step that references it twice
-    (2^5 copies of the quantization arithmetic), which blows past the
-    JVM codegen method limit and falls back to interpreted eval.
-    Chained withColumns keep every step's input an *attribute*, which
-    CollapseProject will not inline (non-cheap, referenced twice), so
-    each step is computed exactly once inside whole-stage codegen.
+    One select written as SQL text: the quantization and each Morton
+    spread step is a helper alias that the next step reads as a lateral
+    column alias, and a drop removes the helpers. A single nested
+    expression would duplicate its subtree at every step that
+    references it twice (2^5 copies of the quantization arithmetic),
+    blow past the JVM codegen method limit and fall back to
+    interpreted eval. The analyzer resolves each lateral alias into its
+    own Project, so every step's input is an *attribute* that
+    CollapseProject will not inline (non-cheap, referenced twice), and
+    each step is computed once inside whole-stage codegen. As text the
+    frame costs two analyses and a few py4j calls, where the same chain
+    built as 13 withColumns and a drop cost 14 analyses and ~100 py4j
+    Column calls: most of a pip_tiles op's driver-side plan build.
 
     Null geotags map to cell -1 and can be filtered like the
     reference's null-geometry skip (vfrogr.py:592-598).
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    lon, lat = F.col(lon_col), F.col(lat_col)
+    lon, lat = quote_name(lon_col), quote_name(lat_col)
     n = 1 << res
-    gx, gy = f"__gx_{out_col}", f"__gy_{out_col}"
+    helpers = [f"__g{axis}{k}_{out_col}" for k in range(len(_SPREAD_STEPS) + 1) for axis in "xy"]
+    gx, gy = [quote_name(h) for h in helpers[0::2]], [quote_name(h) for h in helpers[1::2]]
 
-    def quant(v, lo: float, span: float):
-        q = F.floor((v + F.lit(lo)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(q, F.lit(0)), F.lit(n - 1)).cast("long")
+    def quant(v: str, lo: float, span: float) -> str:
+        q = f"floor(({v} + {lo}D) / {span}D * {float(n)}D)"
+        return f"CAST(least(greatest({q}, 0), {n - 1}) AS BIGINT)"
 
-    out = df.withColumn(gx, quant(lon, 180.0, 360.0)).withColumn(gy, quant(lat, 90.0, 180.0))
-    for shift, mask in _SPREAD_STEPS:
-        cx, cy = F.col(gx), F.col(gy)
-        out = out.withColumn(gx, (cx.bitwiseOR(F.shiftleft(cx, shift))).bitwiseAND(F.lit(mask)))
-        out = out.withColumn(gy, (cy.bitwiseOR(F.shiftleft(cy, shift))).bitwiseAND(F.lit(mask)))
-    morton = F.col(gx).bitwiseOR(F.shiftleft(F.col(gy), 1))
-    cell = F.shiftleft(morton, _RES_BITS).bitwiseOR(F.lit(res))
-    bad = lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat)
-    return out.withColumn(out_col, F.when(bad, F.lit(-1)).otherwise(cell)).drop(gx, gy)
+    exprs = [f"{quant(lon, 180.0, 360.0)} AS {gx[0]}", f"{quant(lat, 90.0, 180.0)} AS {gy[0]}"]
+    for k, (shift, mask) in enumerate(_SPREAD_STEPS, 1):
+        for g in (gx, gy):
+            exprs.append(f"(({g[k - 1]} | shiftleft({g[k - 1]}, {shift})) & {mask}L) AS {g[k]}")
+    cell = (
+        f"CASE WHEN (({lon} IS NULL OR {lat} IS NULL) OR isnan({lon})) OR isnan({lat}) THEN -1"
+        f" ELSE shiftleft({gx[-1]} | shiftleft({gy[-1]}, 1), {_RES_BITS}) | {res}"
+        f" END AS {quote_name(out_col)}"
+    )
+    # a lateral alias resolves only after its definition, so the
+    # helpers lead; a replaced column keeps its place
+    cols = df.columns
+    if out_col in cols:
+        exprs += [cell if c == out_col else quote_name(c) for c in cols]
+    else:
+        exprs += ["*", cell]
+    return df.selectExpr(*exprs).drop(*helpers)
 
 
 # ---------------------------------------------------------------- Spark UDFs

@@ -295,11 +295,13 @@ def pick_cover_res(n_polys: int, median_span: float, cover_budget_rows: float) -
 BROADCAST_POLY_BUDGET = 1_000_000
 
 
-def _candidates(points_df, res, cover_sdf, broadcast, lon_col, lat_col, how):
+def _candidates(points_df, res, cover, lon_col, lat_col, how):
     """The candidate stage both joiners share: check `how`, tag the
     points with a row id for a left join, encode their cells JVM-side
     and equi-join the cover on the cell (the page side never shuffles
-    when the cover is broadcast). Returns (tagged points, candidates)."""
+    when the caller hints the cover for broadcast). Returns (tagged
+    points, candidates); the candidates keep the cover's `cell`, which
+    each joiner's own projection drops."""
     if how not in ("inner", "left"):
         raise ValueError(f"unsupported how={how!r}")
     base = points_df
@@ -310,15 +312,12 @@ def _candidates(points_df, res, cover_sdf, broadcast, lon_col, lat_col, how):
         # stable for a deterministic scan (partition id + offset).
         base = points_df.withColumn(_RID, F.monotonically_increasing_id())
     pts = cells.with_cell(base, res, lon_col, lat_col, out_col="__cell")
-    cover = F.broadcast(cover_sdf) if broadcast else cover_sdf
-    cand = pts.join(cover, on=pts["__cell"] == cover_sdf["cell"], how="inner")
-    return base, cand.drop("cell")
+    return base, pts.join(cover, on=pts["__cell"] == cover["cell"], how="inner")
 
 
 def _finish(base, hits, out_key, how):
-    """Name the hits' key column; a left join re-joins them to every
+    """Hits keyed by `out_key`; a left join re-joins them to every
     tagged point, so misses keep a NULL key."""
-    hits = hits.withColumnRenamed("poly_key", out_key)
     if how == "inner":
         return hits
     return base.join(hits.select(_RID, out_key), on=_RID, how="left").drop(_RID)
@@ -356,24 +355,11 @@ class PIPJoiner:
         self.res = self.index.auto_res()
         spark = polys_df.sparkSession
         self._bc = spark.sparkContext.broadcast(self.index)
-        self._cover_sdf = spark.createDataFrame(
-            self.index.cover(self.res), "cell long, pidx long, poly_key long, interior boolean"
+        self._cover = F.broadcast(
+            spark.createDataFrame(
+                self.index.cover(self.res), "cell long, pidx long, poly_key long, interior boolean"
+            )
         )
-
-    def apply(
-        self,
-        points_df: DataFrame,
-        lon_col: str = "lon",
-        lat_col: str = "lat",
-        how: str = "inner",
-    ) -> DataFrame:
-        # (round-6 measured negative result: unconditionally spreading
-        # points_df here cost more than it saved for interior-heavy
-        # joins — geo_pip_counts 1.37s -> 1.8s at sf1.0, the exchange
-        # of the full-width point rows outweighing the mostly-JVM
-        # refine. Callers with boundary-heavy refines spread their own
-        # narrow point projection instead: q_geo_pip_hierarchy3.)
-        base, cand = _candidates(points_df, self.res, self._cover_sdf, True, lon_col, lat_col, how)
         bc = self._bc
 
         @F.pandas_udf(BooleanType())
@@ -391,6 +377,22 @@ class PIPJoiner:
                 )
             return pd.Series(out)
 
+        self._refine = _refine
+
+    def apply(
+        self,
+        points_df: DataFrame,
+        lon_col: str = "lon",
+        lat_col: str = "lat",
+        how: str = "inner",
+    ) -> DataFrame:
+        # (round-6 measured negative result: unconditionally spreading
+        # points_df here cost more than it saved for interior-heavy
+        # joins — geo_pip_counts 1.37s -> 1.8s at sf1.0, the exchange
+        # of the full-width point rows outweighing the mostly-JVM
+        # refine. Callers with boundary-heavy refines spread their own
+        # narrow point projection instead: q_geo_pip_hierarchy3.)
+        base, cand = _candidates(points_df, self.res, self._cover, lon_col, lat_col, how)
         # interior-certified candidates skip the winding compute: their
         # UDF inputs are nulled, so the Arrow pass does no per-edge work
         # for them (the bulk of candidates at the default cover res) and
@@ -400,15 +402,14 @@ class PIPJoiner:
         # scan+encode costs MORE than the nulled Arrow transfer saves,
         # 13.4M vs 14.4M pages/s at local[8] on the 240M-page bench.)
         need = ~F.col("interior")
-        refined = _refine(
+        refined = self._refine(
             F.when(need, F.col(lon_col)),
             F.when(need, F.col(lat_col)),
             F.when(need, F.col("pidx")),
         )
-        hits = (
-            cand.withColumn("__hit", F.col("interior") | refined)
-            .where(F.col("__hit"))
-            .drop("__hit", "pidx", "__cell", "interior")
+        key = f"poly_key AS {cells.quote_name(self.out_key)}"
+        hits = cand.where(F.col("interior") | refined).selectExpr(
+            *(cells.quote_name(c) for c in base.columns), key
         )
         return _finish(base, hits, self.out_key, how)
 
@@ -564,10 +565,9 @@ class PartitionedPIPJoiner:
         halo.ensure_persisted(self._cover_sdf)
         halo.ensure_persisted(self._groups_sdf)
         res, gres, nsalt = self.res, self.gres, self.salt
-        base, cand = _candidates(
-            points_df, res, self._cover_sdf, self.broadcast_cover, lon_col, lat_col, how
-        )
-        inner_hits = cand.where(F.col("interior")).drop("__cell", "interior")
+        cover = F.broadcast(self._cover_sdf) if self.broadcast_cover else self._cover_sdf
+        base, cand = _candidates(points_df, res, cover, lon_col, lat_col, how)
+        inner_hits = cand.where(F.col("interior")).drop("__cell", "cell", "interior")
         # cell -> gres parent, pure bit ops in codegen: drop the 5 res
         # bits and 2*(res-gres) morton bits, re-tag with gres
         shift = 5 + 2 * (res - gres)
@@ -584,7 +584,7 @@ class PartitionedPIPJoiner:
             .withColumn("__grp", grp_expr)
             .withColumn("__gsalt", salt_expr.cast("int"))
         )
-        helper = ("__cell", "interior", "__grp", "__gsalt")
+        helper = ("__cell", "cell", "interior", "__grp", "__gsalt")
         out_fields = [f for f in boundary.schema.fields if f.name not in helper]
         names = [f.name for f in out_fields]
 
@@ -609,7 +609,8 @@ class PartitionedPIPJoiner:
         refined = halo.refine_by_bucket(
             boundary, self._groups_sdf, ["__grp", "__gsalt"], _refine, StructType(out_fields)
         )
-        return _finish(base, inner_hits.unionByName(refined), self.out_key, how)
+        hits = inner_hits.unionByName(refined).withColumnRenamed("poly_key", self.out_key)
+        return _finish(base, hits, self.out_key, how)
 
     # ---- index persistence -------------------------------------------
     # The cover + group tables ARE the prepared index (build-once /

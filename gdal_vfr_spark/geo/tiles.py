@@ -31,25 +31,26 @@ def with_tile_key(
     lat_col: str = "lat",
     out_col: str = "tile_key",
 ) -> DataFrame:
-    # chained-projection construction (see cells.with_cell): one copy of
-    # each Morton step inside codegen instead of an exponentially
-    # duplicated single expression
+    # a tile key is a cell id: cells.with_cell's one SQL select, whose
+    # Morton steps Catalyst plans as chained projections inside codegen
     return cells.with_cell(df, res, lon_col, lat_col, out_col)
 
 
-def tile_prefix_expr(tile_col="tile_key", prefix_res: int = 6, tile_res: int = DEFAULT_TILE_RES):
+def tile_prefix_expr(
+    tile_col: str = "tile_key", prefix_res: int = 6, tile_res: int = DEFAULT_TILE_RES
+):
     """Coarse ancestor of a tile key — the partition column. 4^prefix_res
     directories upper-bounds the partition count; prefix_res=6 → ≤4096
     partitions, sane for both HMS-style listings and Iceberg manifests.
-    tile_res is the (table-constant) resolution of tile_col."""
-    tile = F.col(tile_col) if isinstance(tile_col, str) else tile_col
+    tile_res is the (table-constant) resolution of tile_col. Written as
+    SQL text, like cells.with_cell: one py4j call instead of a dozen."""
     shift = 2 * (tile_res - prefix_res)
     if shift < 0:
         raise ValueError("prefix_res must be coarser than tile_res")
-    morton = F.shiftright(tile, 5)
-    return (
-        F.when(tile < F.lit(0), F.lit(-1))
-        .otherwise(F.shiftleft(F.shiftright(morton, shift), 5).bitwiseOR(F.lit(prefix_res)))
+    tile = cells.quote_name(tile_col)
+    return F.expr(
+        f"CASE WHEN {tile} < 0 THEN -1"
+        f" ELSE shiftleft(shiftright(shiftright({tile}, 5), {shift}), 5) | {prefix_res} END"
     )
 
 

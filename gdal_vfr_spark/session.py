@@ -39,11 +39,17 @@ def package_zip() -> str:
     return _build_zip(_PKG_ROOT)
 
 
+def root_tag(root: str = _PKG_ROOT) -> str:
+    """A short hash of a checkout's root: files that checkouts on one
+    host keep in the shared temp dir carry it in their names."""
+    return hashlib.sha1(root.encode()).hexdigest()[:12]
+
+
 @functools.cache
 def _build_zip(root: str) -> str:
     """Write root's engine to a temp file and move it into place, so a
     reader never sees a half-written zip."""
-    tag = hashlib.sha1(root.encode()).hexdigest()[:12]
+    tag = root_tag(root)
     out = os.path.join(tempfile.gettempdir(), f"gdal_vfr_spark_pkg_{tag}.zip")
     src = os.path.join(root, "gdal_vfr_spark")
     fd, tmp = tempfile.mkstemp(prefix=f".gdal_vfr_spark_pkg_{tag}_", dir=os.path.dirname(out))

@@ -134,3 +134,90 @@ def test_gen_webpages_sql_compiles_without_codegen_fallback(spark):
     )
     assert np.array_equal(pdf["truth_tile_key"].to_numpy(), want)
     assert (want == -1).sum() == 50  # every 20th geotag is null
+
+
+def test_with_cell_adds_at_most_two_plan_nodes(spark, monkeypatch):
+    """with_cell builds one select and one drop over its input: two new
+    frames, so two logical-plan nodes for the driver to analyse, however
+    many spread steps the select holds (a withColumn per step built and
+    analysed 14). The analyzer then splits the select into one Project
+    per lateral-alias step, which is what keeps codegen from fallback."""
+    df = spark.createDataFrame([(14.5, 50.0)], "lon double, lat double")
+    cls = type(df)
+    init = cls.__init__
+    built = set()
+
+    def counting_init(self, jdf, *args, **kwargs):
+        built.add(jdf._target_id)
+        init(self, jdf, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "__init__", counting_init)
+    for out_col in ("cell", "lon"):
+        built.clear()
+        cells.with_cell(df, 16, out_col=out_col)
+        assert len(built) <= 2, out_col
+
+
+def test_with_cell_replaces_out_col_in_place(spark):
+    df = spark.createDataFrame(
+        [(1, 7, 14.5, 50.0), (2, 8, None, 1.0)], "a long, cell long, lon double, lat double"
+    )
+    out = cells.with_cell(df, 12)
+    assert out.columns == ["a", "cell", "lon", "lat"]
+    assert [r["cell"] for r in out.orderBy("a").collect()] == [
+        int(cells.cell_encode(np.asarray([14.5]), np.asarray([50.0]), 12)[0]),
+        -1,
+    ]
+    added = cells.with_cell(df, 12, out_col="tile")
+    assert added.columns == ["a", "cell", "lon", "lat", "tile"]
+    for frame in (out, added):
+        assert not [c for c in frame.columns if c.startswith("__g")]
+
+
+def test_with_cell_edges_match_numpy(spark):
+    """The grid's edges and the null/NaN geotags, bit-for-bit against
+    cell_encode at the coarsest, finest and two middle resolutions."""
+    nan = float("nan")
+    rows = [
+        (-180.0, -90.0), (180.0, 90.0), (-180.0, 90.0), (180.0, -90.0),
+        (0.0, 0.0), (179.9999999, -89.9999999), (14.5, 50.0),
+        (None, 50.0), (14.5, None), (None, None), (nan, 50.0), (14.5, nan), (nan, nan),
+    ]
+    df = spark.createDataFrame(
+        [(i, lon, lat) for i, (lon, lat) in enumerate(rows)], "i int, lon double, lat double"
+    )
+    lon = np.asarray([nan if r[0] is None else r[0] for r in rows])
+    lat = np.asarray([nan if r[1] is None else r[1] for r in rows])
+    for res in (0, 1, 16, cells.MAX_RES):
+        got = [r["cell"] for r in cells.with_cell(df, res).orderBy("i").collect()]
+        assert got == cells.cell_encode(lon, lat, res).tolist(), res
+
+
+def test_pip_apply_and_tile_key_compile_without_codegen_fallback(spark):
+    """The pip_tiles plan (broadcast PIP join, refine UDF, tile key on
+    its output) must compile inside whole-stage codegen with the
+    interpreted fallback switched off."""
+    from gdal_vfr_spark import datagen
+    from gdal_vfr_spark.geo import tiles
+    from gdal_vfr_spark.geo.pip import PIPJoiner
+
+    pages = datagen.gen_webpages(spark, n=1000, seed=17)
+    joiner = PIPJoiner(
+        datagen.gen_obce(spark, seed=17), poly_key="kod", geom_col="originalni_hranice",
+        out_key="obec_kod",
+    )
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        pdf = tiles.with_tile_key(joiner.apply(pages), out_col="tile").toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert len(pdf) == pages.where("lon IS NOT NULL").count()
+    assert (pdf["obec_kod"] == pdf["truth_obec_kod"]).all()
+    want = cells.cell_encode(
+        pdf["lon"].to_numpy(dtype=np.float64),
+        pdf["lat"].to_numpy(dtype=np.float64),
+        tiles.DEFAULT_TILE_RES,
+    )
+    assert np.array_equal(pdf["tile"].to_numpy(), want)

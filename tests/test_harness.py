@@ -103,6 +103,34 @@ def test_levels_default_and_past_host(monkeypatch):
         bench.level_session("harness_test", host + 1)
 
 
+class _Sleeper:
+    def __init__(self):
+        self.now = 0.0
+
+    def time(self):
+        return self.now
+
+    def sleep(self, s):
+        self.now += s
+
+
+@pytest.mark.parametrize(
+    "cores, load, waited",
+    [(32, 5.9, False), (32, 6.1, True), (4, 0.7, False), (4, 0.8, True)],
+)
+def test_wait_for_idle_threshold_scales_with_cores(monkeypatch, cores, load, waited):
+    """The default threshold (6.0 per 32 cores) holds the run at the
+    same share of busy cores on any host: 6.0 on 32 cores, 0.75 on 4."""
+    from gdal_vfr_spark import session
+
+    clock = _Sleeper()
+    monkeypatch.setattr(bench, "time", clock)
+    monkeypatch.setattr(os, "getloadavg", lambda: (load, load, load))
+    monkeypatch.setattr(session, "local_cores", lambda: cores)
+    bench._wait_for_idle(max_wait=60.0)
+    assert (clock.now >= 60.0) is waited
+
+
 def test_json_worker_failures():
     assert bench.json_worker(["-c", "print('log'); print('{\"a\": 1}')"]) == {"a": 1}
     # a deliberate crash may print no JSON line

@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -41,11 +42,13 @@ from bench import (  # noqa: E402
     levels,
     two_levels,
 )
+from gdal_vfr_spark.session import root_tag  # noqa: E402
 
 DIM = 64
 K = 128
 TAU = 0.9
-INPUT = "/tmp/semdedup_scale_input"
+# one input per checkout, so two checkouts' runs never share it
+INPUT = os.path.join(tempfile.gettempdir(), f"semdedup_scale_input_{root_tag()}")
 
 
 def gen_vectors(spark, n: int):
